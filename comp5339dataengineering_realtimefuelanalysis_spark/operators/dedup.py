@@ -24,12 +24,10 @@ pairs — never the cross product.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .text import norm_text
+from .text import _MEMO_CAP, norm_text
 
 # Prime just above 2^32; with multipliers < 2^31 every a*h + b stays well
 # inside signed-64 range (max ~4.6e18 < 9.2e18).
@@ -471,17 +469,18 @@ def cap_buckets(
 def _minhash_arrow_fn(n: int, num_hashes: int):
     """mapInArrow kernel factory for minhash_signatures: a document's
     shingle set is row-local, so the K permutation-mins are one numpy
-    matrix pass per doc with ZERO exchanges (the column shape pays the
-    shingle explode + a K-agg shuffle). Text arrives JVM-normalized
+    matrix pass per doc with ZERO exchanges (no shingle explode, no
+    K-agg shuffle). Text arrives JVM-normalized
     (norm_text), shingling is pure slicing (Python str slices count
     code points exactly like Spark's substring), h32 is the exact
-    hash32 recipe in hashlib (memoized per distinct shingle per task),
-    and (h*a + b) % P runs in int64 with NO overflow: max product
+    hash32 recipe in hashlib (memoized per distinct shingle per task,
+    the memo cleared whenever it reaches _MEMO_CAP entries), and
+    (h*a + b) % P runs in int64 with NO overflow: max product
     (2^32-1)(2^31-1) + 2^31 ~ 9.22337e18 < 2^63-1, all terms positive
     so truncated and floored remainders agree. NULL-text rows emit
-    all-NULL signatures, mirroring the column shape (greatest(NULL, 1)
-    = 1 there, so a NULL text yields one NULL shingle whose NULL hash
-    survives the MIN). Parity-tested bit-exact."""
+    all-NULL signatures, as the oracle's MIN over a NULL text's single
+    NULL shingle hash does. Tested bit-exact against the DuckDB oracle
+    (plans/registry_llm.py:_sql_minhash_sig)."""
     import hashlib
 
     import numpy as np
@@ -492,6 +491,7 @@ def _minhash_arrow_fn(n: int, num_hashes: int):
     B = np.array([b for _, b in consts], dtype=np.int64)
     P = np.int64(MINHASH_PRIME)
     lo = max(n - 1, 0)
+    cap = _MEMO_CAP
 
     def fn(it):
         cache: dict = {}
@@ -502,23 +502,24 @@ def _minhash_arrow_fn(n: int, num_hashes: int):
                 v = int(
                     hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16
                 )
+                if len(cache) >= cap:
+                    cache.clear()
                 cache[s] = v
             return v
 
         for batch in it:
-            ids = batch.column(0).to_pylist()
             texts = batch.column(1).to_pylist()
             sig_cols: list = [[] for _ in range(num_hashes)]
             for t in texts:
                 if t is None:
-                    # the column shape keeps the row: greatest(NULL, 1)
-                    # = 1 -> one NULL shingle -> NULL hash -> NULL mins
+                    # the row stays: one NULL shingle -> NULL hash ->
+                    # NULL mins
                     for c in sig_cols:
                         c.append(None)
                     continue
                 # substring(t, i, n) for i in 1..max(len-n+1, 1):
                 # short text yields its whole remainder, empty text
-                # one '' shingle — identical to the column shape
+                # one '' shingle — identical to shingles()
                 sh = {t[j:j + n] for j in range(max(len(t) - lo, 1))}
                 H = np.fromiter(
                     (h32_py(s) for s in sh),
@@ -545,47 +546,26 @@ def minhash_signatures(
     id_col: str = "doc_id",
     n: int = 5,
     num_hashes: int = 16,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """K-wide MinHash signature per doc: columns mh_0..mh_{K-1}.
 
-    Default path (r19): an Arrow batch kernel (guide §4.2 — the
-    signature is row-local in the doc's shingle set; see
-    _minhash_arrow_fn for the bit-exactness argument). The kernel
-    derives shingles from ``df``'s text directly, so a passed
-    ``shingles_df`` is unused on this path (it must equal
-    ``shingles(df, n)`` by contract anyway — it exists so the COLUMN
-    path can share one explosion with a downstream set consumer).
-    SPARK_GRAFT_ARROW_MINHASH=0 falls back to the column shape:
-    all K permutation-mins in ONE groupBy pass over the shingle
-    explosion — a single shuffle keyed on the doc id, map-side
-    combined; MIN is idempotent over duplicate shingles, so the
-    explosion skips the distinct shuffle entirely.
+    An Arrow batch kernel (guide §4.2 — the signature is row-local in
+    the doc's shingle set, so it needs no shingle explosion and no
+    shuffle; see _minhash_arrow_fn for the bit-exactness argument).
     """
-    if os.environ.get("SPARK_GRAFT_ARROW_MINHASH", "1") != "0":
-        # keep the caller's id type (string ids are a supported
-        # contract — the incremental-dedup silver store uses them)
-        id_type = df.schema[id_col].dataType.simpleString()
-        src = df.select(
-            F.col(id_col).alias("__mh_id"),
-            norm_text(text_col).alias("__mh_norm"),
-        )
-        out_schema = f"__mh_id {id_type}, " + ", ".join(
-            f"mh_{k} long" for k in range(num_hashes)
-        )
-        return src.mapInArrow(
-            _minhash_arrow_fn(n, num_hashes), out_schema
-        ).withColumnRenamed("__mh_id", id_col)
-    if shingles_df is None:
-        shingles_df = shingles(df, text_col, id_col, n, distinct=False)
-    sh = shingles_df.withColumn("h32", hash32("shingle"))
-    aggs = [
-        F.min(
-            (F.col("h32") * F.lit(a) + F.lit(b)) % F.lit(MINHASH_PRIME)
-        ).alias(f"mh_{i}")
-        for i, (a, b) in enumerate(permutation_constants(num_hashes))
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    # keep the caller's id type (string ids are a supported
+    # contract — the incremental-dedup silver store uses them)
+    id_type = df.schema[id_col].dataType.simpleString()
+    src = df.select(
+        F.col(id_col).alias("__mh_id"),
+        norm_text(text_col).alias("__mh_norm"),
+    )
+    out_schema = f"__mh_id {id_type}, " + ", ".join(
+        f"mh_{k} long" for k in range(num_hashes)
+    )
+    return src.mapInArrow(
+        _minhash_arrow_fn(n, num_hashes), out_schema
+    ).withColumnRenamed("__mh_id", id_col)
 
 
 def minhash_lsh_pairs(
@@ -595,7 +575,6 @@ def minhash_lsh_pairs(
     n: int = 5,
     num_hashes: int = 16,
     bands: int = 4,
-    shingles_df: DataFrame | None = None,
     max_bucket: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: docs sharing at least one signature band.
@@ -613,9 +592,7 @@ def minhash_lsh_pairs(
     what was dropped). ALWAYS set this at scale: one degenerate band key
     otherwise makes pair generation quadratic in its bucket size.
     """
-    banded = _banded_signatures(
-        df, text_col, id_col, n, num_hashes, bands, shingles_df
-    )
+    banded = _banded_signatures(df, text_col, id_col, n, num_hashes, bands)
     if max_bucket is not None:
         banded, _ = cap_buckets(banded, ["band", "key"], max_bucket)
 
@@ -636,13 +613,10 @@ def _banded_signatures(
     n: int,
     num_hashes: int,
     bands: int,
-    shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """(id, band, key) rows: each doc's signature split into LSH bands."""
     rows = num_hashes // bands
-    sig = minhash_signatures(
-        df, text_col, id_col, n, num_hashes, shingles_df=shingles_df
-    )
+    sig = minhash_signatures(df, text_col, id_col, n, num_hashes)
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),

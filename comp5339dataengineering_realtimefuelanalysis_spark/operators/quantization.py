@@ -30,10 +30,6 @@ adc_dist is therefore emitted as bigint on both engines.
 
 from __future__ import annotations
 
-import os
-
-from functools import reduce
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -41,7 +37,6 @@ from .similarity import (
     _ACC,
     _dim_guard,
     kmeans_assign,
-    kmeans_train_centroids,
     l2sq_scaled_unrolled,
     scaled_vec,
 )
@@ -86,31 +81,22 @@ def pq_train(
     dim: int = 64,
 ) -> DataFrame:
     """Sub-space codebooks ``(sub, cid, c_svec)``: one deterministic
-    exact-integer Lloyd run (kmeans_train_centroids — lowest-id seeds,
-    floor-div re-quantization) per dim/m-wide slice. m plans over the
-    same input — persist the corpus frame at scale; each run is the
-    proven two-shuffle-per-iteration shape at 1/m the width.
+    exact-integer Lloyd run (the kmeans_train_centroids math — lowest-id
+    seeds, (dist, cid) argmin tiebreak, floor-div re-quantization) per
+    dim/m-wide slice.
 
-    r19: the m sub-trainings are FUSED into ONE Lloyd chain keyed on
-    (sub, cid) — per-subspace chains (whether numpy-kernel, with one
-    eager centroid collect per iteration per subspace, or exploded and
-    lazily unioned, with m copies of every stage in one plan) measured
-    7.4–11.7 s at sf0.1 for m=16, almost all of it scheduler/plan
-    overhead on tiny frames. The fused chain is the identical exact
-    integer math per subspace — same lowest-id seeds (slicing keeps
-    ids, scale-then-slice == slice-then-scale), same (dist, cid)
-    argmin tiebreak, same floor-div re-quantization per
-    (sub, cid, dim) — the subspaces simply ride the same aggregates as
-    independent key groups. Measured 7.4 -> ~0.6 s warm; parity-
-    asserted bit-exact against the per-subspace form
-    (tests/test_quantization.py). SPARK_GRAFT_PQ_FUSED=0 falls back to
-    the per-subspace loop."""
+    The m sub-trainings are FUSED into ONE Lloyd chain keyed on
+    (sub, cid): the subspaces ride the same aggregates as independent
+    key groups (slicing keeps ids, scale-then-slice ==
+    slice-then-scale). Per-subspace chains (whether numpy-kernel, with
+    one eager centroid collect per iteration per subspace, or exploded
+    and lazily unioned, with m copies of every stage in one plan)
+    measured 7.4–11.7 s at sf0.1 for m=16, almost all of it
+    scheduler/plan overhead on tiny frames; the fused chain measured
+    ~0.6 s warm. Tested bit-exact against the DuckDB oracle's m
+    per-subspace chains (plans/registry_llm.py:_sql_pq_ctes)."""
     if dim % m != 0:
         raise ValueError(f"dim={dim} not divisible by m={m} subspaces")
-    if os.environ.get("SPARK_GRAFT_PQ_FUSED", "1") == "0":
-        return _pq_train_per_sub(
-            corpus, m, ks, iters, id_col, vec_col, dim
-        )
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
     d = dim // m
@@ -169,46 +155,6 @@ def pq_train(
             )
         )
     return cents
-
-
-def _pq_train_per_sub(
-    corpus: DataFrame,
-    m: int,
-    ks: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-    dim: int,
-) -> DataFrame:
-    """The pre-r19 per-subspace training loop — m independent
-    kmeans_train_centroids chains unioned. Kept as the parity
-    reference for the fused chain (and behind SPARK_GRAFT_PQ_FUSED=0);
-    np_assign=False so the m chains at least stay lazy."""
-    d = dim // m
-    books = []
-    for j in range(m):
-        sub = corpus.select(
-            id_col,
-            # Same loud wrong-width failure as pq_encode's _sub_slices:
-            # an over-length vector must not train silently on a prefix.
-            F.slice(
-                _dim_guard(F.col(vec_col), dim, F.col(vec_col)),
-                j * d + 1,
-                d,
-            ).alias(vec_col),
-        )
-        cb = kmeans_train_centroids(
-            sub,
-            k=ks,
-            iters=iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            dim=d,
-            unit_norm=True,  # sub-slices inherit the unit-norm bound
-            np_assign=False,
-        )
-        books.append(cb.select(F.lit(j).alias("sub"), "cid", "c_svec"))
-    return reduce(DataFrame.unionByName, books)
 
 
 def pq_encode(

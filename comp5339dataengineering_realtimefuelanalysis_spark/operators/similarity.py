@@ -22,8 +22,6 @@ as the dedup operators — no RNG, reproducible everywhere.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -729,22 +727,10 @@ def _assign_dists_exploded(
 # cid): centroid columns are sorted by cid ascending and
 # argmin/stable-argsort take the first minimum. Assignments are
 # therefore bit-identical to the exploded path (integer math, same
-# argmin, same tiebreak) — asserted by tests against both the legacy
-# path and the DuckDB oracle. SPARK_GRAFT_NP_ASSIGN=0 falls back to
-# the exploded shape (measurement hook; values identical either way).
-_NP_ASSIGN_ENV = "SPARK_GRAFT_NP_ASSIGN"
+# argmin, same tiebreak) — asserted by tests against both the exploded
+# helper and the DuckDB oracle. The exploded path remains the one for
+# non-integer cids, which the kernel declines.
 _CID_PA_TYPES = ("bigint", "int", "smallint", "tinyint")
-
-
-def _np_assign_enabled() -> bool:
-    if os.environ.get(_NP_ASSIGN_ENV) == "0":
-        return False
-    try:
-        import numpy  # noqa: F401
-        import pyarrow  # noqa: F401
-    except ImportError:
-        return False
-    return True
 
 
 def _np_assign_frame(
@@ -893,40 +879,28 @@ def _lloyd_assign(
     id_col: str,
     dim: int = 64,
     unit_norm: bool = False,
-    np_assign: bool = True,
 ) -> DataFrame:
     """Assign every (id, svec) row to its nearest centroid by exact
     integer squared-L2; tiebreak = lowest centroid id. Centroids are k
     rows — broadcast; min_by collapses the k-fold fan-out map-side.
 
     Distance: with ``unit_norm`` the caller guarantees |x| <= 1 on the
-    1e9 grid, so exact int64 math applies and the fan-out runs in the
-    exploded hash-agg shape (_assign_dists_exploded — measured 4.5x
-    the dim-unrolled projection, which compiles but evaluates outside
-    whole-stage codegen above the nested-loop join); svec is joined
-    back onto the argmin by id for the mean update. Without unit_norm
-    the HOF decimal(38,0) form runs instead: (x-y)^2 overflows long
-    already at |x| > ~1.5 on the grid, and the unrolled DECIMAL
-    variant measured ~5x slower than the HOF (a BigDecimal allocation
-    per term — see dot_scaled_unrolled).
-
-    ``np_assign=False`` opts out of the numpy kernel and keeps the
-    exploded LAZY plan: the kernel's eager ``cents.collect()`` costs
-    one driver round-trip per Lloyd iteration, which is right for ONE
-    wide training chain but wrong for many narrow ones — pq_train runs
-    m=16 subspace chains, and the eager form turned codebook training
-    into ~m * (iters + 1) sequential scheduler-bound jobs where the
-    exploded form is a single lazy plan collected once (r19, measured
-    10.5 -> ~2 s on the emb_pq_codes cold build). The two paths are
-    bit-identical by construction (the kernel is parity-pinned to the
-    exploded path in tests/test_similarity.py)."""
+    1e9 grid, so exact int64 math applies and the numpy kernel
+    (_np_assign_frame) assigns; for a non-integer cid, which the kernel
+    declines, the fan-out runs in the exploded hash-agg shape
+    (_assign_dists_exploded — measured 4.5x the dim-unrolled
+    projection, which compiles but evaluates outside whole-stage
+    codegen above the nested-loop join) and svec is joined back onto
+    the argmin by id for the mean update. The two are bit-identical by
+    construction (tests/test_similarity.py). Without unit_norm the HOF
+    decimal(38,0) form runs instead: (x-y)^2 overflows long already at
+    |x| > ~1.5 on the grid, and the unrolled DECIMAL variant measured
+    ~5x slower than the HOF (a BigDecimal allocation per term — see
+    dot_scaled_unrolled)."""
     if unit_norm:
-        if np_assign and _np_assign_enabled():
-            out = _np_assign_frame(
-                c, cents, id_col, dim, keep_svec=True
-            )
-            if out is not None:
-                return out
+        out = _np_assign_frame(c, cents, id_col, dim, keep_svec=True)
+        if out is not None:
+            return out
         argmin = (
             _assign_dists_exploded(c, cents, id_col, dim)
             .groupBy(id_col)
@@ -978,7 +952,6 @@ def kmeans_train_centroids(
     dim: int = 64,
     unit_norm: bool = False,
     seed_order: str = "asc",
-    np_assign: bool = True,
 ) -> DataFrame:
     """Centroids (cid, c_svec) after ``iters`` exact Lloyd updates from
     the deterministic lowest-id seeds (``iters=0`` returns the seeds;
@@ -1010,7 +983,7 @@ def kmeans_train_centroids(
     cents = _kmeans_seeds(corpus, k, id_col, vec_col, seed_order)
     for _ in range(iters):
         sums = _lloyd_sums(
-            _lloyd_assign(c, cents, id_col, dim, unit_norm, np_assign)
+            _lloyd_assign(c, cents, id_col, dim, unit_norm)
         )
         quant = (
             (
@@ -1142,10 +1115,9 @@ def kmeans_assign_probes(
         c = corpus.select(
             F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
         )
-        if _np_assign_enabled():
-            out = _np_assign_frame(c, cents, id_col, dim, probes=probes)
-            if out is not None:
-                return out
+        out = _np_assign_frame(c, cents, id_col, dim, probes=probes)
+        if out is not None:
+            return out
         w = Window.partitionBy(id_col).orderBy("dist", "cid")
         return (
             _assign_dists_exploded(c, cents, id_col, dim)

@@ -17,6 +17,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+# Entry bound on the per-task hash memos of the Arrow kernels
+# (_embed_text_arrow_fn here, dedup._minhash_arrow_fn): a memo that
+# reaches it is cleared, so a task's memory stays bounded however many
+# distinct features its partition holds.
+_MEMO_CAP = 1 << 16
+
 
 def norm_text(col: Column | str) -> Column:
     """Canonical text form for hashing/shingling: lowercase, whitespace
@@ -507,14 +513,14 @@ def _word_ngram_arrays(
 def _rep_signals_arrow_fn(it):
     """mapInArrow kernel for repetition_signals: all n-grams of a doc
     are row-local, so the three fractions are computable per row with
-    ZERO exchanges (the column-shape path below pays 4). The input
-    text is PRE-NORMALIZED by norm_text IN THE JVM — the kernel only
-    splits on single spaces, so there is no Python-vs-Java lowercase/
-    regex semantics surface at all. Counting uses word TUPLES — words
-    contain no spaces post-normalization, so tuple equality == the
-    column path's joined-string equality. All divisions are single
+    ZERO exchanges. The input text is PRE-NORMALIZED by norm_text IN
+    THE JVM — the kernel only splits on single spaces, so there is no
+    Python-vs-Java lowercase/regex semantics surface at all. Counting
+    uses word TUPLES — words contain no spaces post-normalization, so
+    tuple equality == joined-string equality. All divisions are single
     IEEE double ops on integer-exact operands, bit-identical to the
-    column path's cast-double divisions (parity-tested)."""
+    DuckDB oracle's (plans/registry_llm.py:_sql_doc_repetition; tested
+    bit-exact)."""
     import pyarrow as pa
 
     for batch in it:
@@ -524,8 +530,7 @@ def _rep_signals_arrow_fn(it):
         dup_t: list[float] = []
         for t in texts:
             if t is None:
-                # the column path drops the NULL-text row at the
-                # explode and the spine left-join fills 0.0
+                # NULL text scores 0.0 on every fraction
                 dup_w.append(0.0)
                 top_b.append(0.0)
                 dup_t.append(0.0)
@@ -578,121 +583,50 @@ def repetition_signals(
       * ``dup_trigram_frac`` — fraction of DISTINCT word trigrams that
                                occur more than once
 
-    Shape: ONE explode of the tagged n-gram arrays -> (doc, n, gram)
-    hash-count -> per-(doc, n) aggregate -> pivot to the three columns.
-    Two map-side-combined shuffles, the same proven shape as tf-idf.
-    (A fully row-local formulation with higher-order-function counting
-    is possible but runs on Spark's INTERPRETED expression path — HOF
-    lambdas never enter whole-stage codegen — and measured ~70 s at
-    sf0.1 vs ~2 s for this shape.)
-
     Docs whose text yields no n-gram of some order (too short) get 0.0
     for that fraction; empty text normalizes to one empty-string word,
     so dup_word_frac is 0.0 there too.
 
-    r19: the default path is an Arrow BATCH kernel (guide §4.2 — every
-    n-gram of a doc is row-local, so the signals are a map-only pass;
-    the column shape below pays an explode of 3x the corpus tokens
-    plus FOUR exchanges). The kernel is bit-exact to the column path
-    (same normalization, same integer counts, same single-division
-    doubles — tests/test_text.py parity) and, unlike the rejected
-    row-local HOF form (interpreted, ~70 s at sf0.1), runs the
-    counting loop in CPython dicts over Arrow batches (~tens of ms per
-    task). SPARK_GRAFT_ARROW_REP=0 falls back to the column shape.
+    Shape: an Arrow BATCH kernel (guide §4.2 — every n-gram of a doc is
+    row-local, so the signals are a map-only pass with no explode and
+    no exchange). The counting loop runs in CPython dicts over Arrow
+    batches (~tens of ms per task); the row-local higher-order-function
+    form runs on Spark's INTERPRETED expression path and measured ~70 s
+    at sf0.1, and the explode + hash-count shape paid an explode of 3x
+    the corpus tokens plus four exchanges.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_ARROW_REP", "1") != "0":
-        # keep the caller's id type (string ids are supported)
-        id_type = df.schema[id_col].dataType.simpleString()
-        out = df.select(
-            F.col(id_col).alias("__rep_id"),
-            norm_text(text_col).alias("__rep_raw"),
-        ).mapInArrow(
-            _rep_signals_arrow_fn,
-            f"__rep_id {id_type}, dup_word_frac double,"
-            " top_bigram_frac double, dup_trigram_frac double",
-        )
-        return out.select(
-            F.col("__rep_id").alias(id_col),
-            "dup_word_frac",
-            "top_bigram_frac",
-            "dup_trigram_frac",
-        )
-    grams = _word_ngram_arrays(text_col, (1, 2, 3))
-
-    def tag(n: int):
-        # single-arg lambda factory (a `n=n` default would bind the
-        # element INDEX to n — Spark dispatches on lambda arity)
-        return lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram"))
-
-    tagged = F.concat(
-        *[F.transform(grams[n], tag(n)) for n in (1, 2, 3)]
+    # keep the caller's id type (string ids are supported)
+    id_type = df.schema[id_col].dataType.simpleString()
+    out = df.select(
+        F.col(id_col).alias("__rep_id"),
+        norm_text(text_col).alias("__rep_raw"),
+    ).mapInArrow(
+        _rep_signals_arrow_fn,
+        f"__rep_id {id_type}, dup_word_frac double,"
+        " top_bigram_frac double, dup_trigram_frac double",
     )
-    counts = (
-        df.select(F.col(id_col), F.explode(tagged).alias("t"))
-        .select(id_col, F.col("t.n").alias("n"), F.col("t.gram").alias("gram"))
-        .groupBy(id_col, "n", "gram")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .groupBy(id_col, "n")
-        .agg(
-            F.sum("c").alias("total"),
-            F.count(F.lit(1)).alias("n_distinct"),
-            F.max("c").alias("top"),
-            F.sum((F.col("c") > 1).cast("long")).alias("n_dup_distinct"),
-        )
-    )
-    stats = counts.groupBy(id_col).pivot("n", [1, 2, 3]).agg(
-        F.first(
-            F.struct("total", "n_distinct", "top", "n_dup_distinct")
-        )
-    )
-    dup_word = F.when(
-        F.col("1").isNotNull(),
-        1.0
-        - F.col("1.n_distinct").cast("double")
-        / F.col("1.total").cast("double"),
-    ).otherwise(F.lit(0.0))
-    top_bigram = F.when(
-        F.col("2").isNotNull(),
-        F.col("2.top").cast("double") / F.col("2.total").cast("double"),
-    ).otherwise(F.lit(0.0))
-    dup_trigram = F.when(
-        F.col("3").isNotNull(),
-        F.col("3.n_dup_distinct").cast("double")
-        / F.col("3.n_distinct").cast("double"),
-    ).otherwise(F.lit(0.0))
-    # left join back: a doc always yields unigrams (empty text -> one
-    # empty-string word), but keep the outer join for schema safety
-    return (
-        df.select(id_col)
-        .join(
-            stats.select(
-                id_col,
-                dup_word.alias("dup_word_frac"),
-                top_bigram.alias("top_bigram_frac"),
-                dup_trigram.alias("dup_trigram_frac"),
-            ),
-            id_col,
-            "left",
-        )
-        .fillna(0.0)
+    return out.select(
+        F.col("__rep_id").alias(id_col),
+        "dup_word_frac",
+        "top_bigram_frac",
+        "dup_trigram_frac",
     )
 
 
 def _embed_text_arrow_fn(dim: int, seed: str, ngrams: tuple[int, ...]):
     """mapInArrow kernel factory for embed_text: a document's feature
     multiset is row-local, so bucket counting + L2 normalization run
-    with ZERO exchanges (the column shape pays an explode shuffle and
-    a collect_list regroup). Input text is JVM-normalized (norm_text
-    over the coalesced column) — the kernel only splits on single
-    spaces. Hashes are the exact hash32 recipe
-    (int(md5(utf8)[:8 hex], 16), then pmod) in hashlib, memoized per
-    distinct feature within the task (the bounded-vocab corpus repeats
-    features heavily). float steps mirror the column path: int
-    counts -> exact-int sum of squares -> one double sqrt -> one
-    double division -> float32 cast, all correctly-rounded IEEE ops on
-    identical operands (parity-tested bit-exact)."""
+    with ZERO exchanges. Input text is JVM-normalized (norm_text over
+    the coalesced column) — the kernel only splits on single spaces.
+    Hashes are the exact hash32 recipe (int(md5(utf8)[:8 hex], 16),
+    then pmod) in hashlib, memoized per distinct feature within the
+    task (the bounded-vocab corpus repeats features heavily; the memo
+    is cleared whenever it reaches _MEMO_CAP entries). float steps
+    mirror the DuckDB oracle (plans/registry_llm.py:
+    _sql_doc_embed_ctes): int counts -> exact-int sum of squares -> one
+    double sqrt -> one double division -> float32 cast, all
+    correctly-rounded IEEE ops on identical operands (tested
+    bit-exact)."""
     import hashlib
     import math
 
@@ -700,6 +634,7 @@ def _embed_text_arrow_fn(dim: int, seed: str, ngrams: tuple[int, ...]):
 
     bseed = "#" + seed
     sseed = "#s" + seed
+    cap = _MEMO_CAP
 
     def fn(it):
         cache: dict = {}
@@ -723,6 +658,8 @@ def _embed_text_arrow_fn(dim: int, seed: str, ngrams: tuple[int, ...]):
                     % 2
                 ) * 2 - 1
                 bs = (h, s)
+                if len(cache) >= cap:
+                    cache.clear()
                 cache[feat] = bs
             return bs
 
@@ -785,104 +722,29 @@ def embed_text(
     in a real model's vectors at the same column contract when quality
     matters more than replayability.
 
-    Shape: explode features -> (id, bucket) signed counts (one map-side-
-    combined shuffle) -> per-id dense vector + L2 normalization. Like
-    ``repetition_signals``, the counting deliberately avoids dim-wide
-    higher-order-function aggregates (interpreted path, measured ~50 s
-    at sf0.1 vs ~2 s for this shape). Output: (id, embedding
-    array<float>); NULL text is coalesced to '' FIRST, so every input
-    row yields an output row (a NULL's feature array would otherwise be
-    NULL and the explode would drop the row) carrying the deterministic
-    empty-string-feature vector; all-zero only if a feature array were
-    empty (cannot happen after the coalesce — empty text normalizes to
-    one empty-string feature — but the norm>0 guard keeps the math
-    total).
-
-    r19: the default path is an Arrow batch kernel (guide §4.2 — the
-    feature multiset is row-local, so the explode shuffle + regroup
-    disappear; see _embed_text_arrow_fn for the bit-exactness
-    argument). SPARK_GRAFT_ARROW_EMB=0 falls back to the column shape.
+    Shape: an Arrow batch kernel (guide §4.2 — the feature multiset is
+    row-local, so counting needs no explode and no regroup; see
+    _embed_text_arrow_fn for the bit-exactness argument). Dim-wide
+    higher-order-function aggregates run on Spark's interpreted path
+    (measured ~50 s at sf0.1). Output: (id, embedding array<float>);
+    NULL text is coalesced to '' FIRST, so every input row yields an
+    output row carrying the deterministic empty-string-feature vector;
+    all-zero only if a feature array were empty (cannot happen after
+    the coalesce — empty text normalizes to one empty-string feature —
+    but the norm>0 guard keeps the math total).
     """
-    import os
-
-    from .dedup import hash32
-
-    if os.environ.get("SPARK_GRAFT_ARROW_EMB", "1") != "0":
-        # keep the caller's id type (string ids are supported)
-        id_type = df.schema[id_col].dataType.simpleString()
-        out = df.select(
-            F.col(id_col).alias("__e_id"),
-            norm_text(F.coalesce(F.col(text_col), F.lit(""))).alias(
-                "__e_norm"
-            ),
-        ).mapInArrow(
-            _embed_text_arrow_fn(dim, seed, ngrams),
-            f"__e_id {id_type}, embedding array<float>",
-        )
-        return out.select(
-            F.col("__e_id").alias(id_col), "embedding"
-        )
-
-    grams = _word_ngram_arrays(
-        F.coalesce(F.col(text_col), F.lit("")), ngrams
+    # keep the caller's id type (string ids are supported)
+    id_type = df.schema[id_col].dataType.simpleString()
+    out = df.select(
+        F.col(id_col).alias("__e_id"),
+        norm_text(F.coalesce(F.col(text_col), F.lit(""))).alias(
+            "__e_norm"
+        ),
+    ).mapInArrow(
+        _embed_text_arrow_fn(dim, seed, ngrams),
+        f"__e_id {id_type}, embedding array<float>",
     )
-    feats = grams[ngrams[0]]
-    for n in ngrams[1:]:
-        feats = F.concat(feats, grams[n])
-
-    f = F.col("feat")
-    bucketed = (
-        df.select(F.col(id_col), F.explode(feats).alias("feat"))
-        .select(
-            id_col,
-            F.pmod(
-                hash32(F.concat(f, F.lit("#" + seed))), F.lit(dim)
-            ).alias("bucket"),
-            (
-                F.pmod(hash32(F.concat(f, F.lit("#s" + seed))), F.lit(2))
-                * 2
-                - 1
-            ).cast("long").alias("sign"),
-        )
-        .groupBy(id_col, "bucket")
-        .agg(F.sum("sign").alias("v"))
-    )
-    counted = bucketed.groupBy(id_col).agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("bucket", "v"))
-        ).alias("m")
-    ).select(
-        id_col,
-        F.transform(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            lambda i: F.coalesce(
-                F.element_at(F.col("m"), i.cast("long")), F.lit(0)
-            ),
-        ).alias("counts"),
-    )
-    # separate projections so counts/nrm are evaluated once per row as
-    # attributes — inlined, the transform lambdas would re-derive the
-    # full counts array per output element
-    normed = counted.select(
-        id_col,
-        "counts",
-        F.sqrt(
-            F.aggregate(
-                F.col("counts"),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x * x,
-            ).cast("double")
-        ).alias("nrm"),
-    )
-    return normed.select(
-        id_col,
-        F.transform(
-            F.col("counts"),
-            lambda x: F.when(F.col("nrm") > 0, x.cast("double") / F.col("nrm"))
-            .otherwise(F.lit(0.0))
-            .cast("float"),
-        ).alias("embedding"),
-    )
+    return out.select(F.col("__e_id").alias(id_col), "embedding")
 
 
 # PII patterns chosen for REGEX PORTABILITY: the same pattern strings
@@ -1108,15 +970,15 @@ def _gopher_words_arrow_fn(it):
     """mapInArrow kernel for gopher_rules' per-WORD stats: the four
     word aggregates (count, length sum, alpha-bearing count, distinct
     stop-hit count) are row-local over the JVM-normalized text —
-    computed per row here with ZERO exchanges where the column shape
-    pays an explode of every corpus token, a groupBy and a join back.
-    The kernel only splits on single spaces (normalization happened in
-    the JVM via norm_text, so there is no Python-vs-Java regex/lower
-    surface); rows with no words emit NULL stats, mirroring the column
-    path's left-join miss, so every downstream division/coalesce sees
-    identical inputs (parity-tested). Pass-through columns (symbols /
-    line counts) are computed by the SAME JVM expressions in both
-    paths."""
+    computed per row here with ZERO exchanges (no explode of every
+    corpus token, no groupBy, no join back). The kernel only splits on
+    single spaces (normalization happened in the JVM via norm_text, so
+    there is no Python-vs-Java regex/lower surface); rows with no words
+    emit NULL stats, as the DuckDB oracle's left-join miss does
+    (plans/registry_llm.py:_sql_gopher_ctes), so every downstream
+    division/coalesce sees identical inputs (tested bit-exact).
+    Pass-through columns (symbols / line counts) are JVM expressions
+    computed before the kernel."""
     import pyarrow as pa
 
     stop = set(GOPHER_STOPWORDS)
@@ -1190,24 +1052,15 @@ def gopher_rules(
     stop-word hits (the 8-word list); < 90% of lines bullet-started;
     <= 30% of lines ellipsis-ended.
 
-    Scale shape: the per-WORD stats ride ONE explode + map-side-
-    combined groupBy (the repetition_signals shape — the row-local HOF
-    form runs interpreted) joined back on the id; the per-LINE and
-    per-CHAR rules are whole-text multiline regexp counts at scan
-    cost (single codegen pass — no interpreted HOF lambdas). Every
-    fraction is an int/int IEEE division in fixed order, so the
+    Scale shape: the per-WORD stats come from an Arrow batch kernel
+    (guide §4.2 — they are row-local, so the pass is map-only;
+    normalization stays in the JVM, see _gopher_words_arrow_fn); the
+    per-LINE and per-CHAR rules are whole-text multiline regexp counts
+    at scan cost (single codegen pass — no interpreted HOF lambdas).
+    Every fraction is an int/int IEEE division in fixed order, so the
     booleans replay bit-exactly in the oracle. NULL/empty text yields
     zero words and fails the word-count rule (keep = false), never a
-    NULL verdict.
-
-    r19: the default path computes the per-word stats in an Arrow
-    batch kernel (guide §4.2 — they are row-local, so the explode +
-    groupBy + join-back becomes a map-only pass; normalization stays
-    in the JVM and NULL-stat rows mirror the join miss, so every
-    downstream expression sees bit-identical inputs — parity-tested).
-    SPARK_GRAFT_ARROW_GOPHER=0 falls back to the column shape."""
-    import os
-
+    NULL verdict."""
     t = F.coalesce(F.col(text_col), F.lit(""))
     n_lines = F.size(F.split(t, "\n"))
     # per-line rules as whole-text multiline regexp counts — a single
@@ -1229,55 +1082,23 @@ def gopher_rules(
     symbols = (
         F.length(t) - F.length(F.regexp_replace(t, "#", ""))
     ) + F.regexp_count(t, F.lit(r"(\.\.\.|…)"))
-    row = df.select(
-        id_col,
+    base = df.select(
+        F.col(id_col),
         symbols.alias("symbols"),
         n_lines.alias("n_lines"),
         bullet_lines.alias("bullet_lines"),
         ellipsis_lines.alias("ellipsis_lines"),
+        norm_text(text_col).alias("__g_norm"),
     )
-    if os.environ.get("SPARK_GRAFT_ARROW_GOPHER", "1") != "0":
-        base = df.select(
-            F.col(id_col),
-            symbols.alias("symbols"),
-            n_lines.alias("n_lines"),
-            bullet_lines.alias("bullet_lines"),
-            ellipsis_lines.alias("ellipsis_lines"),
-            norm_text(text_col).alias("__g_norm"),
-        )
-        out_schema = ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in base.schema.fields
-            if f.name != "__g_norm"
-        ) + (
-            ", n_words long, wlen_sum long,"
-            " alpha_words long, stop_hits long"
-        )
-        stats = base.mapInArrow(_gopher_words_arrow_fn, out_schema)
-    else:
-        words = (
-            df.select(
-                F.col(id_col),
-                F.explode(
-                    F.split(norm_text(text_col), " ")
-                ).alias("w"),
-            )
-            .filter(F.col("w") != "")
-            .groupBy(id_col)
-            .agg(
-                F.count(F.lit(1)).alias("n_words"),
-                F.sum(F.length("w")).alias("wlen_sum"),
-                F.count_if(
-                    F.col("w").rlike("[a-z]")
-                ).alias("alpha_words"),
-                F.count_distinct(
-                    F.when(
-                        F.col("w").isin(*GOPHER_STOPWORDS), F.col("w")
-                    )
-                ).alias("stop_hits"),
-            )
-        )
-        stats = row.join(words, id_col, "left")
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}"
+        for f in base.schema.fields
+        if f.name != "__g_norm"
+    ) + (
+        ", n_words long, wlen_sum long,"
+        " alpha_words long, stop_hits long"
+    )
+    stats = base.mapInArrow(_gopher_words_arrow_fn, out_schema)
     j = stats.select(
         id_col,
         F.coalesce(F.col("n_words"), F.lit(0)).alias("n_words"),

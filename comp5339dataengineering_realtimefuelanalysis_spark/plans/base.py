@@ -118,6 +118,7 @@ def load_table(
             # (l_orderkey, o_orderkey, event_id, doc_id, vec_id), so
             # one column spreads as evenly as all of them at a
             # fraction of the map-side hashing CPU.
+            # Pinned by tests/test_registry.py::test_leading_column_is_high_cardinality.
             df = df.repartition(
                 spark.sparkContext.defaultParallelism,
                 F.xxhash64(F.col(df.columns[0])),

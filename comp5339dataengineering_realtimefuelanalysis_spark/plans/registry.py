@@ -1146,10 +1146,12 @@ FORCE_ATTEST: dict[str, int] = {
     # legacy 16/4 banding to the measured knee (48/8) after the x300
     # stage profile showed the r=4 verify stage growing 7.65x for 3x
     # data; Spark stage 5 and the stage-9 oracle CTEs changed together
-    # (plans/registry_llm.py:_pipe_banding). The r18 crossover sweep
-    # considered, then rejected, a count-guarded small-scale legacy
-    # branch (the knee wins at every measured scale — see
-    # SCALE_MEASURED.json: pipe_banding_crossover); the plan the r17
+    # (plans/registry_llm.py:_KNEE_NUM_HASHES/_KNEE_BANDS). The r18
+    # crossover sweep considered, then rejected, a count-guarded
+    # small-scale legacy branch (the knee wins at every measured scale
+    # — see SCALE_MEASURED.json: pipe_banding_crossover); the
+    # legacy-banding hook and the banding sweep tool were removed
+    # after commit 334796e, where they last lived. The plan the r17
     # window attested is the plan that ships, so these entries are
     # inert and kept only until the ledger confirms r17 green rows.
     "corpus_curation_pipeline": 17,

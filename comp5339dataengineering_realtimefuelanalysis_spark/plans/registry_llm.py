@@ -660,15 +660,14 @@ def _verified_pairs_for(
     key = (
         f"{sf_dir}:vpairs:{_SHINGLE_N}:{_NUM_HASHES}:{_BANDS}"
         f":{_LSH_MAX_BUCKET}:{_JACCARD_THRESHOLD}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
     path = _VERIFIED_PAIR_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         path = _ivf_index_dir(key)
         docs = _docs_parallel(spark, sf_dir)
-        # ONE shingle explosion shared by the LSH candidates and the
-        # verify sets (persisted), and a persisted candidate set:
-        # uncached, each reference re-derives the full shingle DAG.
+        # persisted shingle explosion and candidate set: uncached,
+        # each reference re-derives the full shingle DAG.
         sh = tracked_persist(
             dd.shingles(docs, n=_SHINGLE_N, distinct=False)
         )
@@ -678,7 +677,6 @@ def _verified_pairs_for(
                 n=_SHINGLE_N,
                 num_hashes=_NUM_HASHES,
                 bands=_BANDS,
-                shingles_df=sh,
                 max_bucket=_LSH_MAX_BUCKET,
             )
         )
@@ -716,11 +714,10 @@ _KNEE_BANDS = 8
 # 7.65x for 3x data: r=4 band collisions are superlinear in corpus
 # size while true pairs stay linear) and booked a "+13% raw at sf0.1"
 # cost for the 3x minhash work. The r18 crossover sweep
-# (tools/sweep_pipe_banding.py -> SCALE_MEASURED.json:
-# pipe_banding_crossover) was run to make that trade count-guarded —
-# and dissolved its premise instead: on the stages banding touches
-# (5 + 7), the knee wins at x30/x100 by 4.2x/3.6x as expected, AND
-# ties-or-wins at x10 and even x1 (interleaved same-epoch A/B at
+# (SCALE_MEASURED.json: pipe_banding_crossover) was run to make that
+# trade count-guarded — and dissolved its premise instead: on the
+# stages banding touches (5 + 7), the knee wins at x30/x100 by
+# 4.2x/3.6x as expected, AND ties-or-wins at x10 and even x1 (interleaved same-epoch A/B at
 # sf0.1: knee 2.94 s vs legacy 3.51 s warm — legacy saves ~0.4 s of
 # hashing but pays ~1.0 s more verify even at 2.3k docs). The r17
 # "+13%" was a cross-round calibration artifact (raw floors compared
@@ -729,19 +726,10 @@ _KNEE_BANDS = 8
 # candidate volume is superlinear, so the knee's 12x candidate
 # reduction dominates from the smallest measurable corpus up. A
 # count-guarded legacy branch would knowingly pick the slower plan
-# below its threshold — the pipeline therefore pins the knee, and
-# SPARK_GRAFT_PIPE_BANDING=legacy remains ONLY as the measurement
-# hook the sweep tool uses to keep both curves collectible.
-def _pipe_banding() -> tuple[int, int]:
-    """The curation pipeline's stage-5 banding: the measured S-curve
-    knee, unconditionally (see the sweep note above —
-    candidate-volume superlinearity beats 3x map-only hash work at
-    every measured scale). SPARK_GRAFT_PIPE_BANDING=legacy forces the
-    16/4 comparison branch for measurement tools only; the oracle
-    always replays the knee, so correctness runs must not set it."""
-    if os.environ.get("SPARK_GRAFT_PIPE_BANDING") == "legacy":
-        return (_NUM_HASHES, _BANDS)
-    return (_KNEE_NUM_HASHES, _KNEE_BANDS)
+# below its threshold, so stage 5 (and its oracle) pins the knee. The
+# legacy-banding hook and the sweep tool were removed after commit
+# 334796e, where they last lived; the sweep's results stay in
+# SCALE_MEASURED.json.
 
 
 def q_doc_lsh_verified_pairs_knee(
@@ -759,7 +747,6 @@ def q_doc_lsh_verified_pairs_knee(
             n=_SHINGLE_N,
             num_hashes=_KNEE_NUM_HASHES,
             bands=_KNEE_BANDS,
-            shingles_df=sh,
             max_bucket=_LSH_MAX_BUCKET,
         )
     )
@@ -1140,7 +1127,7 @@ def _dsir_scored_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection pipeline writes before its sampling passes read it."""
     key = (
         f"{sf_dir}:dsirscores:fix20:{_DSIR_BUCKETS}:{_DSIR_SEED}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
     path = _DSIR_SCORE_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -1478,7 +1465,7 @@ def _ppl_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trip parquet bit-exactly, so oracle parity is unaffected."""
     key = (
         f"{sf_dir}:pplscores:fix20:{_PPL_BUCKETS}:{_PPL_SEED}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
     path = _PPL_SCORE_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -2119,16 +2106,14 @@ def q_corpus_curation_pipeline(
     # most expensive unshared subplan in the pipeline (measured: the
     # verify join alone fell 6.1 s -> 0.7 s at sf0.1 once the candidate
     # derivation stopped being replayed inline)
-    pipe_num_hashes, pipe_bands = _pipe_banding()
     cands = stage_cb(
         "5_lsh_candidates",
         lambda: tracked_persist(
             dd.minhash_lsh_pairs(
                 kept1,
                 n=_SHINGLE_N,
-                num_hashes=pipe_num_hashes,
-                bands=pipe_bands,
-                shingles_df=sh,
+                num_hashes=_KNEE_NUM_HASHES,
+                bands=_KNEE_BANDS,
                 max_bucket=_LSH_MAX_BUCKET,
             )
         ),
@@ -2423,8 +2408,7 @@ def _stage9_key(sf_dir: str) -> str:
         f":{_LSH_MAX_BUCKET}:{_JACCARD_THRESHOLD}"
         f":{_GOPHER_MIN_WORDS}:{_GOPHER_MIN_STOP}"
         f":{_PPL_BUCKETS}:{_PPL_SEED}:fix20"
-        f":{os.environ.get('SPARK_GRAFT_PIPE_BANDING', 'auto')}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
 
 
@@ -2464,8 +2448,8 @@ def _curation_stage9_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint and the stage-defining constants, so a constant change
     or a regenerated corpus invalidates the cache."""
     # key: every constant stages 1-9 depend on (the r17 verdict's
-    # stale-survivor bug class) + the forced-banding env hook + the
-    # corpus fingerprint — see _stage9_key
+    # stale-survivor bug class) + the corpus fingerprint — see
+    # _stage9_key
     key = _stage9_key(sf_dir)
     path = _STAGE9_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -2593,8 +2577,9 @@ def _sql_stage9_ctes() -> str:
     definition shared by the full-pipeline oracle and the 2l
     branch-attestation oracle, mirroring the Spark side's shared
     stage-9 materialization. Stage 5 replays the pipeline's banding —
-    the measured knee, unconditionally (_pipe_banding; the r18 sweep
-    found no crossover below which the legacy banding wins)."""
+    the measured knee, unconditionally (_KNEE_NUM_HASHES/_KNEE_BANDS;
+    the r18 sweep found no crossover below which the legacy banding
+    wins)."""
     sh1 = _SQL_SHINGLES.replace("FROM documents", "FROM exact")
     jac = (
         "CAST(len(list_intersect(sa.sh_set, sb.sh_set)) AS DOUBLE)"
@@ -2971,7 +2956,7 @@ def _simhash_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet bit-exactly."""
     key = (
         f"{sf_dir}:simhash:{_SIMHASH_BITS}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
     path = _SIMHASH_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -3177,7 +3162,10 @@ def release_ivf_indexes() -> None:
 def _ivf_index_for(spark: SparkSession, sf_dir: str) -> str:
     """Path of the materialized IVF index for (sf_dir, _ANN_PLANES),
     building it under the managed root on first use."""
-    key = f"{sf_dir}:{_ANN_PLANES}"
+    key = (
+        f"{sf_dir}:{_ANN_PLANES}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
+    )
     path = _IVF_INDEX_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         path = _ivf_index_dir(key)
@@ -3425,32 +3413,13 @@ def _sem_k(n: int) -> int:
 _TEXT_EMB_PATHS: dict[str, str] = {}
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Cheap fingerprint of the documents table at sf_dir (mtime_ns +
-    size over the parquet file, or every part file if a directory) —
-    part of the embedding-cache key, so a scale dir regenerated
-    IN-PROCESS invalidates the cached vectors instead of silently
-    serving stale embeddings to doc_embed_hash / doc_semantic_dedup."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            tot_m = tot_s = 0
-            for name in os.listdir(path):
-                s = os.stat(os.path.join(path, name))
-                tot_m = max(tot_m, s.st_mtime_ns)
-                tot_s += s.st_size
-            return f"{tot_m}:{tot_s}"
-        return f"{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        return "absent"
-
-
-def _emb_fingerprint(sf_dir: str) -> str:
-    """_corpus_fingerprint's analog for the embeddings table — keys the
-    SQ8 (and any future embedding-derived) caches so a regenerated
-    embeddings file invalidates them (ADVICE r18)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
+def _table_fingerprint(sf_dir: str, table: str) -> str:
+    """Cheap fingerprint of ``table`` at sf_dir (mtime_ns + size over the
+    parquet file, or every part file if a directory) — part of every
+    at-rest cache key derived from that table, so a scale dir
+    regenerated IN-PROCESS invalidates the cached build instead of
+    silently serving output built from the old input."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
     try:
         st = os.stat(path)
         if os.path.isdir(path):
@@ -3480,7 +3449,7 @@ def _lang_quality_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     strings/doubles/longs bit-exactly, so oracle parity is unaffected;
     at cluster scale this IS the profile-stage materialization a prep
     pipeline writes anyway before fanning out to its consumers."""
-    key = f"{sf_dir}:langq:prof:{_corpus_fingerprint(sf_dir)}"
+    key = f"{sf_dir}:langq:prof:{_table_fingerprint(sf_dir, 'documents')}"
     path = _LANG_QUALITY_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         path = _ivf_index_dir(key)
@@ -3513,11 +3482,11 @@ def _text_emb_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared materialization each registry pass recomputed the full
     explode+shuffle twice. Parquet round-trips float32 bit-exactly, so
     oracle parity is unaffected; release_ivf_indexes() drops it. The
-    key carries a source-corpus fingerprint (_corpus_fingerprint), so
+    key carries a source-corpus fingerprint (_table_fingerprint), so
     regenerating a scale dir in-process invalidates the cache."""
     key = (
         f"{sf_dir}:textemb:{_TEXT_EMB_DIM}:{_TEXT_EMB_SEED}"
-        f":{_corpus_fingerprint(sf_dir)}"
+        f":{_table_fingerprint(sf_dir, 'documents')}"
     )
     path = _TEXT_EMB_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -4015,7 +3984,10 @@ def _ivf_kmeans_index_for(
     plan broadcast by every probe would re-run the full Lloyd loop per
     query, so the benchmark would time training + probe instead of the
     partition-pruned probe the index exists to isolate."""
-    key = f"{sf_dir}:kmeans:{_KMEANS_K}:{_KMEANS_ITERS}"
+    key = (
+        f"{sf_dir}:kmeans:{_KMEANS_K}:{_KMEANS_ITERS}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
+    )
     path = _IVF_INDEX_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         emb = load_table(spark, sf_dir, "embeddings")
@@ -4059,7 +4031,10 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_pq_codes, emb_pq_adc_topk, and the IVF-PQ index build all
     broadcast the same deterministic codebooks, and without the memo
     each invocation re-ran the m Lloyd chains."""
-    key = f"{sf_dir}:pqbooks:{_PQ_M}:{_PQ_KS}:{_PQ_ITERS}"
+    key = (
+        f"{sf_dir}:pqbooks:{_PQ_M}:{_PQ_KS}:{_PQ_ITERS}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
+    )
     if key not in _IVF_PQ_BOOKS:
         emb = _emb_parallel(spark, sf_dir)
         books = qz.pq_train(
@@ -4116,10 +4091,13 @@ def _sq8_for(
     dim-row codebook is memoized as COLLECTED rows (64 rows — the
     _ivf_kmeans_index_for boundary) and the code table materialized
     to parquet once per process. Ints round-trip parquet exactly.
-    The key carries the embeddings-table fingerprint (ADVICE r18: an
-    embeddings file regenerated in-process must not serve stale
-    stats/codes), like every sibling cache in this family."""
-    key = f"{sf_dir}:sq8:{_EMB_DIM}:{_emb_fingerprint(sf_dir)}"
+    The key carries the embeddings-table fingerprint, as do the
+    planes, kmeans, pqbooks, ivfpq and ivfsq8 keys: an embeddings file
+    regenerated in-process must not serve stale stats/codes."""
+    key = (
+        f"{sf_dir}:sq8:{_EMB_DIM}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
+    )
     path = _SQ8_CODE_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         emb = _emb_parallel(spark, sf_dir)
@@ -4358,6 +4336,7 @@ def _ivf_pq_index_for(
     key = (
         f"{sf_dir}:ivfpq:{_KMEANS_K}:{_KMEANS_ITERS}"
         f":{_PQ_M}:{_PQ_KS}:{_PQ_ITERS}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
     )
     path = _IVF_INDEX_PATHS.get(key)
     if path is None or not os.path.isdir(path):
@@ -4454,7 +4433,10 @@ def _ivf_sq8_index_for(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame
     _path0, cents = _ivf_kmeans_index_for(spark, sf_dir)
     emb = _emb_parallel(spark, sf_dir)
     stats = qz.sq8_train(emb, dim=_EMB_DIM)
-    key = f"{sf_dir}:ivfsq8:{_KMEANS_K}:{_KMEANS_ITERS}"
+    key = (
+        f"{sf_dir}:ivfsq8:{_KMEANS_K}:{_KMEANS_ITERS}"
+        f":{_table_fingerprint(sf_dir, 'embeddings')}"
+    )
     path = _IVF_INDEX_PATHS.get(key)
     if path is None or not os.path.isdir(path):
         path = _ivf_index_dir(key)

@@ -102,8 +102,7 @@ def test_cap_buckets_kills_degenerate_quadratic_pairs(spark):
     assert not any(a >= 100 and b >= 100 for a, b in sim_capped)
 
     # the drop is observable: one oversized bucket row per (band, key)
-    banded = dd.shingles(df, n=5, distinct=False)
-    sig = dd.minhash_signatures(df, shingles_df=banded)
+    sig = dd.minhash_signatures(df)
     # cap_buckets works on any keyed frame; use the signature frame keyed
     # by the full signature as a proxy for a degenerate band key
     kept, dropped = dd.cap_buckets(sig, ["mh_0"], 50)
@@ -410,12 +409,16 @@ def test_ngram_jaccard_joins_never_broadcast(spark):
 
 
 def test_minhash_arrow_kernel_parity(spark, monkeypatch):
-    """The r19 minhash Arrow kernel (row-local shingles + numpy
-    permutation-mins) must be BIT-exact to the exploded groupBy shape:
-    same normalization (JVM both), same md5-derived h32, same
-    (h*a + b) % P in int64, same NULL-text drop."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.operators.dedup import (
-        minhash_signatures,
+    """The minhash Arrow kernel (row-local shingles + numpy
+    permutation-mins) must be BIT-exact to the DuckDB oracle's
+    shingle-explode + MIN aggregate: same normalization, same
+    md5-derived h32, same (h*a + b) % P, all-NULL mins for NULL text.
+    Rerun with the per-task hash memo capped at one entry, so the
+    clear-on-cap path runs on every shingle."""
+    import duckdb
+
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
     )
 
     rows = [
@@ -428,15 +431,18 @@ def test_minhash_arrow_kernel_parity(spark, monkeypatch):
         (7, "abcdeabcdeabcde"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    for k in (16, 48):
-        monkeypatch.setenv("SPARK_GRAFT_ARROW_MINHASH", "0")
-        col_path = {
-            r.doc_id: tuple(r[f"mh_{i}"] for i in range(k))
-            for r in minhash_signatures(df, num_hashes=k).collect()
-        }
-        monkeypatch.delenv("SPARK_GRAFT_ARROW_MINHASH")
-        kern = {
-            r.doc_id: tuple(r[f"mh_{i}"] for i in range(k))
-            for r in minhash_signatures(df, num_hashes=k).collect()
-        }
-        assert col_path == kern, k
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    for cap in (dd._MEMO_CAP, 1):
+        monkeypatch.setattr(dd, "_MEMO_CAP", cap)
+        for k in (16, 48):
+            want = {
+                r[0]: tuple(r[1:])
+                for r in con.execute(rl._sql_minhash_sig(k)).fetchall()
+            }
+            got = {
+                r.doc_id: tuple(r[f"mh_{i}"] for i in range(k))
+                for r in dd.minhash_signatures(df, num_hashes=k).collect()
+            }
+            assert got == want, (cap, k)

@@ -412,25 +412,42 @@ def test_ivf_sq8_probes_all_equals_flat_and_prunes(spark, tmp_path):
 
 
 def test_pq_train_fused_matches_per_sub(spark, monkeypatch):
-    """The r19 fused (sub, cid)-keyed Lloyd chain must be BIT-exact to
-    the per-subspace loop it replaced: same seeds, same argmin
-    tiebreak, same floor-div re-quantization — the subspaces only ride
-    shared aggregates as independent key groups. Checked at iters 0
-    (pure seeds), 1, and 2."""
-    corpus = _corpus(spark, n=40)
+    """The fused (sub, cid)-keyed Lloyd chain must be BIT-exact to the
+    DuckDB oracle's m independent per-subspace chains (_sql_pq_ctes):
+    same seeds, same argmin tiebreak, same floor-div re-quantization —
+    the subspaces only ride shared aggregates as independent key
+    groups. Checked at iters 0 (pure seeds), 1, and 2."""
+    import duckdb
 
-    def rows(df):
-        return sorted(
-            (r.sub, r.cid, tuple(r.c_svec)) for r in df.collect()
-        )
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
+    )
+
+    n = 40
+    corpus = _corpus(spark, n=n)
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings(vec_id BIGINT, embedding FLOAT[])")
+    con.executemany(
+        "INSERT INTO embeddings VALUES (?, ?)",
+        [(i, _vec(i)) for i in range(n)],
+    )
+    monkeypatch.setattr(rl, "_PQ_M", M)
+    monkeypatch.setattr(rl, "_PQ_KS", KS)
+    monkeypatch.setattr(rl, "_EMB_DIM", DIM)
 
     for iters in (0, 1, 2):
-        fused = rows(
-            qz.pq_train(corpus, m=M, ks=KS, iters=iters, dim=DIM)
+        monkeypatch.setattr(rl, "_PQ_ITERS", iters)
+        want = sorted(
+            (sub, cid, tuple(c_svec))
+            for sub, cid, c_svec in con.execute(
+                f"WITH {rl._sql_pq_ctes()}"
+                " SELECT sub, cid, c_svec FROM pqbooks"
+            ).fetchall()
         )
-        monkeypatch.setenv("SPARK_GRAFT_PQ_FUSED", "0")
-        looped = rows(
-            qz.pq_train(corpus, m=M, ks=KS, iters=iters, dim=DIM)
+        got = sorted(
+            (r.sub, r.cid, tuple(r.c_svec))
+            for r in qz.pq_train(
+                corpus, m=M, ks=KS, iters=iters, dim=DIM
+            ).collect()
         )
-        monkeypatch.delenv("SPARK_GRAFT_PQ_FUSED")
-        assert fused == looped, f"iters={iters}"
+        assert got == want, f"iters={iters}"

@@ -88,23 +88,15 @@ def test_curation_pipeline_sem_mode_auto_switches(spark, monkeypatch):
     assert run(sem_mode="auto") == run(sem_mode="2l")
 
 
-def test_pipeline_banding_pinned_to_knee(monkeypatch):
+def test_pipeline_banding_pinned_to_knee():
     """The pipeline's stage-5 banding is the measured knee at every
     scale (the r18 sweep found no crossover: pipe_banding_crossover in
-    SCALE_MEASURED.json). SPARK_GRAFT_PIPE_BANDING=legacy exists ONLY
-    as the sweep tool's Spark-side measurement hook — the ORACLE must
-    stay on the knee chain regardless, so an env leak into a
-    correctness run forks the engines loudly (hash mismatch) rather
-    than silently re-pinning both sides to the slower banding."""
+    SCALE_MEASURED.json), and the oracle replays exactly that chain:
+    the stage-9 CTEs carry all 48 knee minhash columns, no more."""
     from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
         registry_llm as rl,
     )
 
-    assert rl._pipe_banding() == (rl._KNEE_NUM_HASHES, rl._KNEE_BANDS)
-    monkeypatch.setenv("SPARK_GRAFT_PIPE_BANDING", "legacy")
-    assert rl._pipe_banding() == (rl._NUM_HASHES, rl._BANDS)
-    # oracle ignores the hook: the stage-9 chain still carries all 48
-    # knee minhash columns
     sql = rl._sql_stage9_ctes()
     assert f"mh_{rl._KNEE_NUM_HASHES - 1}" in sql
     assert f"mh_{rl._KNEE_NUM_HASHES}" not in sql
@@ -347,3 +339,82 @@ def test_load_table_normalizes_ts_encodings(spark, tmp_path):
     assert dict(loaded.dtypes)["o_orderdate"] == "timestamp"
     got = {r.o_orderdate.isoformat() for r in loaded.collect()}
     assert got == {"2024-01-01T00:00:00", "2024-02-02T00:00:00"}
+
+
+def test_leading_column_is_high_cardinality():
+    """load_table's single-split recovery hashes only a table's FIRST
+    column, which spreads rows evenly only while that column is a
+    high-cardinality key. Pin it for every shipped table: at least
+    rows/8 distinct leading values."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    paths = sorted(Path(SF_SMOKE).glob("*.parquet"))
+    assert paths
+    for path in paths:
+        t = pq.read_table(path)
+        lead = t.column(0)
+        distinct = pc.count_distinct(lead).as_py()
+        assert distinct * 8 >= t.num_rows, (path.name, distinct, t.num_rows)
+
+
+def test_package_reads_only_deployment_env():
+    """The package reads only its deployment settings from the
+    environment — no env var selects between two implementations of
+    an operator. Every os.environ / os.getenv read must name one of
+    them literally, and no other SPARK_GRAFT_* name may appear."""
+    import ast
+
+    allowed = {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_DRIVER_MEM",
+        "SPARK_GRAFT_REPO_ROOT",
+    }
+
+    def is_environ(node):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr == "environ"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    def key_name(node):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return node.value
+        return f"<non-literal at line {node.lineno}>"
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "comp5339dataengineering_realtimefuelanalysis_spark"
+    )
+    reads, names = set(), set()
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Call) and isinstance(
+                node.func, ast.Attribute
+            ):
+                f = node.func
+                if (is_environ(f.value) and f.attr == "get") or (
+                    f.attr == "getenv"
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id == "os"
+                ):
+                    reads.add((path.name, key_name(node.args[0])))
+            elif (
+                isinstance(node, ast.Subscript)
+                and is_environ(node.value)
+                and isinstance(node.ctx, ast.Load)
+            ):
+                reads.add((path.name, key_name(node.slice)))
+            elif isinstance(node, ast.Compare) and any(
+                is_environ(c) for c in node.comparators
+            ):
+                reads.add((path.name, key_name(node.left)))
+            elif (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and node.value.startswith("SPARK_GRAFT_")
+            ):
+                names.add(node.value)
+    assert {key for _, key in reads} == allowed, sorted(reads)
+    assert names <= allowed, sorted(names - allowed)

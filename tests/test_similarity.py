@@ -455,14 +455,16 @@ def test_sem2_recall_vs_1l_guard(spark):
 
 
 def test_np_assign_matches_exploded_path(spark):
-    """The batched-numpy assignment kernel (r18: mapInArrow int64
-    matmul) must be BIT-IDENTICAL to the exploded hash-agg fan-out it
-    replaces, on both the argmin (_lloyd_assign) and the multi-probe
-    (kmeans_assign_probes) faces — same distances (exact int64 either
-    way), same lowest-cid tiebreak. Also pins the kernel's edge
-    contract: NULL vectors drop (posexplode semantics) and a
-    dim-mismatched vector still raises loudly."""
+    """The batched-numpy assignment kernel (mapInArrow int64 matmul)
+    must be BIT-IDENTICAL to an argmin / row_number over the exploded
+    hash-agg distances (_assign_dists_exploded), on both the argmin
+    (_lloyd_assign) and the multi-probe (kmeans_assign_probes) faces —
+    same distances (exact int64 either way), same lowest-cid
+    tiebreak. Also pins the kernel's edge contract: NULL vectors drop
+    (posexplode semantics) and a dim-mismatched vector still raises
+    loudly."""
     import pytest
+    from pyspark.sql import Window
 
     from comp5339dataengineering_realtimefuelanalysis_spark.plans.base import (
         load_table,
@@ -477,64 +479,109 @@ def test_np_assign_matches_exploded_path(spark):
     c = emb.select(
         "vec_id", sim.scaled_vec(F.col("embedding")).alias("svec")
     )
-    env = sim._NP_ASSIGN_ENV
-    old = os.environ.get(env)
-    try:
-        os.environ[env] = "1"
-        got_arg = sorted(
-            map(
-                tuple,
-                sim._lloyd_assign(
-                    c, cents, "vec_id", unit_norm=True
-                ).collect(),
-            )
+    got_arg = sorted(
+        map(
+            tuple,
+            sim._lloyd_assign(c, cents, "vec_id", unit_norm=True).collect(),
         )
-        got_pr = sorted(
-            map(
-                tuple,
-                sim.kmeans_assign_probes(
-                    emb, cents, probes=3, unit_norm=True
-                ).collect(),
-            )
+    )
+    got_pr = sorted(
+        map(
+            tuple,
+            sim.kmeans_assign_probes(
+                emb, cents, probes=3, unit_norm=True
+            ).collect(),
         )
-        # a NULL vector row disappears (mirrors posexplode)
-        with_null = spark.createDataFrame(
-            [(901, None), (902, [0] * 64)],
-            "vec_id long, svec array<bigint>",
+    )
+    # a NULL vector row disappears (mirrors posexplode)
+    with_null = spark.createDataFrame(
+        [(901, None), (902, [0] * 64)],
+        "vec_id long, svec array<bigint>",
+    )
+    out = sim._lloyd_assign(
+        with_null, cents, "vec_id", unit_norm=True
+    ).collect()
+    assert [r.vec_id for r in out] == [902]
+    # a mismatched dim raises with the unrolled-guard wording
+    bad = spark.createDataFrame(
+        [(903, [0] * 65)], "vec_id long, svec array<bigint>"
+    )
+    with pytest.raises(Exception, match="does not match unrolled dim"):
+        sim._lloyd_assign(bad, cents, "vec_id", unit_norm=True).collect()
+
+    dists = sim._assign_dists_exploded(c, cents, "vec_id", 64)
+    ranked = dists.withColumn(
+        "cell_rank",
+        F.row_number().over(
+            Window.partitionBy("vec_id").orderBy("dist", "cid")
+        ),
+    )
+    want_arg = sorted(
+        map(
+            tuple,
+            ranked.filter(F.col("cell_rank") == 1)
+            .select("vec_id", "cid")
+            .join(c, "vec_id")
+            .collect(),
         )
-        out = sim._lloyd_assign(
-            with_null, cents, "vec_id", unit_norm=True
-        ).collect()
-        assert [r.vec_id for r in out] == [902]
-        # a mismatched dim raises with the unrolled-guard wording
-        bad = spark.createDataFrame(
-            [(903, [0] * 65)], "vec_id long, svec array<bigint>"
+    )
+    want_pr = sorted(
+        map(
+            tuple,
+            ranked.filter(F.col("cell_rank") <= 3)
+            .select("vec_id", F.col("cid").alias("cluster_id"), "cell_rank")
+            .collect(),
         )
-        with pytest.raises(Exception, match="does not match unrolled dim"):
-            sim._lloyd_assign(
-                bad, cents, "vec_id", unit_norm=True
-            ).collect()
-        os.environ[env] = "0"
-        want_arg = sorted(
-            map(
-                tuple,
-                sim._lloyd_assign(
-                    c, cents, "vec_id", unit_norm=True
-                ).collect(),
-            )
-        )
-        want_pr = sorted(
-            map(
-                tuple,
-                sim.kmeans_assign_probes(
-                    emb, cents, probes=3, unit_norm=True
-                ).collect(),
-            )
-        )
-    finally:
-        if old is None:
-            os.environ.pop(env, None)
-        else:
-            os.environ[env] = old
+    )
     assert got_arg == want_arg
     assert got_pr == want_pr
+
+
+def test_embedding_caches_follow_a_rewritten_table(spark, tmp_path):
+    """Every at-rest cache built from the embeddings table (planes,
+    kmeans, pqbooks, ivfpq, ivfsq8, sq8) is keyed on the table's
+    fingerprint: once embeddings.parquet is rewritten in-process, a
+    second run must equal a run made from empty caches."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
+    )
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_SMOKE, sf, copy_function=shutil.copyfile)
+    queries = (
+        rl.q_emb_kmeans_train,
+        rl.q_emb_ivf_topk,
+        rl.q_emb_ivf_kmeans_topk,
+        rl.q_emb_pq_codes,
+        rl.q_emb_ivf_pq_topk,
+        rl.q_emb_ivf_sq8_topk,
+        rl.q_emb_sq8_codes,
+    )
+
+    def run():
+        return {
+            q.__name__: sorted(map(tuple, q(spark, sf).collect()))
+            for q in queries
+        }
+
+    rl.release_ivf_indexes()
+    try:
+        before = run()
+        # perturb: every id takes another id's (unit-norm) vector, so
+        # seeds, query vectors and cells all move
+        path = f"{sf}/embeddings.parquet"
+        t = pq.read_table(path)
+        i = t.schema.get_field_index("embedding")
+        pq.write_table(t.set_column(i, "embedding", t.column(i)[::-1]), path)
+        cached = run()
+        rl.release_ivf_indexes()
+        fresh = run()
+    finally:
+        rl.release_ivf_indexes()
+    assert fresh != before
+    for name in fresh:
+        assert cached[name] == fresh[name], name

@@ -1048,14 +1048,27 @@ def test_bm25_topk_two_phase_equals_naive_window(spark):
     )
 
 
-def test_repetition_signals_arrow_kernel_parity(spark, monkeypatch):
-    """The r19 Arrow batch kernel must be BIT-exact to the column-shape
-    path (explode + 4 exchanges) it replaces: same normalization (done
-    in the JVM for both), same integer counts, same single-division
-    doubles. Exercises NULL text, blank text, messy whitespace, heavy
-    repetition, and unicode content."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.operators.text import (
-        repetition_signals,
+def _spark_and_oracle(out, rows, sql):
+    """(Spark rows, DuckDB rows) as sorted tuples: ``out`` collected,
+    and oracle ``sql`` run over a ``documents`` table of (doc_id, text)
+    ``rows``. Asserts both project the same column names."""
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+    cur = con.execute(sql)
+    assert out.columns == [d[0] for d in cur.description]
+    return sorted(map(tuple, out.collect())), sorted(cur.fetchall())
+
+
+def test_repetition_signals_arrow_kernel_parity(spark):
+    """The repetition Arrow kernel must be BIT-exact to the DuckDB
+    oracle (_sql_doc_repetition): same normalization, same integer
+    counts, same single-division doubles. Exercises NULL text, blank
+    text, messy whitespace, heavy repetition, and unicode content."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
     )
 
     rows = [
@@ -1070,26 +1083,20 @@ def test_repetition_signals_arrow_kernel_parity(spark, monkeypatch):
         (9, "solo"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_REP", "0")
-    col_path = {r.doc_id: r for r in repetition_signals(df).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_REP")
-    kernel = {r.doc_id: r for r in repetition_signals(df).collect()}
-    assert set(col_path) == set(kernel)
-    for doc_id in col_path:
-        a, b = col_path[doc_id], kernel[doc_id]
-        # bit-exact: the oracle hash has no tolerance, so neither do we
-        assert a.dup_word_frac == b.dup_word_frac, doc_id
-        assert a.top_bigram_frac == b.top_bigram_frac, doc_id
-        assert a.dup_trigram_frac == b.dup_trigram_frac, doc_id
+    got, want = _spark_and_oracle(
+        tx.repetition_signals(df), rows, rl._sql_doc_repetition()
+    )
+    # bit-exact: the oracle hash has no tolerance, so neither do we
+    assert got == want
 
 
-def test_gopher_rules_arrow_kernel_parity(spark, monkeypatch):
-    """The r19 gopher word-stats Arrow kernel must be BIT-exact to the
-    explode+groupBy+join column shape across NULL/blank/short/stopword
+def test_gopher_rules_arrow_kernel_parity(spark):
+    """The gopher word-stats Arrow kernel must be BIT-exact to the
+    DuckDB oracle (_sql_gopher_rules) across NULL/blank/short/stopword
     edges — including the NULL-stat rows that drive the coalesced
     booleans and the doubles that reach the output frame."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.operators.text import (
-        gopher_rules,
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
     )
 
     rows = [
@@ -1102,22 +1109,24 @@ def test_gopher_rules_arrow_kernel_parity(spark, monkeypatch):
         (7, "Üppig grüß käse ohne ascii"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_GOPHER", "0")
-    col_path = {r.doc_id: r.asDict() for r in gopher_rules(df, min_words=3).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_GOPHER")
-    kern = {r.doc_id: r.asDict() for r in gopher_rules(df, min_words=3).collect()}
-    assert set(col_path) == set(kern)
-    for doc_id in col_path:
-        assert col_path[doc_id] == kern[doc_id], doc_id
+    got, want = _spark_and_oracle(
+        tx.gopher_rules(df, min_words=rl._GOPHER_MIN_WORDS),
+        rows,
+        rl._sql_gopher_rules(),
+    )
+    assert got == want
 
 
 def test_embed_text_arrow_kernel_parity(spark, monkeypatch):
-    """The r19 embed_text Arrow kernel must be BIT-exact to the column
-    shape (same md5 bucket/sign hashes, same int counts, same
-    sqrt/divide/float32 steps) — checked as exact float equality over
-    every element, including NULL/blank/single-word/unicode edges."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.operators.text import (
-        embed_text,
+    """The embed_text Arrow kernel must be BIT-exact to the DuckDB
+    oracle (_sql_doc_embed_hash: same md5 bucket/sign hashes, same int
+    counts, same sqrt/divide/float32 steps) — checked as exact float
+    equality over every exploded cell, including NULL/blank/
+    single-word/unicode edges. Rerun with the per-task hash memo
+    capped at one entry, so the clear-on-cap path runs on every
+    feature."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
     )
 
     rows = [
@@ -1130,10 +1139,15 @@ def test_embed_text_arrow_kernel_parity(spark, monkeypatch):
         (7, "a b " * 200),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    monkeypatch.setenv("SPARK_GRAFT_ARROW_EMB", "0")
-    col_path = {r.doc_id: r.embedding for r in embed_text(df, dim=16).collect()}
-    monkeypatch.delenv("SPARK_GRAFT_ARROW_EMB")
-    kern = {r.doc_id: r.embedding for r in embed_text(df, dim=16).collect()}
-    assert set(col_path) == set(kern)
-    for doc_id in col_path:
-        assert col_path[doc_id] == kern[doc_id], doc_id
+    for cap in (tx._MEMO_CAP, 1):
+        monkeypatch.setattr(tx, "_MEMO_CAP", cap)
+        cells = tx.embed_text(
+            df, dim=rl._TEXT_EMB_DIM, seed=rl._TEXT_EMB_SEED
+        ).select(
+            "doc_id", F.posexplode("embedding").alias("dim_index", "value")
+        )
+        got, want = _spark_and_oracle(
+            cells, rows, rl._sql_doc_embed_hash()
+        )
+        assert len(want) == len(rows) * rl._TEXT_EMB_DIM
+        assert got == want, cap

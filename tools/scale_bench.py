@@ -301,7 +301,7 @@ def cc_comparison(spark, sf_dir: str, passes: int) -> dict:
     cands = tracked_persist(
         dd.minhash_lsh_pairs(
             docs, n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
-            shingles_df=sh, max_bucket=_LSH_MAX_BUCKET,
+            max_bucket=_LSH_MAX_BUCKET,
         )
     )
     pairs = dd.jaccard_verify_pairs(
