@@ -225,8 +225,7 @@ def moving_avg_daily(
     epoch seconds of the day, which are unique per partition, so ordering
     is deterministic without a tiebreak. At 100 TB the daily aggregate is
     a few-thousand-row frame per key — the window stage is negligible next
-    to the scan, and the scan prunes to the queried date range when the
-    fact table is date-partitioned.
+    to the scan.
     """
     from ..functions.scalars import _DEC
 

@@ -38,6 +38,7 @@ from ..plans.fuel import (
     q2_station_latest_prices,
     q3_price_trend,
 )
+from ..schemas import CLEAN_PRICE, CLEAN_STATION
 from ..sinks.writers import (
     append_prices_partitioned,
     append_parquet,
@@ -148,7 +149,7 @@ class FuelStreamingPipeline:
                 silver, ["code"], ["__arrival_file", "__arrival_pos"]
             ).drop("__arrival_file", "__arrival_pos")
             try:
-                seen = batch.sparkSession.read.parquet(
+                seen = batch.sparkSession.read.schema(CLEAN_STATION).parquet(
                     self.stations_path
                 ).select("code")
             except AnalysisException:
@@ -168,7 +169,6 @@ class FuelStreamingPipeline:
 
         # --- prices: per-key high-watermark publish (F4 analog) -----------
         if self.publish_new_highs:
-            from ..schemas import CLEAN_PRICE
             from .stateful import emit_new_highs
 
             highs_stream, _ = clean_prices(raw_prices)
@@ -194,10 +194,12 @@ class FuelStreamingPipeline:
     # --- on-demand gold queries over silver (EP3) -------------------------
 
     def silver_prices(self) -> DataFrame:
-        return self.spark.read.parquet(self.prices_path).drop("p_date")
+        return self.spark.read.schema(CLEAN_PRICE).parquet(self.prices_path)
 
     def silver_stations(self) -> DataFrame:
-        return self.spark.read.parquet(self.stations_path)
+        return self.spark.read.schema(CLEAN_STATION).parquet(
+            self.stations_path
+        )
 
     def gold_q1(self) -> DataFrame:
         return q1_avg_price_by_fueltype(self.silver_prices())

@@ -62,6 +62,17 @@ def land(dirs, i, doc):
     p.write_text(json.dumps(doc, separators=(",", ":")))
 
 
+def silver_layout(path):
+    """(number of parquet part files, any p_date= directory) under path."""
+    import pathlib
+
+    root = pathlib.Path(path)
+    return (
+        len(list(root.rglob("part-*.parquet"))),
+        any(p.name.startswith("p_date=") for p in root.rglob("*")),
+    )
+
+
 def test_streaming_pipeline_end_to_end(spark, dirs):
     land(dirs, 0, BATCH_1)
     pipe = FuelStreamingPipeline(
@@ -76,8 +87,10 @@ def test_streaming_pipeline_end_to_end(spark, dirs):
         for q in queries:
             q.processAllAvailable()
 
-        # silver prices == batch-clean of batch 1 (2 valid rows)
+        # silver prices == batch-clean of batch 1 (2 valid rows), written
+        # as one file per micro-batch task, not one per event date
         assert pipe.silver_prices().count() == 2
+        assert silver_layout(pipe.prices_path) == (1, False)
         # rejected zero-price row is quarantined with its reason
         rejects = spark.read.parquet(f"{pipe.rejects_path}/prices")
         assert [r.reason for r in rejects.collect()] == ["zero_price"]
@@ -94,6 +107,7 @@ def test_streaming_pipeline_end_to_end(spark, dirs):
             q.processAllAvailable()
 
         assert pipe.silver_prices().count() == 4
+        assert silver_layout(pipe.prices_path) == (2, False)
         live = {
             r.fueltype: r.avg_price
             for r in spark.sql("SELECT * FROM q1_live_test").collect()
@@ -107,6 +121,49 @@ def test_streaming_pipeline_end_to_end(spark, dirs):
     finally:
         for q in queries:
             q.stop()
+
+
+def test_each_sink_writes_through_its_own_name(spark, dirs, monkeypatch):
+    """The benchmark's traced run times the silver, rejects and stations
+    sinks by rebinding these three names in ``streaming.runners``; each
+    sink must call its own name once per micro-batch."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.streaming import (
+        runners,
+    )
+
+    calls = []
+
+    def counted(name):
+        orig = getattr(runners, name)
+
+        def call(df, path):
+            calls.append((name, path))
+            orig(df, path)
+
+        monkeypatch.setattr(runners, name, call)
+
+    for name in ("append_prices_partitioned", "quarantine", "append_parquet"):
+        counted(name)
+    land(dirs, 0, BATCH_1)
+    pipe = FuelStreamingPipeline(
+        spark,
+        landing_dir=dirs["landing"],
+        warehouse_dir=dirs["warehouse"],
+        checkpoint_dir=dirs["checkpoint"],
+        q1_table="q1_live_names",
+    )
+    queries = pipe.start()
+    try:
+        for q in queries:
+            q.processAllAvailable()
+    finally:
+        for q in queries:
+            q.stop()
+    assert sorted(calls) == sorted([
+        ("append_prices_partitioned", pipe.prices_path),
+        ("quarantine", f"{pipe.rejects_path}/prices"),
+        ("append_parquet", pipe.stations_path),
+    ])
 
 
 def test_dedup_first_arrival_within_single_microbatch(spark, dirs):
