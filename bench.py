@@ -54,7 +54,7 @@ def _steal_sample() -> tuple[int, int] | None:
 
 def streaming_bench(spark) -> dict:
     """End-to-end streaming throughput: land deterministic envelope files,
-    run the full pipeline (clean + quarantine + silver append + dedup +
+    run the full pipeline (clean + quarantine + silver write + dedup +
     live Q1) to completion, report rows/sec through the cleaned path.
 
     The r11->r13 driver artifacts showed 17.4k -> 16.5k -> 13.7k rows/s

@@ -154,11 +154,6 @@ def shingles(
     return df2.distinct() if distinct else df2
 
 
-def _norm_sql(text_col: str) -> str:
-    """SQL-expression twin of text.norm_text (needed inside expr lambdas)."""
-    return f"trim(regexp_replace(lower({text_col}), '\\\\s+', ' '))"
-
-
 def winnow_fingerprints(
     df: DataFrame,
     text_col: str = "text",

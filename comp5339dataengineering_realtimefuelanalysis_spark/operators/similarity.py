@@ -163,18 +163,6 @@ def attach_scaled(df: DataFrame, vec_col: str, prefix: str = "") -> DataFrame:
     )
 
 
-def norm_sq_exact(a: Column) -> Column:
-    return dot_exact(a, a)
-
-
-def cosine_exact(a: Column, b: Column) -> Column:
-    """Cosine similarity, deterministic to the bit (see module docstring)."""
-    return dot_exact(a, b).cast("double") / (
-        F.sqrt(norm_sq_exact(a).cast("double"))
-        * F.sqrt(norm_sq_exact(b).cast("double"))
-    )
-
-
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,

@@ -30,7 +30,11 @@ from ..operators.analytics import (
     latest_per_key,
     series_by,
 )
-from ..operators.cleaning import Rule, validate_split
+from ..operators.cleaning import (
+    Rule,
+    null_or_empty_rules,
+    validate_split,
+)
 
 PRICE_KEYS = ("stationcode", "fueltype", "price", "lastupdated")
 STATION_KEYS = (
@@ -48,11 +52,7 @@ STATION_KEYS = (
 def price_rules() -> list[Rule]:
     """F3 missing/empty, F2 zero price, C5 bad numeric, C1 bad timestamp —
     in the reference's fail-fast order (DataCleaning.py:44-79)."""
-    rules: list[Rule] = []
-    for c in PRICE_KEYS:
-        rules.append(Rule(f"missing_{c}", F.col(c).isNull()))
-    for c in PRICE_KEYS:
-        rules.append(Rule(f"empty_{c}", F.col(c).cast("string") == ""))
+    rules = null_or_empty_rules(PRICE_KEYS)
     price_d = F.col("price").try_cast("double")  # ANSI-safe: malformed -> NULL
     rules.append(Rule("zero_price", price_d == 0))  # F2 :54-56
     rules.append(Rule("bad_price", price_d.isNull()))  # C5 coercion fail :65-69
@@ -131,31 +131,6 @@ def q1_avg_price_by_fueltype(prices: DataFrame) -> DataFrame:
     """Q1: AVG(price) per fueltype, 2dp (DataAnalysis.py:67-88)."""
     return avg_by(
         prices, ["fueltype"], "price", alias="avg_price", ndigits=2
-    )
-
-
-def q1_avg_price_windowed(
-    prices: DataFrame, window_duration: str = "1 day"
-) -> DataFrame:
-    """Q1's bounded-state streaming variant: AVG(price) per
-    (event-time window, fueltype), 2dp.
-
-    The reference's Q1 is a full-history global average — unboundable under
-    streaming (complete mode ignores watermarks for eviction). This windowed
-    form runs in update/append mode where the watermark DOES evict closed
-    windows, so state is O(active windows × fueltypes). Documented
-    deviation for production scale (SURVEY.md §2.11 T5)."""
-    return (
-        prices.groupBy(
-            F.window("lastupdated", window_duration).alias("w"), "fueltype"
-        )
-        .agg(F.round(F.avg("price"), 2).alias("avg_price"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "fueltype",
-            "avg_price",
-        )
     )
 
 

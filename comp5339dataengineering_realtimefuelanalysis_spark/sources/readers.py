@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import API_ENVELOPE, RAW_PRICE, RAW_STATION
+from ..schemas import API_ENVELOPE
 
 
 def read_envelope(
@@ -68,24 +68,6 @@ def split_stations(envelope: DataFrame, with_pos: bool = False) -> DataFrame:
         .withColumn("location_longitude", F.col("location.longitude"))
         .drop("location")
     )
-
-
-def read_raw_prices(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
-    """Raw price records from a JSON lines topic/path (S3 analog)."""
-    if streaming:
-        return spark.readStream.schema(RAW_PRICE).json(path)
-    return spark.read.schema(RAW_PRICE).json(path)
-
-
-def read_raw_stations(
-    spark: SparkSession, path: str, streaming: bool = False
-) -> DataFrame:
-    """Raw station records from a JSON lines topic/path (S4 analog)."""
-    if streaming:
-        return spark.readStream.schema(RAW_STATION).json(path)
-    return spark.read.schema(RAW_STATION).json(path)
 
 
 # ---------------------------------------------------------------------------

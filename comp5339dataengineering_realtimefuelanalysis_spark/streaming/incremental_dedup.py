@@ -36,11 +36,12 @@ Scale shape (the 100 TB contract):
     the same skew guard every batch composition wires.
   * Exactly-once across restarts WITHOUT an idempotent-sink assumption:
     silver is partitioned by ``ingest_epoch`` and written with dynamic
-    partition overwrite, so a replayed epoch overwrites its own previous
-    (possibly partial) output; the corpus read excludes the in-flight
-    epoch's partition, so a replay screens against exactly the state the
-    first attempt saw and recomputes byte-identical survivors. Source
-    offsets live in the checkpoint (T3, exactly-once file intake).
+    partition overwrite (``sinks.writers.overwrite_epochs``), so a
+    replayed epoch overwrites its own previous (possibly partial) output;
+    the corpus read excludes the in-flight epoch's partition, so a replay
+    screens against exactly the state the first attempt saw and
+    recomputes byte-identical survivors. Source offsets live in the
+    checkpoint (T3, exactly-once file intake).
 
 Within-batch near-dup keeps the MIN-ID doc of each verified pair rather
 than a full transitive closure (a chain a~b~c with a !~ c keeps {a} where
@@ -65,6 +66,7 @@ from ..operators import dedup as dd
 from ..operators import selection as sel
 from ..operators import similarity as sim
 from ..operators import text as tx
+from ..sinks.writers import overwrite_epochs, write_epoch
 
 
 def _key_prefix():
@@ -169,10 +171,10 @@ class StreamingIncrementalDedup:
     #   broadcast join — batch-local, the per-batch corpus-shuffle-
     #   free contract holds) and docs whose bucket is not in
     #   ``ppl_keep`` land in ``ppl_rejects_path`` with their scores,
-    #   epoch-partitioned with the same dynamic-overwrite replay
-    #   contract. Retraining (re-calling train_ppl_model) rewrites
-    #   the model; a live instance keeps its memoized table and must
-    #   be restarted to pick the new one up, and epoch replays after
+    #   one static overwrite per epoch (sinks.writers.write_epoch).
+    #   Retraining (re-calling train_ppl_model) rewrites the model;
+    #   a live instance keeps its memoized table and must be
+    #   restarted to pick the new one up, and epoch replays after
     #   a retrain may admit differently — the centroid-staleness
     #   story, verbatim: pin, observe drift, retrain deliberately.
     ppl_gate: bool = False
@@ -531,18 +533,16 @@ class StreamingIncrementalDedup:
             if r[0] not in have
         ]
         if missing:
-            (
+            overwrite_epochs(
                 silver.filter(F.col("ingest_epoch").isin(missing))
                 .select(
                     self.id_col,
                     "ingest_epoch",
                     F.posexplode("band_keys").alias("band", "key"),
                 )
-                .withColumn("kp", _key_prefix())
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("kp", "ingest_epoch")
-                .parquet(self.band_index_path)
+                .withColumn("kp", _key_prefix()),
+                self.band_index_path,
+                "kp",
             )
         return len(missing)
 
@@ -1047,21 +1047,18 @@ class StreamingIncrementalDedup:
             spark, scaled.select(self.id_col, "embedding")
         )
         own = self._nearest_cells(scaled, cents, probes=1)
-        (
+        overwrite_epochs(
             own.join(
                 docs.select(self.id_col, "ingest_epoch"), self.id_col
-            )
-            .select(
+            ).select(
                 self.id_col,
                 F.col("q_svec").alias("svec"),
                 F.col("q_norm").alias("norm"),
                 "cell",
                 "ingest_epoch",
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("cell", "ingest_epoch")
-            .parquet(self._sem_rows_path())
+            ),
+            self._sem_rows_path(),
+            "cell",
         )
         self._sem_train_stats(spark, own)
         return len(missing)
@@ -1228,7 +1225,7 @@ class StreamingIncrementalDedup:
             if train_q90
             else None
         )
-        (
+        overwrite_epochs(
             spark.createDataFrame(
                 [
                     (
@@ -1243,12 +1240,8 @@ class StreamingIncrementalDedup:
                     )
                 ],
                 self._SEM_DRIFT_SCHEMA,
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("ingest_epoch")
-            .parquet(self._sem_drift_path())
+            ).coalesce(1),
+            self._sem_drift_path(),
         )
 
     def sem_drift_report(self, spark: SparkSession) -> DataFrame:
@@ -1486,7 +1479,7 @@ class StreamingIncrementalDedup:
                 # index rows for the ADMITTED docs only (rank-1 cell);
                 # a replayed epoch recomputes identical rows and the
                 # dynamic overwrite replaces its own partitions
-                (
+                overwrite_epochs(
                     own.join(
                         F.broadcast(kept.select(did)), did, "semi"
                     )
@@ -1496,11 +1489,9 @@ class StreamingIncrementalDedup:
                         F.col("q_norm").alias("norm"),
                         "cell",
                     )
-                    .withColumn("ingest_epoch", F.lit(int(epoch_id)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("cell", "ingest_epoch")
-                    .parquet(self._sem_rows_path())
+                    .withColumn("ingest_epoch", F.lit(int(epoch_id))),
+                    self._sem_rows_path(),
+                    "cell",
                 )
                 return kept
             finally:
@@ -1675,7 +1666,7 @@ class StreamingIncrementalDedup:
                 | (F.col("top_bigram_frac") > self.rep_max_top_bigram)
                 | (F.col("dup_trigram_frac") > self.rep_max_dup_trigram)
             )
-            (
+            overwrite_epochs(
                 bad.withColumn(
                     "reason",
                     F.concat_ws(
@@ -1696,12 +1687,8 @@ class StreamingIncrementalDedup:
                             F.lit("dup_trigram"),
                         ),
                     ),
-                )
-                .withColumn("ingest_epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_epoch")
-                .parquet(self.rejects_path)
+                ).withColumn("ingest_epoch", F.lit(int(epoch_id))),
+                self.rejects_path,
             )
             batch = batch.join(
                 F.broadcast(bad.select(self.id_col)),
@@ -1737,13 +1724,11 @@ class StreamingIncrementalDedup:
                     )
                 ],
             )
-            (
-                gbad.withColumn("reason", reason)
-                .withColumn("ingest_epoch", F.lit(int(epoch_id)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_epoch")
-                .parquet(self.gopher_rejects_path)
+            overwrite_epochs(
+                gbad.withColumn("reason", reason).withColumn(
+                    "ingest_epoch", F.lit(int(epoch_id))
+                ),
+                self.gopher_rejects_path,
             )
             batch = batch.join(
                 F.broadcast(gbad.select(self.id_col)),
@@ -1777,28 +1762,19 @@ class StreamingIncrementalDedup:
             pbad = scored.filter(
                 ~F.col("ppl_bucket").isin(*self.ppl_keep)
             )
-            # STATIC overwrite of THIS epoch's partition directory, not
-            # dynamic partition overwrite: the ppl gate's reject set is
-            # the one gate output that can legitimately CHANGE on epoch
-            # replay (the LM cost table may have been deliberately
-            # retrained in between), including changing to EMPTY — and
-            # dynamic mode only replaces partitions present in the
-            # written data, so an empty replay would leave the prior
-            # run's stale reject rows contradicting the new admission
-            # set. Writing the partition path directly replaces the
-            # directory even for zero rows; the ingest_epoch column
-            # comes back via partition discovery on read, same schema
-            # as before.
-            (
+            # write_epoch, not overwrite_epochs: the ppl gate's reject
+            # set is the one gate output that can legitimately CHANGE on
+            # epoch replay (the LM cost table may have been deliberately
+            # retrained in between), including changing to EMPTY, and
+            # only the static form clears an epoch that a replay leaves
+            # empty
+            write_epoch(
                 pbad.withColumn(
                     "reason",
                     F.concat(F.lit("ppl_"), F.col("ppl_bucket")),
-                )
-                .write.mode("overwrite")
-                .parquet(
-                    f"{self.ppl_rejects_path}/"
-                    f"ingest_epoch={int(epoch_id)}"
-                )
+                ),
+                self.ppl_rejects_path,
+                epoch_id,
             )
             batch = batch.join(
                 F.broadcast(pbad.select(self.id_col)),
@@ -1951,36 +1927,27 @@ class StreamingIncrementalDedup:
                     survivors = self._semantic_screen(
                         spark, survivors, corpus, epoch_id
                     )
-                # dynamic overwrite is scoped to these writers (the
-                # option), NOT set on the session conf — a session-wide
-                # flip would silently change overwrite semantics for
-                # every later partitioned write sharing the session
-                (
+                overwrite_epochs(
                     survivors.withColumn(
                         "ingest_epoch", F.lit(int(epoch_id))
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("ingest_epoch")
-                    .parquet(self.silver_path)
+                    ),
+                    self.silver_path,
                 )
                 if self.band_index_path is not None:
                     # the exploded at-rest form of the survivors' band
                     # keys; a replayed epoch recomputes the identical
                     # rows and dynamic overwrite replaces exactly its
                     # own (kp, epoch) partitions
-                    (
+                    overwrite_epochs(
                         dd.banded_from_keys(
                             survivors.select(did, "band_keys"), did
                         )
                         .withColumn("kp", _key_prefix())
                         .withColumn(
                             "ingest_epoch", F.lit(int(epoch_id))
-                        )
-                        .write.mode("overwrite")
-                        .option("partitionOverwriteMode", "dynamic")
-                        .partitionBy("kp", "ingest_epoch")
-                        .parquet(self.band_index_path)
+                        ),
+                        self.band_index_path,
+                        "kp",
                     )
             finally:
                 sets.unpersist()

@@ -3,19 +3,21 @@
 Topology (the reference's thread-and-MQTT graph, re-expressed):
 
   landing JSON envelopes (sources/rest.py poller ≙ hourly API fetch, T1)
-    ├─ prices  → validate/clean → foreachBatch: silver append + quarantine (EP2)
+    ├─ prices  → validate/clean → foreachBatch: silver + quarantine (EP2)
     │            └→ Q1 complete-mode live aggregation → memory table (EP3/T2)
     └─ stations → validate/clean → streaming dropDuplicates(code) (D1/T5)
-                 → foreachBatch: silver append
+                 → foreachBatch: silver
 
 Notes on parity:
   * F4 (high-watermark incremental publish) disappears into checkpointed
-    source offsets — each landed file is processed exactly once (T3).
+    source offsets plus epoch-keyed sinks (T3): the offsets make a crashed
+    micro-batch replay the same landed files under the same epoch id, and
+    every sink writes through ``sinks.writers.write_epoch``, so the replay
+    replaces that epoch's output instead of duplicating it.
   * The dashboard's no-watermark, full-history semantics (T4/T5) map to
     complete-output-mode aggregation with no ``withWatermark``: identical
-    results, but incremental instead of 1 Hz full recompute.
-    ``bounded_state=True`` opts into the watermarked variant for
-    production-scale state (documented deviation).
+    results, but incremental instead of 1 Hz full recompute. Q1's state is
+    one row per fueltype, so there is nothing for a watermark to bound.
   * Q2/Q3 run as on-demand batch over the silver tables (the reference also
     recomputes them from accumulated history, DataAnalysis.py:91-165).
 """
@@ -34,7 +36,6 @@ from ..plans.fuel import (
     clean_prices,
     clean_stations,
     q1_avg_price_by_fueltype,
-    q1_avg_price_windowed,
     q2_station_latest_prices,
     q3_price_trend,
 )
@@ -55,9 +56,6 @@ class FuelStreamingPipeline:
     warehouse_dir: str
     checkpoint_dir: str
     q1_table: str = "q1_live"
-    bounded_state: bool = False
-    watermark: str = "1 hour"
-    state_window: str = "1 day"
     # F4's per-key analog: publish only rows whose lastupdated strictly
     # exceeds everything previously seen for their stationcode (the
     # reference's high-watermark publisher, main.py:44-51, keyed per
@@ -88,10 +86,11 @@ class FuelStreamingPipeline:
 
         def sink_prices(batch: DataFrame, epoch_id: int) -> None:
             silver, rejects = clean_prices(batch)
-            append_prices_partitioned(silver, self.prices_path)
+            append_prices_partitioned(silver, self.prices_path, epoch_id)
             quarantine(
                 rejects.withColumnRenamed("reject_reason", "reason"),
                 f"{self.rejects_path}/prices",
+                epoch_id,
             )
 
         q_prices = (
@@ -103,23 +102,9 @@ class FuelStreamingPipeline:
 
         # --- prices: Q1 live aggregation (EP3 consumer b) -----------------
         silver_stream, _ = clean_prices(raw_prices)
-        if self.bounded_state:
-            # Bounded state REQUIRES update/append output: in complete mode
-            # Spark ignores watermarks for state eviction (the full-history
-            # global average cannot be bounded). The bounded variant is a
-            # documented deviation: avg per (event-time window, fueltype)
-            # in update mode — the watermark evicts windows older than
-            # `watermark`, so state is O(active windows), not O(history).
-            q1_df = q1_avg_price_windowed(
-                silver_stream.withWatermark("lastupdated", self.watermark),
-                window_duration=self.state_window,
-            )
-            q1_mode = "update"
-        else:
-            q1_df = q1_avg_price_by_fueltype(silver_stream)
-            q1_mode = "complete"
         q1 = (
-            q1_df.writeStream.outputMode(q1_mode)
+            q1_avg_price_by_fueltype(silver_stream)
+            .writeStream.outputMode("complete")
             .format("memory")
             .queryName(self.q1_table)
             .option("checkpointLocation", f"{self.checkpoint_dir}/q1")
@@ -134,9 +119,12 @@ class FuelStreamingPipeline:
         #     landing file name, then the record's position INSIDE its
         #     envelope array (posexplode; stable however the file is split
         #     into input partitions — see split_stations);
-        # (b) across batches: anti-join against the silver table itself —
-        #     idempotent state that survives even checkpoint loss, and a
+        # (b) across batches: anti-join against the silver table itself,
+        #     minus this epoch's own earlier attempt (a replay must not
+        #     anti-join against the rows it is about to replace) — a
         #     broadcast-size build side (dimension tables are small).
+        #     Checkpoint and warehouse are one unit: a fresh checkpoint
+        #     restarts epoch ids at 0 and overwrites the old epochs.
         raw_stations = split_stations(envelope, with_pos=True).withColumn(
             "__arrival_file", F.input_file_name()
         )
@@ -151,12 +139,15 @@ class FuelStreamingPipeline:
             try:
                 seen = batch.sparkSession.read.schema(CLEAN_STATION).parquet(
                     self.stations_path
-                ).select("code")
+                )
             except AnalysisException:
                 seen = None
             if seen is not None:
+                seen = seen.filter(
+                    F.col("ingest_epoch") != F.lit(int(epoch_id))
+                ).select("code")
                 first = first.join(F.broadcast(seen), "code", "left_anti")
-            append_parquet(first, self.stations_path)
+            append_parquet(first, self.stations_path, epoch_id)
 
         q_stations = (
             raw_stations.writeStream.outputMode("append")
@@ -177,8 +168,7 @@ class FuelStreamingPipeline:
             )
 
             def sink_highs(batch: DataFrame, epoch_id: int) -> None:
-                if not batch.isEmpty():
-                    publish_json(batch, self.published_path)
+                publish_json(batch, self.published_path, epoch_id)
 
             queries.append(
                 highs.writeStream.outputMode("append")
@@ -194,11 +184,19 @@ class FuelStreamingPipeline:
     # --- on-demand gold queries over silver (EP3) -------------------------
 
     def silver_prices(self) -> DataFrame:
-        return self.spark.read.schema(CLEAN_PRICE).parquet(self.prices_path)
+        # the sinks' epoch directories come back as an ``ingest_epoch``
+        # partition column, which is not part of the silver schema
+        return (
+            self.spark.read.schema(CLEAN_PRICE)
+            .parquet(self.prices_path)
+            .drop("ingest_epoch")
+        )
 
     def silver_stations(self) -> DataFrame:
-        return self.spark.read.schema(CLEAN_STATION).parquet(
-            self.stations_path
+        return (
+            self.spark.read.schema(CLEAN_STATION)
+            .parquet(self.stations_path)
+            .drop("ingest_epoch")
         )
 
     def gold_q1(self) -> DataFrame:

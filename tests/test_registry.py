@@ -418,3 +418,46 @@ def test_package_reads_only_deployment_env():
                 names.add(node.value)
     assert {key for _, key in reads} == allowed, sorted(reads)
     assert names <= allowed, sorted(names - allowed)
+
+
+def test_package_writes_streaming_output_only_through_epoch_writers():
+    """Every streaming sink commits a micro-batch through
+    ``sinks/writers.py`` (``write_epoch`` / ``overwrite_epochs``), so a
+    replayed epoch replaces its own output. No module may set
+    ``partitionOverwriteMode`` itself, and no write may append: an
+    append duplicates whatever a replayed epoch had already written."""
+    import ast
+
+    pkg = Path(__file__).resolve().parents[1] / (
+        "comp5339dataengineering_realtimefuelanalysis_spark"
+    )
+    writers = pkg / "sinks" / "writers.py"
+
+    def is_append(node):
+        return isinstance(node, ast.Constant) and node.value == "append"
+
+    overwrite_mode, appends = [], []
+    for path in sorted(pkg.rglob("*.py")):
+        where = str(path.relative_to(pkg))
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Constant)
+                and isinstance(node.value, str)
+                and "partitionOverwriteMode" in node.value
+                and path != writers
+            ):
+                overwrite_mode.append(f"{where}:{node.lineno}")
+            elif isinstance(node, ast.Call):
+                f = node.func
+                if (
+                    isinstance(f, ast.Attribute)
+                    and f.attr == "mode"
+                    and node.args
+                    and is_append(node.args[0])
+                ) or any(
+                    k.arg == "mode" and is_append(k.value)
+                    for k in node.keywords
+                ):
+                    appends.append(f"{where}:{node.lineno}")
+    assert overwrite_mode == [], overwrite_mode
+    assert appends == [], appends

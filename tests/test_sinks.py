@@ -46,11 +46,12 @@ def test_kafka_value_round_trip(spark):
 
 def test_publish_json_lines_share_kafka_payload(spark, tmp_path):
     """publish_json writes the same value column as JSON lines; reading
-    the landing path back with the schema reproduces the records."""
+    the epoch's landing directory back with the schema reproduces the
+    records."""
     df = clean_prices_df(spark)
     out = str(tmp_path / "topic")
-    publish_json(df, out)
-    back = spark.read.schema(CLEAN_PRICE).json(out)
+    publish_json(df, out, 0)
+    back = spark.read.schema(CLEAN_PRICE).json(f"{out}/ingest_epoch=0")
     assert sorted(map(tuple, back.collect())) == sorted(
         map(tuple, df.collect())
     )

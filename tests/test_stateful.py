@@ -177,44 +177,6 @@ def test_sliding_stats_streaming_with_watermark(spark, stream_dirs):
         q.stop()
 
 
-def test_bounded_state_pipeline_equivalent_when_data_in_order(spark, tmp_path):
-    """bounded_state=True (watermarked Q1) produces the same complete-mode
-    answer when no data is late beyond the watermark."""
-    from tests.test_streaming import BATCH_1, land as land_env
-    from comp5339dataengineering_realtimefuelanalysis_spark.streaming.runners import (
-        FuelStreamingPipeline,
-    )
-
-    dirs = {
-        "landing": str(tmp_path / "landing"),
-        "warehouse": str(tmp_path / "wh"),
-        "checkpoint": str(tmp_path / "ckpt"),
-    }
-    pathlib.Path(dirs["landing"]).mkdir()
-    land_env(dirs, 0, BATCH_1)
-    pipe = FuelStreamingPipeline(
-        spark,
-        landing_dir=dirs["landing"],
-        warehouse_dir=dirs["warehouse"],
-        checkpoint_dir=dirs["checkpoint"],
-        q1_table="q1_bounded",
-        bounded_state=True,
-        watermark="1 hour",
-    )
-    queries = pipe.start()
-    try:
-        for q in queries:
-            q.processAllAvailable()
-        live = {
-            r.fueltype: r.avg_price
-            for r in spark.sql("SELECT * FROM q1_bounded").collect()
-        }
-        assert live == {"U91": 180.0, "E10": 171.5}
-    finally:
-        for q in queries:
-            q.stop()
-
-
 def test_session_window_streaming_watermark_rocksdb(spark, stream_dirs):
     """sessionize_window runs under Structured Streaming with a watermark
     (append mode emits a session once the watermark passes its end), with

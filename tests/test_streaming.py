@@ -5,8 +5,10 @@ station dedup (D1), late-data acceptance (T4), and complete-mode Q1 (T2)."""
 from __future__ import annotations
 
 import json
+import pathlib
 
 import pytest
+from pyspark.errors import StreamingQueryException
 
 from comp5339dataengineering_realtimefuelanalysis_spark.sources.readers import (
     read_envelope,
@@ -56,16 +58,12 @@ def dirs(tmp_path):
 
 
 def land(dirs, i, doc):
-    import pathlib
-
     p = pathlib.Path(dirs["landing"]) / f"poll_{i:08d}.json"
     p.write_text(json.dumps(doc, separators=(",", ":")))
 
 
 def silver_layout(path):
     """(number of parquet part files, any p_date= directory) under path."""
-    import pathlib
-
     root = pathlib.Path(path)
     return (
         len(list(root.rglob("part-*.parquet"))),
@@ -136,9 +134,9 @@ def test_each_sink_writes_through_its_own_name(spark, dirs, monkeypatch):
     def counted(name):
         orig = getattr(runners, name)
 
-        def call(df, path):
+        def call(df, path, epoch_id):
             calls.append((name, path))
-            orig(df, path)
+            orig(df, path, epoch_id)
 
         monkeypatch.setattr(runners, name, call)
 
@@ -293,3 +291,109 @@ def test_stream_batch_equivalence(spark, dirs):
     finally:
         for q in queries:
             q.stop()
+
+
+def run_pipeline(spark, dirs, q1_table):
+    """Start the pipeline (highs publisher included), drain every query
+    and stop it. Returns the pipeline and whether any query died."""
+    pipe = FuelStreamingPipeline(
+        spark,
+        landing_dir=dirs["landing"],
+        warehouse_dir=dirs["warehouse"],
+        checkpoint_dir=dirs["checkpoint"],
+        q1_table=q1_table,
+        publish_new_highs=True,
+    )
+    queries = pipe.start()
+    died = False
+    try:
+        for q in queries:
+            try:
+                q.processAllAvailable()
+            except StreamingQueryException:
+                died = True
+    finally:
+        for q in queries:
+            q.stop()
+    return pipe, died
+
+
+def sink_outputs(spark, pipe):
+    """Silver, rejects and published output, duplicates kept: the
+    published JSON lines are compared as a sorted list, not a set."""
+    return {
+        "silver prices": sorted(map(tuple, pipe.silver_prices().collect())),
+        "silver stations": sorted(
+            map(tuple, pipe.silver_stations().collect())
+        ),
+        "rejects": sorted(
+            r.reason
+            for r in spark.read.parquet(
+                f"{pipe.rejects_path}/prices"
+            ).collect()
+        ),
+        "published": sorted(
+            line
+            for f in pathlib.Path(pipe.published_path).rglob("part-*")
+            for line in f.read_text().splitlines()
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, tmp_path_factory):
+    """Sink outputs of one crash-free run over BATCH_1."""
+    root = tmp_path_factory.mktemp("uninterrupted")
+    dirs = {
+        k: str(root / k) for k in ("landing", "warehouse", "checkpoint")
+    }
+    pathlib.Path(dirs["landing"]).mkdir()
+    land(dirs, 0, BATCH_1)
+    pipe, died = run_pipeline(spark, dirs, "q1_live_clean")
+    assert not died
+    out = sink_outputs(spark, pipe)
+    assert len(out["silver prices"]) == 2
+    assert len(out["published"]) == 2
+    return out
+
+
+@pytest.mark.parametrize(
+    "sink, writes_first",
+    [
+        # between the silver write and the rejects write
+        ("quarantine", False),
+        # after the silver and rejects writes
+        ("quarantine", True),
+        # after the stations write: the replay's anti-join must not see
+        # the rows its first attempt wrote, or it replaces them with none
+        ("append_parquet", True),
+        # inside the highs sink, after its publish
+        ("publish_json", True),
+    ],
+)
+def test_sink_crash_replays_exactly_once(
+    spark, dirs, monkeypatch, uninterrupted, sink, writes_first
+):
+    """A micro-batch that dies inside a sink is replayed under the same
+    epoch id on restart (same checkpoints); the epoch-keyed writes
+    replace the first attempt's output, so silver, rejects and the
+    published highs equal an uninterrupted run's."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.streaming import (
+        runners,
+    )
+
+    orig = getattr(runners, sink)
+
+    def crash(*args):
+        if writes_first:
+            orig(*args)
+        raise RuntimeError(f"injected crash in {sink}")
+
+    land(dirs, 0, BATCH_1)
+    with monkeypatch.context() as m:
+        m.setattr(runners, sink, crash)
+        _, died = run_pipeline(spark, dirs, "q1_live_crash")
+    assert died
+    pipe, died = run_pipeline(spark, dirs, "q1_live_restart")
+    assert not died
+    assert sink_outputs(spark, pipe) == uninterrupted

@@ -96,10 +96,10 @@ def test_distinct_count_by(spark):
 def test_publish_json_payloads(spark, tmp_path):
     import json
 
-    publish_json(events(spark).select("event_id", "event_type"), str(tmp_path / "topic"))
+    publish_json(events(spark).select("event_id", "event_type"), str(tmp_path / "topic"), 0)
     lines = [
         json.loads(line)
-        for f in (tmp_path / "topic").glob("part-*")
+        for f in (tmp_path / "topic" / "ingest_epoch=0").glob("part-*")
         for line in f.read_text().splitlines()
     ]
     assert sorted(d["event_id"] for d in lines) == [1, 2, 3, 4, 5, 6]
