@@ -66,7 +66,16 @@ from ..operators import dedup as dd
 from ..operators import selection as sel
 from ..operators import similarity as sim
 from ..operators import text as tx
-from ..sinks.writers import overwrite_epochs, write_epoch
+from ..sinks.writers import (
+    epoch_ids,
+    fold_epochs,
+    overwrite_epochs,
+    read_epochs,
+    recover_fold,
+    rewrite_epochs,
+    stored_epochs,
+    write_epoch,
+)
 
 
 def _key_prefix():
@@ -99,10 +108,6 @@ class StreamingIncrementalDedup:
     # partitioned by (kp, ingest_epoch), a replayed epoch overwrites
     # its own partitions and reads exclude the in-flight epoch.
     band_index_path: str | None = None
-    # compact_epochs write parallelism: files per partition dir after a
-    # fold (1 = minimal file count; raise when a fold is large enough
-    # that one write task per dir would serialize the rewrite)
-    compact_files_per_partition: int = 1
     # Optional embedding-space (SEMANTIC) screen: catches rephrased
     # duplicates whose shingle Jaccard is low but whose hashing-trick
     # cosine is high (word-order edits, clause shuffles). Architecture
@@ -184,13 +189,12 @@ class StreamingIncrementalDedup:
     ppl_seed: str = "lmppl"
     ppl_smooth: int = 1
     ppl_keep: tuple = ("head", "middle")
-    _index_coverage_checked: bool = field(
-        default=False, init=False, repr=False
+    # the at-rest indexes ("band", "sem") whose coverage of silver
+    # has been checked by this instance
+    _coverage_checked: set = field(
+        default_factory=set, init=False, repr=False
     )
     _banding_checked: bool = field(
-        default=False, init=False, repr=False
-    )
-    _sem_coverage_checked: bool = field(
         default=False, init=False, repr=False
     )
     # memoized pinned training-epoch assignment-distance reference
@@ -242,18 +246,6 @@ class StreamingIncrementalDedup:
 
     # -- corpus state -----------------------------------------------------
 
-    def _read_corpus(
-        self, spark: SparkSession, exclude_epoch: int
-    ) -> DataFrame | None:
-        """The admitted corpus as of the epoch being processed. Excluding
-        the in-flight epoch's own partition (partition-pruned) makes a
-        replayed epoch see exactly the pre-attempt state."""
-        try:
-            corpus = spark.read.parquet(self.silver_path)
-        except AnalysisException:
-            return None  # nothing admitted yet
-        return corpus.filter(F.col("ingest_epoch") != F.lit(exclude_epoch))
-
     def _read_band_index(
         self, spark: SparkSession, exclude_epoch: int
     ) -> DataFrame | None:
@@ -263,48 +255,66 @@ class StreamingIncrementalDedup:
         ``_index_read_schema`` (derived id type, pinned string kp)."""
         if self.band_index_path is None:
             return None
-        try:
-            idx = spark.read.schema(
-                self._index_read_schema()
-            ).parquet(self.band_index_path)
-        except AnalysisException:
-            return None
-        return idx.filter(
-            F.col("ingest_epoch") != F.lit(exclude_epoch)
-        ).select(self.id_col, "band", "key", "kp")
+        idx = read_epochs(
+            spark, self.band_index_path, self._index_read_schema(),
+            exclude_epoch,
+        )
+        return None if idx is None else idx.select(
+            self.id_col, "band", "key", "kp"
+        )
 
-    def _check_index_coverage(
-        self, spark: SparkSession, corpus: DataFrame, exclude_epoch: int
+    # per at-rest index: (name, root field, what its rows hold, the
+    # backfill that builds them) — the coverage error's wording
+    _INDEXES = {
+        "band": ("band index", "band_index_path", "near-dup keys",
+                 "backfill_band_index"),
+        "sem": ("semantic index", "sem_index_path", "embeddings",
+                "backfill_sem_index"),
+    }
+
+    def _index_store(self, store: str) -> tuple[str, str]:
+        """(rows path, read schema) of the at-rest index ``store``."""
+        if store == "band":
+            return self.band_index_path, self._index_read_schema()
+        return self._sem_rows_path(), self._sem_read_schema()
+
+    def _missing_epochs(
+        self,
+        spark: SparkSession,
+        store: str,
+        exclude_epoch: int | None = None,
+    ) -> tuple[DataFrame | None, list]:
+        """(silver, the sorted silver epochs the index ``store`` has no
+        rows for), ``exclude_epoch`` left out of both stores; (None, [])
+        when nothing has been admitted yet."""
+        silver = read_epochs(spark, self.silver_path, exclude=exclude_epoch)
+        if silver is None:
+            return None, []
+        idx = read_epochs(spark, *self._index_store(store), exclude_epoch)
+        have = set() if idx is None else epoch_ids(idx)
+        return silver, sorted(epoch_ids(silver) - have)
+
+    def _check_coverage(
+        self, spark: SparkSession, store: str, exclude_epoch: int
     ) -> None:
-        """Refuse to screen against a band index that does not cover
-        every admitted silver epoch — an index enabled AFTER epochs were
-        admitted without it would silently skip near-dup screening
-        against those docs. Checked once per runner instance (coverage
-        cannot regress mid-run: every epoch writes both stores)."""
-        if self._index_coverage_checked:
+        """Refuse to screen against an index (``store``: "band" or
+        "sem") that does not cover every admitted silver epoch — an index
+        enabled AFTER epochs were admitted without it would silently skip
+        screening against those docs. Checked once per runner instance
+        and store (coverage cannot regress mid-run: every epoch writes
+        every store)."""
+        if store in self._coverage_checked:
             return
-        idx = spark.read.schema(
-            self._index_read_schema()
-        ).parquet(self.band_index_path)
-        idx_epochs = {
-            r[0]
-            for r in idx.filter(
-                F.col("ingest_epoch") != F.lit(exclude_epoch)
-            ).select("ingest_epoch").distinct().collect()
-        }
-        silver_epochs = {
-            r[0]
-            for r in corpus.select("ingest_epoch").distinct().collect()
-        }
-        missing = silver_epochs - idx_epochs
+        _, missing = self._missing_epochs(spark, store, exclude_epoch)
         if missing:
+            name, root, rows, backfill = self._INDEXES[store]
             raise RuntimeError(
-                f"band index {self.band_index_path} is missing epochs "
-                f"{sorted(missing)} that exist in silver — screening "
-                "against it would skip those docs' near-dup keys. Run "
-                "backfill_band_index(spark) once before streaming."
+                f"{name} {getattr(self, root)} is missing epochs "
+                f"{missing} that exist in silver — screening against it "
+                f"would skip those docs' {rows}. Run {backfill}(spark) "
+                "once before streaming."
             )
-        self._index_coverage_checked = True
+        self._coverage_checked.add(store)
 
     # -- banding version pin / migration ----------------------------------
 
@@ -347,18 +357,15 @@ class StreamingIncrementalDedup:
             # built with the same ``bands`` but a different
             # ``num_hashes`` has different rows-per-band, hence
             # different key strings of the same COUNT.)
-            try:
-                sample = (
-                    spark.read.parquet(self.silver_path)
-                    .filter(
-                        F.col("band_keys").isNotNull()
-                        & F.col(self.text_col).isNotNull()
-                    )
-                    .select(self.id_col, self.text_col, "band_keys")
-                    .first()
+            silver = read_epochs(spark, self.silver_path)
+            sample = None if silver is None else (
+                silver.filter(
+                    F.col("band_keys").isNotNull()
+                    & F.col(self.text_col).isNotNull()
                 )
-            except AnalysisException:
-                sample = None
+                .select(self.id_col, self.text_col, "band_keys")
+                .first()
+            )
             if sample is not None:
                 try:
                     recomputed = (
@@ -464,10 +471,7 @@ class StreamingIncrementalDedup:
         only the new pin is written, so a fresh deployment can start
         directly at the knee)."""
         n = self.n if n is None else n
-        try:
-            silver = spark.read.parquet(self.silver_path)
-        except AnalysisException:
-            silver = None
+        silver = read_epochs(spark, self.silver_path)
         count = 0
         if silver is not None:
             rekeyed = dd.minhash_band_keys(
@@ -478,24 +482,18 @@ class StreamingIncrementalDedup:
                 num_hashes,
                 bands,
             )
-            (
-                rekeyed.write.mode("overwrite")
-                .partitionBy("ingest_epoch")
-                .parquet(dest_silver_path)
-            )
+            rewrite_epochs(rekeyed, dest_silver_path)
             migrated = spark.read.parquet(dest_silver_path)
             count = migrated.count()
             if dest_band_index_path is not None:
-                (
+                rewrite_epochs(
                     migrated.select(
                         self.id_col,
                         "ingest_epoch",
                         F.posexplode("band_keys").alias("band", "key"),
-                    )
-                    .withColumn("kp", _key_prefix())
-                    .write.mode("overwrite")
-                    .partitionBy("kp", "ingest_epoch")
-                    .parquet(dest_band_index_path)
+                    ).withColumn("kp", _key_prefix()),
+                    dest_band_index_path,
+                    "kp",
                 )
         spark.createDataFrame(
             [(n, num_hashes, bands)], self._BANDING_PIN_SCHEMA
@@ -512,26 +510,7 @@ class StreamingIncrementalDedup:
         of exactly the rebuilt (kp, epoch) partitions)."""
         if self.band_index_path is None:
             raise ValueError("band_index_path is not configured")
-        try:
-            silver = spark.read.parquet(self.silver_path)
-        except AnalysisException:
-            return 0  # nothing admitted yet
-        have: set[int] = set()
-        try:
-            idx = spark.read.schema(
-                self._index_read_schema()
-            ).parquet(self.band_index_path)
-            have = {
-                r[0]
-                for r in idx.select("ingest_epoch").distinct().collect()
-            }
-        except AnalysisException:
-            pass
-        missing = [
-            r[0]
-            for r in silver.select("ingest_epoch").distinct().collect()
-            if r[0] not in have
-        ]
+        silver, missing = self._missing_epochs(spark, "band")
         if missing:
             overwrite_epochs(
                 silver.filter(F.col("ingest_epoch").isin(missing))
@@ -547,131 +526,6 @@ class StreamingIncrementalDedup:
         return len(missing)
 
     # -- epoch compaction (maintenance) -----------------------------------
-
-    @staticmethod
-    def _pending_path(path: str) -> str:
-        # underscore prefix: Spark's file index treats it as hidden, so
-        # the manifest never pollutes a parquet read of the store root
-        return os.path.join(path, "_compact_pending.json")
-
-    @staticmethod
-    def _epoch_dirs(path: str, outer: tuple[str, ...], epoch) -> list:
-        import glob as _glob
-
-        pat = os.path.join(
-            path, *(f"{c}=*" for c in outer), f"ingest_epoch={epoch}"
-        )
-        return _glob.glob(pat)
-
-    def _apply_compaction(self, path: str, plan: dict) -> None:
-        """Execute (or re-execute after a crash) the delete+rename half
-        of a compaction whose temp write already committed. Idempotent:
-        deletes ignore missing dirs, renames skip temp dirs already
-        moved, and the manifest is removed last."""
-        import shutil
-
-        outer = tuple(plan["outer"])
-        tmp, tgt = plan["temp"], plan["tgt"]
-        for e in plan["src"]:
-            if e == tgt:
-                continue
-            for d in self._epoch_dirs(path, outer, e):
-                shutil.rmtree(d, ignore_errors=True)
-        for d in self._epoch_dirs(tmp, outer, tgt):
-            dest = os.path.join(path, os.path.relpath(d, tmp))
-            if os.path.isdir(dest):
-                shutil.rmtree(dest, ignore_errors=True)
-            os.makedirs(os.path.dirname(dest), exist_ok=True)
-            os.rename(d, dest)
-        shutil.rmtree(tmp, ignore_errors=True)
-        try:
-            os.remove(self._pending_path(path))
-        except FileNotFoundError:
-            pass
-
-    def _recover_compaction(self, path: str) -> None:
-        import json as _json
-        import shutil
-
-        pending = self._pending_path(path)
-        if not os.path.isfile(pending):
-            return
-        with open(pending) as f:
-            plan = _json.load(f)
-        if os.path.isfile(os.path.join(plan["temp"], "_SUCCESS")):
-            # temp write committed before the crash: finish the job
-            self._apply_compaction(path, plan)
-        else:
-            # crashed mid-temp-write: nothing in the store was mutated
-            # (the manifest is written only after the temp commits, so
-            # reaching here means a manifest from a PARTIAL apply whose
-            # temp was already consumed, or a torn temp) — roll forward
-            # is unsafe; drop the temp and manifest, store is intact
-            shutil.rmtree(plan["temp"], ignore_errors=True)
-            os.remove(pending)
-
-    def _compact_store(
-        self,
-        spark: SparkSession,
-        path: str,
-        outer: tuple[str, ...],
-        src: list,
-        tgt,
-        read_schema: str | None = None,
-    ) -> int:
-        """Fold ``ingest_epoch`` partitions ``src`` into ``tgt`` under
-        ``path`` (outer partition columns preserved). Crash-safe:
-        temp-write -> manifest -> delete -> rename; see compact_epochs.
-        Returns the number of rows in the compacted partition."""
-        import json as _json
-
-        self._recover_compaction(path)
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        try:
-            df = reader.parquet(path)
-        except AnalysisException:
-            return 0
-        present = {
-            r[0] for r in df.select("ingest_epoch").distinct().collect()
-        }
-        fold = sorted(e for e in src if e in present)
-        # a single foldable epoch still folds when its label differs
-        # from the target: stores must end with the SAME epoch set as
-        # silver or the coverage checks would see phantom gaps
-        if not fold or fold == [tgt]:
-            return 0
-        tmp = path.rstrip("/") + "_compact_tmp"
-        rows = (
-            df.filter(F.col("ingest_epoch").isin(fold))
-            .withColumn("ingest_epoch", F.lit(tgt))
-        )
-        # one shuffle so each output partition dir gets a BOUNDED file
-        # count — without it every write task fans a part-file into
-        # every dir it holds rows for, and the band index measurably
-        # kept ~95% of its small files through a 100->1 epoch fold
-        # (the whole point of compacting). compact_files_per_partition
-        # salts the shuffle so a huge fold still writes in parallel
-        # (default 1 file/dir: right for the per-epoch-small-files
-        # regime compaction exists for; raise it when a fold holds
-        # more rows than one task should write).
-        salt = F.pmod(
-            F.hash(F.col(self.id_col)),
-            F.lit(max(1, self.compact_files_per_partition)),
-        )
-        rows = rows.repartition(*[F.col(c) for c in outer], salt)
-        (
-            rows.write.mode("overwrite")
-            .partitionBy(*outer, "ingest_epoch")
-            .parquet(tmp)
-        )
-        n = spark.read.parquet(tmp).count()
-        plan = {"temp": tmp, "src": fold, "tgt": tgt, "outer": list(outer)}
-        with open(self._pending_path(path), "w") as f:
-            _json.dump(plan, f)
-        self._apply_compaction(path, plan)
-        return n
 
     def compact_epochs(
         self, spark: SparkSession, up_to_epoch: int | None = None
@@ -700,28 +554,15 @@ class StreamingIncrementalDedup:
 
         Returns {"folded_epochs": n, "target": id, "rows": {...}} —
         folded_epochs 0 means there was nothing to compact."""
-        for p, outer, schema in self._compactable_stores():
-            self._recover_compaction(p)
+        stores = self._compactable_stores()
+        for p, outer, _ in stores:
+            recover_fold(p)
         # fold set from the UNION of all stores' epochs, not silver's
         # alone: a run interrupted between stores leaves silver folded
         # and an index not — the next call must still fold the index
-        all_epochs: set = set()
-        silver_epochs: set = set()
-        for p, outer, schema in self._compactable_stores():
-            reader = spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            try:
-                df = reader.parquet(p)
-            except AnalysisException:
-                continue
-            eps = {
-                r[0]
-                for r in df.select("ingest_epoch").distinct().collect()
-            }
-            all_epochs |= eps
-            if p == self.silver_path:
-                silver_epochs = eps
+        epochs = {p: stored_epochs(p, *outer) for p, outer, _ in stores}
+        all_epochs = set().union(*epochs.values())
+        silver_epochs = epochs[self.silver_path]
         if not silver_epochs:
             return {"folded_epochs": 0, "target": None, "rows": {}}
         cut = max(silver_epochs) if up_to_epoch is None else up_to_epoch
@@ -729,12 +570,12 @@ class StreamingIncrementalDedup:
         if len(fold) < 2:
             return {"folded_epochs": 0, "target": None, "rows": {}}
         tgt = fold[0]
-        rows: dict[str, int] = {}
-        for p, outer, schema in self._compactable_stores():
-            name = os.path.basename(p.rstrip("/")) or p
-            rows[name] = self._compact_store(
-                spark, p, outer, fold, tgt, read_schema=schema
+        rows = {
+            os.path.basename(p.rstrip("/")) or p: fold_epochs(
+                spark, p, fold, tgt, *outer, schema=schema
             )
+            for p, outer, schema in stores
+        }
         return {
             "folded_epochs": len(fold),
             "target": tgt,
@@ -812,13 +653,8 @@ class StreamingIncrementalDedup:
         """True when the at-rest semantic index holds ANY admitted
         rows — the precondition under which retraining centroids is
         forbidden (see _sem_centroids)."""
-        try:
-            idx = spark.read.schema(self._sem_read_schema()).parquet(
-                self._sem_rows_path()
-            )
-            return idx.first() is not None
-        except AnalysisException:
-            return False
+        idx = self._read_sem_index(spark, exclude_epoch=None)
+        return idx is not None and idx.first() is not None
 
     def _sem_centroids(
         self, spark: SparkSession, emb: DataFrame
@@ -966,49 +802,17 @@ class StreamingIncrementalDedup:
         return dot.cast("double") / (na * nb)
 
     def _read_sem_index(
-        self, spark: SparkSession, exclude_epoch: int
+        self, spark: SparkSession, exclude_epoch: int | None
     ) -> DataFrame | None:
         if self.sem_index_path is None:
             return None
-        try:
-            idx = spark.read.schema(self._sem_read_schema()).parquet(
-                self._sem_rows_path()
-            )
-        except AnalysisException:
-            return None
-        return idx.filter(
-            F.col("ingest_epoch") != F.lit(exclude_epoch)
-        ).select(self.id_col, "svec", "norm", "cell")
-
-    def _check_sem_coverage(
-        self, spark: SparkSession, corpus: DataFrame, exclude_epoch: int
-    ) -> None:
-        """Refuse to screen against a semantic index missing admitted
-        silver epochs — same contract as _check_index_coverage."""
-        if self._sem_coverage_checked:
-            return
-        idx = spark.read.schema(self._sem_read_schema()).parquet(
-            self._sem_rows_path()
+        idx = read_epochs(
+            spark, self._sem_rows_path(), self._sem_read_schema(),
+            exclude_epoch,
         )
-        idx_epochs = {
-            r[0]
-            for r in idx.filter(
-                F.col("ingest_epoch") != F.lit(exclude_epoch)
-            ).select("ingest_epoch").distinct().collect()
-        }
-        silver_epochs = {
-            r[0]
-            for r in corpus.select("ingest_epoch").distinct().collect()
-        }
-        missing = silver_epochs - idx_epochs
-        if missing:
-            raise RuntimeError(
-                f"semantic index {self.sem_index_path} is missing epochs "
-                f"{sorted(missing)} that exist in silver — screening "
-                "against it would skip those docs' embeddings. Run "
-                "backfill_sem_index(spark) once before streaming."
-            )
-        self._sem_coverage_checked = True
+        return None if idx is None else idx.select(
+            self.id_col, "svec", "norm", "cell"
+        )
 
     def backfill_sem_index(self, spark: SparkSession) -> int:
         """Build semantic-index rows for every silver epoch missing
@@ -1019,26 +823,7 @@ class StreamingIncrementalDedup:
         if self.sem_index_path is None:
             raise ValueError("sem_index_path is not configured")
         self._check_retrain_marker()
-        try:
-            silver = spark.read.parquet(self.silver_path)
-        except AnalysisException:
-            return 0
-        have: set[int] = set()
-        try:
-            idx = spark.read.schema(self._sem_read_schema()).parquet(
-                self._sem_rows_path()
-            )
-            have = {
-                r[0]
-                for r in idx.select("ingest_epoch").distinct().collect()
-            }
-        except AnalysisException:
-            pass
-        missing = [
-            r[0]
-            for r in silver.select("ingest_epoch").distinct().collect()
-            if r[0] not in have
-        ]
+        silver, missing = self._missing_epochs(spark, "sem")
         if not missing:
             return 0
         docs = silver.filter(F.col("ingest_epoch").isin(missing))
@@ -1359,15 +1144,13 @@ class StreamingIncrementalDedup:
                         "ingest_epoch",
                     )
                 )
-                n.write.mode("overwrite").partitionBy(
-                    "cell", "ingest_epoch"
-                ).parquet(self._sem_rows_path())
+                rewrite_epochs(n, self._sem_rows_path(), "cell")
                 remapped = own.count()
             finally:
                 own.unpersist()
         finally:
             scaled.unpersist()
-        self._sem_coverage_checked = False
+        self._coverage_checked.discard("sem")
         os.remove(self._sem_marker_path())
         return remapped
 
@@ -1435,7 +1218,7 @@ class StreamingIncrementalDedup:
                 drops = wb_drop
                 idx = self._read_sem_index(spark, epoch_id)
                 if corpus is not None and idx is not None:
-                    self._check_sem_coverage(spark, corpus, epoch_id)
+                    self._check_coverage(spark, "sem", epoch_id)
                 elif corpus is not None and idx is None:
                     raise RuntimeError(
                         f"semantic index {self.sem_index_path} is empty "
@@ -1802,7 +1585,9 @@ class StreamingIncrementalDedup:
             .filter(F.col("is_canonical"))
             .drop("canonical_id", "is_canonical")
         )
-        corpus = self._read_corpus(spark, epoch_id)
+        # the admitted corpus as of this epoch: excluding the in-flight
+        # epoch's own partition makes a replay see the pre-attempt state
+        corpus = read_epochs(spark, self.silver_path, exclude=epoch_id)
         if corpus is not None:
             # 2. vs corpus, exact: re-delivered ids and known content.
             #    NOT a plain left_anti(batch, corpus): Spark cannot
@@ -1855,7 +1640,7 @@ class StreamingIncrementalDedup:
                 corpus_banded = self._read_band_index(spark, epoch_id)
                 left_banded = batch_banded
                 if corpus_banded is not None:
-                    self._check_index_coverage(spark, corpus, epoch_id)
+                    self._check_coverage(spark, "band", epoch_id)
                     partition_col = "kp"
                     left_banded = batch_banded.withColumn(
                         "kp", _key_prefix()

@@ -29,7 +29,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.errors import AnalysisException
 
 from ..operators.cleaning import dedup_first
 from ..plans.fuel import (
@@ -43,8 +42,12 @@ from ..schemas import CLEAN_PRICE, CLEAN_STATION
 from ..sinks.writers import (
     append_prices_partitioned,
     append_parquet,
+    fold_epochs,
     publish_json,
     quarantine,
+    read_epochs,
+    recover_fold,
+    stored_epochs,
 )
 from ..sources.readers import read_envelope, split_prices, split_stations
 
@@ -136,17 +139,14 @@ class FuelStreamingPipeline:
             first = dedup_first(
                 silver, ["code"], ["__arrival_file", "__arrival_pos"]
             ).drop("__arrival_file", "__arrival_pos")
-            try:
-                seen = batch.sparkSession.read.schema(CLEAN_STATION).parquet(
-                    self.stations_path
-                )
-            except AnalysisException:
-                seen = None
+            seen = read_epochs(
+                batch.sparkSession, self.stations_path, CLEAN_STATION,
+                exclude=epoch_id,
+            )
             if seen is not None:
-                seen = seen.filter(
-                    F.col("ingest_epoch") != F.lit(int(epoch_id))
-                ).select("code")
-                first = first.join(F.broadcast(seen), "code", "left_anti")
+                first = first.join(
+                    F.broadcast(seen.select("code")), "code", "left_anti"
+                )
             append_parquet(first, self.stations_path, epoch_id)
 
         q_stations = (
@@ -180,6 +180,40 @@ class FuelStreamingPipeline:
             )
 
         return queries
+
+    # --- maintenance --------------------------------------------------------
+
+    def compact_epochs(self) -> dict:
+        """Fold the silver stores' committed epochs so their directory
+        count stays bounded: past 32, every read of a store (the stations
+        ``seen`` read each poll, each dashboard read) starts a listing
+        job. Prices and rejects share the prices query's epoch ids;
+        stations has its own. Every epoch below a query's highest (the
+        only one a checkpoint replay can rewrite) folds into its lowest.
+        Published highs (text) are not folded.
+
+        A maintenance step: run it with the queries STOPPED — a read or
+        sink racing the fold's delete step can hit a missing file. Local
+        paths only. Returns rows per store in its folded epoch (0: nothing
+        to fold)."""
+        groups = (
+            {"prices": self.prices_path,
+             "rejects": f"{self.rejects_path}/prices"},
+            {"stations": self.stations_path},
+        )
+        rows = {}
+        for group in groups:
+            for path in group.values():
+                recover_fold(path)
+            epochs = set().union(*map(stored_epochs, group.values()))
+            fold = sorted(e for e in epochs if e < max(epochs, default=0))
+            for name, path in group.items():
+                rows[name] = (
+                    fold_epochs(self.spark, path, fold, fold[0])
+                    if fold
+                    else 0
+                )
+        return rows
 
     # --- on-demand gold queries over silver (EP3) -------------------------
 

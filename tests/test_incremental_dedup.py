@@ -1393,6 +1393,9 @@ def test_compact_epochs_preserves_content_and_screening(spark, tmp_path):
     leave screening behavior unchanged: a near-dup of a doc admitted
     five epochs ago must still be rejected after its partition was
     folded away."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.sinks import (
+        writers,
+    )
     from comp5339dataengineering_realtimefuelanalysis_spark.streaming.incremental_dedup import (  # noqa: E501
         StreamingIncrementalDedup,
     )
@@ -1436,7 +1439,7 @@ def test_compact_epochs_preserves_content_and_screening(spark, tmp_path):
              .collect()}
     assert i_eps == {0, 4}
     # no pending manifest or temp dirs left behind
-    assert not os.path.exists(d._pending_path(d.silver_path))
+    assert not os.path.exists(writers._pending_path(d.silver_path))
     assert not os.path.exists(d.silver_path + "_compact_tmp")
 
     # screening vs the compacted corpus: near-dup of the EARLIEST
@@ -1469,6 +1472,9 @@ def test_compact_epochs_crash_recovery(spark, tmp_path, monkeypatch):
     next call, ending bit-identical to an uninterrupted fold — and a
     partial run that folded silver but not the index must still fold
     the index on retry (fold set from the union of stores)."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.sinks import (
+        writers,
+    )
     from comp5339dataengineering_realtimefuelanalysis_spark.streaming import (
         incremental_dedup as mod,
     )
@@ -1492,24 +1498,22 @@ def test_compact_epochs_crash_recovery(spark, tmp_path, monkeypatch):
 
     # crash INSIDE the apply step of the first store (silver): temp +
     # manifest committed, deletes/renames not yet run
-    real_apply = mod.StreamingIncrementalDedup._apply_compaction
+    real_apply = writers._apply_fold
     calls = {"n": 0}
 
-    def boom(self, path, plan):
+    def boom(path, plan):
         calls["n"] += 1
         if calls["n"] == 1:
             raise OSError("simulated crash mid-compaction")
-        return real_apply(self, path, plan)
+        return real_apply(path, plan)
 
-    monkeypatch.setattr(
-        mod.StreamingIncrementalDedup, "_apply_compaction", boom
-    )
+    monkeypatch.setattr(writers, "_apply_fold", boom)
     with pytest.raises(OSError, match="simulated crash"):
         d.compact_epochs(spark)
-    assert os.path.exists(d._pending_path(d.silver_path))
+    assert os.path.exists(writers._pending_path(d.silver_path))
 
     res = d.compact_epochs(spark)  # recovers silver, then folds index
-    assert not os.path.exists(d._pending_path(d.silver_path))
+    assert not os.path.exists(writers._pending_path(d.silver_path))
     silver = spark.read.parquet(d.silver_path)
     assert sorted(
         map(tuple, silver.drop("ingest_epoch").collect())

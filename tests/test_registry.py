@@ -425,7 +425,10 @@ def test_package_writes_streaming_output_only_through_epoch_writers():
     ``sinks/writers.py`` (``write_epoch`` / ``overwrite_epochs``), so a
     replayed epoch replaces its own output. No module may set
     ``partitionOverwriteMode`` itself, and no write may append: an
-    append duplicates whatever a replayed epoch had already written."""
+    append duplicates whatever a replayed epoch had already written.
+    The ``ingest_epoch=<id>`` layout itself is known to that module
+    alone: no other module may partition by ``ingest_epoch`` or spell
+    an ``ingest_epoch=`` path (f-strings included)."""
     import ast
 
     pkg = Path(__file__).resolve().parents[1] / (
@@ -436,17 +439,22 @@ def test_package_writes_streaming_output_only_through_epoch_writers():
     def is_append(node):
         return isinstance(node, ast.Constant) and node.value == "append"
 
-    overwrite_mode, appends = [], []
+    def is_str(node, text):
+        return (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and text in node.value
+        )
+
+    overwrite_mode, appends, layout = [], [], []
     for path in sorted(pkg.rglob("*.py")):
         where = str(path.relative_to(pkg))
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if (
-                isinstance(node, ast.Constant)
-                and isinstance(node.value, str)
-                and "partitionOverwriteMode" in node.value
-                and path != writers
-            ):
+            if path != writers and is_str(node, "partitionOverwriteMode"):
                 overwrite_mode.append(f"{where}:{node.lineno}")
+            elif path != writers and is_str(node, "ingest_epoch="):
+                # an f-string's literal parts are Constant nodes too
+                layout.append(f"{where}:{node.lineno}")
             elif isinstance(node, ast.Call):
                 f = node.func
                 if (
@@ -459,5 +467,14 @@ def test_package_writes_streaming_output_only_through_epoch_writers():
                     for k in node.keywords
                 ):
                     appends.append(f"{where}:{node.lineno}")
+                elif (
+                    path != writers
+                    and isinstance(f, ast.Attribute)
+                    and f.attr == "partitionBy"
+                    and any(is_str(a, "ingest_epoch") for a in node.args)
+                ):
+                    # the line the call itself is on, not the chain's
+                    layout.append(f"{where}:{f.end_lineno}")
     assert overwrite_mode == [], overwrite_mode
     assert appends == [], appends
+    assert layout == [], layout

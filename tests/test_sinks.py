@@ -1,7 +1,11 @@
 """Sink tests: the Kafka payload form of K1 (value/key column construction
-+ lossless round-trip) and the JSON-lines publish path that shares it."""
++ lossless round-trip), the JSON-lines publish path that shares it, and the
+epoch-keyed store's fold recovery."""
 
 from __future__ import annotations
+
+import json
+import os
 
 from pyspark.sql import functions as F
 
@@ -91,3 +95,38 @@ def test_prices_csv_malformed_ts_becomes_null(spark, tmp_path):
             for r in read_prices_csv(spark, str(p)).collect()}
     assert rows["100"] is None          # -> rejected by validate layer
     assert rows["200"] is not None
+
+
+def test_recover_fold_rolls_back_a_torn_temp(spark, tmp_path):
+    """A fold manifest whose temp write never committed (no ``_SUCCESS``)
+    is rolled back: every epoch directory and row stays where it was, and
+    the manifest and the torn temp directory are removed."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.sinks import (
+        writers,
+    )
+
+    store = str(tmp_path / "store")
+    df = clean_prices_df(spark)
+    for e in range(3):
+        writers.write_epoch(
+            df.withColumn("price", F.col("price") + e), store, e
+        )
+
+    def stored_rows():
+        return sorted(map(tuple, spark.read.parquet(store).collect()))
+
+    before = stored_rows()
+    tmp = store + "_compact_tmp"
+    writers.rewrite_epochs(
+        df.limit(1).withColumn("ingest_epoch", F.lit(0)), tmp
+    )
+    os.remove(os.path.join(tmp, "_SUCCESS"))
+    with open(writers._pending_path(store), "w") as f:
+        json.dump({"temp": tmp, "src": [0, 1], "tgt": 0, "outer": []}, f)
+
+    writers.recover_fold(store)
+
+    assert writers.stored_epochs(store) == {0, 1, 2}
+    assert stored_rows() == before
+    assert not os.path.exists(writers._pending_path(store))
+    assert not os.path.exists(tmp)

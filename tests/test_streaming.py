@@ -4,6 +4,7 @@ station dedup (D1), late-data acceptance (T4), and complete-mode Q1 (T2)."""
 
 from __future__ import annotations
 
+import datetime
 import json
 import pathlib
 
@@ -293,9 +294,10 @@ def test_stream_batch_equivalence(spark, dirs):
             q.stop()
 
 
-def run_pipeline(spark, dirs, q1_table):
-    """Start the pipeline (highs publisher included), drain every query
-    and stop it. Returns the pipeline and whether any query died."""
+def run_pipeline(spark, dirs, q1_table, polls=()):
+    """Start the pipeline (highs publisher included), drain every query,
+    then land each ``(index, envelope)`` of ``polls`` in turn and drain
+    again, and stop it. Returns the pipeline and whether any query died."""
     pipe = FuelStreamingPipeline(
         spark,
         landing_dir=dirs["landing"],
@@ -307,11 +309,14 @@ def run_pipeline(spark, dirs, q1_table):
     queries = pipe.start()
     died = False
     try:
-        for q in queries:
-            try:
-                q.processAllAvailable()
-            except StreamingQueryException:
-                died = True
+        for poll in (None, *polls):
+            if poll is not None:
+                land(dirs, *poll)
+            for q in queries:
+                try:
+                    q.processAllAvailable()
+                except StreamingQueryException:
+                    died = True
     finally:
         for q in queries:
             q.stop()
@@ -397,3 +402,141 @@ def test_sink_crash_replays_exactly_once(
     pipe, died = run_pipeline(spark, dirs, "q1_live_restart")
     assert not died
     assert sink_outputs(spark, pipe) == uninterrupted
+
+
+BATCH_3 = {
+    "stations": [station(400, name="Delta")],
+    "prices": [
+        price(300, "E10", 175.0, "04/10/2023 07:00:00"),
+        price(400, "P98", 0, "04/10/2023 07:30:00"),  # rejected
+    ],
+}
+
+BATCH_4 = {
+    "stations": [
+        station(300, name="Gamma-RENAMED"),  # re-delivery of a folded epoch
+        station(500, name="Epsilon"),
+    ],
+    "prices": [
+        price(500, "U91", 185.0, "05/10/2023 09:00:00"),
+        price(100, "U91", 195.0, "05/10/2023 10:00:00"),
+    ],
+}
+
+
+def jobs_to_build(spark, read, group):
+    """Spark jobs started while ``read()`` builds a reader (a listing job
+    when the store has more than 32 epoch directories)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "reader build")
+    try:
+        read()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_compact_epochs_folds_fuel_stores(spark, dirs):
+    """Forty epochs make every silver read start a listing job. After
+    compact_epochs each store holds its lowest and highest epoch, the
+    read starts none, and every row is still there. Half the stations
+    epochs are empty, as re-delivery-only polls leave them."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.schemas import (
+        CLEAN_PRICE,
+        CLEAN_STATION,
+    )
+    from comp5339dataengineering_realtimefuelanalysis_spark.sinks.writers import (  # noqa: E501
+        stored_epochs,
+        write_epoch,
+    )
+
+    pipe = FuelStreamingPipeline(
+        spark,
+        landing_dir=dirs["landing"],
+        warehouse_dir=dirs["warehouse"],
+        checkpoint_dir=dirs["checkpoint"],
+    )
+    rejects_path = f"{pipe.rejects_path}/prices"
+    t0 = datetime.datetime(2023, 10, 1)
+    for e in range(40):
+        code = str(100 + e)
+        write_epoch(
+            spark.createDataFrame(
+                [(code, "U91", 150.0 + e, t0 + datetime.timedelta(hours=e))],
+                CLEAN_PRICE,
+            ).coalesce(1),
+            pipe.prices_path,
+            e,
+        )
+        write_epoch(
+            spark.createDataFrame(
+                [(code, "zero_price")], "stationcode string, reason string"
+            ).coalesce(1),
+            rejects_path,
+            e,
+        )
+        write_epoch(
+            spark.createDataFrame(
+                [("B1", f"S{code}", "Ampol", code, f"Station {code}",
+                  "1 Main St", -33.8, 151.2)][: e % 2],
+                CLEAN_STATION,
+            ).coalesce(1),
+            pipe.stations_path,
+            e,
+        )
+
+    def contents():
+        return {
+            "silver prices": sorted(
+                map(tuple, pipe.silver_prices().collect())
+            ),
+            "silver stations": sorted(
+                map(tuple, pipe.silver_stations().collect())
+            ),
+            "rejects": sorted(
+                map(tuple, spark.read.parquet(rejects_path)
+                    .drop("ingest_epoch").collect())
+            ),
+        }
+
+    before = contents()
+    assert jobs_to_build(spark, pipe.silver_prices, "fold-before") >= 1
+
+    assert pipe.compact_epochs() == {
+        "prices": 39, "rejects": 39, "stations": 19
+    }
+    assert jobs_to_build(spark, pipe.silver_prices, "fold-after") == 0
+    assert jobs_to_build(spark, pipe.silver_stations, "fold-after-st") == 0
+    for path in (pipe.prices_path, rejects_path, pipe.stations_path):
+        assert stored_epochs(path) == {0, 39}
+    assert contents() == before
+    assert len(before["silver stations"]) == 20
+
+
+def test_restart_after_compact_epochs_is_exactly_once(
+    spark, dirs, tmp_path
+):
+    """Three polls, stop, fold, restart on the same checkpoints and land
+    a fourth: silver, rejects and published output equal one
+    uninterrupted run over the same four polls. The fourth poll
+    re-delivers a station whose epoch was folded away."""
+    polls = list(enumerate([BATCH_1, BATCH_2, BATCH_3, BATCH_4]))
+    clean = {
+        k: str(tmp_path / "clean" / k)
+        for k in ("landing", "warehouse", "checkpoint")
+    }
+    pathlib.Path(clean["landing"]).mkdir(parents=True)
+    pipe, died = run_pipeline(spark, clean, "q1_live_nofold", polls)
+    assert not died
+    uninterrupted = sink_outputs(spark, pipe)
+
+    pipe, died = run_pipeline(spark, dirs, "q1_live_prefold", polls[:3])
+    assert not died
+    assert pipe.compact_epochs() == {
+        "prices": 4, "rejects": 1, "stations": 3
+    }
+    pipe, died = run_pipeline(spark, dirs, "q1_live_postfold", polls[3:])
+    assert not died
+    assert sink_outputs(spark, pipe) == uninterrupted
+    names = {r.code: r.name for r in pipe.silver_stations().collect()}
+    assert names["300"] == "Gamma"
