@@ -146,12 +146,6 @@ def memo_rows(
     return _ROWS[key]
 
 
-def scratch_dir(name: str) -> str:
-    """A fresh directory under the managed root, for a write-read plan
-    barrier: never a cache hit, dropped with everything else."""
-    return tempfile.mkdtemp(prefix=f"{name}_", dir=_root())
-
-
 def release_materialized() -> None:
     """Drop every at-rest build, memoized row set and the managed root.
     Idempotent; the next consumer rebuilds from scratch."""

@@ -1075,7 +1075,6 @@ def ngram_overlap_pairs(
     n: int = 5,
     min_frac: float = 0.2,
     max_df: int | None = None,
-    probe_shingles_df: DataFrame | None = None,
     corpus_shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """Decontamination check: for each probe (eval/benchmark) document,
@@ -1094,18 +1093,15 @@ def ngram_overlap_pairs(
     Output: (probe_id, corpus_id, n_shared, frac) with
     frac = n_shared / |probe doc's (rare) shingle set| >= min_frac.
 
-    ``probe_shingles_df`` / ``corpus_shingles_df``: optional precomputed
-    DISTINCT (id, shingle) frames (``shingles(..., distinct=True)``
+    ``corpus_shingles_df``: an optional precomputed DISTINCT (id,
+    shingle) frame for the corpus side (``shingles(..., distinct=True)``
     semantics — duplicates would inflate the overlap counts). Pass a
-    persisted frame when a pipeline already exploded the same side: each
-    side is referenced twice here (df-cap/sizes + the inverted-index
-    join), so an unpersisted upstream chain re-runs per reference.
+    persisted frame when a pipeline already exploded the corpus: it is
+    referenced twice here (the df cap + the inverted-index join), so an
+    unpersisted upstream chain re-runs per reference. The probe side is
+    always shingled here from ``probe``'s ``text_col``.
     """
-    sp = (
-        probe_shingles_df
-        if probe_shingles_df is not None
-        else shingles(probe, text_col, id_col, n)
-    )
+    sp = shingles(probe, text_col, id_col, n)
     sc = (
         corpus_shingles_df
         if corpus_shingles_df is not None

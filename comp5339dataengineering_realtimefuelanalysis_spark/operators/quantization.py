@@ -108,7 +108,7 @@ def pq_train(
         "sub", F.col(id_col).alias("cid"), F.col("svec").alias("c_svec")
     )
     dist = l2sq_scaled_unrolled(
-        F.col("svec"), F.col("c_svec"), d, long_acc=True
+        F.col("svec"), F.col("c_svec"), d
     )
     quant = (
         (
@@ -176,7 +176,7 @@ def pq_encode(
     d = dim // m
     ex = _sub_slices(corpus, [id_col], vec_col, m, dim)
     dist = l2sq_scaled_unrolled(
-        F.col("svec"), F.col("c_svec"), d, long_acc=True
+        F.col("svec"), F.col("c_svec"), d
     )
     return (
         ex.join(F.broadcast(codebooks), "sub")
@@ -220,7 +220,7 @@ def pq_adc_topk(
         "sub",
         F.col("cid").alias("code"),
         l2sq_scaled_unrolled(
-            F.col("svec"), F.col("c_svec"), d, long_acc=True
+            F.col("svec"), F.col("c_svec"), d
         ).alias("_sd"),
     )
     dists = (
@@ -322,7 +322,7 @@ def ivf_pq_topk(
         ).alias("q_svec"),
     )
     cell_d = l2sq_scaled_unrolled(
-        F.col("q_svec"), F.col("c_svec"), dim, long_acc=True
+        F.col("q_svec"), F.col("c_svec"), dim
     )
     wp = Window.partitionBy(qid_col).orderBy("dist", "cid")
     probed = (
@@ -339,7 +339,7 @@ def ivf_pq_topk(
         "sub",
         F.col("cid").alias("code"),
         l2sq_scaled_unrolled(
-            F.col("svec"), F.col("c_svec"), d, long_acc=True
+            F.col("svec"), F.col("c_svec"), d
         ).alias("_sd"),
     )
     dists = (
@@ -658,7 +658,7 @@ def ivf_sq8_topk(
         ).alias("q_svec"),
     )
     cell_d = l2sq_scaled_unrolled(
-        F.col("q_svec"), F.col("c_svec"), dim, long_acc=True
+        F.col("q_svec"), F.col("c_svec"), dim
     )
     wp = Window.partitionBy(qid_col).orderBy("dist", "cid")
     probed = (

@@ -349,7 +349,8 @@ def dsir_sample(
     The top-k itself runs as orderBy(score, id).limit(k) —
     TakeOrderedAndProject, a per-partition top-k + driver merge, never
     a single-task global window; k comes from one count() action (the
-    same count-then-plan pattern as the pipeline's sem_mode='auto').
+    same count-then-plan pattern as the pipeline's semantic-stage
+    blocking switch).
     That is the right plan while k is selection-sized. At corpus scale
     (frac of 100 TB) merge k rows through the driver is the wrong
     shape — compute a weight CUTOFF once via approx_percentile(score,

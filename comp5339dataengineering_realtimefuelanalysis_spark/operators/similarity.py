@@ -44,12 +44,6 @@ def scaled_vec(vec: Column) -> Column:
     return F.transform(vec, _scaled)
 
 
-def dot_exact(a: Column, b: Column) -> Column:
-    """Order-independent exact dot product of two float arrays (scaled by
-    1e18; callers divide through norms so the scale cancels)."""
-    return dot_scaled(scaled_vec(a), scaled_vec(b))
-
-
 def dot_scaled(sa: Column, sb: Column) -> Column:
     """Exact dot of two pre-scaled int64 arrays."""
     prods = F.zip_with(sa, sb, lambda x, y: x * y)
@@ -58,53 +52,30 @@ def dot_scaled(sa: Column, sb: Column) -> Column:
     )
 
 
-def dot_scaled_unrolled(
-    sa: Column, sb: Column, dim: int, long_acc: bool = False
-) -> Column:
-    """Exact scaled dot product as a DIM-UNROLLED expression: dim
-    element_at products summed. Bit-identical to ``dot_scaled``
-    (integer addition is associative), but every term is a plain
-    codegen-able expression — higher-order-function lambdas
-    (zip_with/aggregate) never enter whole-stage codegen and run on the
-    interpreted path, measured ~30µs per evaluation; unrolled is far
-    faster. Use for HOT inner loops (pair scoring, Lloyd assignment);
-    the HOF forms remain for dynamic dims.
+def l2sq_scaled_unrolled(sa: Column, sb: Column, dim: int) -> Column:
+    """Exact scaled squared-L2 distance of two pre-scaled int64 arrays
+    as a DIM-UNROLLED int64 expression: dim element_at squared
+    differences summed. Every term is a plain codegen-able expression —
+    higher-order-function lambdas (zip_with/aggregate) never enter
+    whole-stage codegen and run on the interpreted path, measured ~30µs
+    per evaluation — and int64 accumulation avoids decimal(38,0)
+    codegen's per-op BigDecimal allocation (~10µs per 64-term
+    evaluation; longs are ~100x cheaper). Use for HOT inner loops
+    (Lloyd assignment, cell ranking); the HOF forms remain for dynamic
+    dims and unbounded norms.
 
-    ``long_acc=True`` accumulates in int64 instead of decimal —
-    decimal(38,0) codegen still allocates BigDecimals per op (~10µs per
-    64-term evaluation); longs are ~100x cheaper. SAFE ONLY under a
-    norm bound the CALLER guarantees: for vectors with L2 norm <= 1.5
-    on the 1e9 grid, Cauchy-Schwarz bounds every partial sum by
-    sum|x_i y_i| <= |x||y| <= 2.25e18 < 2^63. Results are identical to
-    the decimal path whenever both are in range."""
-    acc = "long" if long_acc else _ACC
-    terms = [
-        (
-            F.element_at(sa, j + 1).cast(acc)
-            * F.element_at(sb, j + 1).cast(acc)
-        )
-        for j in range(dim)
-    ]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def l2sq_scaled_unrolled(
-    sa: Column, sb: Column, dim: int, long_acc: bool = False
-) -> Column:
-    """Exact scaled squared-L2 distance, dim-unrolled (see
-    dot_scaled_unrolled for why and for the ``long_acc`` norm-bound
-    contract: sum (x-y)^2 = |x|^2 + |y|^2 - 2xy <= 9e18 for norms
-    <= 1.5e9, and every per-term square is <= (3e9)^2; terms are
-    non-negative so partial sums never exceed the total)."""
-    acc = "long" if long_acc else _ACC
+    SAFE ONLY under a norm bound the CALLER guarantees: for vectors
+    with L2 norm <= 1.5 on the 1e9 grid, sum (x-y)^2 = |x|^2 + |y|^2 -
+    2xy <= 9e18 < 2^63, and every per-term square is <= (3e9)^2; terms
+    are non-negative, so partial sums never exceed the total (and by
+    Cauchy-Schwarz a dot product under the same bound stays within
+    |x||y| <= 2.25e18). Under the bound every value equals the HOF
+    decimal(38,0) form's (_assign_dist's generic path)."""
     terms = []
     for j in range(dim):
         d = (
-            F.element_at(sa, j + 1).cast(acc)
-            - F.element_at(sb, j + 1).cast(acc)
+            F.element_at(sa, j + 1).cast("long")
+            - F.element_at(sb, j + 1).cast("long")
         )
         terms.append(d * d)
     out = terms[0]
@@ -590,17 +561,10 @@ def _kmeans_seeds(
     k: int,
     id_col: str,
     vec_col: str,
-    seed_order: str = "asc",
 ) -> DataFrame:
-    """Deterministic seeds: the k lowest-id vectors (no RNG).
-    ``seed_order="desc"`` seeds from the HIGHEST ids instead — the
-    cheap way to get a second, independent-enough clustering of the
-    same corpus for product (two-level) blocking."""
-    order = (
-        F.col(id_col) if seed_order == "asc" else F.col(id_col).desc()
-    )
+    """Deterministic seeds: the k lowest-id vectors (no RNG)."""
     return (
-        corpus.orderBy(order)
+        corpus.orderBy(id_col)
         .limit(k)
         .select(
             F.col(id_col).alias("cid"),
@@ -626,12 +590,11 @@ def _assign_dist(dim: int, unit_norm: bool) -> Column:
                 dim,
                 l2sq_scaled_unrolled(
                     F.col("svec"), F.col("c_svec"), dim,
-                    long_acc=True,
                 ),
             ),
         )
     # generic path: HOF decimal — unrolled decimal is slower
-    # (BigDecimal per term); see dot_scaled_unrolled docstring.
+    # (BigDecimal per term); see l2sq_scaled_unrolled docstring.
     # Guarded PAIRWISE (not against the static dim): zip_with
     # silently truncates a corpus/centroid length skew, but
     # equal-length vectors of any width are fine — dim-agnostic
@@ -884,7 +847,7 @@ def _lloyd_assign(
     decimal(38,0) form runs instead: (x-y)^2 overflows long already at
     |x| > ~1.5 on the grid, and the unrolled DECIMAL variant measured
     ~5x slower than the HOF (a BigDecimal allocation per term — see
-    dot_scaled_unrolled)."""
+    l2sq_scaled_unrolled)."""
     if unit_norm:
         out = _np_assign_frame(c, cents, id_col, dim, keep_svec=True)
         if out is not None:
@@ -939,12 +902,9 @@ def kmeans_train_centroids(
     vec_col: str = "embedding",
     dim: int = 64,
     unit_norm: bool = False,
-    seed_order: str = "asc",
 ) -> DataFrame:
     """Centroids (cid, c_svec) after ``iters`` exact Lloyd updates from
-    the deterministic lowest-id seeds (``iters=0`` returns the seeds;
-    ``seed_order="desc"`` seeds from the highest ids — see
-    _kmeans_seeds).
+    the deterministic lowest-id seeds (``iters=0`` returns the seeds).
 
     Each update re-quantizes the new centroid to the int64 grid with
     MATHEMATICAL FLOOR division, spelled ``(s - ((s % n + n) % n)) / n``
@@ -968,7 +928,7 @@ def kmeans_train_centroids(
     c = corpus.select(
         F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
     )
-    cents = _kmeans_seeds(corpus, k, id_col, vec_col, seed_order)
+    cents = _kmeans_seeds(corpus, k, id_col, vec_col)
     for _ in range(iters):
         sums = _lloyd_sums(
             _lloyd_assign(c, cents, id_col, dim, unit_norm)

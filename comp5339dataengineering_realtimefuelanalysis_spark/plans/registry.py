@@ -1138,24 +1138,11 @@ def last_attested_round(
 # whenever a registry query's plan changes materially — a green row for the
 # old plan says nothing about the new one.
 FORCE_ATTEST: dict[str, int] = {
-    # (the round-8/9 rewrite entries were retired in round 17 after
-    # every listed query re-greened: doc_embed_hash last green r16,
-    # the nine round-9 rewrites last green r15.)
-    #
-    # round-17 rewrite: the pipeline's near-dup stage moved from the
-    # legacy 16/4 banding to the measured knee (48/8) after the x300
-    # stage profile showed the r=4 verify stage growing 7.65x for 3x
-    # data; Spark stage 5 and the stage-9 oracle CTEs changed together
-    # (plans/registry_llm.py:_KNEE_NUM_HASHES/_KNEE_BANDS). The r18
-    # crossover sweep considered, then rejected, a count-guarded
-    # small-scale legacy branch (the knee wins at every measured scale
-    # — see SCALE_MEASURED.json: pipe_banding_crossover); the
-    # legacy-banding hook and the banding sweep tool were removed
-    # after commit 334796e, where they last lived. The plan the r17
-    # window attested is the plan that ships, so these entries are
-    # inert and kept only until the ledger confirms r17 green rows.
-    "corpus_curation_pipeline": 17,
-    "corpus_curation_pipeline_2l": 17,
+    # (retired entries: the round-8/9 rewrites in round 17, after every
+    # listed query re-greened — doc_embed_hash last green r16, the nine
+    # round-9 rewrites last green r15; the round-17 knee-banding rewrite
+    # of corpus_curation_pipeline and corpus_curation_pipeline_2l once
+    # CORRECTNESS_r17.json and CORRECTNESS_r19.json showed both green.)
 }
 
 

@@ -25,7 +25,6 @@ from ..functions.caching import (
     materialize,
     memo_rows,
     release_materialized,
-    scratch_dir,
     tracked_persist,
 )
 from ..functions.scalars import dec_avg
@@ -1788,9 +1787,9 @@ def _sql_contamination() -> str:
         WHERE CAST(n_shared AS DOUBLE) / sz >= {_CONTAM_MIN_FRAC}"""
 
 
-# Survivor count above which the pipeline's semantic stage switches
-# from single-level (k=sqrt(n), n^1.5) to two-level product blocking
-# (O(n^(4/3))) in sem_mode="auto". MEASURED (round 11, same host
+# Survivor count above which q_corpus_curation_pipeline's semantic
+# stage switches from single-level (k=sqrt(n), n^1.5) to two-level
+# product blocking (O(n^(4/3))). MEASURED (round 11, same host
 # epoch, min-of-2 each, tools/profile_sem_modes.py ->
 # SCALE_MEASURED.json sem_mode_crossover): end-to-end through
 # _semantic_drop_ids, 1L/2L = 80.8/116.8 s at 150k docs and
@@ -1808,9 +1807,9 @@ def _sql_contamination() -> str:
 # the un-extrapolatable wall-clock intersection: at 10M survivors the
 # pair-volume ratio n^(1/6) is ~15x, and at cluster scale pair
 # SHUFFLE, not local CPU, is the binding constraint — a 100 TB
-# deployment should pin sem_mode="2l" (the attested
-# corpus_curation_pipeline_2l branch) or re-calibrate this constant
-# on production hardware.
+# deployment should lower this constant (its 2l branch is the one
+# corpus_curation_pipeline_2l attests) or re-calibrate it on
+# production hardware.
 _SEM_MODE_CROSSOVER = 10_000_000
 
 
@@ -1863,76 +1862,22 @@ def _semantic_drop_ids(
     )
 
 
-def q_corpus_curation_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    stage_cb=None,
-    sem_mode: str = "auto",
-    barrier: str = "auto",
-) -> DataFrame:
-    """The END-TO-END curation pipeline, every stage sequentially composed
-    (each operates on the previous stage's survivors, not independent
-    filters over the raw corpus):
+def _run_stage(_name: str, thunk):
+    """The default stage hook: build the stage, nothing else."""
+    return thunk()
 
-      held-out split -> profile -> quality/lang gate -> PII scrub ->
-      QUALITY SCREEN (Gopher rule battery AND CCNet perplexity split,
-      stage 2b) -> Gopher repetition gate -> exact dedup ->
-      LSH(+cap)+Jaccard-verify near-dup clusters (keep representatives) ->
-      SEMANTIC dedup (k-means-cell-blocked cosine over the survivors) ->
-      contamination screen vs the held-out probes -> stratified sample ->
-      pack manifest (the training sequences a shard writer would emit).
 
-    Scale shape: profile/gate/scrub map-only; the repetition gate one
-    tagged explode + two combined shuffles; exact dedup ONE hash
-    shuffle; near-dup the capped banded composition (never all-pairs);
-    semantic dedup the sqrt(n)-cell flat blocking (n^1.5 by design);
-    screens are anti-joins on distinct id sets; sampling map-only; the
-    prefix sum in packing is bucketed. The reference analog is the
-    cleaned->analyzed flow of DataCleaning.py:15-209 ->
-    DataAnalysis.py:16-165, generalized to corpus curation.
-
-    ``stage_cb(name, thunk) -> thunk()`` is a seam for
-    tools/profile_curation.py: each named stage builds through it, so the
-    profiler times (and materializes) EXACTLY the production frames —
-    the default identity hook leaves the production plan untouched.
-
-    ``sem_mode`` selects the semantic stage's blocking: ``"1l"`` =
-    single-level k=sqrt(n) cells (n^1.5 — fine below the crossover),
-    ``"2l"`` = two-level product blocking with multi-probe level A
-    (O(n^(4/3)) — the measured scale path), ``"auto"`` (default) =
-    pick by the stage's survivor count vs _SEM_MODE_CROSSOVER. The
-    oracle replays all three (auto as count-guarded branches).
-
-    ``barrier`` selects stage 2b's lineage barrier. ``"local"`` =
-    eager ``localCheckpoint``: right on a single-node session (this
-    bench, a notebook) — blocks live on executor-local disk, zero
-    write amplification, and the barrier's whole purpose (truncating
-    the exponentially re-analyzed logical tree, measured 46.6 ->
-    228 s without it) is plan-side. ``"durable"`` = write the
-    survivor frame to parquet under the managed temp root and re-read:
-    the CLUSTER posture — localCheckpoint blocks have no lineage to
-    recompute, so one lost executor mid-pipeline fails the query,
-    while the write-read form (pointed at the job's at-rest store in
-    production) survives executor loss AND provides the identical
-    plan barrier. ``"auto"`` (default) resolves by deployment:
-    ``local`` on a ``local[*]`` master, ``durable`` on anything else
-    (a real cluster must never pick the executor-loss-fragile form by
-    default). Output is bit-identical either way (parquet round-trips
-    every column type here exactly); both paths are asserted equal in
-    tests and both are scale-measured in SCALE.md.
-    """
-    if sem_mode not in ("auto", "1l", "2l"):
-        raise ValueError(f"sem_mode must be auto|1l|2l, got {sem_mode!r}")
-    if barrier not in ("auto", "local", "durable"):
-        raise ValueError(
-            f"barrier must be auto|local|durable, got {barrier!r}"
-        )
-    if barrier == "auto":
-        master = spark.sparkContext.master or ""
-        barrier = "local" if master.startswith("local") else "durable"
-    stage_cb_is_default = stage_cb is None
-    if stage_cb is None:
-        stage_cb = lambda _name, thunk: thunk()  # noqa: E731
+def _curation_stages_1_9(
+    spark: SparkSession, sf_dir: str, stage_cb=_run_stage
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame, DataFrame]:
+    """Stages 1-9 of q_corpus_curation_pipeline — held-out split ->
+    profile -> quality/lang gate -> PII scrub -> quality screen ->
+    repetition gate + exact dedup -> LSH candidates -> Jaccard verify
+    -> near-dup clusters -> drop the non-representatives — each named
+    stage built through ``stage_cb``. Returns every frame stages 10-12
+    read: (probe, kept1, sets, non_reps, kept2). ONE definition shared
+    by the full pipeline and _stage9_path's default build, so the
+    stage-9 table is by construction the frame stage 10 sees."""
     docs = _docs_parallel(spark, sf_dir)
     probe = docs.filter(F.col("doc_id") % 20 == 0)
     # profile from the shared at-rest materialization (_lang_quality_for):
@@ -2020,10 +1965,12 @@ def q_corpus_curation_pipeline(
         # and EVERY downstream stage embeds it — persist caches the
         # data but Catalyst re-analyzes the exponential tree per
         # action (the connected_components pathology, measured here as
-        # 46.6 -> 228 s pipeline total before the barrier). Two forms
-        # (see the ``barrier`` docstring): eager localCheckpoint for a
-        # single-node session, write-read through the at-rest store
-        # for the cluster posture.
+        # 46.6 -> 228 s pipeline total before the barrier). Eager
+        # localCheckpoint, as in connected_components: its blocks have
+        # no lineage to recompute, but stages 8 and 10 already
+        # localCheckpoint through connected_components, so a
+        # write-read barrier here would not make the query survive
+        # executor loss.
         # r19 (guide §2.4): intersect the two ID-ONLY keep sets first,
         # then ONE semi join against the text-carrying scrub frame —
         # semi-joining scrub twice shuffled the text column twice for
@@ -2035,11 +1982,7 @@ def q_corpus_curation_pipeline(
         surv = scrub.join(
             g.join(p, "doc_id", "semi"), "doc_id", "semi"
         )
-        if barrier == "local":
-            return surv.localCheckpoint(eager=True)
-        path = scratch_dir("pipeline_qscreen_barrier")
-        surv.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
+        return surv.localCheckpoint(eager=True)
 
     qual = stage_cb("2b_quality_screen", _qscreen)
     # Gopher-style repetition gate over the quality-screen survivors:
@@ -2146,35 +2089,69 @@ def q_corpus_curation_pipeline(
             )
         ),
     )
+    return probe, kept1, sets, non_reps, kept2
+
+
+def q_corpus_curation_pipeline(
+    spark: SparkSession, sf_dir: str, stage_cb=None
+) -> DataFrame:
+    """The END-TO-END curation pipeline, every stage sequentially composed
+    (each operates on the previous stage's survivors, not independent
+    filters over the raw corpus):
+
+      held-out split -> profile -> quality/lang gate -> PII scrub ->
+      QUALITY SCREEN (Gopher rule battery AND CCNet perplexity split,
+      stage 2b) -> Gopher repetition gate -> exact dedup ->
+      LSH(+cap)+Jaccard-verify near-dup clusters (keep representatives) ->
+      SEMANTIC dedup (k-means-cell-blocked cosine over the survivors) ->
+      contamination screen vs the held-out probes -> stratified sample ->
+      pack manifest (the training sequences a shard writer would emit).
+
+    Scale shape: profile/gate/scrub map-only; the repetition gate one
+    tagged explode + two combined shuffles; exact dedup ONE hash
+    shuffle; near-dup the capped banded composition (never all-pairs);
+    semantic dedup sqrt(n)-cell flat blocking (n^1.5) up to
+    _SEM_MODE_CROSSOVER survivors, two-level product blocking
+    (O(n^(4/3))) above it; screens are anti-joins on distinct id sets;
+    sampling map-only; the prefix sum in packing is bucketed. The
+    reference analog is the cleaned->analyzed flow of
+    DataCleaning.py:15-209 -> DataAnalysis.py:16-165, generalized to
+    corpus curation.
+
+    ``stage_cb(name, thunk) -> thunk()`` is a seam for
+    tools/profile_curation.py: each named stage builds through it, so the
+    profiler times (and materializes) EXACTLY the production frames —
+    the default identity hook leaves the production plan untouched.
+    """
+    stage_cb = stage_cb or _run_stage
+    probe, kept1, sets, non_reps, kept2 = _curation_stages_1_9(
+        spark, sf_dir, stage_cb
+    )
     # r19: publish the stage-9 survivor table this run just computed to
     # the shared at-rest cache the 2l branch-attestation query reads
     # (_stage9_path) — IN-PASS sharing, charged here inside the
     # pipeline's own timed region (the frames are already persisted;
-    # the publish is one narrow semi-join write). Without it, each
-    # bench pass re-ran stages 1-9 a second time inside
-    # corpus_curation_pipeline_2l. Production path only (stage_cb is
-    # None): measurement hooks must see the unmodified stage list, and
-    # the stage-9 builder itself (which aborts at stage 9 through its
-    # own cb) never reaches this line.
-    if stage_cb_is_default:
-        _stage9_path(spark, sf_dir, lambda: (kept1, kept2))
+    # the publish is one narrow semi-join write, and a cache hit when
+    # the table already exists). Without it, each bench pass re-ran
+    # stages 1-9 a second time inside corpus_curation_pipeline_2l.
+    _stage9_path(spark, sf_dir, lambda: (kept1, kept2))
 
     # SEMANTIC dedup stage (round 8, scale-adaptive round 9): the
     # shingle stages catch copy-edits; this catches REPHRASINGS —
     # hashing-trick embed -> cell-blocked int64-unrolled exact cosine
     # -> hybrid CC over the shingle-dedup survivors, keeping each
-    # semantic cluster's min-id representative. Blocking follows
-    # sem_mode: single-level k=sqrt(n) cells below the measured
-    # crossover, two-level product blocking (multi-probe level A)
-    # above it — the pipeline no longer hardcodes the n^1.5 path its
-    # own SCALE curves proved dominant past ~50k survivors. The stage
-    # materializes only the TINY non-representative id set; text comes
-    # from persisted kept1.
+    # semantic cluster's min-id representative. Blocking switches on
+    # the survivor count: single-level k=sqrt(n) cells up to
+    # _SEM_MODE_CROSSOVER, two-level product blocking (multi-probe
+    # level A) above it — the pipeline no longer hardcodes the n^1.5
+    # path its own SCALE curves proved dominant past ~50k survivors.
+    # The stage materializes only the TINY non-representative id set;
+    # text comes from persisted kept1.
     def _sem_drop() -> DataFrame:
         sem_docs = kept1.select("doc_id", "text").join(
             non_reps, "doc_id", "left_anti"
         )
-        return _semantic_drop_ids(sem_docs, sem_mode)
+        return _semantic_drop_ids(sem_docs, "auto")
 
     sem_drop = stage_cb("10_semantic_dedup", _sem_drop)
     kept3 = kept2.join(F.broadcast(sem_drop), "doc_id", "left_anti")
@@ -2372,12 +2349,6 @@ def _sql_semkept_select(src: str, comp: str) -> str:
     )
 
 
-class _Stage9Captured(Exception):
-    """Control-flow sentinel for _stage9_path: raised by its
-    stage_cb after stage 9 materializes, so the pipeline builder never
-    constructs (or runs the eager actions of) stages 10-12."""
-
-
 def _stage9_path(spark: SparkSession, sf_dir: str, stages=None) -> str:
     """Path of the curation pipeline's STAGE-9 survivor table (doc_id,
     text, lang — the shingle-dedup survivors the semantic stage
@@ -2385,31 +2356,16 @@ def _stage9_path(spark: SparkSession, sf_dir: str, stages=None) -> str:
     semi-joined to the stage-9 near-dup survivors, materialized ONCE
     per corpus (caching.materialize). ``stages`` returns that
     (kept1, kept2) pair from a pipeline run that already computed it;
-    by default the production pipeline builder itself runs through its
-    stage_cb seam and aborts after stage 9 — zero drift risk: this IS
-    the frame stage 10 sees, not a re-implementation. The key carries
-    every constant stages 1-9 depend on (the r17 verdict's
-    stale-survivor bug class) and the corpus fingerprint, so a
-    constant change or a regenerated corpus invalidates the cache."""
+    by default the pipeline's own stage 1-9 function
+    (_curation_stages_1_9) runs — zero drift risk: this IS the frame
+    stage 10 sees, not a re-implementation. The key carries every
+    constant stages 1-9 depend on (the r17 verdict's stale-survivor
+    bug class) and the corpus fingerprint, so a constant change or a
+    regenerated corpus invalidates the cache."""
 
     def run_to_stage9() -> tuple[DataFrame, DataFrame]:
-        captured: dict[str, DataFrame] = {}
-
-        def cb(name: str, thunk):
-            out = thunk()
-            captured[name] = out
-            if name == "9_drop_dup_members":
-                raise _Stage9Captured()
-            return out
-
-        try:
-            q_corpus_curation_pipeline(spark, sf_dir, stage_cb=cb)
-        except _Stage9Captured:
-            pass
-        return (
-            captured["3_repetition_gate_exact_dedup"],
-            captured["9_drop_dup_members"],
-        )
+        _, kept1, _, _, kept2 = _curation_stages_1_9(spark, sf_dir)
+        return kept1, kept2
 
     def build(path: str) -> None:
         kept1, kept2 = (stages or run_to_stage9)()
@@ -2459,23 +2415,17 @@ def q_corpus_curation_pipeline_2l(
 def _sql_sem_stage_ctes(src: str, sem_mode: str = "auto") -> str:
     """The semantic-dedup stage as a CTE chunk over ``src`` (doc_id,
     text, lang), ending in ``semkept`` = src minus the semantic
-    non-representatives. ``sem_mode`` mirrors
-    q_corpus_curation_pipeline: '1l' replays the single-level chain,
-    '2l' the two-level product-blocked chain, and 'auto' replays the
-    runtime decision itself — both chains are present, each fed by a
-    COUNT-guarded copy of the input (the untaken branch's source is
-    empty, so its chain computes nothing), and semkept is the union.
-    Built from the same shared builders as the standalone queries, so
-    the modes cannot drift."""
+    non-representatives. ``sem_mode`` '2l' replays the two-level
+    product-blocked chain (q_corpus_curation_pipeline_2l); 'auto'
+    replays q_corpus_curation_pipeline's runtime decision itself — both
+    chains are present, each fed by a COUNT-guarded copy of the input
+    (the untaken branch's source is empty, so its chain computes
+    nothing), and semkept is the union. Built from the same shared
+    CTE functions as the standalone queries, so the modes cannot
+    drift."""
     emb_ctes = _sql_doc_embed_ctes().replace(
         "FROM documents", f"FROM {src}"
     )
-    if sem_mode == "1l":
-        return f"""{emb_ctes},
-        {_sql_sem_sel_1l(src, "emb")},
-        {_sql_sem_cc_ctes("sem", "semsel")},
-        semkept AS MATERIALIZED (
-            {_sql_semkept_select(src, "semcomp")})"""
     if sem_mode == "2l":
         return f"""{emb_ctes},
         {_sql_sem_sel_2l(src, "emb")},
@@ -2625,12 +2575,12 @@ def _sql_curation_2l_attest() -> str:
         SELECT doc_id, lang FROM semkept"""
 
 
-def _sql_curation_pipeline(sem_mode: str = "auto") -> str:
+def _sql_curation_pipeline() -> str:
     """CTE-for-CTE replay of q_corpus_curation_pipeline. Component SQL is
     re-targeted from `documents` to the previous stage's CTE by textual
     substitution of the builders' FROM clause (the builders are this
-    module's own format strings, so the substitution is exact).
-    ``sem_mode`` selects the semantic stage's replay — see
+    module's own format strings, so the substitution is exact). The
+    semantic stage replays the survivor-count switch — see
     _sql_sem_stage_ctes."""
     psh = _SQL_SHINGLES.replace("FROM documents", "FROM probe")
     # temperature-mix bucket (1e6 buckets; rates pinned to semkept =
@@ -2642,7 +2592,7 @@ def _sql_curation_pipeline(sem_mode: str = "auto") -> str:
     c = _PACK_CTX
     return f"""WITH RECURSIVE
         {_sql_stage9_ctes()},
-        {_sql_sem_stage_ctes("nondup", sem_mode)},
+        {_sql_sem_stage_ctes("nondup")},
         probe AS MATERIALIZED (SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
         psh_all AS MATERIALIZED ({psh}),
         csh_all AS MATERIALIZED (SELECT s.doc_id, s.shingle FROM sh1 s
@@ -3767,7 +3717,6 @@ def _sql_kmeans_chain(
     dim: int = _EMB_DIM,
     k: int | str = _KMEANS_K,
     prefix: str = "",
-    seed_order: str = "asc",
 ) -> str:
     """CTE chain replaying kmeans_train_centroids: c (scaled corpus),
     cents0 (lowest-id seeds), then per iteration i: pairs{i} (integer L2
@@ -3777,19 +3726,17 @@ def _sql_kmeans_chain(
     engine-portable where round() is not (HALF_UP vs half-even ties).
     ``src`` is any table/CTE with (id_col, embedding); ``k`` may be SQL
     text (e.g. a LIMIT subquery) when the cell count is data-derived.
-    ``prefix`` namespaces every CTE (two chains can share one WITH);
-    ``seed_order="desc"`` mirrors the highest-id seed variant."""
+    ``prefix`` namespaces every CTE (two chains can share one WITH)."""
     sv = (
         "list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE)"
         f" * {_SCALE}) AS BIGINT))"
     )
     p = prefix
-    desc = " DESC" if seed_order == "desc" else ""
     parts = [
         f"{p}c AS (SELECT {id_col} AS vec_id, {sv} AS svec FROM {src})",
         f"""{p}cents0 AS (
             SELECT {id_col} AS cid, {sv} AS c_svec
-            FROM {src} ORDER BY {id_col}{desc} LIMIT {k})""",
+            FROM {src} ORDER BY {id_col} LIMIT {k})""",
     ]
     for i in range(1, iters + 1):
         parts.append(f"""{p}pairs{i} AS (

@@ -745,7 +745,6 @@ class StreamingIncrementalDedup:
                 self.sem_dim,
                 sim.l2sq_scaled_unrolled(
                     F.col("q_svec"), F.col("c_svec"), self.sem_dim,
-                    long_acc=True,
                 ),
             ),
         )
@@ -793,9 +792,9 @@ class StreamingIncrementalDedup:
     def _unpacked_cosine(self, ta: str, tb: str, na, nb):
         """Cosine over unpacked columns: plain column sum-of-products,
         int64-exact (embed_text L2-normalizes, so on the 1e9 grid
-        Cauchy-Schwarz bounds |dot| <= 1e18 — the same long_acc
-        argument as dot_scaled_unrolled) — bit-identical to the array
-        kernel it replaced, so admissions cannot move."""
+        Cauchy-Schwarz bounds |dot| <= 1e18 — the norm-bound contract
+        of similarity.l2sq_scaled_unrolled) — bit-identical to the
+        array kernel it replaced, so admissions cannot move."""
         dot = F.col(f"_{ta}0") * F.col(f"_{tb}0")
         for i in range(1, self.sem_dim):
             dot = dot + F.col(f"_{ta}{i}") * F.col(f"_{tb}{i}")
@@ -966,7 +965,6 @@ class StreamingIncrementalDedup:
                 self.sem_dim,
                 sim.l2sq_scaled_unrolled(
                     F.col("svec"), F.col("c_svec"), self.sem_dim,
-                    long_acc=True,
                 ),
             ),
         )

@@ -63,29 +63,101 @@ def test_attestation_rotation_keeps_window_fresh():
     )
 
 
+def _by_name(cols, rows):
+    """Rows as sorted tuples, columns in name order (the driver's
+    compare: Spark and the oracle may project in different orders)."""
+    order = sorted(range(len(cols)), key=cols.__getitem__)
+    return sorted(tuple(r[i] for i in order) for r in rows)
+
+
+def _spark_rows(df):
+    return _by_name(df.columns, df.collect())
+
+
+def _oracle_rows(sql):
+    import duckdb
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    res = con.execute(sql)
+    return _by_name([c[0] for c in res.description], res.fetchall())
+
+
 def test_curation_pipeline_sem_mode_auto_switches(spark, monkeypatch):
-    """sem_mode='auto' picks single-level below the crossover and the
-    two-level product blocking above it: with the crossover forced to
-    0, auto must reproduce the pinned-2l pipeline exactly; at real
-    corpus sizes (below 50k survivors) it must reproduce pinned-1l."""
+    """The pipeline's semantic stage uses single-level blocking up to
+    _SEM_MODE_CROSSOVER survivors and two-level product blocking above
+    it. Both blockings give the same rows at SF_SMOKE, so the output
+    alone cannot show the switch: a spy on _sem2_blocked (called on the
+    two-level path only) counts it. Each run must also equal the DuckDB
+    replay built under the same constant."""
     from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
         registry_llm as rl,
     )
 
-    def run(**kw):
-        return sorted(
-            map(
-                tuple,
-                rl.q_corpus_curation_pipeline(
-                    spark, SF_SMOKE, **kw
-                ).collect(),
-            )
-        )
+    calls = []
+    sem2_blocked = rl._sem2_blocked
 
-    auto_small = run(sem_mode="auto")
-    assert auto_small == run(sem_mode="1l")
-    monkeypatch.setattr(rl, "_SEM_MODE_CROSSOVER", 0)
-    assert run(sem_mode="auto") == run(sem_mode="2l")
+    def spy(*args):
+        calls.append(args)
+        return sem2_blocked(*args)
+
+    monkeypatch.setattr(rl, "_sem2_blocked", spy)
+    for crossover, n_calls in ((rl._SEM_MODE_CROSSOVER, 0), (0, 1)):
+        monkeypatch.setattr(rl, "_SEM_MODE_CROSSOVER", crossover)
+        got = _spark_rows(rl.q_corpus_curation_pipeline(spark, SF_SMOKE))
+        assert got, crossover
+        assert got == _oracle_rows(rl._sql_curation_pipeline()), crossover
+        assert len(calls) == n_calls, crossover
+
+
+def test_curation_2l_same_from_either_stage9_source(spark, monkeypatch):
+    """corpus_curation_pipeline_2l reads the stage-9 survivor table
+    through _stage9_path. On a fresh cache the default build runs the
+    pipeline's stage 1-9 function; after a pipeline run the table that
+    run published is read back and stages 1-9 do not run again. Both
+    sources must hold the DuckDB replay's stage-9 survivors and give
+    its corpus_curation_pipeline_2l rows."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.functions import (
+        caching,
+    )
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
+    )
+
+    builds = []
+    stages_1_9 = rl._curation_stages_1_9
+
+    def spy(*args):
+        builds.append(args)
+        return stages_1_9(*args)
+
+    monkeypatch.setattr(rl, "_curation_stages_1_9", spy)
+    want = _oracle_rows(rl._sql_curation_2l_attest())
+    want_stage9 = _oracle_rows(
+        f"WITH RECURSIVE {rl._sql_stage9_ctes()} SELECT doc_id FROM nondup"
+    )
+    assert want and want_stage9
+
+    def stage9():
+        path = rl._stage9_path(spark, SF_SMOKE)
+        return _spark_rows(spark.read.parquet(path).select("doc_id"))
+
+    caching.release_materialized()
+    fresh = _spark_rows(rl.q_corpus_curation_pipeline_2l(spark, SF_SMOKE))
+    assert len(builds) == 1
+    assert fresh == want
+    assert stage9() == want_stage9
+
+    caching.release_materialized()
+    rl.q_corpus_curation_pipeline(spark, SF_SMOKE)
+    assert len(builds) == 2
+    published = _spark_rows(rl.q_corpus_curation_pipeline_2l(spark, SF_SMOKE))
+    assert len(builds) == 2
+    assert published == want
+    assert stage9() == want_stage9
 
 
 def test_pipeline_banding_pinned_to_knee():
@@ -100,41 +172,6 @@ def test_pipeline_banding_pinned_to_knee():
     sql = rl._sql_stage9_ctes()
     assert f"mh_{rl._KNEE_NUM_HASHES - 1}" in sql
     assert f"mh_{rl._KNEE_NUM_HASHES}" not in sql
-
-
-def test_curation_pipeline_durable_barrier_identical(spark):
-    """barrier='durable' (stage 2b's survivors written to the at-rest
-    store and re-read — the cluster posture: localCheckpoint blocks
-    die with an executor and cannot be recomputed) must reproduce the
-    default localCheckpoint pipeline bit-exactly, and its physical
-    plan must actually read stage 2b from a parquet scan."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
-        registry_llm as rl,
-    )
-
-    local = rl.q_corpus_curation_pipeline(spark, SF_SMOKE)
-    durable = rl.q_corpus_curation_pipeline(
-        spark, SF_SMOKE, barrier="durable"
-    )
-    got_l = sorted(map(tuple, local.collect()))
-    got_d = sorted(map(tuple, durable.collect()))
-    assert got_l == got_d and got_l
-    plan = durable._jdf.queryExecution().executedPlan().toString()
-    assert "pipeline_qscreen_barrier" in plan, plan
-
-    import pytest
-
-    with pytest.raises(ValueError, match="barrier"):
-        rl.q_corpus_curation_pipeline(spark, SF_SMOKE, barrier="bogus")
-
-    # barrier='auto' on this local[*] session resolves to the
-    # localCheckpoint form (no parquet barrier scan in the plan); the
-    # cluster side of the auto rule is source-asserted (master not
-    # local -> durable) since no cluster exists in this harness
-    auto = rl.q_corpus_curation_pipeline(spark, SF_SMOKE)
-    plan_auto = auto._jdf.queryExecution().executedPlan().toString()
-    assert "pipeline_qscreen_barrier" not in plan_auto
-    assert spark.sparkContext.master.startswith("local")
 
 
 def test_every_query_runs_at_smoke_sf(spark):

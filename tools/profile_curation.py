@@ -5,6 +5,9 @@ The stages are NOT reconstructed here: the production builder exposes a
 thunk, materializes the resulting frame (noop write), and clocks it — so
 the numbers are for EXACTLY the plan the registry ships, persists and all.
 A drift between this tool and the pipeline is impossible by construction.
+Between stages 9 and 10 the pipeline publishes its stage-9 survivor table
+(one write per corpus, a cache hit on later reps); no stage clock includes
+it.
 
 Prints one JSON object of stage -> sec (min-of-N, default 2, per the
 host-variance policy), plus a final full-pipeline materialization time.

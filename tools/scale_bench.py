@@ -438,35 +438,6 @@ def emb_near_dup_production(spark, sf_dir: str, passes: int) -> dict:
     return {"threshold": 0.6, "runs": runs, "sec": min(runs), "rows": rows}
 
 
-def durable_barrier_comparison(spark, sf_dir: str, passes: int) -> dict:
-    """barrier='local' (localCheckpoint) vs barrier='durable'
-    (write-read through the at-rest store — what barrier='auto' picks
-    on a real cluster) on the UNCHANGED production pipeline: the
-    durable form pays one parquet write+read of the stage-2b survivor
-    frame; everything else is plan-identical. This is the x100 point
-    the r14 verdict asked for — the cluster default must be measured,
-    not argued."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.functions.caching import (
-        release_tracked,
-    )
-    from comp5339dataengineering_realtimefuelanalysis_spark.plans.registry_llm import (
-        q_corpus_curation_pipeline,
-    )
-
-    out = {}
-    for label in ("local", "durable"):
-        runs = []
-        for _ in range(passes):
-            t0 = time.perf_counter()
-            _materialize(
-                q_corpus_curation_pipeline(spark, sf_dir, barrier=label)
-            )
-            runs.append(round(time.perf_counter() - t0, 3))
-            release_tracked()
-        out[label] = {"runs": runs, "sec": min(runs)}
-    return out
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--mults", default="1,3,10")
@@ -492,9 +463,6 @@ def main() -> None:
                     default="bounded")
     ap.add_argument("--queries", default=None,
                     help="comma list restricting the timed queries")
-    ap.add_argument("--durable-barrier", action="store_true",
-                    help="time the pipeline's local vs durable "
-                         "stage-2b barrier at each mult")
     args = ap.parse_args()
     mults = [int(m) for m in args.mults.split(",")]
 
@@ -609,17 +577,6 @@ def main() -> None:
                 }
                 print(f"[x{mult}] {name}: ERROR {exc}", file=sys.stderr)
         release_ivf_indexes()
-        if args.durable_barrier:
-            try:
-                scale_res["durable_barrier"] = durable_barrier_comparison(
-                    spark, sf_dir, args.passes
-                )
-                print(f"[x{mult}] durable_barrier: "
-                      f"{scale_res['durable_barrier']}", file=sys.stderr)
-            except Exception as exc:  # noqa: BLE001
-                scale_res["durable_barrier"] = {"error": str(exc)[:300]}
-                print(f"[x{mult}] durable_barrier: ERROR {exc}",
-                      file=sys.stderr)
         if not args.skip_cc:
             try:
                 scale_res["connected_components"] = cc_comparison(
