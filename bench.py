@@ -364,10 +364,11 @@ def main() -> None:
     release_ivf_indexes()
     # The streaming measurement runs in a DEDICATED fresh process
     # (r18). The r14->r17 raw decline (28.3k -> 9.5k rows/s) was
-    # attributed by tools/ab_stream_position.py in a quiet-steal
-    # window: host steal is the dominant term (10-14% steal inflates
-    # the wall 3-6x; at ~0% steal the fresh-session best was 33.2k
-    # rows/s, best ever), but running LAST in a JVM that just executed
+    # attributed in a quiet-steal window (SCALE_MEASURED.json:
+    # stream_position_ab; its tool was removed after 67f4783): host
+    # steal is the dominant term (10-14% steal inflates the wall 3-6x;
+    # at ~0% steal the fresh-session best was 33.2k rows/s, best
+    # ever), but running LAST in a JVM that just executed
     # the full registry costs a further ~10% (post/fresh best 1.099 at
     # equal steal, heap 1.6 -> 5.9 GB). A dedicated process removes
     # the position term entirely and makes the artifact a pure

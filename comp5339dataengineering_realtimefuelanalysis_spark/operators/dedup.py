@@ -679,7 +679,6 @@ def minhash_lsh_join(
     left_banded_df: DataFrame | None = None,
     right_banded_df: DataFrame | None = None,
     prune_right: bool = False,
-    partition_col: str | None = None,
 ) -> DataFrame:
     """ASYMMETRIC LSH candidate join: LEFT (an incoming batch) docs that
     share at least one signature band with a RIGHT (existing corpus) doc.
@@ -706,13 +705,6 @@ def minhash_lsh_join(
     dropping other groups, so cap-after-prune keeps the output identical
     while the corpus-side aggregation — otherwise a full-corpus shuffle
     per screening batch — runs over touched buckets only.
-
-    ``partition_col``: a column PRESENT ON BOTH banded frames that is a
-    pure function of ``key`` (e.g. a key-hash prefix the right side is
-    partitioned by at rest). It is added to the equi-join keys —
-    semantically redundant, but it lets Spark derive a dynamic partition
-    pruning filter for the right-side scan, so a partitioned at-rest
-    band index reads only the buckets the left side touches.
     """
     lb = (
         left_banded_df
@@ -724,12 +716,11 @@ def minhash_lsh_join(
         if right_banded_df is not None
         else _banded_signatures(right, text_col, id_col, n, num_hashes, bands)
     )
-    jk = (["band", "key"] if partition_col is None
-          else [partition_col, "band", "key"])
+    jk = ["band", "key"]
     if prune_right:
         rb = rb.join(F.broadcast(lb.select(*jk).distinct()), jk, "semi")
     if max_bucket is not None:
-        rb, _ = cap_buckets(rb, ["band", "key"], max_bucket)
+        rb, _ = cap_buckets(rb, jk, max_bucket)
     return (
         lb.select(F.col(id_col).alias("id_a"), *jk)
         .join(rb.select(F.col(id_col).alias("id_b"), *jk), jk)

@@ -570,6 +570,17 @@ def _rep_signals_arrow_fn(it):
         )
 
 
+# The repetition gate's thresholds on ``repetition_signals``, shared by the
+# batch curation pipeline and the streaming gate. Corpus-calibrated: the
+# synthetic docs draw from a small vocabulary, so dup_word_frac runs high
+# (median ~0.54) and the gate targets the degenerate tail (~2.4% of sf0.01
+# docs fail). Production corpora would use Gopher's published operating
+# points instead.
+REP_MAX_DUP_WORD = 0.7
+REP_MAX_TOP_BIGRAM = 0.12
+REP_MAX_DUP_TRIGRAM = 0.05
+
+
 def repetition_signals(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:

@@ -35,7 +35,12 @@ from ..operators import quantization as qz
 from ..operators import selection as sel
 from ..operators import similarity as sim
 from ..operators import text as tx
-from ..operators.text import LANG_MARKERS
+from ..operators.text import (
+    LANG_MARKERS,
+    REP_MAX_DUP_TRIGRAM,
+    REP_MAX_DUP_WORD,
+    REP_MAX_TOP_BIGRAM,
+)
 from .base import QueryDef, load_table
 
 # ---------------------------------------------------------------------------
@@ -559,14 +564,6 @@ def q_doc_lang_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QUALITY_KEEP = 0.7
-# Gopher-style repetition gate thresholds (corpus-calibrated: the
-# synthetic docs draw from a small vocabulary, so dup_word_frac runs
-# high — median ~0.54 — and the gate targets the degenerate tail:
-# ~2.4% of sf0.01 docs fail at these settings). Production corpora
-# would use Gopher's published operating points instead.
-_REP_MAX_DUP_WORD = 0.7
-_REP_MAX_TOP_BIGRAM = 0.12
-_REP_MAX_DUP_TRIGRAM = 0.05
 
 
 def q_corpus_prep_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1989,15 +1986,15 @@ def _curation_stages_1_9(
     # the tagged n-gram explode + two map-side-combined shuffles of
     # repetition_signals run on gate survivors only (the cheap map-only
     # quality/lang gate prunes first); thresholds are corpus-calibrated
-    # (see _REP_MAX_* note). Not a separate persist: its one consumer is
+    # (see text.REP_MAX_*). Not a separate persist: its one consumer is
     # the exact-dedup stage below, so the gate join rides that
     # materialization (and that stage's profiler clock)
     repgate = qual.join(
         tx.repetition_signals(qual)
         .filter(
-            (F.col("dup_word_frac") <= _REP_MAX_DUP_WORD)
-            & (F.col("top_bigram_frac") <= _REP_MAX_TOP_BIGRAM)
-            & (F.col("dup_trigram_frac") <= _REP_MAX_DUP_TRIGRAM)
+            (F.col("dup_word_frac") <= REP_MAX_DUP_WORD)
+            & (F.col("top_bigram_frac") <= REP_MAX_TOP_BIGRAM)
+            & (F.col("dup_trigram_frac") <= REP_MAX_DUP_TRIGRAM)
         )
         .select("doc_id"),
         "doc_id",
@@ -2379,8 +2376,8 @@ def _stage9_path(spark: SparkSession, sf_dir: str, stages=None) -> str:
     return materialize(
         "stage9",
         (
-            _QUALITY_KEEP, _REP_MAX_DUP_WORD, _REP_MAX_TOP_BIGRAM,
-            _REP_MAX_DUP_TRIGRAM, _SHINGLE_N, _KNEE_NUM_HASHES,
+            _QUALITY_KEEP, REP_MAX_DUP_WORD, REP_MAX_TOP_BIGRAM,
+            REP_MAX_DUP_TRIGRAM, _SHINGLE_N, _KNEE_NUM_HASHES,
             _KNEE_BANDS, _LSH_MAX_BUCKET, _JACCARD_THRESHOLD,
             _GOPHER_MIN_WORDS, _GOPHER_MIN_STOP, _PPL_BUCKETS, _PPL_SEED,
             "fix20",
@@ -2534,9 +2531,9 @@ def _sql_stage9_ctes() -> str:
         rep AS MATERIALIZED ({_sql_doc_repetition("qual")}),
         repgate AS MATERIALIZED (SELECT s.doc_id, s.text, s.lang
                     FROM qual s JOIN rep USING (doc_id)
-                    WHERE dup_word_frac <= {_REP_MAX_DUP_WORD}
-                      AND top_bigram_frac <= {_REP_MAX_TOP_BIGRAM}
-                      AND dup_trigram_frac <= {_REP_MAX_DUP_TRIGRAM}),
+                    WHERE dup_word_frac <= {REP_MAX_DUP_WORD}
+                      AND top_bigram_frac <= {REP_MAX_TOP_BIGRAM}
+                      AND dup_trigram_frac <= {REP_MAX_DUP_TRIGRAM}),
         exact AS MATERIALIZED (SELECT doc_id, text, lang FROM (
                       SELECT doc_id, text, lang,
                              doc_id = MIN(doc_id) OVER (

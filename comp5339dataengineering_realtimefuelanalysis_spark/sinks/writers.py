@@ -10,9 +10,9 @@ adding to it; with the replayable file source that is exactly-once output
 (Structured Streaming, SIGMOD 2018 §6). The store's whole life:
 
   * write   — ``write_epoch``: static overwrite of one epoch directory (the
-              fuel sinks, ppl rejects); ``overwrite_epochs``: dynamic
-              overwrite of the epochs a frame's rows carry (the curation
-              stores);
+              fuel sinks, the curation rejects); ``overwrite_epochs``:
+              dynamic overwrite of the epochs a frame's rows carry (the
+              curation corpus stores);
   * read    — ``read_epochs``: the store as of an epoch (the in-flight one
               excluded, partition-pruned), or None before the first write;
               ``epoch_ids``: the epochs a read holds rows for;

@@ -8,9 +8,11 @@ Each micro-batch is screened, in order, against
      exactly
   3. itself, near-dup          (banded LSH self-join + exact-Jaccard
                                 verify; min-id representative kept)
-  4. the accumulated corpus,   (asymmetric banded LSH join — batch ×
-     near-dup                   touched corpus buckets, NEVER a corpus
-                                self-join — + exact-Jaccard verify)
+  4. the accumulated corpus,   (asymmetric banded LSH join of the
+     near-dup                   batch's keys against silver's stored
+                                ``band_keys``, pruned to the buckets the
+                                batch touches, NEVER a corpus self-join —
+                                + exact-Jaccard verify)
   5. semantic, optional        (embedding-space screen, ``sem_index_path``:
      (within-batch + corpus)    rephrased dups whose shingle Jaccard is
                                 low but whose hashing-trick cosine is
@@ -27,16 +29,21 @@ Scale shape (the 100 TB contract):
     admitted doc's ``content_hash`` and LSH ``band_keys`` (operators/
     dedup.py:minhash_band_keys — ``bands`` short strings per doc);
     screening explodes the stored keys (``banded_from_keys``). Per batch,
-    corpus-side work is one pruned scan of narrow columns + the bucket
-    join on (band, key).
+    corpus-side work is one scan of the narrow ``band_keys`` column + the
+    bucket join on (band, key); there is no second at-rest key store. A
+    band-key index partitioned by key-hash prefix was measured and
+    removed: even a small batch's keys touch most prefix buckets, so
+    partition pruning never took effect, while every micro-batch paid to
+    write and list its many small files (SCALE.md).
   * Corpus text is touched ONLY for docs that land in a candidate pair
     (semi-join on candidate ids before the Jaccard verify) — cost is
     proportional to |candidates|, not |corpus|.
-  * ``max_bucket`` caps degenerate corpus buckets (boilerplate bands),
+  * ``_MAX_BUCKET`` caps degenerate corpus buckets (boilerplate bands),
     the same skew guard every batch composition wires.
   * Exactly-once across restarts WITHOUT an idempotent-sink assumption:
     silver is partitioned by ``ingest_epoch`` and written with dynamic
-    partition overwrite (``sinks.writers.overwrite_epochs``), so a
+    partition overwrite (``sinks.writers.overwrite_epochs``), the reject
+    stores with one static overwrite per epoch (``write_epoch``), so a
     replayed epoch overwrites its own previous (possibly partial) output;
     the corpus read excludes the in-flight epoch's partition, so a replay
     screens against exactly the state the first attempt saw and
@@ -77,12 +84,20 @@ from ..sinks.writers import (
     write_epoch,
 )
 
-
-def _key_prefix():
-    """Partition bucket for a band key: first 2 hex chars of md5(key) —
-    256 uniformly-filled buckets regardless of the key's own value
-    distribution (raw minhash-concat keys are heavily skewed)."""
-    return F.substring(F.md5(F.col("key")), 1, 2)
+# near-dup skew guard: (band, key) buckets with more members are dropped
+# before the candidate joins (boilerplate bands)
+_MAX_BUCKET = 1000
+# semantic screen: nearest cells each batch doc probes, and the
+# hashing-trick embedding's width and seed. Pinned centroids and index
+# vectors carry the width, and _dim_guard fails loudly on a store written
+# under another one.
+_SEM_PROBES = 2
+_SEM_DIM = 64
+_SEM_SEED = "emb"
+# ppl gate LM hashing seed and add-k smoothing; the pinned model records
+# both, and _ppl_model refuses a model trained under other values
+_PPL_SEED = "lmppl"
+_PPL_SMOOTH = 1
 
 
 @dataclass
@@ -98,73 +113,54 @@ class StreamingIncrementalDedup:
     num_hashes: int = 16
     bands: int = 4
     threshold: float = 0.6
-    max_bucket: int | None = 1000
-    # Optional at-rest band-key index: the exploded (doc_id, band, key)
-    # frame partitioned by kp = first 2 hex chars of md5(key). With it,
-    # the per-batch corpus screening scan is DYNAMICALLY PARTITION
-    # PRUNED to the key-prefix buckets the batch touches — without it
-    # the (map-only, columnar) corpus band_keys scan still reads every
-    # admitted doc's keys. Same exactly-once story as silver: rows are
-    # partitioned by (kp, ingest_epoch), a replayed epoch overwrites
-    # its own partitions and reads exclude the in-flight epoch.
-    band_index_path: str | None = None
     # Optional embedding-space (SEMANTIC) screen: catches rephrased
     # duplicates whose shingle Jaccard is low but whose hashing-trick
-    # cosine is high (word-order edits, clause shuffles). Architecture
-    # mirrors the band index: an at-rest index of each admitted doc's
-    # scaled embedding + k-means cell id, partitioned by
-    # (cell, ingest_epoch); per batch, docs probe their ``sem_probes``
-    # nearest cells and only those cell partitions of the index are
-    # scanned (broadcast probe join -> dynamic partition pruning — the
-    # corpus index is NEVER shuffled or re-embedded). Centroids are
-    # trained ONCE (deterministic fixed-iteration Lloyd on the first
-    # batch, quantized) and pinned on disk: a growing corpus must not
-    # re-cell already-admitted docs, and epoch replay must see the
-    # identical blocking. Same exactly-once story as silver.
+    # cosine is high (word-order edits, clause shuffles): an at-rest
+    # index of each admitted doc's scaled embedding + k-means cell id,
+    # partitioned by (cell, ingest_epoch). Per batch, docs probe their
+    # ``_SEM_PROBES`` nearest cells and only those cell partitions of the
+    # index are scanned (broadcast probe join -> dynamic partition
+    # pruning — the corpus index is NEVER shuffled or re-embedded).
+    # Centroids are trained ONCE (deterministic fixed-iteration Lloyd on
+    # the first batch, quantized) and pinned on disk: a growing corpus
+    # must not re-cell already-admitted docs, and epoch replay must see
+    # the identical blocking. Same exactly-once story as silver.
     sem_index_path: str | None = None
     sem_threshold: float = 0.9
     sem_k: int = 8
-    sem_probes: int = 2
-    sem_dim: int = 64
-    sem_seed: str = "emb"
     # Optional CURATION GATES lifted from the batch pipeline
     # (plans/registry_llm.py corpus_curation_pipeline stages 2-3) so
     # continuous ingest gets the same text hygiene without dropping to
-    # batch. Both are BATCH-LOCAL (map-side regex / two map-side-
-    # combined shuffles of batch rows only) — the per-batch
-    # corpus-shuffle-free contract is untouched.
+    # batch. All are BATCH-LOCAL (map-side regex / map-side-combined
+    # shuffles of batch rows only) — the per-batch corpus-shuffle-free
+    # contract is untouched. Each gate runs exactly when its rejects
+    # path is set: gated docs must be observable, never silently
+    # dropped. Every rejects store is written with one static overwrite
+    # per epoch (sinks.writers.write_epoch), so a replayed epoch
+    # replaces its own rejects, and a replay that rejects nothing
+    # clears them.
     #   pii_scrub: replace the text column with its scrubbed form
     #   (operators/text.py:scrubbed_text) BEFORE any hashing, so silver
     #   never stores raw PII and two docs differing only in redacted
     #   values collapse in the exact-dedup stage — the batch pipeline's
     #   ordering, for the same reasons.
-    #   repetition_gate: Gopher repetition thresholds (corpus-
-    #   calibrated in the batch pipeline — see _REP_MAX_* there) over
-    #   the scrubbed batch; gated docs land in ``rejects_path`` with
-    #   their measured fractions and a reason, partitioned by epoch
-    #   with dynamic overwrite (a replayed epoch rewrites exactly its
-    #   own rejects — the silver exactly-once story).
-    #   gopher_gate: the full Gopher rule battery
+    #   rejects_path: the Gopher repetition thresholds
+    #   (operators/text.py:REP_MAX_*, shared with the batch pipeline)
+    #   over the scrubbed batch; gated docs land here with their
+    #   measured fractions and a reason.
+    #   gopher_rejects_path: the full Gopher rule battery
     #   (operators/text.py:gopher_rules — word count, mean word
     #   length, symbol ratio, alpha fraction, stop-words,
-    #   bullet/ellipsis lines) over the scrubbed batch; gated docs
-    #   land in ``gopher_rejects_path`` (its OWN store — the rule
-    #   stats schema differs from the repetition fractions, and mixed
-    #   leaf schemas under one parquet root read back fragile) with
-    #   per-rule booleans and a reason, epoch-partitioned with the
-    #   same dynamic-overwrite replay contract. Batch-local: one
-    #   explode + map-side-combined groupBy of batch rows.
+    #   bullet/ellipsis lines); gated docs land here (their OWN store —
+    #   the rule stats schema differs from the repetition fractions,
+    #   and mixed leaf schemas under one parquet root read back fragile)
+    #   with per-rule booleans and a reason.
     pii_scrub: bool = False
-    repetition_gate: bool = False
     rejects_path: str | None = None
-    rep_max_dup_word: float = 0.7
-    rep_max_top_bigram: float = 0.12
-    rep_max_dup_trigram: float = 0.05
-    gopher_gate: bool = False
     gopher_rejects_path: str | None = None
     gopher_min_words: int = 10
-    #   ppl_gate: the CCNet perplexity filter as a micro-batch gate.
-    #   Unlike the batch query (terciles over the whole corpus at
+    #   ppl_rejects_path: the CCNet perplexity filter as a micro-batch
+    #   gate. Unlike the batch query (terciles over the whole corpus at
     #   query time), a stream cannot re-rank the past: the LM's
     #   per-bucket cost table AND the head/middle/tail cuts are
     #   trained ONCE (train_ppl_model — CCNet's external trusted
@@ -173,26 +169,21 @@ class StreamingIncrementalDedup:
     #   log2 cost table, stats/ = cuts + the hashing params they were
     #   trained with). Batches are scored against the pinned table (one
     #   explode + map-side-combined groupBy of batch rows + the B-row
-    #   broadcast join — batch-local, the per-batch corpus-shuffle-
-    #   free contract holds) and docs whose bucket is not in
-    #   ``ppl_keep`` land in ``ppl_rejects_path`` with their scores,
-    #   one static overwrite per epoch (sinks.writers.write_epoch).
+    #   broadcast join — batch-local) and docs whose bucket is not in
+    #   ``ppl_keep`` land here with their scores.
     #   Retraining (re-calling train_ppl_model) rewrites the model;
     #   a live instance keeps its memoized table and must be
     #   restarted to pick the new one up, and epoch replays after
     #   a retrain may admit differently — the centroid-staleness
     #   story, verbatim: pin, observe drift, retrain deliberately.
-    ppl_gate: bool = False
     ppl_model_path: str | None = None
     ppl_rejects_path: str | None = None
     ppl_buckets: int = 4096
-    ppl_seed: str = "lmppl"
-    ppl_smooth: int = 1
     ppl_keep: tuple = ("head", "middle")
-    # the at-rest indexes ("band", "sem") whose coverage of silver
-    # has been checked by this instance
-    _coverage_checked: set = field(
-        default_factory=set, init=False, repr=False
+    # whether the semantic index's coverage of silver has been checked
+    # by this instance
+    _coverage_checked: bool = field(
+        default=False, init=False, repr=False
     )
     _banding_checked: bool = field(
         default=False, init=False, repr=False
@@ -214,22 +205,6 @@ class StreamingIncrementalDedup:
     _ppl_t1: float | None = field(default=None, init=False, repr=False)
     _ppl_t2: float | None = field(default=None, init=False, repr=False)
 
-    def _index_read_schema(self) -> str:
-        """Explicit read schema for the at-rest band index. The id
-        field's type is DERIVED from the configured landing schema — a
-        corpus whose id column is int/string must not be misread
-        against a hard-coded long. kp stays pinned to string: it is a
-        hex partition-directory value, and Spark's partition-type
-        inference would read an index whose present partitions are
-        all-digits (e.g. kp=07, kp=45) as INT — the string-vs-int
-        screening join would then null out every non-numeric kp and
-        silently admit near-duplicates."""
-        id_type = self.schema[self.id_col].dataType.simpleString()
-        return (
-            f"{self.id_col} {id_type}, band int, key string, "
-            "kp string, ingest_epoch long"
-        )
-
     def start(self, available_now: bool = False) -> StreamingQuery:
         stream = (
             self.spark.readStream.schema(self.schema)
@@ -246,75 +221,41 @@ class StreamingIncrementalDedup:
 
     # -- corpus state -----------------------------------------------------
 
-    def _read_band_index(
-        self, spark: SparkSession, exclude_epoch: int
-    ) -> DataFrame | None:
-        """The at-rest (doc_id, band, key, kp) index as of the epoch being
-        processed, or None when disabled / nothing admitted yet. Same
-        replay isolation as the corpus read. Read schema: see
-        ``_index_read_schema`` (derived id type, pinned string kp)."""
-        if self.band_index_path is None:
-            return None
-        idx = read_epochs(
-            spark, self.band_index_path, self._index_read_schema(),
-            exclude_epoch,
-        )
-        return None if idx is None else idx.select(
-            self.id_col, "band", "key", "kp"
-        )
-
-    # per at-rest index: (name, root field, what its rows hold, the
-    # backfill that builds them) — the coverage error's wording
-    _INDEXES = {
-        "band": ("band index", "band_index_path", "near-dup keys",
-                 "backfill_band_index"),
-        "sem": ("semantic index", "sem_index_path", "embeddings",
-                "backfill_sem_index"),
-    }
-
-    def _index_store(self, store: str) -> tuple[str, str]:
-        """(rows path, read schema) of the at-rest index ``store``."""
-        if store == "band":
-            return self.band_index_path, self._index_read_schema()
-        return self._sem_rows_path(), self._sem_read_schema()
-
     def _missing_epochs(
-        self,
-        spark: SparkSession,
-        store: str,
-        exclude_epoch: int | None = None,
+        self, spark: SparkSession, exclude_epoch: int | None = None
     ) -> tuple[DataFrame | None, list]:
-        """(silver, the sorted silver epochs the index ``store`` has no
+        """(silver, the sorted silver epochs the semantic index has no
         rows for), ``exclude_epoch`` left out of both stores; (None, [])
         when nothing has been admitted yet."""
         silver = read_epochs(spark, self.silver_path, exclude=exclude_epoch)
         if silver is None:
             return None, []
-        idx = read_epochs(spark, *self._index_store(store), exclude_epoch)
+        idx = read_epochs(
+            spark, self._sem_rows_path(), self._sem_read_schema(),
+            exclude_epoch,
+        )
         have = set() if idx is None else epoch_ids(idx)
         return silver, sorted(epoch_ids(silver) - have)
 
     def _check_coverage(
-        self, spark: SparkSession, store: str, exclude_epoch: int
+        self, spark: SparkSession, exclude_epoch: int
     ) -> None:
-        """Refuse to screen against an index (``store``: "band" or
-        "sem") that does not cover every admitted silver epoch — an index
-        enabled AFTER epochs were admitted without it would silently skip
-        screening against those docs. Checked once per runner instance
-        and store (coverage cannot regress mid-run: every epoch writes
-        every store)."""
-        if store in self._coverage_checked:
+        """Refuse to screen against a semantic index that does not cover
+        every admitted silver epoch — an index enabled AFTER epochs were
+        admitted without it would silently skip screening against those
+        docs. Checked once per runner instance (coverage cannot regress
+        mid-run: every epoch writes both stores)."""
+        if self._coverage_checked:
             return
-        _, missing = self._missing_epochs(spark, store, exclude_epoch)
+        _, missing = self._missing_epochs(spark, exclude_epoch)
         if missing:
-            name, root, rows, backfill = self._INDEXES[store]
             raise RuntimeError(
-                f"{name} {getattr(self, root)} is missing epochs "
+                f"semantic index {self.sem_index_path} is missing epochs "
                 f"{missing} that exist in silver — screening against it "
-                f"would skip those docs' {rows}. Run {backfill}(spark) "
-                "once before streaming."
+                "would skip those docs' embeddings. Run "
+                "backfill_sem_index(spark) once before streaming."
             )
-        self._coverage_checked.add(store)
+        self._coverage_checked = True
 
     # -- banding version pin / migration ----------------------------------
 
@@ -438,15 +379,13 @@ class StreamingIncrementalDedup:
         self,
         spark: SparkSession,
         dest_silver_path: str,
-        dest_band_index_path: str | None = None,
         num_hashes: int = 48,
         bands: int = 8,
         n: int | None = None,
     ) -> int:
         """One-time banding upgrade: rebuild the silver corpus'
-        ``band_keys`` (and, when requested, the at-rest band index)
-        at a NEW (num_hashes, bands) — the migration that lets an
-        existing deployment collect the measured K48/b8/r6 S-curve
+        ``band_keys`` at a NEW (num_hashes, bands) — the migration that
+        lets an existing deployment collect the measured K48/b8/r6 S-curve
         knee (SCALE_MEASURED.json: 12x fewer candidates, 3.3x faster
         end-to-end at 500k docs) without re-admitting anything.
 
@@ -459,7 +398,7 @@ class StreamingIncrementalDedup:
         broken, paid once per banding change (timed at x30 scale in
         SCALE_MEASURED.json: band_migration). Run it with no stream
         active, then point a runner configured with the new
-        (num_hashes, bands) at the new SILVER/INDEX roots while
+        (num_hashes, bands) at the new SILVER root while
         KEEPING the original landing dir and checkpoint — epoch
         numbering must continue from the checkpoint, because a fresh
         checkpoint restarts epoch ids at 0 and the dynamic-overwrite
@@ -483,47 +422,13 @@ class StreamingIncrementalDedup:
                 bands,
             )
             rewrite_epochs(rekeyed, dest_silver_path)
-            migrated = spark.read.parquet(dest_silver_path)
-            count = migrated.count()
-            if dest_band_index_path is not None:
-                rewrite_epochs(
-                    migrated.select(
-                        self.id_col,
-                        "ingest_epoch",
-                        F.posexplode("band_keys").alias("band", "key"),
-                    ).withColumn("kp", _key_prefix()),
-                    dest_band_index_path,
-                    "kp",
-                )
+            count = spark.read.parquet(dest_silver_path).count()
         spark.createDataFrame(
             [(n, num_hashes, bands)], self._BANDING_PIN_SCHEMA
         ).coalesce(1).write.mode("overwrite").parquet(
             dest_silver_path + "_banding"
         )
         return count
-
-    def backfill_band_index(self, spark: SparkSession) -> int:
-        """Build index rows for every silver epoch missing from the
-        band index — the one-time migration when enabling
-        ``band_index_path`` over a corpus admitted without it. Returns
-        the number of epochs backfilled. Idempotent (dynamic overwrite
-        of exactly the rebuilt (kp, epoch) partitions)."""
-        if self.band_index_path is None:
-            raise ValueError("band_index_path is not configured")
-        silver, missing = self._missing_epochs(spark, "band")
-        if missing:
-            overwrite_epochs(
-                silver.filter(F.col("ingest_epoch").isin(missing))
-                .select(
-                    self.id_col,
-                    "ingest_epoch",
-                    F.posexplode("band_keys").alias("band", "key"),
-                )
-                .withColumn("kp", _key_prefix()),
-                self.band_index_path,
-                "kp",
-            )
-        return len(missing)
 
     # -- epoch compaction (maintenance) -----------------------------------
 
@@ -533,10 +438,10 @@ class StreamingIncrementalDedup:
         """Maintenance: fold committed epoch partitions into one.
 
         A long-lived deployment accretes one silver partition (plus one
-        band-index (kp, epoch) and sem-index (cell, epoch) partition
-        set) per micro-batch epoch — thousands of small files whose
-        listing cost grows without bound, and whose epoch lists the
-        coverage checks drive through distinct() scans. Folding every
+        sem-index (cell, epoch) partition set) per micro-batch epoch —
+        thousands of small files whose listing cost grows without bound,
+        and whose epoch lists the coverage checks drive through
+        distinct() scans. Folding every
         committed epoch below ``up_to_epoch`` (default: the max epoch
         present — the only partition a checkpoint replay can rewrite)
         into the SMALLEST folded epoch keeps corpus content
@@ -557,9 +462,9 @@ class StreamingIncrementalDedup:
         stores = self._compactable_stores()
         for p, outer, _ in stores:
             recover_fold(p)
-        # fold set from the UNION of all stores' epochs, not silver's
+        # fold set from the UNION of both stores' epochs, not silver's
         # alone: a run interrupted between stores leaves silver folded
-        # and an index not — the next call must still fold the index
+        # and the index not — the next call must still fold the index
         epochs = {p: stored_epochs(p, *outer) for p, outer, _ in stores}
         all_epochs = set().union(*epochs.values())
         silver_epochs = epochs[self.silver_path]
@@ -589,11 +494,6 @@ class StreamingIncrementalDedup:
         tiny, and their epoch ids carry meaning in reports — so they
         are deliberately not compacted."""
         stores = [(self.silver_path, (), None)]
-        if self.band_index_path is not None:
-            stores.append(
-                (self.band_index_path, ("kp",),
-                 self._index_read_schema())
-            )
         if self.sem_index_path is not None:
             stores.append(
                 (self._sem_rows_path(), ("cell",),
@@ -641,8 +541,8 @@ class StreamingIncrementalDedup:
     def _sem_read_schema(self) -> str:
         """Pinned read schema for the at-rest semantic index; id and
         cell types derive from the landing schema (cell ids are seed
-        doc ids), epoch pinned long — same inference guard rationale as
-        _index_read_schema."""
+        doc ids), epoch pinned long: partition-type inference would read
+        all-digit cell directories as INT and misjoin string ids."""
         t = self._id_type()
         return (
             f"{self.id_col} {t}, svec array<bigint>, norm double, "
@@ -701,7 +601,7 @@ class StreamingIncrementalDedup:
             iters=1,
             id_col=self.id_col,
             vec_col="embedding",
-            dim=self.sem_dim,
+            dim=_SEM_DIM,
             unit_norm=True,
         )
         trained.write.mode("overwrite").parquet(cpath)
@@ -717,8 +617,8 @@ class StreamingIncrementalDedup:
             docs,
             self.text_col,
             self.id_col,
-            dim=self.sem_dim,
-            seed=self.sem_seed,
+            dim=_SEM_DIM,
+            seed=_SEM_SEED,
         )
         return sim.attach_scaled(emb, "embedding", "q_").select(
             self.id_col, "embedding", "q_svec", "q_norm"
@@ -733,18 +633,18 @@ class StreamingIncrementalDedup:
         cid tiebreak). cell_rank=1 is the doc's OWN cell; ``dist`` (the
         squared L2 on the int64 grid) rides along so the staleness
         signal can read assignment quality without a second pass."""
-        # BOTH sides guarded against the configured sem_dim: a stream
-        # restarted with a different sem_dim must fail loudly against
-        # its own pinned centroids (the unrolled kernel would otherwise
-        # silently truncate to the shorter array and probe wrong cells)
+        # BOTH sides guarded against _SEM_DIM: pinned centroids written
+        # under another width must fail loudly (the unrolled kernel
+        # would otherwise silently truncate to the shorter array and
+        # probe wrong cells)
         dist = sim._dim_guard(
             F.col("q_svec"),
-            self.sem_dim,
+            _SEM_DIM,
             sim._dim_guard(
                 F.col("c_svec"),
-                self.sem_dim,
+                _SEM_DIM,
                 sim.l2sq_scaled_unrolled(
-                    F.col("q_svec"), F.col("c_svec"), self.sem_dim,
+                    F.col("q_svec"), F.col("c_svec"), _SEM_DIM,
                 ),
             ),
         )
@@ -765,7 +665,7 @@ class StreamingIncrementalDedup:
         )
 
     def _unpack_svec(self, src_col: str, tag: str) -> list[Column]:
-        """``sem_dim`` primitive long columns ``_{tag}0.._{tag}{d-1}``
+        """``_SEM_DIM`` primitive long columns ``_{tag}0.._{tag}{d-1}``
         from an int64-grid vector column — the pre-join projection that
         keeps PAIR scoring inside whole-stage codegen. The element_at
         chain evaluated ABOVE a join runs on the interpreted path (the
@@ -775,18 +675,18 @@ class StreamingIncrementalDedup:
         side, trivial next to the pair fan-out, and shuffled/broadcast
         bytes are unchanged (same dim longs, flat instead of boxed).
         _dim_guard rides the first column so a vector written under a
-        different sem_dim still raises instead of silently truncating."""
+        different width still raises instead of silently truncating."""
         return [
             (
                 sim._dim_guard(
                     F.col(src_col),
-                    self.sem_dim,
+                    _SEM_DIM,
                     F.element_at(F.col(src_col), 1),
                 )
                 if i == 0
                 else F.element_at(F.col(src_col), i + 1)
             ).alias(f"_{tag}{i}")
-            for i in range(self.sem_dim)
+            for i in range(_SEM_DIM)
         ]
 
     def _unpacked_cosine(self, ta: str, tb: str, na, nb):
@@ -796,7 +696,7 @@ class StreamingIncrementalDedup:
         of similarity.l2sq_scaled_unrolled) — bit-identical to the
         array kernel it replaced, so admissions cannot move."""
         dot = F.col(f"_{ta}0") * F.col(f"_{tb}0")
-        for i in range(1, self.sem_dim):
+        for i in range(1, _SEM_DIM):
             dot = dot + F.col(f"_{ta}{i}") * F.col(f"_{tb}{i}")
         return dot.cast("double") / (na * nb)
 
@@ -822,7 +722,7 @@ class StreamingIncrementalDedup:
         if self.sem_index_path is None:
             raise ValueError("sem_index_path is not configured")
         self._check_retrain_marker()
-        silver, missing = self._missing_epochs(spark, "sem")
+        silver, missing = self._missing_epochs(spark)
         if not missing:
             return 0
         docs = silver.filter(F.col("ingest_epoch").isin(missing))
@@ -959,12 +859,12 @@ class StreamingIncrementalDedup:
         cents = self._sem_centroids(spark, emb=None)
         dist = sim._dim_guard(
             F.col("svec"),
-            self.sem_dim,
+            _SEM_DIM,
             sim._dim_guard(
                 F.col("c_svec"),
-                self.sem_dim,
+                _SEM_DIM,
                 sim.l2sq_scaled_unrolled(
-                    F.col("svec"), F.col("c_svec"), self.sem_dim,
+                    F.col("svec"), F.col("c_svec"), _SEM_DIM,
                 ),
             ),
         )
@@ -1097,7 +997,7 @@ class StreamingIncrementalDedup:
                 iters=iters,
                 id_col=self.id_col,
                 vec_col="embedding",
-                dim=self.sem_dim,
+                dim=_SEM_DIM,
                 unit_norm=True,
             )
             trained.write.mode("overwrite").parquet(
@@ -1148,7 +1048,7 @@ class StreamingIncrementalDedup:
                 own.unpersist()
         finally:
             scaled.unpersist()
-        self._coverage_checked.discard("sem")
+        self._coverage_checked = False
         os.remove(self._sem_marker_path())
         return remapped
 
@@ -1163,7 +1063,7 @@ class StreamingIncrementalDedup:
         the semantically-novel survivors AND writes their index rows
         (the admitted set's cells must land atomically with the epoch,
         exactly like band keys). Within-batch: same rank-1 cell, drop
-        the larger id. Vs corpus: each doc probes its sem_probes
+        the larger id. Vs corpus: each doc probes its _SEM_PROBES
         nearest cells; the index side is a partition-pruned scan joined
         against the BROADCAST probe frame — zero corpus shuffle, zero
         corpus re-embedding."""
@@ -1177,7 +1077,7 @@ class StreamingIncrementalDedup:
                 spark, scaled.select(did, "embedding")
             )
             probed = self._nearest_cells(
-                scaled, cents, probes=self.sem_probes
+                scaled, cents, probes=_SEM_PROBES
             ).persist()
             try:
                 own = probed.filter(F.col("cell_rank") == 1)
@@ -1216,7 +1116,7 @@ class StreamingIncrementalDedup:
                 drops = wb_drop
                 idx = self._read_sem_index(spark, epoch_id)
                 if corpus is not None and idx is not None:
-                    self._check_coverage(spark, "sem", epoch_id)
+                    self._check_coverage(spark, epoch_id)
                 elif corpus is not None and idx is None:
                     raise RuntimeError(
                         f"semantic index {self.sem_index_path} is empty "
@@ -1315,17 +1215,17 @@ class StreamingIncrementalDedup:
         ``cuts_df`` (default: the target itself; pass a reference
         crawl sample to calibrate the split on in-distribution
         traffic). Overwrites any previous model — deliberate retrain
-        semantics, see the ppl_gate config note. ``exact_cuts=False``
-        uses the GK sketch for the tercile aggregate (the 100 TB
-        path, same bounded-verdict posture as ppl_buckets)."""
+        semantics, see the ppl_rejects_path config note.
+        ``exact_cuts=False`` uses the GK sketch for the tercile aggregate
+        (the 100 TB path, same bounded-verdict posture as ppl_buckets)."""
         if self.ppl_model_path is None:
             raise ValueError("train_ppl_model requires ppl_model_path")
         costs = sel.lm_ppl_cost_table(
             target_df,
             text_col=target_text_col,
             buckets=self.ppl_buckets,
-            smooth=self.ppl_smooth,
-            seed=self.ppl_seed,
+            smooth=_PPL_SMOOTH,
+            seed=_PPL_SEED,
         )
         costs.write.mode("overwrite").parquet(self._ppl_costs_path())
         # score the cuts frame against the AT-REST table (what batches
@@ -1343,7 +1243,7 @@ class StreamingIncrementalDedup:
             text_col="__ct",
             id_col="__cid",
             buckets=self.ppl_buckets,
-            seed=self.ppl_seed,
+            seed=_PPL_SEED,
         ).filter(F.col("mnll").isNotNull())
         if exact_cuts:
             t1 = F.percentile("mnll", F.lit(1.0 / 3.0))
@@ -1359,9 +1259,9 @@ class StreamingIncrementalDedup:
             t1.cast("double").alias("t1"),
             t2.cast("double").alias("t2"),
             F.lit(self.ppl_buckets).cast("long").alias("buckets"),
-            F.lit(self.ppl_seed).alias("seed"),
+            F.lit(_PPL_SEED).alias("seed"),
             F.lit(20).cast("long").alias("frac"),
-            F.lit(self.ppl_smooth).cast("long").alias("smooth"),
+            F.lit(_PPL_SMOOTH).cast("long").alias("smooth"),
             F.sum("n_bigrams").cast("long").alias("n_train_bigrams"),
         )
         stats.write.mode("overwrite").parquet(self._ppl_stats_path())
@@ -1392,13 +1292,12 @@ class StreamingIncrementalDedup:
             row = None
         if row is None or row["t1"] is None:
             raise RuntimeError(
-                "ppl_gate=True but no pinned LM at "
+                "ppl_rejects_path is set but there is no pinned LM at "
                 f"{self.ppl_model_path!r}: run train_ppl_model first"
             )
         pinned = (row["buckets"], row["seed"], row["frac"],
                   row["smooth"])
-        configured = (self.ppl_buckets, self.ppl_seed, 20,
-                      self.ppl_smooth)
+        configured = (self.ppl_buckets, _PPL_SEED, 20, _PPL_SMOOTH)
         if pinned != configured:
             raise RuntimeError(
                 "ppl gate config mismatch: the at-rest model was "
@@ -1418,8 +1317,9 @@ class StreamingIncrementalDedup:
     def _curation_gates(
         self, batch: DataFrame, epoch_id: int
     ) -> tuple[DataFrame, DataFrame | None]:
-        """Apply the opt-in PII scrub, repetition gate, and Gopher
-        rule battery to a micro-batch (see the config-field note).
+        """Apply the opt-in PII scrub and the gates whose rejects path is
+        set — repetition, Gopher rule battery, perplexity — to a
+        micro-batch (see the config-field note).
         Gate order mirrors the batch pipeline: scrub FIRST so every
         gate (and every downstream hash) sees the text that would be
         trained on. Returns (gated batch,
@@ -1433,56 +1333,46 @@ class StreamingIncrementalDedup:
                 self.text_col, tx.scrubbed_text(self.text_col)
             ).persist()
             handle = batch
-        if self.repetition_gate:
-            if self.rejects_path is None:
-                raise ValueError(
-                    "repetition_gate=True requires rejects_path: gated "
-                    "docs must be observable, not silently dropped"
-                )
+        if self.rejects_path is not None:
             sig = tx.repetition_signals(
                 batch, self.text_col, self.id_col
             )
             bad = sig.filter(
-                (F.col("dup_word_frac") > self.rep_max_dup_word)
-                | (F.col("top_bigram_frac") > self.rep_max_top_bigram)
-                | (F.col("dup_trigram_frac") > self.rep_max_dup_trigram)
+                (F.col("dup_word_frac") > tx.REP_MAX_DUP_WORD)
+                | (F.col("top_bigram_frac") > tx.REP_MAX_TOP_BIGRAM)
+                | (F.col("dup_trigram_frac") > tx.REP_MAX_DUP_TRIGRAM)
             )
-            overwrite_epochs(
+            write_epoch(
                 bad.withColumn(
                     "reason",
                     F.concat_ws(
                         ",",
                         F.when(
                             F.col("dup_word_frac")
-                            > self.rep_max_dup_word,
+                            > tx.REP_MAX_DUP_WORD,
                             F.lit("dup_word"),
                         ),
                         F.when(
                             F.col("top_bigram_frac")
-                            > self.rep_max_top_bigram,
+                            > tx.REP_MAX_TOP_BIGRAM,
                             F.lit("top_bigram"),
                         ),
                         F.when(
                             F.col("dup_trigram_frac")
-                            > self.rep_max_dup_trigram,
+                            > tx.REP_MAX_DUP_TRIGRAM,
                             F.lit("dup_trigram"),
                         ),
                     ),
-                ).withColumn("ingest_epoch", F.lit(int(epoch_id))),
+                ),
                 self.rejects_path,
+                epoch_id,
             )
             batch = batch.join(
                 F.broadcast(bad.select(self.id_col)),
                 self.id_col,
                 "left_anti",
             )
-        if self.gopher_gate:
-            if self.gopher_rejects_path is None:
-                raise ValueError(
-                    "gopher_gate=True requires gopher_rejects_path: "
-                    "gated docs must be observable, not silently "
-                    "dropped"
-                )
+        if self.gopher_rejects_path is not None:
             rules = tx.gopher_rules(
                 batch,
                 text_col=self.text_col,
@@ -1505,23 +1395,17 @@ class StreamingIncrementalDedup:
                     )
                 ],
             )
-            overwrite_epochs(
-                gbad.withColumn("reason", reason).withColumn(
-                    "ingest_epoch", F.lit(int(epoch_id))
-                ),
+            write_epoch(
+                gbad.withColumn("reason", reason),
                 self.gopher_rejects_path,
+                epoch_id,
             )
             batch = batch.join(
                 F.broadcast(gbad.select(self.id_col)),
                 self.id_col,
                 "left_anti",
             )
-        if self.ppl_gate:
-            if self.ppl_rejects_path is None:
-                raise ValueError(
-                    "ppl_gate=True requires ppl_rejects_path: gated "
-                    "docs must be observable, not silently dropped"
-                )
+        if self.ppl_rejects_path is not None:
             costs, t1, t2 = self._ppl_model(batch.sparkSession)
             scores = sel.lm_ppl_score_with_costs(
                 batch,
@@ -1529,7 +1413,7 @@ class StreamingIncrementalDedup:
                 text_col=self.text_col,
                 id_col=self.id_col,
                 buckets=self.ppl_buckets,
-                seed=self.ppl_seed,
+                seed=_PPL_SEED,
             )
             m = F.col("mnll")
             # the ppl_buckets CASE, against the PINNED cuts
@@ -1543,12 +1427,6 @@ class StreamingIncrementalDedup:
             pbad = scored.filter(
                 ~F.col("ppl_bucket").isin(*self.ppl_keep)
             )
-            # write_epoch, not overwrite_epochs: the ppl gate's reject
-            # set is the one gate output that can legitimately CHANGE on
-            # epoch replay (the LM cost table may have been deliberately
-            # retrained in between), including changing to EMPTY, and
-            # only the static form clears an epoch that a replay leaves
-            # empty
             write_epoch(
                 pbad.withColumn(
                     "reason",
@@ -1569,12 +1447,9 @@ class StreamingIncrementalDedup:
         txt, did = self.text_col, self.id_col
         self._check_banding_pin(spark)
 
-        # 0. opt-in curation gates (PII scrub, repetition gate) —
+        # 0. opt-in curation gates (PII scrub, rejects-path gates) —
         #    batch-local by construction, before any hashing
-        gate_handle: DataFrame | None = None
-        if (self.pii_scrub or self.repetition_gate or self.gopher_gate
-                or self.ppl_gate):
-            batch, gate_handle = self._curation_gates(batch, epoch_id)
+        batch, gate_handle = self._curation_gates(batch, epoch_id)
 
         # 1. within-batch exact: canonical (min-id) per content hash;
         #    content_hash is kept — it is part of the silver record
@@ -1613,11 +1488,9 @@ class StreamingIncrementalDedup:
             # 3. within-batch near-dup candidates, oriented DROP=id_a
             #    (the larger id), KEEP=id_b — uniform with the corpus
             #    candidates below, where id_a is always the batch doc
-            capped = batch_banded
-            if self.max_bucket is not None:
-                capped, _ = dd.cap_buckets(
-                    capped, ["band", "key"], self.max_bucket
-                )
+            capped, _ = dd.cap_buckets(
+                batch_banded, ["band", "key"], _MAX_BUCKET
+            )
             x, y = capped.alias("x"), capped.alias("y")
             wb_cands = (
                 x.join(y, ["band", "key"])
@@ -1630,21 +1503,8 @@ class StreamingIncrementalDedup:
             )
 
             # 4. vs corpus near-dup candidates: stored band_keys on the
-            #    corpus side — zero corpus text processing. With a band
-            #    index at rest, the corpus side is the partition-pruned
-            #    index scan instead of exploding every silver row's keys.
+            #    corpus side — zero corpus text processing
             if corpus is not None:
-                partition_col = None
-                corpus_banded = self._read_band_index(spark, epoch_id)
-                left_banded = batch_banded
-                if corpus_banded is not None:
-                    self._check_coverage(spark, "band", epoch_id)
-                    partition_col = "kp"
-                    left_banded = batch_banded.withColumn(
-                        "kp", _key_prefix()
-                    )
-                else:
-                    corpus_banded = dd.banded_from_keys(corpus, did)
                 corp_cands = dd.minhash_lsh_join(
                     b,
                     corpus,
@@ -1653,15 +1513,14 @@ class StreamingIncrementalDedup:
                     self.n,
                     self.num_hashes,
                     self.bands,
-                    max_bucket=self.max_bucket,
-                    left_banded_df=left_banded,
-                    right_banded_df=corpus_banded,
+                    max_bucket=_MAX_BUCKET,
+                    left_banded_df=batch_banded,
+                    right_banded_df=dd.banded_from_keys(corpus, did),
                     # |batch| << |corpus|: prune the corpus side to the
                     # batch's broadcast key set before the bucket-cap
                     # groupBy — otherwise that aggregation shuffles the
                     # full corpus every micro-batch
                     prune_right=True,
-                    partition_col=partition_col,
                 )
                 touched = corpus.join(
                     corp_cands.select(F.col("id_b").alias(did)).distinct(),
@@ -1716,22 +1575,6 @@ class StreamingIncrementalDedup:
                     ),
                     self.silver_path,
                 )
-                if self.band_index_path is not None:
-                    # the exploded at-rest form of the survivors' band
-                    # keys; a replayed epoch recomputes the identical
-                    # rows and dynamic overwrite replaces exactly its
-                    # own (kp, epoch) partitions
-                    overwrite_epochs(
-                        dd.banded_from_keys(
-                            survivors.select(did, "band_keys"), did
-                        )
-                        .withColumn("kp", _key_prefix())
-                        .withColumn(
-                            "ingest_epoch", F.lit(int(epoch_id))
-                        ),
-                        self.band_index_path,
-                        "kp",
-                    )
             finally:
                 sets.unpersist()
         finally:

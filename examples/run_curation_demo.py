@@ -12,9 +12,9 @@ contamination screen -> stratified sample -> packed training sequences.
 
 Streaming flow: three availableNow micro-batches through
 ``StreamingIncrementalDedup`` — within-batch exact + near dedup, then
-exact, banded-LSH, and embedding-space SEMANTIC screens against
-everything previously admitted (band-key + k-means-cell indexes at
-rest), exactly-once across restarts.
+exact, banded-LSH (silver's stored band keys), and embedding-space
+SEMANTIC screens (a k-means-cell index at rest) against everything
+previously admitted, exactly-once across restarts.
 """
 
 from __future__ import annotations
@@ -84,7 +84,6 @@ def main() -> None:
         silver_path=os.path.join(workdir, "silver"),
         checkpoint_dir=os.path.join(workdir, "chk"),
         schema=DOC_SCHEMA,
-        band_index_path=os.path.join(workdir, "bandidx"),
         sem_index_path=os.path.join(workdir, "semidx"),
     )
     os.makedirs(dedup.landing_dir, exist_ok=True)
@@ -112,13 +111,10 @@ def main() -> None:
         )
         admitted_prev = admitted
 
-    print("\nsilver corpus columns (stored band_keys make future "
-          "screening corpus-scan-free):")
+    print("\nsilver corpus columns (stored band_keys keep future "
+          "screening free of corpus text processing):")
     print(" ", spark.read.parquet(dedup.silver_path).columns)
-    print("at-rest indexes: band buckets =",
-          spark.read.parquet(os.path.join(workdir, "bandidx"))
-          .select("kp").distinct().count(),
-          "| semantic cells =",
+    print("at-rest semantic index cells =",
           spark.read.parquet(os.path.join(workdir, "semidx", "index"))
           .select("cell").distinct().count())
     spark.stop()

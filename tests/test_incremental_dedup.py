@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from comp5339dataengineering_realtimefuelanalysis_spark.streaming.incremental_dedup import (
+    _SEM_PROBES,
     StreamingIncrementalDedup,
 )
 
@@ -233,183 +234,6 @@ def test_corpus_screen_plan_never_shuffles_corpus(spark, dedup):
     )
 
 
-def test_band_index_equivalent_and_partition_pruned(spark, tmp_path):
-    """With band_index_path set, admissions are IDENTICAL to the plain
-    topology (the index is just the exploded band_keys at rest), epoch
-    replay stays idempotent (index partitions overwrite like silver's),
-    and the screening join's index scan is dynamically partition-pruned
-    on the kp bucket column."""
-    from comp5339dataengineering_realtimefuelanalysis_spark.operators import dedup as dd
-    from comp5339dataengineering_realtimefuelanalysis_spark.streaming.incremental_dedup import (  # noqa: E501
-        StreamingIncrementalDedup,
-        _key_prefix,
-    )
-
-    batches = [
-        [(1, BASE), (2, BASE), (3, OTHER)],
-        [(4, NEAR), (1, BASE), (5, THIRD)],
-        [(6, PAIR_A), (7, PAIR_B), (8, NEAR_OTHER)],
-    ]
-    silvers = {}
-    for tag in ("plain", "indexed"):
-        d = StreamingIncrementalDedup(
-            spark=spark,
-            landing_dir=str(tmp_path / tag / "landing"),
-            silver_path=str(tmp_path / tag / "silver"),
-            checkpoint_dir=str(tmp_path / tag / "chk"),
-            schema=SCHEMA,
-            band_index_path=(
-                str(tmp_path / tag / "bandidx") if tag == "indexed" else None
-            ),
-        )
-        for rows in batches:
-            _land(spark, d, rows)
-            _run(d)
-        silvers[tag] = _silver_ids(spark, d)
-    assert silvers["plain"] == silvers["indexed"] == {1, 3, 5, 6}
-
-    # index rows must equal the silver corpus's exploded band_keys
-    silver = spark.read.parquet(str(tmp_path / "indexed" / "silver"))
-    idx = spark.read.parquet(str(tmp_path / "indexed" / "bandidx"))
-    recomputed = sorted(
-        map(
-            tuple,
-            dd.banded_from_keys(
-                silver.select("doc_id", "band_keys")
-            ).collect(),
-        )
-    )
-    stored = sorted(
-        map(tuple, idx.select("doc_id", "band", "key").collect())
-    )
-    assert stored == recomputed
-
-    # replay of the last epoch converges (index + silver both epoch-
-    # partitioned dynamic overwrites)
-    d = StreamingIncrementalDedup(
-        spark=spark,
-        landing_dir=str(tmp_path / "indexed" / "landing"),
-        silver_path=str(tmp_path / "indexed" / "silver"),
-        checkpoint_dir=str(tmp_path / "indexed" / "chk"),
-        schema=SCHEMA,
-        band_index_path=str(tmp_path / "indexed" / "bandidx"),
-    )
-    last_epoch = (
-        silver.agg(F.max("ingest_epoch")).first()[0]
-    )
-    batch = spark.createDataFrame(batches[-1], SCHEMA)
-    d._sink(batch, epoch_id=last_epoch)
-    assert _silver_ids(spark, d) == {1, 3, 5, 6}
-    assert (
-        spark.read.parquet(str(tmp_path / "indexed" / "bandidx"))
-        .select("doc_id", "band", "key")
-        .distinct()
-        .count()
-        == len(stored)
-    )
-
-    # plan: the pruned screening join carries a dynamic pruning filter
-    # on the index's kp partition column
-    batch_keys = dd.minhash_band_keys(batch, "text", "doc_id")
-    lb = dd.banded_from_keys(batch_keys, "doc_id").withColumn(
-        "kp", _key_prefix()
-    )
-    rb = spark.read.parquet(str(tmp_path / "indexed" / "bandidx")).select(
-        "doc_id", "band", "key", "kp"
-    )
-    cands = dd.minhash_lsh_join(
-        batch,
-        silver,
-        "text",
-        "doc_id",
-        left_banded_df=lb,
-        right_banded_df=rb,
-        max_bucket=1000,
-        prune_right=True,
-        partition_col="kp",
-    )
-    plan = cands._jdf.queryExecution().executedPlan().toString()
-    assert "dynamicpruning" in plan.lower(), plan
-
-
-def test_band_index_coverage_guard_and_backfill(spark, tmp_path):
-    """Enabling band_index_path over a silver corpus admitted WITHOUT
-    the index must refuse to screen (the partial index would skip
-    earlier epochs' near-dup keys) until backfill_band_index builds the
-    missing epochs — after which screening catches near-dups of
-    pre-index admissions."""
-    import pytest
-    from comp5339dataengineering_realtimefuelanalysis_spark.streaming.incremental_dedup import (  # noqa: E501
-        StreamingIncrementalDedup,
-    )
-
-    common = dict(
-        spark=spark,
-        landing_dir=str(tmp_path / "landing"),
-        silver_path=str(tmp_path / "silver"),
-        checkpoint_dir=str(tmp_path / "chk"),
-        schema=SCHEMA,
-    )
-    plain = StreamingIncrementalDedup(**common)
-    _land(spark, plain, [(1, BASE), (2, OTHER)])
-    _run(plain)
-    assert _silver_ids(spark, plain) == {1, 2}
-
-    indexed = StreamingIncrementalDedup(
-        **common, band_index_path=str(tmp_path / "bandidx")
-    )
-    batch = spark.createDataFrame([(10, NEAR), (11, THIRD)], SCHEMA)
-    # writing one indexed epoch leaves earlier epochs uncovered -> the
-    # NEXT screen must refuse rather than silently miss them
-    indexed._sink(batch, epoch_id=7)
-    later = spark.createDataFrame([(20, NEAR_OTHER)], SCHEMA)
-    with pytest.raises(RuntimeError, match="backfill_band_index"):
-        indexed._sink(later, epoch_id=8)
-
-    n = indexed.backfill_band_index(spark)
-    assert n >= 1
-    indexed._sink(later, epoch_id=8)
-    # epoch 7 predated the index, so it fell back to the full corpus
-    # scan and rejected 10 (near-dup of pre-index doc 1); epoch 8 runs
-    # the INDEX path over the backfilled epochs and must reject 20
-    # (near-dup of pre-index doc 2)
-    assert _silver_ids(spark, indexed) == {1, 2, 11}
-
-
-def test_band_index_with_string_id_column(spark, tmp_path):
-    """The index read schema derives the id field's type from the
-    configured landing schema — a STRING doc id corpus must screen
-    correctly through the at-rest index (the old pinned-long read
-    misparsed non-long ids)."""
-    sschema = StructType(
-        [
-            StructField("doc_id", StringType()),
-            StructField("text", StringType()),
-        ]
-    )
-    d = StreamingIncrementalDedup(
-        spark=spark,
-        landing_dir=str(tmp_path / "landing"),
-        silver_path=str(tmp_path / "silver"),
-        checkpoint_dir=str(tmp_path / "chk"),
-        schema=sschema,
-        band_index_path=str(tmp_path / "bandidx"),
-    )
-    b1 = spark.createDataFrame([("a-1", BASE), ("a-2", OTHER)], sschema)
-    d._sink(b1, epoch_id=0)
-    # second epoch reads the index written by the first: the near-dup
-    # of BASE must be rejected via the indexed corpus screen
-    b2 = spark.createDataFrame([("b-1", NEAR), ("b-2", THIRD)], sschema)
-    d._sink(b2, epoch_id=1)
-    ids = {
-        r.doc_id
-        for r in spark.read.parquet(str(tmp_path / "silver"))
-        .select("doc_id")
-        .collect()
-    }
-    assert ids == {"a-1", "a-2", "b-2"}
-
-
 # rephrasings: same topic/vocabulary core with synonym swaps + clause
 # reorder — char-5-gram Jaccard BELOW the 0.6 shingle threshold (the
 # LSH+verify screen passes them) while hashing-trick cosine stays high
@@ -457,6 +281,42 @@ def _sem_dedup(spark, root, with_sem=True):
         sem_index_path=(str(root / "semidx") if with_sem else None),
         sem_threshold=SEM_THRESHOLD,
     )
+
+
+def test_semantic_index_with_string_id_column(spark, tmp_path):
+    """The semantic index read schema derives the id and cell types from
+    the configured landing schema — a STRING doc id corpus must screen
+    correctly through the at-rest index (a pinned-long read would
+    misparse non-long ids)."""
+    sschema = StructType(
+        [
+            StructField("doc_id", StringType()),
+            StructField("text", StringType()),
+        ]
+    )
+    d = StreamingIncrementalDedup(
+        spark=spark,
+        landing_dir=str(tmp_path / "landing"),
+        silver_path=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        schema=sschema,
+        sem_index_path=str(tmp_path / "semidx"),
+        sem_threshold=SEM_THRESHOLD,
+    )
+    b1 = spark.createDataFrame([("a-1", BASE), ("a-2", OTHER)], sschema)
+    d._sink(b1, epoch_id=0)
+    # second epoch reads the index written by the first: the rephrase
+    # of BASE (below the shingle threshold) must be rejected via the
+    # semantic corpus screen
+    b2 = spark.createDataFrame([("b-1", SEM_REPH), ("b-2", THIRD)], sschema)
+    d._sink(b2, epoch_id=1)
+    ids = {
+        r.doc_id
+        for r in spark.read.parquet(str(tmp_path / "silver"))
+        .select("doc_id")
+        .collect()
+    }
+    assert ids == {"a-1", "a-2", "b-2"}
 
 
 def test_semantic_screen_rejects_rephrased_dups(spark, tmp_path):
@@ -531,7 +391,7 @@ def test_semantic_screen_plan_prunes_and_broadcasts(spark, tmp_path):
             str(tmp_path / "semidx" / "centroids")
         ).limit(0)  # never retrains: pinned file exists
     )
-    probed = d._nearest_cells(scaled, cents, probes=d.sem_probes)
+    probed = d._nearest_cells(scaled, cents, probes=_SEM_PROBES)
     idx = d._read_sem_index(spark, exclude_epoch=999)
     joined = idx.join(
         F.broadcast(
@@ -816,7 +676,6 @@ def test_streaming_curation_gates(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "chk"),
             schema=SCHEMA,
             pii_scrub=True,
-            repetition_gate=True,
             rejects_path=str(tmp_path / "rejects"),
         )
 
@@ -878,6 +737,40 @@ def test_streaming_curation_gates(spark, tmp_path):
     plan = b._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan, plan
+
+
+def test_gate_replay_that_rejects_nothing_clears_its_rejects(
+    spark, tmp_path, monkeypatch
+):
+    """A replayed epoch whose repetition gate now rejects NOTHING must
+    clear that epoch's reject rows, not leave them contradicting the new
+    admission set. Every rejects store is one static overwrite per epoch;
+    a dynamic partition overwrite of the empty frame would write no
+    partition and keep the first attempt's row."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.operators import (
+        text as tx,
+    )
+
+    d = StreamingIncrementalDedup(
+        spark=spark,
+        landing_dir=str(tmp_path / "landing"),
+        silver_path=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        schema=SCHEMA,
+        rejects_path=str(tmp_path / "rejects"),
+    )
+    epoch = spark.createDataFrame([(1, BASE), (3, REPETITIVE_DOC)], SCHEMA)
+    d._sink(epoch, epoch_id=0)
+    assert _silver_ids(spark, d) == {1}
+    rej = spark.read.parquet(str(tmp_path / "rejects")).collect()
+    assert {r.doc_id for r in rej} == {3}
+
+    for name in ("REP_MAX_DUP_WORD", "REP_MAX_TOP_BIGRAM",
+                 "REP_MAX_DUP_TRIGRAM"):
+        monkeypatch.setattr(tx, name, 1.0)
+    d._sink(epoch, epoch_id=0)
+    assert _silver_ids(spark, d) == {1, 3}
+    assert spark.read.parquet(str(tmp_path / "rejects")).count() == 0
 
 
 def test_sem_drift_q90_responds_to_partial_drift(spark, tmp_path):
@@ -1003,7 +896,6 @@ def test_streaming_gopher_gate(spark, tmp_path):
             silver_path=str(tmp_path / "silver"),
             checkpoint_dir=str(tmp_path / "chk"),
             schema=SCHEMA,
-            gopher_gate=True,
             gopher_rejects_path=str(tmp_path / "grejects"),
             gopher_min_words=5,
         )
@@ -1031,22 +923,6 @@ def test_streaming_gopher_gate(spark, tmp_path):
     assert _silver_ids(spark, d2) == {1, 3}
     rej2 = spark.read.parquet(str(tmp_path / "grejects")).collect()
     assert len(rej2) == 1 and rej2[0].doc_id == 2
-
-    # missing rejects path fails loudly at gate time
-    import pytest
-
-    d3 = StreamingIncrementalDedup(
-        spark=spark,
-        landing_dir=str(tmp_path / "landing2"),
-        silver_path=str(tmp_path / "silver2"),
-        checkpoint_dir=str(tmp_path / "chk2"),
-        schema=SCHEMA,
-        gopher_gate=True,
-    )
-    with pytest.raises(ValueError, match="gopher_rejects_path"):
-        d3._curation_gates(
-            spark.createDataFrame([(9, BASE)], SCHEMA), epoch_id=0
-        )
 
 
 def test_streaming_ppl_gate(spark, tmp_path):
@@ -1082,7 +958,6 @@ def test_streaming_ppl_gate(spark, tmp_path):
             silver_path=str(tmp_path / "silver"),
             checkpoint_dir=str(tmp_path / "chk"),
             schema=SCHEMA,
-            ppl_gate=True,
             ppl_model_path=str(tmp_path / model),
             ppl_rejects_path=str(tmp_path / "prejects"),
             **kw,
@@ -1160,11 +1035,11 @@ def test_banding_pin_and_knee_migration(spark, tmp_path, dedup):
     """The banding version pin + migrate_banding: (1) the first run
     pins (n, K, b); a runner configured differently against the same
     silver must refuse (mismatched banding silently admits every
-    near-dup); (2) migration into fresh roots rebuilds band_keys and
-    the band index at the knee (K48/b8) bit-identically to computing
-    them there directly, preserves epochs, and a knee-configured
-    runner over the migrated roots passes the pin check and screens
-    new batches correctly."""
+    near-dup); (2) migration into a fresh root rebuilds band_keys at
+    the knee (K48/b8) bit-identically to computing them there
+    directly, preserves epochs, and a knee-configured runner over the
+    migrated root passes the pin check and screens new batches
+    correctly."""
     from comp5339dataengineering_realtimefuelanalysis_spark.operators import (
         dedup as dd,
     )
@@ -1188,12 +1063,9 @@ def test_banding_pin_and_knee_migration(spark, tmp_path, dedup):
     with pytest.raises(RuntimeError, match="banding config mismatch"):
         bad._check_banding_pin(spark)
 
-    # migrate to the knee in fresh roots
+    # migrate to the knee in a fresh root
     dest = str(tmp_path / "silver_v2")
-    dest_idx = str(tmp_path / "bandidx_v2")
-    nmig = dedup.migrate_banding(
-        spark, dest, dest_idx, num_hashes=48, bands=8
-    )
+    nmig = dedup.migrate_banding(spark, dest, num_hashes=48, bands=8)
     assert nmig == 3
     mig = spark.read.parquet(dest)
     # band_keys == direct knee computation on the same text (order of
@@ -1211,22 +1083,13 @@ def test_banding_pin_and_knee_migration(spark, tmp_path, dedup):
     assert {
         (r.doc_id, r.ingest_epoch) for r in mig.collect()
     } == {(1, 0), (2, 0), (3, 1)}
-    # index rows are exactly the exploded migrated keys
-    idx = spark.read.parquet(dest_idx)
-    assert {
-        (r.doc_id, r.band, r.key) for r in idx.collect()
-    } == {
-        (did, band, key)
-        for did, keys in got.items()
-        for band, key in enumerate(keys)
-    }
 
-    # a knee-configured runner over the migrated roots: pin passes,
+    # a knee-configured runner over the migrated root: pin passes,
     # near-dup of an admitted doc is rejected, fresh content admitted.
     # The runner KEEPS the original landing dir and checkpoint (epoch
     # numbering must continue — a fresh checkpoint restarts epochs at
     # 0 and dynamic overwrite would clobber historical partitions);
-    # only the silver/index roots move.
+    # only the silver root moves.
     v2 = StreamingIncrementalDedup(
         spark=spark,
         landing_dir=dedup.landing_dir,
@@ -1235,7 +1098,6 @@ def test_banding_pin_and_knee_migration(spark, tmp_path, dedup):
         schema=SCHEMA,
         num_hashes=48,
         bands=8,
-        band_index_path=dest_idx,
     )
     _land(spark, v2, [(10, NEAR), (11, PAIR_A)])
     _run(v2)
@@ -1406,7 +1268,7 @@ def test_compact_epochs_preserves_content_and_screening(spark, tmp_path):
         silver_path=str(tmp_path / "silver"),
         checkpoint_dir=str(tmp_path / "chk"),
         schema=SCHEMA,
-        band_index_path=str(tmp_path / "bandidx"),
+        sem_index_path=str(tmp_path / "semidx"),
     )
     for epoch, rows in enumerate(
         [[(1, BASE)], [(2, OTHER)], [(3, THIRD)], [(4, PAIR_A)],
@@ -1432,8 +1294,8 @@ def test_compact_epochs_preserves_content_and_screening(spark, tmp_path):
     s_eps = {r[0] for r in silver2.select("ingest_epoch").distinct()
              .collect()}
     assert s_eps == {0, 4}
-    idx = spark.read.schema(d._index_read_schema()).parquet(
-        d.band_index_path
+    idx = spark.read.schema(d._sem_read_schema()).parquet(
+        d._sem_rows_path()
     )
     i_eps = {r[0] for r in idx.select("ingest_epoch").distinct()
              .collect()}
@@ -1451,7 +1313,7 @@ def test_compact_epochs_preserves_content_and_screening(spark, tmp_path):
         silver_path=d.silver_path,
         checkpoint_dir=d.checkpoint_dir,
         schema=SCHEMA,
-        band_index_path=d.band_index_path,
+        sem_index_path=d.sem_index_path,
     )
     d2._sink(
         spark.createDataFrame([(10, NEAR), (11, NEAR_OTHER),
@@ -1485,7 +1347,7 @@ def test_compact_epochs_crash_recovery(spark, tmp_path, monkeypatch):
         silver_path=str(tmp_path / "silver"),
         checkpoint_dir=str(tmp_path / "chk"),
         schema=SCHEMA,
-        band_index_path=str(tmp_path / "bandidx"),
+        sem_index_path=str(tmp_path / "semidx"),
     )
     for epoch, rows in enumerate(
         [[(1, BASE)], [(2, OTHER)], [(3, THIRD)]]
@@ -1521,8 +1383,8 @@ def test_compact_epochs_crash_recovery(spark, tmp_path, monkeypatch):
     s_eps = {r[0] for r in silver.select("ingest_epoch").distinct()
              .collect()}
     assert s_eps == {0, 2}
-    idx = spark.read.schema(d._index_read_schema()).parquet(
-        d.band_index_path
+    idx = spark.read.schema(d._sem_read_schema()).parquet(
+        d._sem_rows_path()
     )
     i_eps = {r[0] for r in idx.select("ingest_epoch").distinct()
              .collect()}
