@@ -207,12 +207,27 @@ def streaming_attempts_gated(spark) -> dict:
 # (min-of-5 / 0.1845) and the two back-casts averaged (they agreed
 # within 5%: contamination 1.1068/1.1623, kmeans 1.3943/1.4146), so the
 # triple still normalizes against the r8 host epoch.
+# The k-means probe's plan changed when the numpy kernel became the only
+# centroid assignment (the probe had run the decimal-HOF crossJoin), so
+# its floor was re-chained the same way over four quiet epochs on a
+# 4-core host (back-casts 0.7456 / 0.8750 / 0.8865 / 0.7543, mean
+# 0.8154; the old plan back-cast 1.4299 / 1.3895 there, matching its
+# 1.4045 floor). CALIBRATION_FLOOR_BANDS carries each chained floor's
+# back-cast spread into the artifact: a cal_factor move inside the band
+# is floor uncertainty, not host drift.
 CALIBRATION_REFS = {
     "avg_by_type": 0.1845,        # short: one small shuffle (r8 floor)
     "doc_contamination": 1.1346,  # shuffle-heavy inverted-index join
-    "emb_kmeans_train": 1.4045,   # long many-job iterative Lloyd chain
+    "emb_kmeans_train": 0.8154,   # long many-job iterative Lloyd chain
 }
-CALIBRATION_REF_EPOCH = "r8_sf0.1 (contamination/kmeans floors chained via avg_by_type, r19)"
+CALIBRATION_FLOOR_BANDS = {
+    "doc_contamination": (1.1068, 1.1623),
+    "emb_kmeans_train": (0.7456, 0.8865),
+}
+CALIBRATION_REF_EPOCH = (
+    "r8_sf0.1 (contamination floor chained via avg_by_type, r19; "
+    "kmeans floor re-chained for the numpy assignment kernel)"
+)
 
 
 def calibration_probe(spark, sf_dir: str, sf: str) -> dict:
@@ -236,26 +251,32 @@ def calibration_probe(spark, sf_dir: str, sf: str) -> dict:
             finally:
                 release_tracked()
         if runs:
+            band = CALIBRATION_FLOOR_BANDS.get(name, (ref, ref))
             probes[name] = {
                 "ref_sec": ref,
+                "ref_band": list(band),
                 "sec": min(runs),
                 "runs": runs,
                 "ratio": round(min(runs) / ref, 4),
             }
-    factor = None
+
+    def geomean(ratios: list[float]) -> float:
+        return round(math.exp(sum(map(math.log, ratios)) / len(ratios)), 4)
+
+    factor = factor_band = None
     # reference floors are sf0.1 values: at any other sf the ratios mix
     # host drift with data scaling and normalization would lie
     if probes and sf == "0.1":
-        factor = round(
-            math.exp(
-                sum(math.log(p["ratio"]) for p in probes.values())
-                / len(probes)
-            ),
-            4,
-        )
+        factor = geomean([p["ratio"] for p in probes.values()])
+        # the factor against the high and the low end of every band
+        factor_band = [
+            geomean([p["sec"] / p["ref_band"][i] for p in probes.values()])
+            for i in (1, 0)
+        ]
     return {
         "probes": probes,
         "factor": factor,
+        "factor_band": factor_band,
         "ref_epoch": CALIBRATION_REF_EPOCH,
     }
 

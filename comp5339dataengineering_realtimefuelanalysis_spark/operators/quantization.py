@@ -245,7 +245,6 @@ def ivf_pq_write(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    unit_norm: bool = False,
 ) -> None:
     """Materialize the IVF-PQ layout — the full Jégou et al. recipe's
     at-rest half: PQ codes partitioned on disk by nearest-trained-
@@ -255,12 +254,12 @@ def ivf_pq_write(
     dim floats (the ~64x read-volume cut PQ exists for), and exact
     re-scoring, when a caller wants it, goes back to the source table
     by id. One cell-assignment shuffle + one encode shuffle, then a
-    partitioned write; nothing corpus-sized through the driver.
-    ``unit_norm``: caller-guaranteed |x| <= 1 bound -> exact int64
-    assignment path (see _lloyd_assign)."""
-    assigned = kmeans_assign(
-        corpus, cents, id_col, vec_col, dim, unit_norm
-    ).select(id_col, "cluster_id")
+    partitioned write; nothing corpus-sized through the driver. The
+    cell assignment is the exact numpy kernel, which takes its width
+    from ``cents``; ``dim`` sizes the PQ sub-slices only."""
+    assigned = kmeans_assign(corpus, cents, id_col, vec_col).select(
+        id_col, "cluster_id"
+    )
     codes = pq_encode(corpus, codebooks, m, id_col, vec_col, dim)
     (
         # cluster the rows by their output partition before the
@@ -601,7 +600,6 @@ def ivf_sq8_write(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
-    unit_norm: bool = False,
 ) -> None:
     """Materialize the IVF-SQ8 layout: SQ8 codes partitioned on disk
     by nearest-trained-centroid cell — ivf_pq_write's at-rest recipe
@@ -609,12 +607,12 @@ def ivf_sq8_write(
     of m; measured 0.963 recall@10 where the tiny-codebook PQ tier
     pays real recall — SCALE_MEASURED.json ann_recall_quantized). The
     raw vector column is NOT stored. One cell-assignment shuffle +
-    one map-only encode, then a partitioned write. ``unit_norm``:
-    caller-guaranteed |x| <= 1 bound -> exact int64 assignment path
-    (see _lloyd_assign)."""
-    assigned = kmeans_assign(
-        corpus, cents, id_col, vec_col, dim, unit_norm
-    ).select(id_col, "cluster_id")
+    one map-only encode, then a partitioned write. The cell assignment
+    is the exact numpy kernel, which takes its width from ``cents``;
+    ``dim`` validates the SQ8 encode only."""
+    assigned = kmeans_assign(corpus, cents, id_col, vec_col).select(
+        id_col, "cluster_id"
+    )
     codes = sq8_encode(corpus, stats, id_col, vec_col, dim)
     (
         # cluster by output partition before the write (see

@@ -61,16 +61,18 @@ def l2sq_scaled_unrolled(sa: Column, sb: Column, dim: int) -> Column:
     per evaluation — and int64 accumulation avoids decimal(38,0)
     codegen's per-op BigDecimal allocation (~10µs per 64-term
     evaluation; longs are ~100x cheaper). Use for HOT inner loops
-    (Lloyd assignment, cell ranking); the HOF forms remain for dynamic
-    dims and unbounded norms.
+    over a static dim (PQ sub-codebook training, probe-cell ranking);
+    the HOF forms remain for dynamic dims and unbounded norms on the
+    cosine paths. k-means centroid assignment runs neither: it is the
+    numpy kernel _np_assign_frame, exact at any norm.
 
     SAFE ONLY under a norm bound the CALLER guarantees: for vectors
     with L2 norm <= 1.5 on the 1e9 grid, sum (x-y)^2 = |x|^2 + |y|^2 -
     2xy <= 9e18 < 2^63, and every per-term square is <= (3e9)^2; terms
     are non-negative, so partial sums never exceed the total (and by
     Cauchy-Schwarz a dot product under the same bound stays within
-    |x||y| <= 2.25e18). Under the bound every value equals the HOF
-    decimal(38,0) form's (_assign_dist's generic path)."""
+    |x||y| <= 2.25e18). Under the bound every value equals the exact
+    integer squared-L2 (the oracle's HUGEINT replay)."""
     terms = []
     for j in range(dim):
         d = (
@@ -520,8 +522,6 @@ def kmeans_step(
     k: int = 8,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
     """One Lloyd iteration over the corpus: assign every vector to its
     nearest seed centroid (exact squared-L2 on the int64 grid), then
@@ -530,15 +530,15 @@ def kmeans_step(
     Kmax times driver-side for full k-means; each step is one job).
 
     Determinism end-to-end: seeds are the k lowest-id vectors (no RNG);
-    distances are integer (decimal-accumulated), so argmin has no float
-    ambiguity, with cluster id as the documented tiebreak; means divide
-    an exact integer sum once in IEEE double.
+    distances are exact integers (see _np_assign_frame), so argmin has
+    no float ambiguity, with cluster id as the documented tiebreak;
+    means divide an exact integer sum once in IEEE double.
 
-    Scale shape: the seed side is k rows — broadcast, never shuffled;
-    the corpus×k distance fan-out collapses map-side via min_by partial
-    aggregation (one shuffle keyed on the vector id carrying one row per
-    vector); the centroid update explodes assigned vectors to (cluster,
-    dim) — dim-fold map-side fan-out into a 2nd shuffle of k×dim groups.
+    Scale shape: the seed side is k rows — collected once and carried
+    in the assignment kernel's closure, never shuffled; the assignment
+    is a narrow map (no exchange); the centroid update explodes
+    assigned vectors to (cluster, dim) — dim-fold map-side fan-out into
+    one shuffle of k×dim groups.
 
     Output: (cluster_id, dim, n_members, mean) — k×dim rows.
     """
@@ -546,13 +546,7 @@ def kmeans_step(
         F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
     )
     return _lloyd_means(
-        _lloyd_assign(
-            c,
-            _kmeans_seeds(corpus, k, id_col, vec_col),
-            id_col,
-            dim,
-            unit_norm,
-        )
+        _lloyd_assign(c, _kmeans_seeds(corpus, k, id_col, vec_col), id_col)
     )
 
 
@@ -573,187 +567,103 @@ def _kmeans_seeds(
     )
 
 
-def _assign_dist(dim: int, unit_norm: bool) -> Column:
-    """The centroid-assignment distance expression over columns
-    ``svec`` / ``c_svec``: exact integer squared-L2, on the
-    dim-unrolled int64 path under the unit-norm bound, else the
-    dim-agnostic HOF decimal path (see _lloyd_assign for the full
-    trade discussion)."""
-    if unit_norm:
-        # unrolled path hard-indexes 1..dim: BOTH sides must match
-        # the static dim (a longer c_svec would silently truncate)
-        return _dim_guard(
-            F.col("svec"),
-            dim,
-            _dim_guard(
-                F.col("c_svec"),
-                dim,
-                l2sq_scaled_unrolled(
-                    F.col("svec"), F.col("c_svec"), dim,
-                ),
-            ),
-        )
-    # generic path: HOF decimal — unrolled decimal is slower
-    # (BigDecimal per term); see l2sq_scaled_unrolled docstring.
-    # Guarded PAIRWISE (not against the static dim): zip_with
-    # silently truncates a corpus/centroid length skew, but
-    # equal-length vectors of any width are fine — dim-agnostic
-    # callers with non-default widths keep working
-    return _pair_guard(
-        F.col("svec"),
-        F.col("c_svec"),
-        F.aggregate(
-            F.zip_with(
-                F.col("svec"),
-                F.col("c_svec"),
-                lambda x, y: (x.cast(_ACC) - y.cast(_ACC))
-                * (x.cast(_ACC) - y.cast(_ACC)),
-            ),
-            F.lit(0).cast(_ACC),
-            lambda acc, x: acc + x,
-        ),
-    )
-
-
-def _assign_dists_exploded(
-    c: DataFrame,
-    cents: DataFrame,
-    id_col: str,
-    dim: int,
-) -> DataFrame:
-    """(id, cid, dist) for every vector x centroid pair — the CODEGEN
-    distance fan-out for the unit-norm int64 path: posexplode both
-    sides, broadcast-hash-join on the dimension index, hash-aggregate
-    the squared differences ((v-cv)^2 sums to <= 4e18 under the
-    unit-norm 1e9-grid bound, so plain long sums are exact). Same
-    integer dist values as the dim-unrolled projection, so
-    argmin/tiebreak — and therefore trained centroids and oracle
-    parity — are unchanged.
-
-    Why not the unrolled expression over the broadcast nested-loop
-    join: that projection compiles but evaluates ~4.5x slower
-    (measured 7.1 s vs 1.6 s for a 15k x 96 fan-out at dim 64 — ~0.3us
-    per element_at; BNLJ output sits outside whole-stage codegen). The
-    price here is that the (id, cid) partial aggregate's exchange
-    carries n*k narrow rows where min_by-over-fanout carried n; at the
-    semantic family's operating envelope (<=~50k docs per
-    partition-set after blocking) that exchange is trivial next to the
-    n*k*dim compute this shape wins back.
-
-    Both sides are size-guarded BEFORE the explode: the join on the
-    dimension index would silently DROP a length mismatch (exactly the
-    failure the guards exist to make loud)."""
-    ce = c.select(
-        F.col(id_col),
-        F.posexplode(
-            _dim_guard(F.col("svec"), dim, F.col("svec"))
-        ).alias("_i", "_v"),
-    )
-    ke = cents.select(
-        "cid",
-        F.posexplode(
-            _dim_guard(F.col("c_svec"), dim, F.col("c_svec"))
-        ).alias("_i", "_cv"),
-    )
-    d = F.col("_v") - F.col("_cv")
-    return (
-        ce.join(F.broadcast(ke), "_i")
-        .groupBy(id_col, "cid")
-        .agg(F.sum(d * d).alias("dist"))
-    )
-
-
-# Batched-numpy centroid assignment (r18 optimization round). The
-# exploded hash-agg fan-out (_assign_dists_exploded) moves n*k narrow
-# rows through a hash aggregate plus an (id, cid) exchange — at the
-# semantic family's operating point (50k docs x 223..324 cells x
-# 32..64 dims) that is ~0.7-1.5e9 aggregate rows per assignment, the
-# single largest compute in the bench. The same distances computed as
-# ONE int64 matrix product per Arrow batch (|v|^2 + |c|^2 - 2 V.C^T,
-# exact: every term <= 4.5e18 < 2^63 under the unit-norm 1e9-grid
-# bound the caller already guarantees) run ~15x faster per core and
-# need NO exchange at all — mapInArrow is a narrow map, the k-row
-# centroid side rides the task closure. Ties break to the LOWEST cid
-# exactly as min_by(struct(dist, cid)) / ROW_NUMBER(ORDER BY dist,
-# cid): centroid columns are sorted by cid ascending and
-# argmin/stable-argsort take the first minimum. Assignments are
-# therefore bit-identical to the exploded path (integer math, same
-# argmin, same tiebreak) — asserted by tests against both the exploded
-# helper and the DuckDB oracle. The exploded path remains the one for
-# non-integer cids, which the kernel declines.
-_CID_PA_TYPES = ("bigint", "int", "smallint", "tinyint")
+# Centroid assignment: ONE mapInArrow numpy kernel. Each Arrow batch
+# gets every (vector, centroid) squared-L2 distance from one matrix
+# product, |v|^2 + |c|^2 - 2 V.C^T, with NO exchange: mapInArrow is a
+# narrow map and the k-row centroid side rides the task closure.
+# Exact at any magnitude, chosen from the data per batch: when every
+# vector and centroid norm is inside the 1.5 (x the 1e9 grid) bound
+# that l2sq_scaled_unrolled documents, every term is <= 4.5e18 < 2^63
+# and int64 math is exact; otherwise the batch is promoted to Python
+# ints (dtype=object) — slower, still exact, same argmin. Ties break to
+# the LOWEST cid exactly as ROW_NUMBER() OVER (ORDER BY dist, cid):
+# centroids are sorted by cid, and argmin / stable argsort take the
+# first minimum. Any cid type works — the sorted cid values are one
+# Arrow array the kernel takes from. Tested against the DuckDB oracle's
+# HUGEINT replay (tests/test_similarity.py). It replaced a decimal-HOF
+# crossJoin that computed the same distances at 1.5-1.7x the wall
+# (emb_kmeans_step/train at sf0.1, SCALE.md).
+_NORM_SQ_BOUND = (1.5 * _SCALE) ** 2  # 2.25e18: int64-exact below it
+_WIDTH_MSG = "vector length {} does not match centroid width {}"
 
 
 def _np_assign_frame(
     c: DataFrame,
     cents: DataFrame,
     id_col: str,
-    dim: int,
     probes: int | None = None,
     keep_svec: bool = False,
-) -> DataFrame | None:
-    """Centroid assignment as a mapInArrow numpy kernel (see the block
-    comment above). ``probes=None`` -> argmin frame ``(id, cid[,
-    svec])``; ``probes=p`` -> multi-probe frame ``(id, cluster_id,
-    cell_rank)`` with rank 1..p by (dist, cid). Returns None when the
-    centroid frame's shape doesn't fit the kernel (non-integer cid) so
-    the caller can fall back to the exploded path. Collecting ``cents``
-    is bounded by k — the same size class as the broadcast the legacy
-    path ships.
+) -> DataFrame:
+    """Assign ``c``'s ``(id_col, svec)`` rows to ``cents``'
+    ``(cid, c_svec)`` (see the block comment above). ``probes=None`` ->
+    argmin frame ``(id, cid[, svec])``; ``probes=p`` -> multi-probe
+    frame ``(id, cluster_id, cell_rank)`` with rank 1..p by (dist, cid).
 
-    Two documented behavior notes (ADVICE r18):
+    The width comes from the centroids: every centroid and every vector
+    must share it or the kernel raises ValueError, so dim-agnostic
+    callers pass no dim. ``probes`` past the centroid count CLAMPS with
+    a warning instead of raising: drop-empty Lloyd on a near-uniform or
+    tiny corpus can leave fewer centroids than probes, probing every
+    cell is exhaustive coverage rather than an error, and the oracle's
+    ``ROW_NUMBER() <= probes`` replay has exactly the clamped semantics.
+
+    Behavior notes:
     * the ``cents.collect()`` below is EAGER — building a kmeans-family
-      plan executes the centroid-training jobs at plan-construction
-      time, so tools/capture_plans.py's 'built, not run' contract does
-      not hold for these queries (accepted: the collect is what lets
-      the kernel fold k centroids into one matrix product instead of an
-      n x k exploded join; a lazy broadcast would move the fold into
-      the task where the matrix must be rebuilt per batch iterator).
-    * NULL vector ELEMENTS raise here, where the exploded path would
-      silently sum the non-null terms into a wrong distance — raising
-      is deliberate (a NULL element is corrupt input, not a distance),
-      and NULL whole-vector rows are dropped exactly like posexplode
-      drops them."""
+      plan runs the centroid-training jobs at plan-construction time
+      (the collect, bounded by k, is what folds the centroids into one
+      matrix product per batch).
+    * a NULL whole-vector row is dropped; a NULL vector ELEMENT raises
+      (it is corrupt input, not a distance)."""
+    import warnings
+
     import numpy as np
     import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import (
+        ArrayType,
+        IntegerType,
+        LongType,
+        StructField,
+        StructType,
+    )
 
-    cid_type = cents.schema["cid"].dataType.simpleString()
-    if cid_type not in _CID_PA_TYPES:
-        return None
-    id_type = {
-        f.name: f.dataType.simpleString() for f in c.schema.fields
-    }[id_col]
-    rows = [
-        (r[0], r[1]) for r in cents.select("cid", "c_svec").collect()
-    ]
-    rows.sort(key=lambda r: r[0])
+    rows = sorted(
+        (tuple(r) for r in cents.select("cid", "c_svec").collect()),
+        key=lambda r: r[0],
+    )
+    dim = max((len(cv) for _, cv in rows if cv is not None), default=0)
     for _, cv in rows:
         if cv is None or len(cv) != dim:
             raise ValueError(
-                f"vector length {'NULL' if cv is None else len(cv)} "
-                f"does not match unrolled dim {dim}"
+                _WIDTH_MSG.format("NULL" if cv is None else len(cv), dim)
             )
-    spark = c.sparkSession
+    cid_type = cents.schema["cid"].dataType
+    fields = [StructField(id_col, c.schema[id_col].dataType)]
     if probes is None:
-        out_schema = f"{id_col} {id_type}, cid {cid_type}" + (
-            ", svec array<bigint>" if keep_svec else ""
-        )
+        fields.append(StructField("cid", cid_type))
+        if keep_svec:
+            fields.append(StructField("svec", ArrayType(LongType())))
     else:
-        out_schema = (
-            f"{id_col} {id_type}, cluster_id {cid_type}, cell_rank int"
-        )
+        if probes > len(rows):
+            warnings.warn(
+                f"probes={probes} exceeds the number of trained centroids "
+                f"({len(rows)}); clamping to {len(rows)} — every cell is "
+                "probed (exhaustive coverage for this corpus)",
+                stacklevel=3,
+            )
+            probes = len(rows)
+        fields += [
+            StructField("cluster_id", cid_type),
+            StructField("cell_rank", IntegerType()),
+        ]
+    out_schema = StructType(fields)
     if not rows:
-        # empty centroid set: the join/fan-out forms emit no rows
-        return spark.createDataFrame([], out_schema)
-    C = np.asarray([list(cv) for _, cv in rows], dtype=np.int64)
-    cids = np.asarray([cid for cid, _ in rows], dtype=np.int64)
-    cn = np.einsum("ij,ij->i", C, C)
-    cid_pa = {
-        "bigint": pa.int64(),
-        "int": pa.int32(),
-        "smallint": pa.int16(),
-        "tinyint": pa.int8(),
-    }[cid_type]
+        # empty centroid set: nothing to assign to
+        return c.sparkSession.createDataFrame([], out_schema)
+    C = np.asarray([cv for _, cv in rows], dtype=np.int64)
+    Cf = C.astype(np.float64)
+    c_bounded = bool(np.einsum("ij,ij->i", Cf, Cf).max() <= _NORM_SQ_BOUND)
+    cids = pa.array([cid for cid, _ in rows], type=to_arrow_type(cid_type))
 
     def kernel(batches):
         import numpy as _np
@@ -763,8 +673,6 @@ def _np_assign_frame(
         for b in batches:
             ids, sv = b.column(0), b.column(1)
             if sv.null_count:
-                # the exploded form drops NULL-vector rows (posexplode
-                # emits nothing) — mirror that
                 mask = _pc.is_valid(sv)
                 ids, sv = ids.filter(mask), sv.filter(mask)
             n = len(ids)
@@ -775,10 +683,7 @@ def _np_assign_frame(
             )
             if (lens != dim).any():
                 bad = int(lens[(lens != dim).argmax()])
-                raise ValueError(
-                    f"vector length {bad} does not match unrolled "
-                    f"dim {dim}"
-                )
+                raise ValueError(_WIDTH_MSG.format(bad, dim))
             flat = _pc.list_flatten(sv)
             if flat.null_count:
                 raise ValueError(
@@ -789,37 +694,34 @@ def _np_assign_frame(
                 .astype(_np.int64, copy=False)
                 .reshape(n, dim)
             )
-            # exact int64: |v|^2, |c|^2, 2 v.c all <= 4.5e18 under the
-            # unit-norm grid bound (norms <= 1.5e9)
+            Vf = V.astype(_np.float64)
+            if c_bounded and (
+                _np.einsum("ij,ij->i", Vf, Vf).max() <= _NORM_SQ_BOUND
+            ):
+                W, Cw = V, C
+            else:
+                W, Cw = V.astype(object), C.astype(object)
             dist = (
-                _np.einsum("ij,ij->i", V, V)[:, None]
-                + cn[None, :]
-                - 2 * (V @ C.T)
+                (W * W).sum(axis=1)[:, None]
+                + (Cw * Cw).sum(axis=1)[None, :]
+                - 2 * (W @ Cw.T)
             )
             if probes is None:
-                am = dist.argmin(axis=1)  # first min = lowest cid
-                cols = [ids, _pa.array(cids[am]).cast(cid_pa)]
-                names = [id_col, "cid"]
+                cols = [ids, cids.take(_pa.array(dist.argmin(axis=1)))]
                 if keep_svec:
                     cols.append(sv)
-                    names.append("svec")
-                yield _pa.RecordBatch.from_arrays(cols, names)
             else:
-                p = min(probes, len(cids))
-                order = _np.argsort(dist, axis=1, kind="stable")[:, :p]
-                rep = _pa.array(_np.repeat(_np.arange(n), p))
-                yield _pa.RecordBatch.from_arrays(
-                    [
-                        ids.take(rep),
-                        _pa.array(cids[order].ravel()).cast(cid_pa),
-                        _pa.array(
-                            _np.tile(
-                                _np.arange(1, p + 1, dtype=_np.int32), n
-                            )
-                        ),
-                    ],
-                    [id_col, "cluster_id", "cell_rank"],
-                )
+                order = _np.argsort(dist, axis=1, kind="stable")
+                cols = [
+                    ids.take(_pa.array(_np.repeat(_np.arange(n), probes))),
+                    cids.take(_pa.array(order[:, :probes].ravel())),
+                    _pa.array(
+                        _np.tile(
+                            _np.arange(1, probes + 1, dtype=_np.int32), n
+                        )
+                    ),
+                ]
+            yield _pa.RecordBatch.from_arrays(cols, out_schema.names)
 
     return c.select(id_col, "svec").mapInArrow(kernel, out_schema)
 
@@ -828,45 +730,11 @@ def _lloyd_assign(
     c: DataFrame,
     cents: DataFrame,
     id_col: str,
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
-    """Assign every (id, svec) row to its nearest centroid by exact
-    integer squared-L2; tiebreak = lowest centroid id. Centroids are k
-    rows — broadcast; min_by collapses the k-fold fan-out map-side.
-
-    Distance: with ``unit_norm`` the caller guarantees |x| <= 1 on the
-    1e9 grid, so exact int64 math applies and the numpy kernel
-    (_np_assign_frame) assigns; for a non-integer cid, which the kernel
-    declines, the fan-out runs in the exploded hash-agg shape
-    (_assign_dists_exploded — measured 4.5x the dim-unrolled
-    projection, which compiles but evaluates outside whole-stage
-    codegen above the nested-loop join) and svec is joined back onto
-    the argmin by id for the mean update. The two are bit-identical by
-    construction (tests/test_similarity.py). Without unit_norm the HOF
-    decimal(38,0) form runs instead: (x-y)^2 overflows long already at
-    |x| > ~1.5 on the grid, and the unrolled DECIMAL variant measured
-    ~5x slower than the HOF (a BigDecimal allocation per term — see
-    l2sq_scaled_unrolled)."""
-    if unit_norm:
-        out = _np_assign_frame(c, cents, id_col, dim, keep_svec=True)
-        if out is not None:
-            return out
-        argmin = (
-            _assign_dists_exploded(c, cents, id_col, dim)
-            .groupBy(id_col)
-            .agg(F.min_by("cid", F.struct("dist", "cid")).alias("cid"))
-        )
-        return argmin.join(c.select(id_col, "svec"), id_col)
-    return (
-        c.crossJoin(F.broadcast(cents))
-        .withColumn("dist", _assign_dist(dim, unit_norm))
-        .groupBy(id_col)
-        .agg(
-            F.min_by("cid", F.struct("dist", "cid")).alias("cid"),
-            F.first("svec").alias("svec"),  # identical across the k rows
-        )
-    )
+    """``(id, cid, svec)``: every (id, svec) row with its nearest
+    centroid by exact integer squared-L2, lowest-cid tiebreak — the
+    assignment half of a Lloyd update, run by _np_assign_frame."""
+    return _np_assign_frame(c, cents, id_col, keep_svec=True)
 
 
 def _lloyd_sums(assigned: DataFrame) -> DataFrame:
@@ -900,8 +768,6 @@ def kmeans_train_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
     """Centroids (cid, c_svec) after ``iters`` exact Lloyd updates from
     the deterministic lowest-id seeds (``iters=0`` returns the seeds).
@@ -918,10 +784,10 @@ def kmeans_train_centroids(
     round's centroid set (standard drop-empty Lloyd) — deterministic on
     both engines because the assignments are.
 
-    Scale shape per iteration: one broadcast k-row crossJoin collapsed
-    map-side (shuffle keyed on the vector id), one k x dim group-by —
-    the same two shuffles as ``kmeans_step``; ``iters`` is a small
-    constant, each iteration one job when materialized.
+    Scale shape per iteration: one k-row centroid collect feeding the
+    narrow assignment kernel (no exchange), one k x dim group-by — the
+    same shape as ``kmeans_step``; ``iters`` is a small constant. The
+    collects are eager, so building the chain runs iterations 1..iters-1.
     """
     if iters < 0:
         raise ValueError(f"iters must be >= 0, got {iters}")
@@ -930,9 +796,7 @@ def kmeans_train_centroids(
     )
     cents = _kmeans_seeds(corpus, k, id_col, vec_col)
     for _ in range(iters):
-        sums = _lloyd_sums(
-            _lloyd_assign(c, cents, id_col, dim, unit_norm)
-        )
+        sums = _lloyd_sums(_lloyd_assign(c, cents, id_col))
         quant = (
             (
                 F.col("s")
@@ -964,8 +828,6 @@ def kmeans_train(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
     """Full fixed-iteration Lloyd training: the ``iters``-th update's
     per-cluster per-dimension means (same schema as ``kmeans_step``;
@@ -979,12 +841,8 @@ def kmeans_train(
     c = corpus.select(
         F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
     )
-    cents = kmeans_train_centroids(
-        corpus, k, iters - 1, id_col, vec_col, dim, unit_norm
-    )
-    return _lloyd_means(
-        _lloyd_assign(c, cents, id_col, dim, unit_norm)
-    )
+    cents = kmeans_train_centroids(corpus, k, iters - 1, id_col, vec_col)
+    return _lloyd_means(_lloyd_assign(c, cents, id_col))
 
 
 def kmeans_assign(
@@ -992,8 +850,6 @@ def kmeans_assign(
     cents: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
     """``corpus`` plus ``cluster_id`` = nearest trained centroid (exact
     integer L2, lowest-cid tiebreak) — the IVF cell assignment."""
@@ -1001,7 +857,7 @@ def kmeans_assign(
         F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
     )
     return corpus.join(
-        _lloyd_assign(c, cents, id_col, dim, unit_norm).select(
+        _lloyd_assign(c, cents, id_col).select(
             id_col, F.col("cid").alias("cluster_id")
         ),
         id_col,
@@ -1014,8 +870,6 @@ def kmeans_assign_probes(
     probes: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> DataFrame:
     """Each vector's ``probes`` NEAREST trained centroids — the
     multi-probe blocking assignment (one row per (vector, probe):
@@ -1024,97 +878,17 @@ def kmeans_assign_probes(
     ``ROW_NUMBER() OVER (PARTITION BY id ORDER BY dist, cid) = r`` —
     the oracle-replayable contract.
 
-    Scale shape: on the unit-norm path the distances come from the
-    exploded hash-agg fan-out (_assign_dists_exploded), whose (id, cid)
-    exchange already carries n*k narrow rows — a window top-``probes``
-    over that frame adds no asymptotic cost and evaluates every
-    distance exactly ONCE (the previous iterated-pass form re-evaluated
-    the fan-out per probe, and pass 2's lineage nested pass 1's). The
-    decimal path keeps the iterated min_by passes: its crossJoin
-    fan-out collapses map-side, so the per-pass exchange moves n rows,
-    never n x k — the right trade when the fan-out must not cross an
-    exchange.
+    Scale shape: one narrow pass of the assignment kernel
+    (_np_assign_frame), which ranks every distance once per vector and
+    emits n*probes rows — no exchange. ``probes`` past the centroid
+    count clamps with a warning (see _np_assign_frame).
     """
     if probes < 1:
         raise ValueError(f"probes must be >= 1, got {probes}")
-    # probes > k would SILENTLY emit only k rows per vector (row_number
-    # runs out of centroids) — downstream multi-probe recall math then
-    # overstates coverage. cents is k rows by contract, so the count is
-    # a trivial action — but NOTE it is an eager one: callers that built
-    # cents from an unpersisted Lloyd chain re-run training here (the
-    # registry callers all tracked_persist the centroid frame first).
-    # Degenerate corpora (drop-empty Lloyd on a near-uniform or tiny
-    # input can leave fewer centroids than probes) CLAMP with a loud
-    # warning instead of raising: every cell being probed is exhaustive
-    # coverage, not an error, and the SQL oracle's ROW_NUMBER() <= probes
-    # replay has exactly the clamped semantics.
-    n_cents = cents.count()
-    if probes > n_cents:
-        import warnings
-
-        warnings.warn(
-            f"probes={probes} exceeds the number of trained centroids "
-            f"({n_cents}); clamping to {n_cents} — every cell is "
-            "probed (exhaustive coverage for this corpus)",
-            stacklevel=2,
-        )
-        probes = n_cents
-    if unit_norm:
-        c = corpus.select(
-            F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
-        )
-        out = _np_assign_frame(c, cents, id_col, dim, probes=probes)
-        if out is not None:
-            return out
-        w = Window.partitionBy(id_col).orderBy("dist", "cid")
-        return (
-            _assign_dists_exploded(c, cents, id_col, dim)
-            .withColumn("cell_rank", F.row_number().over(w))
-            .filter(F.col("cell_rank") <= probes)
-            .select(
-                id_col,
-                F.col("cid").alias("cluster_id"),
-                "cell_rank",
-            )
-        )
-    cur = corpus.select(
-        F.col(id_col),
-        scaled_vec(F.col(vec_col)).alias("svec"),
-        # empty array typed like the id column (cids are seed ids, so
-        # they share its type): slice(.., 1, 0) of a 1-element array
-        F.slice(F.array(F.col(id_col)), 1, 0).alias("taken"),
+    c = corpus.select(
+        F.col(id_col), scaled_vec(F.col(vec_col)).alias("svec")
     )
-    picked = []
-    for r in range(1, probes + 1):
-        fan = (
-            cur.crossJoin(F.broadcast(cents))
-            .filter(~F.array_contains(F.col("taken"), F.col("cid")))
-            .withColumn("dist", _assign_dist(dim, unit_norm))
-        )
-        step = fan.groupBy(id_col).agg(
-            F.min_by("cid", F.struct("dist", "cid")).alias("cid"),
-            F.first("svec").alias("svec"),
-            F.first("taken").alias("taken"),
-        )
-        picked.append(
-            step.select(
-                id_col,
-                F.col("cid").alias("cluster_id"),
-                F.lit(r).alias("cell_rank"),
-            )
-        )
-        if r < probes:
-            cur = step.select(
-                id_col,
-                "svec",
-                F.array_append(F.col("taken"), F.col("cid")).alias(
-                    "taken"
-                ),
-            )
-    out = picked[0]
-    for p in picked[1:]:
-        out = out.unionByName(p)
-    return out
+    return _np_assign_frame(c, cents, id_col, probes=probes)
 
 
 def ivf_write_kmeans(
@@ -1123,20 +897,14 @@ def ivf_write_kmeans(
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int = 64,
-    unit_norm: bool = False,
 ) -> None:
     """Materialize the LEARNED-centroid IVF layout: corpus partitioned
     by nearest-trained-centroid cell, scaled vector + norm precomputed at
     rest. The k-means analog of ``ivf_write`` (hyperplane buckets):
     data-adaptive cells follow the corpus distribution, so cell sizes are
-    balanced by construction where hyperplane buckets depend on luck.
-    ``unit_norm``: caller-guaranteed |x| <= 1 bound -> exact int64
-    assignment path (see _lloyd_assign)."""
+    balanced by construction where hyperplane buckets depend on luck."""
     cb = attach_scaled(
-        kmeans_assign(corpus, cents, id_col, vec_col, dim, unit_norm),
-        vec_col,
-        "c_",
+        kmeans_assign(corpus, cents, id_col, vec_col), vec_col, "c_"
     )
     (
         # cluster by output partition before the write (guide §6 —

@@ -1833,11 +1833,9 @@ def _semantic_drop_ids(
         mode = "2l" if n > _SEM_MODE_CROSSOVER else "1l"
     if mode == "1l":
         cents = sim.kmeans_train_centroids(
-            emb, k=_sem_k(n), iters=_SEM_ITERS, unit_norm=True
+            emb, k=_sem_k(n), iters=_SEM_ITERS
         )
-        assigned = tracked_persist(
-            sim.kmeans_assign(emb, cents, unit_norm=True)
-        )
+        assigned = tracked_persist(sim.kmeans_assign(emb, cents))
         block_col = "cluster_id"
     else:
         # subspace product blocking with persisted centroid/probe
@@ -3414,18 +3412,15 @@ def q_doc_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Counted on the DOCUMENTS table, matching the oracle's k subquery
     # (embed_text preserves row count by contract, but the source table
     # is the ground truth either way).
-    # unit_norm=True everywhere: embed_text L2-normalizes, so the
-    # Cauchy-Schwarz bound licenses int64 accumulation in the unrolled
-    # distance/dot expressions (~100x cheaper than decimal, identical
-    # values). The ASSIGNED frame is persisted — it feeds both self-join
-    # sides and the n x k assignment is the training hot loop.
+    # The pair scoring passes unit_norm=True: embed_text L2-normalizes,
+    # so the Cauchy-Schwarz bound licenses int64 accumulation in the
+    # unpacked dot (~100x cheaper than decimal, identical values); the
+    # centroid assignment checks the norms itself. The ASSIGNED frame is
+    # persisted — it feeds both self-join sides and the n x k assignment
+    # is the training hot loop.
     k = _sem_k(docs.count())
-    cents = sim.kmeans_train_centroids(
-        emb, k=k, iters=_SEM_ITERS, unit_norm=True
-    )
-    assigned = tracked_persist(
-        sim.kmeans_assign(emb, cents, unit_norm=True)
-    )
+    cents = sim.kmeans_train_centroids(emb, k=k, iters=_SEM_ITERS)
+    assigned = tracked_persist(sim.kmeans_assign(emb, cents))
     pairs = sim.embedding_near_dup_pairs(
         assigned,
         threshold=_SEM_THRESHOLD,
@@ -3587,14 +3582,12 @@ def _sem2_blocked(emb: DataFrame, n: int) -> DataFrame:
     cell combinations is scored in each shared block and collapsed by
     the pair generator's distinct — same verified set.
 
-    The k-row centroid frames are PERSISTED: kmeans_assign_probes
-    re-broadcasts its cents argument, so an unpersisted training DAG
-    would re-run the whole Lloyd chain per consumer — measured
-    97 s -> 13 s at x3. The probe frames are PERSISTED before the
-    three-way join builds the block keys: joining two n x k fan-out
-    lineages in one job measured 60 s where the separately
-    materialized frames cost ~3 s (x3) — the join must consume
-    n*probes tiny rows, not the nested fan-outs."""
+    The k-row centroid frames need no persist: kmeans_assign_probes
+    collects them once, when its plan is built. The probe frames are
+    PERSISTED before the three-way join builds the block keys: joining
+    two n x k fan-out lineages in one job measured 60 s where the
+    separately materialized frames cost ~3 s (x3) — the join must
+    consume n*probes tiny rows, not the nested fan-outs."""
     k = _sem2_k(n)
     cells = []
     for tag, off in (("a", 1), ("b", _SEM2_HALF + 1)):
@@ -3602,13 +3595,10 @@ def _sem2_blocked(emb: DataFrame, n: int) -> DataFrame:
             "vec_id",
             F.slice("embedding", off, _SEM2_HALF).alias("embedding"),
         )
-        cents = tracked_persist(sim.kmeans_train_centroids(
-            sub, k=k, iters=_SEM_ITERS, unit_norm=True, dim=_SEM2_HALF
-        ))
+        cents = sim.kmeans_train_centroids(sub, k=k, iters=_SEM_ITERS)
         cells.append(tracked_persist(
             sim.kmeans_assign_probes(
-                sub, cents, probes=_SEM2_PROBES, unit_norm=True,
-                dim=_SEM2_HALF,
+                sub, cents, probes=_SEM2_PROBES
             ).select("vec_id", F.col("cluster_id").alias(f"cell_{tag}"))
         ))
     # product block key: pairs must collide in a probed A-cell AND a
@@ -3785,16 +3775,13 @@ def _kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes."""
 
     def train() -> list:
-        # unit_norm=True (r19): the ANN-tier embeddings corpus is
-        # unit-normalized (the cosine-ANN contract — pq_train's
-        # subspace |x| <= 1 bound has assumed exactly this since the
-        # PQ tier landed; fixture verified, max |norm - 1| < 2e-7), so
-        # the exact-int64 training/assignment path applies: identical
-        # integer centroids and cells (both paths are exact), ~4x less
-        # build wall than the decimal HOF fallback.
+        # the ANN-tier embeddings corpus is unit-normalized (the
+        # cosine-ANN contract; fixture max |norm - 1| < 2e-7), so the
+        # assignment kernel's per-batch norm check keeps every batch on
+        # its int64 matmul
         cents = sim.kmeans_train_centroids(
             load_table(spark, sf_dir, "embeddings"),
-            k=_KMEANS_K, iters=_KMEANS_ITERS, unit_norm=True,
+            k=_KMEANS_K, iters=_KMEANS_ITERS,
         )
         return [(r.cid, list(r.c_svec)) for r in cents.collect()]
 
@@ -3813,7 +3800,7 @@ def _ivf_kmeans_index_for(
     path = materialize(
         "ivfkmeans", (_KMEANS_K, _KMEANS_ITERS), [(sf_dir, "embeddings")],
         lambda path: sim.ivf_write_kmeans(
-            load_table(spark, sf_dir, "embeddings"), cents, path, unit_norm=True
+            load_table(spark, sf_dir, "embeddings"), cents, path
         ),
     )
     return path, cents
@@ -4128,7 +4115,7 @@ def _ivf_pq_index_for(
         "ivfpq", params, [(sf_dir, "embeddings")],
         lambda path: qz.ivf_pq_write(
             _emb_parallel(spark, sf_dir), cents, books_df, path,
-            m=_PQ_M, dim=_EMB_DIM, unit_norm=True,
+            m=_PQ_M, dim=_EMB_DIM,
         ),
     )
     return path, cents, books_df
@@ -4219,7 +4206,7 @@ def _ivf_sq8_index_for(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame
         "ivfsq8", (_KMEANS_K, _KMEANS_ITERS, _EMB_DIM), [(sf_dir, "embeddings")],
         lambda path: qz.ivf_sq8_write(
             _emb_parallel(spark, sf_dir), cents, stats, path,
-            dim=_EMB_DIM, unit_norm=True,
+            dim=_EMB_DIM,
         ),
     )
     return path, cents, stats

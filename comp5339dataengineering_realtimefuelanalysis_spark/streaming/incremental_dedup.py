@@ -601,8 +601,6 @@ class StreamingIncrementalDedup:
             iters=1,
             id_col=self.id_col,
             vec_col="embedding",
-            dim=_SEM_DIM,
-            unit_norm=True,
         )
         trained.write.mode("overwrite").parquet(cpath)
         return spark.read.schema(schema).parquet(cpath)
@@ -997,8 +995,6 @@ class StreamingIncrementalDedup:
                 iters=iters,
                 id_col=self.id_col,
                 vec_col="embedding",
-                dim=_SEM_DIM,
-                unit_norm=True,
             )
             trained.write.mode("overwrite").parquet(
                 self._sem_cents_path()
@@ -1284,12 +1280,14 @@ class StreamingIncrementalDedup:
         that silently admits everything."""
         if self._ppl_costs is not None:
             return self._ppl_costs, self._ppl_t1, self._ppl_t2
-        try:
-            row = spark.read.schema(self._PPL_STATS_SCHEMA).parquet(
-                self._ppl_stats_path()
-            ).first()
-        except AnalysisException:
-            row = None
+        row = None
+        if self.ppl_model_path is not None:
+            try:
+                row = spark.read.schema(self._PPL_STATS_SCHEMA).parquet(
+                    self._ppl_stats_path()
+                ).first()
+            except AnalysisException:
+                pass
         if row is None or row["t1"] is None:
             raise RuntimeError(
                 "ppl_rejects_path is set but there is no pinned LM at "

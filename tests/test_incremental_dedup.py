@@ -1031,6 +1031,25 @@ def test_streaming_ppl_gate(spark, tmp_path):
     assert rej3.count() == 0
 
 
+def test_ppl_gate_without_model_path_fails_loudly(spark, tmp_path):
+    """A ppl gate configured with no ``ppl_model_path`` has no pinned
+    LM to read: its first gated batch must raise the "run
+    train_ppl_model first" error, not a TypeError from joining a None
+    path."""
+    d = StreamingIncrementalDedup(
+        spark=spark,
+        landing_dir=str(tmp_path / "landing"),
+        silver_path=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        schema=SCHEMA,
+        ppl_rejects_path=str(tmp_path / "prejects"),
+    )
+    with pytest.raises(RuntimeError, match="run train_ppl_model first"):
+        d._curation_gates(
+            spark.createDataFrame([(9, BASE)], SCHEMA), epoch_id=0
+        )
+
+
 def test_banding_pin_and_knee_migration(spark, tmp_path, dedup):
     """The banding version pin + migrate_banding: (1) the first run
     pins (n, K, b); a runner configured differently against the same

@@ -155,7 +155,7 @@ def test_ivf_pq_probes_all_equals_flat_adc_and_prunes(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     k_cells = 3
-    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2, dim=DIM)
+    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2)
     books = qz.pq_train(df, m=M, ks=KS, dim=DIM)
     path = str(tmp_path / "ivf_pq")
     qz.ivf_pq_write(df, cents, books, path, m=M, dim=DIM)
@@ -220,7 +220,7 @@ def test_ivf_pq_rerank_recovers_exact_cosine(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     k_cells = 3
-    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2, dim=DIM)
+    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2)
     books = qz.pq_train(df, m=M, ks=KS, dim=DIM)
     path = str(tmp_path / "ivf_pq_rr")
     qz.ivf_pq_write(df, cents, books, path, m=M, dim=DIM)
@@ -364,7 +364,7 @@ def test_ivf_sq8_probes_all_equals_flat_and_prunes(spark, tmp_path):
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     k_cells = 3
-    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2, dim=DIM)
+    cents = sim.kmeans_train_centroids(df, k=k_cells, iters=2)
     stats = qz.sq8_train(df, dim=DIM)
     path = str(tmp_path / "ivf_sq8")
     qz.ivf_sq8_write(df, cents, stats, path, dim=DIM)

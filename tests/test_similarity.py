@@ -122,7 +122,7 @@ def test_kmeans_step_assignment_and_means(spark):
     the integer distance go to the smaller cluster id, so everything
     within equal distance of both seeds lands in cluster 0; means are
     exact per-dimension averages of the members."""
-    out = sim.kmeans_step(corpus(spark), k=2, dim=4).collect()
+    out = sim.kmeans_step(corpus(spark), k=2).collect()
     members = {r.cluster_id: r.n_members for r in out}
     # seeds 0 and 1 are identical -> every vector ties -> all go to 0
     assert members == {0: 5}
@@ -141,7 +141,7 @@ def test_kmeans_step_separates_clusters(spark):
         (3, [9.9, 10.1], 0),   # near seed 1
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
-    out = sim.kmeans_step(df, k=2, dim=2).collect()
+    out = sim.kmeans_step(df, k=2).collect()
     got = {(r.cluster_id, r.dim): (r.n_members, r.mean) for r in out}
     want = {
         (0, 0): (2, 0.05),
@@ -215,13 +215,41 @@ def test_materialize_rebuilds_a_torn_build(spark):
         caching.release_materialized()
 
 
-def test_kmeans_assign_probes_matches_window_rank(spark):
-    """kmeans_assign_probes' iterated min_by passes (the map-side-
-    combine shape) must equal the declarative top-``probes`` by
-    (dist, cid) — the ROW_NUMBER contract the oracle replays — and
-    rank 1 must equal kmeans_assign."""
-    from pyspark.sql import Window
+def _duckdb_ranks(c, cents, probes):
+    """Sorted (id, cid, rank) for rank <= ``probes``: the DuckDB
+    oracle's replay of the centroid assignment over ``c``'s
+    (id, svec) and ``cents``' (cid, c_svec) — HUGEINT squared-L2
+    distances, then ROW_NUMBER() OVER (PARTITION BY id ORDER BY dist,
+    cid), the pairs/asg shape of registry_llm._sql_kmeans_chain."""
+    import duckdb
 
+    con = duckdb.connect()
+    con.register("c", c.toDF("id", "svec").toArrow())
+    con.register("s", cents.select("cid", "c_svec").toArrow())
+    rows = con.execute(f"""
+        WITH pairs AS (
+            SELECT c.id, s.cid,
+                   list_sum(list_transform(list_zip(c.svec, s.c_svec),
+                       p -> (CAST(p[1] AS HUGEINT) - CAST(p[2] AS HUGEINT))
+                            * (CAST(p[1] AS HUGEINT)
+                               - CAST(p[2] AS HUGEINT)))) AS dist
+            FROM c CROSS JOIN s)
+        SELECT id, cid, ROW_NUMBER() OVER (
+                   PARTITION BY id ORDER BY dist, cid) AS r
+        FROM pairs QUALIFY r <= {probes}""").fetchall()
+    return sorted(rows)
+
+
+def _scaled_corpus(df):
+    return df.select(
+        "vec_id", sim.scaled_vec(F.col("embedding")).alias("svec")
+    )
+
+
+def test_kmeans_assign_probes_matches_window_rank(spark):
+    """kmeans_assign_probes must equal the declarative top-``probes``
+    by (dist, cid) — the ROW_NUMBER contract the oracle replays, run
+    here in DuckDB — and rank 1 must equal kmeans_assign."""
     from comp5339dataengineering_realtimefuelanalysis_spark.plans.base import (
         load_table,
     )
@@ -236,22 +264,7 @@ def test_kmeans_assign_probes_matches_window_rank(spark):
             sim.kmeans_assign_probes(emb, cents, probes=2).collect(),
         )
     )
-    # reference: explicit window rank over the full distance fan-out
-    c = emb.select("vec_id", sim.scaled_vec(F.col("embedding")).alias("svec"))
-    fan = c.crossJoin(F.broadcast(cents)).withColumn(
-        "dist", sim._assign_dist(64, False)
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "cid")
-    want = sorted(
-        map(
-            tuple,
-            fan.withColumn("cell_rank", F.row_number().over(w))
-            .filter(F.col("cell_rank") <= 2)
-            .select("vec_id", F.col("cid").alias("cluster_id"), "cell_rank")
-            .collect(),
-        )
-    )
-    assert got == want
+    assert got == _duckdb_ranks(_scaled_corpus(emb), cents, 2)
     rank1 = {t[0]: t[1] for t in got if t[2] == 1}
     top1 = {
         r.vec_id: r.cluster_id
@@ -294,12 +307,12 @@ def test_kmeans_train_fixpoint_on_separated_clusters(spark):
         (3, [9.9, 10.1], 0),
     ]
     df = spark.createDataFrame(rows, SCHEMA)
-    t1 = sim.kmeans_train(df, k=2, iters=1, dim=2).orderBy("cluster_id", "dim")
-    t3 = sim.kmeans_train(df, k=2, iters=3, dim=2).orderBy("cluster_id", "dim")
+    t1 = sim.kmeans_train(df, k=2, iters=1).orderBy("cluster_id", "dim")
+    t3 = sim.kmeans_train(df, k=2, iters=3).orderBy("cluster_id", "dim")
     assert t1.collect() == t3.collect()
     cents = {
         r.cid: r.c_svec
-        for r in sim.kmeans_train_centroids(df, k=2, iters=2, dim=2).collect()
+        for r in sim.kmeans_train_centroids(df, k=2, iters=2).collect()
     }
     # cluster 0 = {v0, v2}. float32(0.1) = 0.10000000149..., so v2
     # scales to (100000001, -100000001); the centroid is the
@@ -374,15 +387,15 @@ def test_kmeans_degenerate_identical_corpus(spark, tmp_path):
     no crash, no divergence, deterministic output."""
     rows = [(i, [1.0, 2.0], 0) for i in range(20)]
     df = spark.createDataFrame(rows, SCHEMA)
-    cents = sim.kmeans_train_centroids(df, k=4, iters=3, dim=2)
+    cents = sim.kmeans_train_centroids(df, k=4, iters=3)
     got = cents.collect()
     assert len(got) == 1 and got[0].cid == 0  # ties -> lowest seed id
-    train = sim.kmeans_train(df, k=4, iters=3, dim=2).collect()
+    train = sim.kmeans_train(df, k=4, iters=3).collect()
     assert {r.cluster_id for r in train} == {0}
     assert all(r.n_members == 20 for r in train)
 
     path = str(tmp_path / "degenerate_ivf")
-    sim.ivf_write_kmeans(df, cents, path, dim=2)
+    sim.ivf_write_kmeans(df, cents, path)
     qs = df.filter(F.col("vec_id") == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -395,15 +408,13 @@ def test_kmeans_degenerate_identical_corpus(spark, tmp_path):
 
 
 def test_pair_and_dim_guards_are_loud_but_dim_agnostic(spark):
-    """Length-skew handling after the round-8 guard audit: the
-    dynamic-dim HOF paths accept equal-width vectors of ANY dim
-    (no forced dim parameter) but raise loudly on a pairwise mismatch
-    instead of zip_with-truncating; the unrolled unit-norm path
-    validates BOTH sides against the static dim."""
+    """Length-skew handling: the centroid assignment takes its width
+    from the centroids, so equal-width vectors of ANY dim work with no
+    dim parameter, and a vector/centroid width mismatch in either
+    direction raises one message instead of truncating."""
     import pytest
 
-    # 2-d corpus through kmeans_step WITHOUT passing dim: works (the
-    # generic path must stay dim-agnostic for consistent widths)
+    # 2-d corpus through kmeans_step WITHOUT passing dim: works
     df = spark.createDataFrame(
         [(1, [0.0, 0.0]), (2, [0.1, 0.0]), (3, [1.0, 1.0])],
         "vec_id long, embedding array<float>",
@@ -411,27 +422,23 @@ def test_pair_and_dim_guards_are_loud_but_dim_agnostic(spark):
     out = sim.kmeans_step(df, k=2).collect()
     assert {r.dim for r in out} == {0, 1}
 
-    # pairwise mismatch (2-d corpus vs 3-d centroid) raises
+    # a centroid wider than the corpus (2-d vectors, 3-d centroid)
     cents = spark.createDataFrame(
         [(1, [0, 0, 0])], "cid long, c_svec array<long>"
     )
-    c = df.select("vec_id", sim.scaled_vec(F.col("embedding")).alias("svec"))
-    with pytest.raises(Exception, match="lengths .* differ"):
-        sim._lloyd_assign(c, cents, "vec_id").collect()
+    with pytest.raises(Exception, match="does not match centroid width"):
+        sim._lloyd_assign(_scaled_corpus(df), cents, "vec_id").collect()
 
-    # unrolled unit-norm path: a centroid longer than dim raises (it
-    # would silently truncate otherwise)
+    # a centroid longer than the 64-d corpus: raises (it would
+    # silently truncate otherwise)
     cents64 = spark.createDataFrame(
         [(1, [0] * 65)], "cid long, c_svec array<long>"
     )
     df64 = spark.createDataFrame(
         [(1, [0.01] * 64)], "vec_id long, embedding array<float>"
     )
-    c64 = df64.select(
-        "vec_id", sim.scaled_vec(F.col("embedding")).alias("svec")
-    )
-    with pytest.raises(Exception, match="does not match unrolled dim"):
-        sim._lloyd_assign(c64, cents64, "vec_id", unit_norm=True).collect()
+    with pytest.raises(Exception, match="does not match centroid width"):
+        sim._lloyd_assign(_scaled_corpus(df64), cents64, "vec_id").collect()
 
 
 def test_kmeans_assign_probes_exceeding_k_clamps_loudly(spark):
@@ -448,21 +455,21 @@ def test_kmeans_assign_probes_exceeding_k_clamps_loudly(spark):
          (3, [0.0, 0.0, 1.0]), (4, [0.7, 0.7, 0.0])],
         "vec_id long, embedding array<float>",
     )
-    cents = sim.kmeans_train_centroids(df, k=2, iters=1, dim=3)
+    cents = sim.kmeans_train_centroids(df, k=2, iters=1)
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        out3 = sim.kmeans_assign_probes(df, cents, probes=3, dim=3)
+        out3 = sim.kmeans_assign_probes(df, cents, probes=3)
         assert any("clamping" in str(w.message) for w in caught)
     # clamped to k=2: identical to probes=2, every vector covered
     assert sorted(map(tuple, out3.collect())) == sorted(
         map(tuple,
-            sim.kmeans_assign_probes(df, cents, probes=2, dim=3)
+            sim.kmeans_assign_probes(df, cents, probes=2)
             .collect())
     )
     # probes == k is the boundary and stays warning-free
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        out = sim.kmeans_assign_probes(df, cents, probes=2, dim=3)
+        out = sim.kmeans_assign_probes(df, cents, probes=2)
         rows = out.collect()
         assert not any("clamping" in str(w.message) for w in caught)
     cnt = {}
@@ -496,17 +503,14 @@ def test_sem2_recall_vs_1l_guard(spark):
     assert recall >= 0.95, (recall, len(one), len(two))
 
 
-def test_np_assign_matches_exploded_path(spark):
-    """The batched-numpy assignment kernel (mapInArrow int64 matmul)
-    must be BIT-IDENTICAL to an argmin / row_number over the exploded
-    hash-agg distances (_assign_dists_exploded), on both the argmin
-    (_lloyd_assign) and the multi-probe (kmeans_assign_probes) faces —
-    same distances (exact int64 either way), same lowest-cid
-    tiebreak. Also pins the kernel's edge contract: NULL vectors drop
-    (posexplode semantics) and a dim-mismatched vector still raises
-    loudly."""
+def test_np_assign_matches_duckdb_rank(spark):
+    """The mapInArrow centroid-assignment kernel must be BIT-IDENTICAL
+    to the DuckDB oracle's argmin / ROW_NUMBER over exact HUGEINT
+    distances, on both the argmin (_lloyd_assign) and the multi-probe
+    (kmeans_assign_probes) faces — same lowest-cid tiebreak. Also pins
+    the kernel's edge contract: NULL vectors drop and a dim-mismatched
+    vector still raises loudly."""
     import pytest
-    from pyspark.sql import Window
 
     from comp5339dataengineering_realtimefuelanalysis_spark.plans.base import (
         load_table,
@@ -515,68 +519,74 @@ def test_np_assign_matches_exploded_path(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(
         300
     )
-    cents = sim.kmeans_train_centroids(
-        emb, k=7, iters=1, unit_norm=True
-    )
-    c = emb.select(
-        "vec_id", sim.scaled_vec(F.col("embedding")).alias("svec")
-    )
+    cents = sim.kmeans_train_centroids(emb, k=7, iters=1)
+    c = _scaled_corpus(emb)
     got_arg = sorted(
-        map(
-            tuple,
-            sim._lloyd_assign(c, cents, "vec_id", unit_norm=True).collect(),
-        )
+        map(tuple, sim._lloyd_assign(c, cents, "vec_id").collect())
     )
     got_pr = sorted(
         map(
             tuple,
-            sim.kmeans_assign_probes(
-                emb, cents, probes=3, unit_norm=True
-            ).collect(),
+            sim.kmeans_assign_probes(emb, cents, probes=3).collect(),
         )
     )
-    # a NULL vector row disappears (mirrors posexplode)
+    want_pr = _duckdb_ranks(c, cents, 3)
+    svec = {r.vec_id: r.svec for r in c.collect()}
+    assert got_arg == [
+        (vid, cid, svec[vid]) for vid, cid, r in want_pr if r == 1
+    ]
+    assert got_pr == want_pr
+    # a NULL vector row disappears
     with_null = spark.createDataFrame(
         [(901, None), (902, [0] * 64)],
         "vec_id long, svec array<bigint>",
     )
-    out = sim._lloyd_assign(
-        with_null, cents, "vec_id", unit_norm=True
-    ).collect()
+    out = sim._lloyd_assign(with_null, cents, "vec_id").collect()
     assert [r.vec_id for r in out] == [902]
-    # a mismatched dim raises with the unrolled-guard wording
+    # a mismatched dim raises
     bad = spark.createDataFrame(
         [(903, [0] * 65)], "vec_id long, svec array<bigint>"
     )
-    with pytest.raises(Exception, match="does not match unrolled dim"):
-        sim._lloyd_assign(bad, cents, "vec_id", unit_norm=True).collect()
+    with pytest.raises(Exception, match="does not match centroid width"):
+        sim._lloyd_assign(bad, cents, "vec_id").collect()
 
-    dists = sim._assign_dists_exploded(c, cents, "vec_id", 64)
-    ranked = dists.withColumn(
-        "cell_rank",
-        F.row_number().over(
-            Window.partitionBy("vec_id").orderBy("dist", "cid")
-        ),
+
+def test_np_assign_exact_past_int64_and_with_string_cids(spark):
+    """Past the unit-norm bound the int64 matmul would wrap: vector
+    (0, 0) sits 2^32 grid units from centroid "k", whose squared
+    distance 2^64 reads 0 in int64 and would beat "m" at 0.25e18, and
+    (4.2, 0) sits 3.7e9 from "m", which wraps negative. The kernel
+    must promote such batches and agree with DuckDB's HUGEINT replay;
+    the STRING cids ride through _lloyd_assign and kmeans_assign_probes,
+    "m" beating "z" on the (0, 0) tie by string order."""
+    rows = [(0, [0.0, 0.0]), (1, [4.2, 0.0])] + [
+        (i, [((i * 37) % 101) / 10.0 - 5.0, ((i * 53) % 89) / 9.0 - 5.0])
+        for i in range(2, 40)
+    ]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    cents = spark.createDataFrame(
+        [("m", [500_000_000, 0]), ("k", [1 << 32, 0]),
+         ("z", [0, 500_000_000]), ("a", [-3_000_000_000, 2_000_000_000])],
+        "cid string, c_svec array<long>",
     )
-    want_arg = sorted(
+    want = _duckdb_ranks(_scaled_corpus(df), cents, 2)
+    assert [t for t in want if t[0] in (0, 1)] == [
+        (0, "m", 1), (0, "z", 2), (1, "k", 1), (1, "m", 2),
+    ]
+    got_arg = {
+        r.vec_id: r.cid
+        for r in sim._lloyd_assign(
+            _scaled_corpus(df), cents, "vec_id"
+        ).collect()
+    }
+    assert got_arg == {vid: cid for vid, cid, r in want if r == 1}
+    got_pr = sorted(
         map(
             tuple,
-            ranked.filter(F.col("cell_rank") == 1)
-            .select("vec_id", "cid")
-            .join(c, "vec_id")
-            .collect(),
+            sim.kmeans_assign_probes(df, cents, probes=2).collect(),
         )
     )
-    want_pr = sorted(
-        map(
-            tuple,
-            ranked.filter(F.col("cell_rank") <= 3)
-            .select("vec_id", F.col("cid").alias("cluster_id"), "cell_rank")
-            .collect(),
-        )
-    )
-    assert got_arg == want_arg
-    assert got_pr == want_pr
+    assert got_pr == want
 
 
 @pytest.mark.parametrize("table", ["embeddings", "documents"])

@@ -6,7 +6,12 @@ Writes <out_dir>/<query>_<tag>.txt for each named query (all queries when
 none are named). The judge reads these to verify plan-shape claims
 (Exchange count, join strategy, PushedFilters, BatchEvalPython nodes), so
 the capture is the plan Spark would execute for the bench's sf dir
-($SPARK_GRAFT_SF_DIR, default sf0.1) — built, not run.
+($SPARK_GRAFT_SF_DIR, default sf0.1) — built, not run. One exception:
+every k-means-family query (kmeans step/train, the IVF k-means, PQ and
+SQ8 indexes, semantic dedup) runs its centroid jobs while its plan is
+built, because the centroid-assignment kernel collects the k centroids
+eagerly (operators/similarity.py:_np_assign_frame); the captured plan
+is the final assignment over those collected centroids.
 """
 
 from __future__ import annotations

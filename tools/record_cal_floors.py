@@ -19,7 +19,8 @@ cross-round meaning. Runs are interleaved (probe order rotates per
 round) so a steal burst cannot inflate one probe's whole sample.
 
 Usage:  python tools/record_cal_floors.py [n_rounds=5]
-Prints a JSON blob; paste the floors into bench.py CALIBRATION_REFS.
+Prints a JSON blob; paste the floors into bench.py CALIBRATION_REFS
+(the mean over epochs) and their spread into CALIBRATION_FLOOR_BANDS.
 """
 
 from __future__ import annotations
