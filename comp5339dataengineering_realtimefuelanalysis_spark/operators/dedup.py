@@ -117,41 +117,61 @@ def dedup_exact_stream(
 # ---------------------------------------------------------------------------
 
 
+def _shingle_array(n: int) -> Column:
+    """The n-gram array over the projected normalized text ``__t``:
+    substring(__t, i, n) for i in 1..max(len - n + 1, 1), so short
+    text yields its whole remainder and empty text one '' shingle.
+    expr form because substring's pos argument must be the lambda
+    variable."""
+    return F.expr(
+        f"transform(sequence(1, greatest(length(__t) - {n - 1}, 1)),"
+        f" i -> substring(__t, i, {n}))"
+    )
+
+
 def shingles(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
     n: int = 5,
-    distinct: bool = True,
 ) -> DataFrame:
-    """Character n-gram shingles per document: (id, shingle).
-
-    Built with sequence+transform+explode — stays in codegen; output size
-    is ~len(text) rows per doc, the dominant cost of MinHash pipelines.
-
-    ``distinct=True`` dedups (doc, shingle) — REQUIRED for set semantics
-    (Jaccard counting) but costs a full shuffle of the shingle explosion.
-    Operators that are idempotent over duplicates (MIN aggregation in
-    MinHash, collect_set) should pass ``distinct=False``: the explode
-    preserves the doc's partition locality, so their own doc-keyed groupBy
-    map-side-combines to ~one row per doc before shuffling anything.
+    """Distinct character n-gram shingles per document: (id, shingle)
+    rows — the inverted-index form the n-gram join operators key on.
+    Output size is ~len(text) rows per doc plus one (doc, shingle)
+    dedup shuffle; operators that only need each doc's SET take
+    shingle_sets instead, which builds it row-local.
     """
     # Normalize ONCE into a projected column before shingling: Catalyst's
     # CollapseProject keeps the projection (the alias is referenced more
     # than once and regexp_replace is non-cheap), so the regex doesn't
-    # re-run per shingle — measured ~5x on minhash at sf0.1. expr form
-    # because substring's pos argument must be the lambda variable.
+    # re-run per shingle — measured ~5x on minhash at sf0.1.
     normed = df.select(F.col(id_col), norm_text(text_col).alias("__t"))
-    df2 = normed.select(
+    return normed.select(
+        F.col(id_col), F.explode(_shingle_array(n)).alias("shingle")
+    ).distinct()
+
+
+def shingle_sets(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 5,
+) -> DataFrame:
+    """Each document's distinct shingle set: (id, sh_set array<string>),
+    one row per input row, built row-local — no explode, no shuffle.
+    The text is normalized once into a projected column, and the set
+    is array_distinct over the n-gram array. The NULL filter keeps the
+    contract of the explode + collect_set form it replaces: NULL text
+    yields one NULL shingle there, which collect_set drops, so NULL
+    text gives [] (empty text gives ['']). Element order is first
+    occurrence; every consumer treats the array as a set."""
+    normed = df.select(F.col(id_col), norm_text(text_col).alias("__t"))
+    return normed.select(
         F.col(id_col),
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(length(__t) - {n - 1}, 1)),"
-                f" i -> substring(__t, i, {n}))"
-            )
-        ).alias("shingle"),
+        F.filter(
+            F.array_distinct(_shingle_array(n)), lambda x: x.isNotNull()
+        ).alias("sh_set"),
     )
-    return df2.distinct() if distinct else df2
 
 
 def winnow_fingerprints(
@@ -182,12 +202,7 @@ def winnow_fingerprints(
     normed = df.select(F.col(id_col), norm_text(text_col).alias("__t"))
     sh = normed.select(
         F.col(id_col),
-        F.posexplode(
-            F.expr(
-                f"transform(sequence(1, greatest(length(__t) - {n - 1}, 1)),"
-                f" i -> substring(__t, i, {n}))"
-            )
-        ).alias("pos", "shingle"),
+        F.posexplode(_shingle_array(n)).alias("pos", "shingle"),
     )
     # posexplode is 0-based; the selection filter (and the SQL oracle)
     # count positions from 1
@@ -306,22 +321,21 @@ def jaccard_verify_pairs(
     id_col: str = "doc_id",
     n: int = 5,
     threshold: float = 0.5,
-    shingles_df: DataFrame | None = None,
     sets_df: DataFrame | None = None,
     sets_hint: str | None = "shuffle_hash",
-    length_bound: bool = True,
 ) -> DataFrame:
     """Exact Jaccard for a given candidate-pair set (id_a, id_b).
 
     The 100 TB composition: LSH generates candidates (linear-ish cost),
-    this verifies them exactly. Shingle SETS are collected per doc (array
-    column, bounded by text length) and the per-pair Jaccard is a pure
-    array expression — no inverted-index explosion, cost ~ |candidates|.
+    this verifies them exactly. Shingle SETS are built per doc
+    (shingle_sets: an array column, bounded by text length, no shuffle)
+    and the per-pair Jaccard is a pure array expression — no
+    inverted-index explosion, cost ~ |candidates|.
 
     ``sets_df``: optional precomputed (id, sh_set array) frame — pass a
     PERSISTED one when the pipeline also needs the distinct shingle sets
     elsewhere (e.g. a downstream contamination screen explodes them back
-    to (id, shingle) rows), so the collect_set shuffle runs once.
+    to (id, shingle) rows), so the sets are built once.
 
     ``sets_hint``: join-strategy hint applied to the sets sides,
     default ``"shuffle_hash"`` (see the inline note — corpus-sized
@@ -330,37 +344,43 @@ def jaccard_verify_pairs(
     batch docs + touched corpus docs only) and a broadcast is the
     right plan.
 
-    ``length_bound``: pre-drop candidate pairs that CANNOT reach the
-    threshold from set sizes alone before any set data moves. J(A,B)
-    = |A∩B| / |A∪B| <= min(|A|,|B|) / max(|A|,|B|) (intersection is
-    at most the smaller set, union at least the larger), so a pair
-    with min/max < t is provably below threshold — the output is
-    IDENTICAL with the filter on or off (the division is the same
-    correctly-rounded double expression as the Jaccard itself, and
-    rounding is monotone, so bound >= J >= t survives exactly).
-    The prune joins candidates against a (id, size) projection —
-    16-byte rows instead of full shingle arrays — so the expensive
-    sets join and array_intersect run over survivors only. Measured
-    at 500k docs the banded candidates are 0.17% precision (28.2M
-    candidates / 46.7k true pairs); most false candidates differ
-    wildly in length and die here for the cost of two narrow joins.
+    Two output-preserving filters run ahead of the Jaccard filter:
+
+    - Length bound: J(A,B) = |A∩B| / |A∪B| <= min(|A|,|B|) /
+      max(|A|,|B|) (intersection is at most the smaller set, union at
+      least the larger), so a pair with min/max < t is provably below
+      threshold. The division is the same correctly-rounded double
+      expression as the Jaccard itself, and rounding is monotone, so
+      bound >= J >= t survives exactly. The prune joins candidates
+      against a (id, size) projection — 16-byte rows instead of full
+      shingle arrays — so the sets join runs over survivors only.
+    - One-intersect pre-filter: Catalyst pushes the Jaccard filter into
+      the sets join's condition, where n = |A∩B| appears twice (numerator
+      and union), so every candidate paid two array_intersects. The
+      pre-filter n·(1+t) >= t·(1 − 1e-9)·(|A|+|B|) needs n once and is
+      evaluated first; the Jaccard filter then runs on its survivors
+      only. It keeps every pair the Jaccard filter keeps: with
+      u = |A|+|B|−n, fl(n/u) >= t implies n/u >= t/(1+ε) (ε = 2^-53,
+      division correctly rounded), i.e. n·(1+t') >= t'·(|A|+|B|) with
+      t' = t/(1+ε) <= t. The sizes are exact in a double, and the
+      rounding of fl(1+t), the two products and t·(1 − 1e-9) moves
+      each side by under 3ε relative, far inside the 1e-9 slack. An
+      empty pair (|A|+|B| = 0) passes it and meets the Jaccard filter
+      as before.
     """
     from ..functions.caching import tracked_persist
 
-    # persist: this frame feeds BOTH sides of the candidate join — without
-    # it Spark re-derives the whole shingle DAG per side (measured 5x cost
-    # at sf0.1). Materializing also gives AQE real stats to pick the join
-    # strategy. Ownership: registered with functions.caching so the caller
-    # that materializes the result can release_tracked() afterwards.
-    if sets_df is not None:
-        sets = sets_df
-    else:
-        if shingles_df is None:
-            shingles_df = shingles(df, text_col, id_col, n, distinct=False)
-        sets = tracked_persist(
-            shingles_df.groupBy(id_col)
-            .agg(F.collect_set("shingle").alias("sh_set"))  # set-dedups
-        )
+    # persist: this frame feeds the size prune AND both sides of the
+    # candidate join — without it each reference re-derives the sets.
+    # Materializing also gives AQE real stats to pick the join
+    # strategy. Ownership: registered with functions.caching so the
+    # caller that materializes the result can release_tracked()
+    # afterwards.
+    sets = (
+        sets_df
+        if sets_df is not None
+        else tracked_persist(shingle_sets(df, text_col, id_col, n))
+    )
     # shuffle_hash pins the join strategy: BOTH sides here are
     # corpus-sized by contract (sets = one row per doc, candidates =
     # the LSH pair set), so neither may ever be broadcast — yet both
@@ -374,34 +394,33 @@ def jaccard_verify_pairs(
     # the per-partition hash table on the sets side (bounded by
     # corpus/partitions, the scalable quantity), and skips the sort a
     # merge-join pin would add.
-    if length_bound:
-        # size-only prune BEFORE the sets move: the (id, size) frame
-        # is corpus-sized in rows but 16 bytes wide, so the two prune
-        # joins shuffle candidate ids + one long each — the full
-        # shingle arrays then join only the surviving pairs. Same
-        # shuffle_hash pin rationale as the sets join (corpus-sized
-        # by contract, never broadcast).
-        sizes = sets.select(
-            F.col(id_col), F.size("sh_set").alias("__sz")
+    #
+    # size-only prune BEFORE the sets move: the (id, size) frame is
+    # corpus-sized in rows but 16 bytes wide, so the two prune joins
+    # shuffle candidate ids + one long each — the full shingle arrays
+    # then join only the surviving pairs. Measured at 500k docs the
+    # banded candidates are 0.17% precision (28.2M candidates / 46.7k
+    # true pairs); most false candidates differ wildly in length and
+    # die here for the cost of two narrow joins.
+    sizes = sets.select(F.col(id_col), F.size("sh_set").alias("__sz"))
+    sa = sizes.select(
+        F.col(id_col).alias("id_a"), F.col("__sz").alias("__sz_a")
+    )
+    sb = sizes.select(
+        F.col(id_col).alias("id_b"), F.col("__sz").alias("__sz_b")
+    )
+    if sets_hint is not None:
+        sa, sb = sa.hint(sets_hint), sb.hint(sets_hint)
+    candidates = (
+        candidates.join(sa, "id_a")
+        .join(sb, "id_b")
+        .filter(
+            F.least("__sz_a", "__sz_b").cast("double")
+            / F.greatest("__sz_a", "__sz_b")
+            >= F.lit(threshold)
         )
-        sa = sizes.select(
-            F.col(id_col).alias("id_a"), F.col("__sz").alias("__sz_a")
-        )
-        sb = sizes.select(
-            F.col(id_col).alias("id_b"), F.col("__sz").alias("__sz_b")
-        )
-        if sets_hint is not None:
-            sa, sb = sa.hint(sets_hint), sb.hint(sets_hint)
-        candidates = (
-            candidates.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(
-                F.least("__sz_a", "__sz_b").cast("double")
-                / F.greatest("__sz_a", "__sz_b")
-                >= F.lit(threshold)
-            )
-            .select("id_a", "id_b")
-        )
+        .select("id_a", "id_b")
+    )
     a = sets.select(
         F.col(id_col).alias("id_a"), F.col("sh_set").alias("set_a")
     )
@@ -411,10 +430,15 @@ def jaccard_verify_pairs(
     if sets_hint is not None:
         a, b = a.hint(sets_hint), b.hint(sets_hint)
     inter = F.size(F.array_intersect(F.col("set_a"), F.col("set_b")))
-    union = F.size(F.col("set_a")) + F.size(F.col("set_b")) - inter
+    total = F.size(F.col("set_a")) + F.size(F.col("set_b"))
+    union = total - inter
     return (
         candidates.join(a, "id_a")
         .join(b, "id_b")
+        .filter(
+            inter.cast("double") * F.lit(1.0 + threshold)
+            >= F.lit(threshold * (1.0 - 1e-9)) * total.cast("double")
+        )
         .withColumn("jaccard", inter.cast("double") / union)
         .filter(F.col("jaccard") >= F.lit(threshold))
         .select("id_a", "id_b", "jaccard")
@@ -514,7 +538,7 @@ def _minhash_arrow_fn(n: int, num_hashes: int):
                     continue
                 # substring(t, i, n) for i in 1..max(len-n+1, 1):
                 # short text yields its whole remainder, empty text
-                # one '' shingle — identical to shingles()
+                # one '' shingle — the shingle_sets/shingles array
                 sh = {t[j:j + n] for j in range(max(len(t) - lo, 1))}
                 H = np.fromiter(
                     (h32_py(s) for s in sh),
@@ -1066,7 +1090,7 @@ def ngram_overlap_pairs(
     n: int = 5,
     min_frac: float = 0.2,
     max_df: int | None = None,
-    corpus_shingles_df: DataFrame | None = None,
+    corpus_sets_df: DataFrame | None = None,
 ) -> DataFrame:
     """Decontamination check: for each probe (eval/benchmark) document,
     which corpus (training) documents share n-grams with it, and how much
@@ -1084,18 +1108,20 @@ def ngram_overlap_pairs(
     Output: (probe_id, corpus_id, n_shared, frac) with
     frac = n_shared / |probe doc's (rare) shingle set| >= min_frac.
 
-    ``corpus_shingles_df``: an optional precomputed DISTINCT (id,
-    shingle) frame for the corpus side (``shingles(..., distinct=True)``
-    semantics — duplicates would inflate the overlap counts). Pass a
-    persisted frame when a pipeline already exploded the corpus: it is
-    referenced twice here (the df cap + the inverted-index join), so an
-    unpersisted upstream chain re-runs per reference. The probe side is
-    always shingled here from ``probe``'s ``text_col``.
+    ``corpus_sets_df``: an optional precomputed (id, sh_set) frame for
+    the corpus side, as shingle_sets builds it (each set distinct, so
+    its explode has ``shingles`` semantics — duplicates would inflate
+    the overlap counts). Pass a persisted frame when a pipeline already
+    built the corpus sets: exploding cached arrays is map-only, where
+    ``shingles`` re-normalizes the text and shuffles to dedup. The
+    probe side is always shingled here from ``probe``'s ``text_col``.
     """
     sp = shingles(probe, text_col, id_col, n)
     sc = (
-        corpus_shingles_df
-        if corpus_shingles_df is not None
+        corpus_sets_df.select(
+            F.col(id_col), F.explode("sh_set").alias("shingle")
+        )
+        if corpus_sets_df is not None
         else shingles(corpus, text_col, id_col, n)
     )
     if max_df is not None:

@@ -154,11 +154,9 @@ def dsir_weights(
     without row-count surprises.
     """
     from .dedup import hash32
-    from .text import _word_ngram_arrays
+    from .text import _word_ngram_arrays, word_array
 
-    grams = _word_ngram_arrays(
-        F.coalesce(F.col(text_col), F.lit("")), (1, 2)
-    )
+    grams = _word_ngram_arrays(F.col("_words"), (1, 2))
     feats = F.concat(grams[1], grams[2])
     dbc = (
         df.select(
@@ -166,8 +164,9 @@ def dsir_weights(
             F.coalesce(target.cast("boolean"), F.lit(False)).alias(
                 "_tgt"
             ),
-            F.explode(feats).alias("feat"),
+            word_array(text_col).alias("_words"),
         )
+        .select(id_col, "_tgt", F.explode(feats).alias("feat"))
         .select(
             id_col,
             "_tgt",
@@ -535,11 +534,9 @@ def lm_ppl_score(
     """
     from ..functions.caching import tracked_persist
     from .dedup import hash32
-    from .text import _word_ngram_arrays
+    from .text import _word_ngram_arrays, word_array
 
-    grams = _word_ngram_arrays(
-        F.coalesce(F.col(text_col), F.lit("")), (2,)
-    )
+    bigrams = _word_ngram_arrays(F.col("_words"), (2,))[2]
 
     def bucket_of(feat: Column) -> Column:
         return F.pmod(
@@ -550,11 +547,9 @@ def lm_ppl_score(
         # external trusted corpus: its bigrams train the LM; the
         # scored frame contributes only the cost-table bucket domain
         ttc = target_text_col or text_col
-        tgrams = _word_ngram_arrays(
-            F.coalesce(F.col(ttc), F.lit("")), (2,)
-        )
         tgt_b = (
-            target.select(F.explode(tgrams[2]).alias("feat"))
+            target.select(word_array(ttc).alias("_words"))
+            .select(F.explode(bigrams).alias("feat"))
             .select(bucket_of(F.col("feat")).alias("bucket"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("t"))
@@ -563,7 +558,8 @@ def lm_ppl_score(
             F.coalesce(F.sum("t"), F.lit(0)).alias("T_tot")
         )
         dbc = (
-            df.select(F.col(id_col), F.explode(grams[2]).alias("feat"))
+            df.select(F.col(id_col), word_array(text_col).alias("_words"))
+            .select(id_col, F.explode(bigrams).alias("feat"))
             .select(id_col, bucket_of(F.col("feat")).alias("bucket"))
             .groupBy(id_col, "bucket")
             .agg(F.count(F.lit(1)).alias("c"))
@@ -577,8 +573,9 @@ def lm_ppl_score(
                 F.coalesce(target.cast("boolean"), F.lit(False)).alias(
                     "_tgt"
                 ),
-                F.explode(grams[2]).alias("feat"),
+                word_array(text_col).alias("_words"),
             )
+            .select(id_col, "_tgt", F.explode(bigrams).alias("feat"))
             .select(
                 id_col,
                 "_tgt",
@@ -670,13 +667,12 @@ def lm_ppl_cost_table(
     libm anywhere (test_cost_table_matches_inline_lm)."""
     from ..functions import fixlog
     from .dedup import hash32
-    from .text import _word_ngram_arrays
+    from .text import _word_ngram_arrays, word_array
 
-    grams = _word_ngram_arrays(
-        F.coalesce(F.col(text_col), F.lit("")), (2,)
-    )
+    bigrams = _word_ngram_arrays(F.col("_words"), (2,))[2]
     tgt_b = (
-        target.select(F.explode(grams[2]).alias("feat"))
+        target.select(word_array(text_col).alias("_words"))
+        .select(F.explode(bigrams).alias("feat"))
         .select(
             F.pmod(
                 hash32(F.concat(F.col("feat"), F.lit("#" + seed))),
@@ -724,13 +720,12 @@ def lm_ppl_score_with_costs(
     spine. The LM itself costs nothing here — that is the point of
     the at-rest table."""
     from .dedup import hash32
-    from .text import _word_ngram_arrays
+    from .text import _word_ngram_arrays, word_array
 
-    grams = _word_ngram_arrays(
-        F.coalesce(F.col(text_col), F.lit("")), (2,)
-    )
+    bigrams = _word_ngram_arrays(F.col("_words"), (2,))[2]
     dbc = (
-        df.select(F.col(id_col), F.explode(grams[2]).alias("feat"))
+        df.select(F.col(id_col), word_array(text_col).alias("_words"))
+        .select(id_col, F.explode(bigrams).alias("feat"))
         .select(
             id_col,
             F.pmod(

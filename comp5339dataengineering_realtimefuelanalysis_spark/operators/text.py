@@ -474,14 +474,25 @@ def chunk_documents(
     )
 
 
+def word_array(col: Column | str) -> Column:
+    """The normalized text split on single spaces: the word array the
+    n-gram builders below take. NULL text is coalesced to '' (one
+    empty word), so every row yields features. Project it ONCE as a
+    column before building n-grams: _word_ngram_arrays references it
+    inside a transform lambda, and an inline expression there re-runs
+    the normalization regex per array element."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.split(norm_text(F.coalesce(c, F.lit(""))), " ")
+
+
 def _word_ngram_arrays(
-    text_col: Column | str, ns: tuple[int, ...]
+    words: Column, ns: tuple[int, ...]
 ) -> dict[int, Column]:
-    """Per-n word n-gram arrays of the normalized text, built row-local
-    (one O(|words|) transform each — cheap even on the interpreted HOF
+    """Per-n word n-gram arrays over a PROJECTED word-array column
+    (word_array, selected beforehand), built row-local (one
+    O(|words|) transform each — cheap even on the interpreted HOF
     path; the COUNTING below deliberately is not row-local, see
     repetition_signals)."""
-    words = F.split(norm_text(text_col), " ")
 
     def gram_at(n: int):
         # single-arg lambda factory: a `n=n` default would make Spark
@@ -885,6 +896,64 @@ def _count_matches(c: Column, pat: str) -> Column:
     ).cast("long")
 
 
+def _scrub_stages(
+    df: DataFrame, text_col: str, keep: list[str]
+) -> DataFrame:
+    """The PII replacement chain (email -> Luhn-valid card -> phone ->
+    ip -> high-entropy secret) as SEPARATE projections: ``keep``
+    columns, ``clean_text`` and the per-kind counts. Each stage's text
+    is a projected column that the next stage references more than
+    once (the card and secret folds read both the text and its match
+    array, twice each), so CollapseProject leaves every stage
+    evaluated once per row instead of re-inlining the chain so far
+    into each fold. Columns a caller never selects (the counts, for
+    scrub_text) are pruned by the optimizer."""
+    email_pat, email_tok = PII_PATTERNS["email"]
+    phone_pat, phone_tok = PII_PATTERNS["phone"]
+    ip_pat, ip_tok = PII_PATTERNS["ip"]
+    c = F.col(text_col)
+    s = df.select(
+        *keep,
+        _count_matches(c, email_pat).alias("n_email"),
+        F.regexp_replace(c, email_pat, email_tok).alias("_t1"),
+    )
+    s = s.select(
+        *keep, "n_email", "_t1",
+        card_matches(F.col("_t1")).alias("_cards"),
+    )
+    s = s.select(
+        *keep,
+        "n_email",
+        F.size("_cards").cast("long").alias("n_card"),
+        _replace_each(
+            F.col("_t1"), F.col("_cards"), CARD_TOKEN, "[^0-9]"
+        ).alias("_t2"),
+    )
+    s = s.select(
+        *keep, "n_email", "n_card",
+        _count_matches(F.col("_t2"), phone_pat).alias("n_phone"),
+        F.regexp_replace(F.col("_t2"), phone_pat, phone_tok).alias("_t2p"),
+    )
+    s = s.select(
+        *keep, "n_email", "n_card", "n_phone",
+        _count_matches(F.col("_t2p"), ip_pat).alias("n_ip"),
+        F.regexp_replace(F.col("_t2p"), ip_pat, ip_tok).alias("_t3"),
+    )
+    s = s.select(
+        *keep, "n_email", "n_card", "n_phone", "n_ip", "_t3",
+        secret_matches(F.col("_t3")).alias("_secrets"),
+    )
+    return s.select(
+        *keep,
+        _replace_each(
+            F.col("_t3"), F.col("_secrets"), SECRET_TOKEN,
+            "[^A-Za-z0-9+_=-]",
+        ).alias("clean_text"),
+        "n_email", "n_card", "n_phone", "n_ip",
+        F.size("_secrets").cast("long").alias("n_secret"),
+    )
+
+
 def scrub_pii(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
@@ -906,71 +975,25 @@ def scrub_pii(
     IPs post-phone; secrets post-ip) — so a Luhn-valid card's
     separator groups are not double-counted as a phone the scrub never
     replaced, and every count reconciles against the replacements its
-    stage performed. The chain is built as SEPARATE projections whose
-    intermediate text columns are referenced more than once, so
-    CollapseProject leaves each stage evaluated once per row instead of
-    re-inlining the (interpreted-HOF) fold into every consumer.
+    stage performed. The chain is _scrub_stages' staged projections,
+    shared with scrub_text.
     """
-    email_pat, email_tok = PII_PATTERNS["email"]
-    phone_pat, phone_tok = PII_PATTERNS["phone"]
-    ip_pat, ip_tok = PII_PATTERNS["ip"]
-    c = F.col(text_col)
-    s = df.select(
-        id_col,
-        _count_matches(c, email_pat).alias("n_email"),
-        F.regexp_replace(c, email_pat, email_tok).alias("_t1"),
-    )
-    s = s.select(
-        id_col, "n_email", "_t1",
-        card_matches(F.col("_t1")).alias("_cards"),
-    )
-    s = s.select(
-        id_col,
-        "n_email",
-        F.size("_cards").cast("long").alias("n_card"),
-        _replace_each(
-            F.col("_t1"), F.col("_cards"), CARD_TOKEN, "[^0-9]"
-        ).alias("_t2"),
-    )
-    s = s.select(
-        id_col, "n_email", "n_card",
-        _count_matches(F.col("_t2"), phone_pat).alias("n_phone"),
-        F.regexp_replace(F.col("_t2"), phone_pat, phone_tok).alias("_t2p"),
-    )
-    s = s.select(
-        id_col, "n_email", "n_card", "n_phone",
-        _count_matches(F.col("_t2p"), ip_pat).alias("n_ip"),
-        F.regexp_replace(F.col("_t2p"), ip_pat, ip_tok).alias("_t3"),
-    )
-    s = s.select(
-        id_col, "n_email", "n_card", "n_phone", "n_ip", "_t3",
-        secret_matches(F.col("_t3")).alias("_secrets"),
-    )
-    return s.select(
-        id_col,
-        _replace_each(
-            F.col("_t3"), F.col("_secrets"), SECRET_TOKEN,
-            "[^A-Za-z0-9+_=-]",
-        ).alias("clean_text"),
-        "n_email", "n_card", "n_phone", "n_ip",
-        F.size("_secrets").cast("long").alias("n_secret"),
+    return _scrub_stages(df, text_col, [id_col]).select(
+        id_col, "clean_text",
+        "n_email", "n_card", "n_phone", "n_ip", "n_secret",
     )
 
 
-def scrubbed_text(col: Column | str) -> Column:
-    """The full PII replacement chain (email -> Luhn-valid card ->
-    phone -> ip -> high-entropy secret) as a pure column expression —
-    the composable form for pipelines that scrub in place without the
-    audit counts (scrub_pii wraps this)."""
-    c = F.col(col) if isinstance(col, str) else col
-    email_pat, email_tok = PII_PATTERNS["email"]
-    c = F.regexp_replace(c, email_pat, email_tok)
-    c = _replace_each(c, card_matches(c), CARD_TOKEN, "[^0-9]")
-    for kind in ("phone", "ip"):
-        pat, token = PII_PATTERNS[kind]
-        c = F.regexp_replace(c, pat, token)
-    return _replace_each(
-        c, secret_matches(c), SECRET_TOKEN, "[^A-Za-z0-9+_=-]"
+def scrub_text(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """``df`` with ``text_col`` replaced in place by its scrubbed form
+    (scrub_pii's chain, without the audit counts), every other column
+    kept in order — the form for pipelines that scrub before hashing."""
+    keep = [c for c in df.columns if c != text_col]
+    return _scrub_stages(df, text_col, keep).select(
+        *[
+            F.col("clean_text").alias(c) if c == text_col else F.col(c)
+            for c in df.columns
+        ]
     )
 
 

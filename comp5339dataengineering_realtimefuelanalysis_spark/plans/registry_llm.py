@@ -657,11 +657,8 @@ def _verified_pairs_for(
 
     def build(path: str) -> None:
         docs = _docs_parallel(spark, sf_dir)
-        # persisted shingle explosion and candidate set: uncached,
-        # each reference re-derives the full shingle DAG.
-        sh = tracked_persist(
-            dd.shingles(docs, n=_SHINGLE_N, distinct=False)
-        )
+        # persisted candidate set: uncached, each reference re-derives
+        # the signature -> banded-join chain
         cands = tracked_persist(
             dd.minhash_lsh_pairs(
                 docs,
@@ -676,7 +673,6 @@ def _verified_pairs_for(
             cands,
             n=_SHINGLE_N,
             threshold=_JACCARD_THRESHOLD,
-            shingles_df=sh,
         ).write.mode("overwrite").parquet(path)
 
     params = (_SHINGLE_N, _NUM_HASHES, _BANDS, _LSH_MAX_BUCKET, _JACCARD_THRESHOLD)
@@ -733,7 +729,6 @@ def q_doc_lsh_verified_pairs_knee(
     constructor arguments moved to where the r14 sweep measured the
     best candidate-precision/recall trade."""
     docs = _docs_parallel(spark, sf_dir)
-    sh = tracked_persist(dd.shingles(docs, n=_SHINGLE_N, distinct=False))
     cands = tracked_persist(
         dd.minhash_lsh_pairs(
             docs,
@@ -748,7 +743,6 @@ def q_doc_lsh_verified_pairs_knee(
         cands,
         n=_SHINGLE_N,
         threshold=_JACCARD_THRESHOLD,
-        shingles_df=sh,
     )
 
 
@@ -1906,15 +1900,14 @@ def _curation_stages_1_9(
     # text that would actually be trained on, and two docs differing
     # only in redacted PII correctly collapse in the exact-dedup stage.
     # Persisted: it feeds the repetition-stats subplan, the gate join,
-    # and the dedup hash — and the barrier keeps the 3-regex chain out
+    # and the dedup hash — and the barrier keeps the regex chain out
     # of the downstream n-gram transform lambdas (project collapsing
-    # would re-run it per array element)
+    # would re-run it per array element). scrub_text builds the chain
+    # as staged projections, each stage evaluated once per row.
     scrub = stage_cb(
         "2_pii_scrub",
         lambda: tracked_persist(
-            gated.select(
-                "doc_id", tx.scrubbed_text("text").alias("text"), "lang"
-            )
+            tx.scrub_text(gated.select("doc_id", "text", "lang"))
         ),
     )
     # Published QUALITY SCREEN over the scrubbed survivors (round 13):
@@ -2015,12 +2008,6 @@ def _curation_stages_1_9(
             )
         ),
     )
-    sh = stage_cb(
-        "4_shingles",
-        lambda: tracked_persist(
-            dd.shingles(kept1, n=_SHINGLE_N, distinct=False)
-        ),
-    )
     # candidate pairs persisted: BOTH the Jaccard verify and (via the CC
     # eager checkpoint) the cluster step reference this frame, and the
     # banded self-join + cap window + distinct behind it is the single
@@ -2039,15 +2026,13 @@ def _curation_stages_1_9(
             )
         ),
     )
-    # one collect_set shuffle shared by the verify join AND the
-    # contamination screen (which explodes the arrays back to rows) —
-    # previously each stage re-derived its own distinct-shingle frame
+    # one row-local shingle-set build (no explode, no shuffle) shared
+    # by the verify join AND the contamination screen (which explodes
+    # the arrays back to rows)
     sets = stage_cb(
         "6_shingle_sets",
         lambda: tracked_persist(
-            sh.groupBy("doc_id").agg(
-                F.collect_set("shingle").alias("sh_set")
-            )
+            dd.shingle_sets(kept1, n=_SHINGLE_N)
         ),
     )
     pairs = stage_cb(
@@ -2150,14 +2135,11 @@ def q_corpus_curation_pipeline(
 
     sem_drop = stage_cb("10_semantic_dedup", _sem_drop)
     kept3 = kept2.join(F.broadcast(sem_drop), "doc_id", "left_anti")
-    # corpus-side shingles for the screen: explode the persisted sets
-    # (already distinct per doc) filtered to survivors — map-only over
-    # cached arrays, replacing a full re-shingle + distinct shuffle of
-    # the survivor text
-    csh = (
-        sets.join(kept3.select("doc_id"), "doc_id", "semi")
-        .select("doc_id", F.explode("sh_set").alias("shingle"))
-    )
+    # corpus-side shingles for the screen: the persisted sets filtered
+    # to survivors, exploded inside the screen — map-only over cached
+    # arrays, replacing a full re-shingle + distinct shuffle of the
+    # survivor text
+    csets = sets.join(kept3.select("doc_id"), "doc_id", "semi")
     # persist the TINY dirty-id set (not the wide survivor frame): the
     # packer references its input several times, and each reference
     # re-evaluates only cached-kept2 + hash filter + this broadcast
@@ -2182,7 +2164,7 @@ def q_corpus_curation_pipeline(
                 n=_SHINGLE_N,
                 min_frac=_CONTAM_MIN_FRAC,
                 max_df=_JACCARD_MAX_DF,
-                corpus_shingles_df=csh,
+                corpus_sets_df=csets,
             )
             .select(F.col("corpus_id").alias("doc_id"))
             .distinct()
@@ -2513,7 +2495,7 @@ def _sql_stage9_ctes() -> str:
                  FROM train),
         gated AS MATERIALIZED (SELECT doc_id, text, lang FROM prof
                   WHERE quality >= {_QUALITY_KEEP} AND lang <> 'unknown'),
-        scrub AS MATERIALIZED (SELECT doc_id, {_sql_scrubbed_text()} AS text,
+        scrub AS MATERIALIZED (SELECT doc_id, {_sql_scrub_text()} AS text,
                         lang
                  FROM gated),
         {qwords},
@@ -3127,10 +3109,10 @@ def _sql_replace_each(
     return one(one(acc))
 
 
-def _sql_scrubbed_text(expr: str = "text") -> str:
+def _sql_scrub_text(expr: str = "text") -> str:
     """The full PII replacement chain (email -> Luhn card -> phone ->
     ip -> secret) as one SQL expression over ``expr`` — mirrors
-    tx.scrubbed_text exactly."""
+    tx.scrub_text exactly."""
     email_pat, email_tok = tx.PII_PATTERNS["email"]
     s = f"regexp_replace({expr}, '{email_pat}', '{email_tok}', 'g')"
     s = _sql_replace_each(

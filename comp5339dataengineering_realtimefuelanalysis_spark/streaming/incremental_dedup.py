@@ -140,7 +140,7 @@ class StreamingIncrementalDedup:
     # replaces its own rejects, and a replay that rejects nothing
     # clears them.
     #   pii_scrub: replace the text column with its scrubbed form
-    #   (operators/text.py:scrubbed_text) BEFORE any hashing, so silver
+    #   (operators/text.py:scrub_text) BEFORE any hashing, so silver
     #   never stores raw PII and two docs differing only in redacted
     #   values collapse in the exact-dedup stage — the batch pipeline's
     #   ordering, for the same reasons.
@@ -1327,9 +1327,7 @@ class StreamingIncrementalDedup:
         the 5-stage regex chain into every consumer)."""
         handle: DataFrame | None = None
         if self.pii_scrub:
-            batch = batch.withColumn(
-                self.text_col, tx.scrubbed_text(self.text_col)
-            ).persist()
+            batch = tx.scrub_text(batch, self.text_col).persist()
             handle = batch
         if self.rejects_path is not None:
             sig = tx.repetition_signals(
@@ -1531,15 +1529,11 @@ class StreamingIncrementalDedup:
                 cands = wb_cands
                 verify_docs = b.select(did, txt)
 
-            # exact-Jaccard verify over ONE shared shingle-set frame;
-            # local persist (released below) instead of tracked_persist —
-            # a long-lived stream must not accumulate cache entries
-            sets = (
-                dd.shingles(verify_docs, txt, did, self.n, distinct=False)
-                .groupBy(did)
-                .agg(F.collect_set("shingle").alias("sh_set"))
-                .persist()
-            )
+            # exact-Jaccard verify over ONE shared row-local shingle-set
+            # frame; local persist (released below) instead of
+            # tracked_persist — a long-lived stream must not accumulate
+            # cache entries
+            sets = dd.shingle_sets(verify_docs, txt, did, self.n).persist()
             try:
                 verified = dd.jaccard_verify_pairs(
                     verify_docs,

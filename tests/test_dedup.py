@@ -348,14 +348,27 @@ def test_jaccard_verify_sets_join_never_broadcasts(spark):
     ), uplan
 
 
-def test_jaccard_verify_length_bound_identical_and_sound(spark):
-    """The size-only pre-filter (J <= min/max, so min/max < t is
-    provably below threshold) must leave the verified pair set
-    BIT-IDENTICAL — including the case the bound cannot decide:
-    equal-size sets with small overlap (bound passes at 1.0, the
-    exact Jaccard still rejects), and the case it prunes: a short
-    doc banded together with a long one (min/max < t kills the pair
-    before any shingle array moves)."""
+def _brute_jaccard(rows, n=5):
+    """Exact shingle-set Jaccard of every pair, in plain Python."""
+    sets = {}
+    for i, t in rows:
+        t = " ".join(t.lower().split())
+        sets[i] = {t[j:j + n] for j in range(max(len(t) - n + 1, 1))}
+    return {
+        (a, b): len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        for a in sets for b in sets if a < b
+    }
+
+
+def test_jaccard_verify_matches_brute_force(spark):
+    """The verified pair set, with the size-only bound (J <= min/max,
+    so min/max < t is provably below threshold) and the one-intersect
+    pre-filter always on, equals a brute-force Jaccard over ALL pairs —
+    including the case the bound cannot decide: equal-size sets with
+    small overlap (bound passes at 1.0, the exact Jaccard still
+    rejects), and the case it prunes: a short doc banded together with
+    a long one (min/max < t kills the pair before any shingle array
+    moves)."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog every day"),
         (2, "the quick brown fox jumps over the lazy dog every night"),
@@ -364,24 +377,77 @@ def test_jaccard_verify_length_bound_identical_and_sound(spark):
         (4, "tiny doc"),  # much shorter: any pair with 1/2 fails bound
     ]
     d = docs(spark, rows)
-    # force ALL pairs as candidates so the bound (not LSH) decides
+    # force ALL pairs as candidates so the filters (not LSH) decide
     ids = [r[0] for r in rows]
     cands = spark.createDataFrame(
         [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long"
     )
-    on = dd.jaccard_verify_pairs(d, cands, threshold=0.5)
-    off = dd.jaccard_verify_pairs(
-        d, cands, threshold=0.5, length_bound=False
-    )
-    got_on = {(r.id_a, r.id_b): r.jaccard for r in on.collect()}
-    got_off = {(r.id_a, r.id_b): r.jaccard for r in off.collect()}
-    assert got_on == got_off
-    assert (1, 2) in got_on          # true near-dup survives
-    assert (1, 3) not in got_on      # bound passes, exact Jaccard rejects
-    assert (1, 4) not in got_on      # bound prunes (size ratio << 0.5)
+    out = dd.jaccard_verify_pairs(d, cands, threshold=0.5)
+    got = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+    want = {p: j for p, j in _brute_jaccard(rows).items() if j >= 0.5}
+    assert got == want
+    assert (1, 2) in got          # true near-dup survives
+    assert (1, 3) not in got      # bound passes, exact Jaccard rejects
+    assert (1, 4) not in got      # bound prunes (size ratio << 0.5)
     # the pruned path really is size-only: its first joins carry __sz
-    plan = on._jdf.queryExecution().executedPlan().toString()
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "__sz_a" in plan and "__sz_b" in plan, plan
+
+
+SET_EDGE_DOCS = [
+    (1, None),                       # NULL text
+    (2, ""),                         # empty text: one '' shingle
+    (3, "ab"),                       # shorter than n: its remainder
+    (4, "Ünïcödé  日本語のテキスト ß"),  # multi-byte chars, ws runs
+    (5, "abcabcabcabcabc"),          # repeated shingles
+    (6, "The Quick brown fox"),
+]
+
+
+def test_shingle_sets_edge_cases_match_collect_set_and_duckdb(spark):
+    """shingle_sets equals the explode + collect_set form it replaced,
+    and the DuckDB oracle's _SQL_SHINGLES + list_distinct, on NULL,
+    empty, short, unicode and repetitive text."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans.registry_llm import (
+        _SQL_SHINGLES,
+    )
+
+    d = docs(spark, SET_EDGE_DOCS)
+    got = {
+        r.doc_id: sorted(r.sh_set) for r in dd.shingle_sets(d, n=5).collect()
+    }
+    t = "trim(regexp_replace(lower(text), '\\\\s+', ' '))"
+    ref = (
+        d.select(
+            "doc_id",
+            F.explode(F.expr(
+                f"transform(sequence(1, greatest(length({t}) - 4, 1)),"
+                f" i -> substring({t}, i, 5))"
+            )).alias("shingle"),
+        )
+        .groupBy("doc_id")
+        .agg(F.collect_set("shingle").alias("s"))
+    )
+    want = {r.doc_id: sorted(r.s) for r in ref.collect()}
+    assert got == want
+    assert got[1] == [] and got[2] == [""] and got[3] == ["ab"]
+    assert got[5] == ["abcab", "bcabc", "cabca"]
+    assert "日本語のテ" in got[4]
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", SET_EDGE_DOCS)
+    oracle = {
+        i: sorted(s)
+        for i, s in con.execute(
+            f"SELECT doc_id, list_distinct(list(shingle)) FROM"
+            f" ({_SQL_SHINGLES}) GROUP BY doc_id"
+        ).fetchall()
+    }
+    assert got == oracle
 
 
 def test_ngram_jaccard_joins_never_broadcast(spark):

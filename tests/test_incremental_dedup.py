@@ -265,7 +265,7 @@ def _geometry(spark, a, b):
     vecs = {r.doc_id: r.embedding for r in tx.embed_text(df).collect()}
     cos = sum(x * y for x, y in zip(vecs[1], vecs[2]))
     sh = {}
-    for r in dd.shingles(df, n=5, distinct=True).collect():
+    for r in dd.shingles(df, n=5).collect():
         sh.setdefault(r.doc_id, set()).add(r.shingle)
     jac = len(sh[1] & sh[2]) / len(sh[1] | sh[2])
     return cos, jac
@@ -317,6 +317,57 @@ def test_semantic_index_with_string_id_column(spark, tmp_path):
         .collect()
     }
     assert ids == {"a-1", "a-2", "b-2"}
+
+
+def test_near_dup_screen_with_string_ids(spark, tmp_path, monkeypatch):
+    """The exact-Jaccard verify takes its shingle sets from the
+    row-local dd.shingle_sets builder, keyed by a STRING doc id: a
+    near-dup of a corpus doc and the larger id of a within-batch twin
+    pair are dropped, the rest admitted (PII scrub on, so the sets are
+    built over the scrubbed text)."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.operators import dedup as dd
+
+    sschema = StructType(
+        [
+            StructField("doc_id", StringType()),
+            StructField("text", StringType()),
+        ]
+    )
+    built = []
+    real = dd.shingle_sets
+
+    def spy(*args, **kwargs):
+        built.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dd, "shingle_sets", spy)
+    d = StreamingIncrementalDedup(
+        spark=spark,
+        landing_dir=str(tmp_path / "landing"),
+        silver_path=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        schema=sschema,
+        pii_scrub=True,
+    )
+    d._sink(
+        spark.createDataFrame([("a-1", BASE), ("a-2", OTHER)], sschema),
+        epoch_id=0,
+    )
+    d._sink(
+        spark.createDataFrame(
+            [("b-1", NEAR), ("b-2", THIRD), ("b-3", PAIR_A), ("b-4", PAIR_B)],
+            sschema,
+        ),
+        epoch_id=1,
+    )
+    ids = {
+        r.doc_id
+        for r in spark.read.parquet(str(tmp_path / "silver"))
+        .select("doc_id")
+        .collect()
+    }
+    assert ids == {"a-1", "a-2", "b-2", "b-3"}
+    assert built
 
 
 def test_semantic_screen_rejects_rephrased_dups(spark, tmp_path):

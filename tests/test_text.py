@@ -378,6 +378,41 @@ def test_scrub_pii_cross_engine_parity(spark):
     assert by_id[8][3] == 3
 
 
+def test_scrub_text_replaces_in_place_like_scrub_pii(spark):
+    """scrub_text is scrub_pii's chain without the counts: same clean
+    text as scrub_pii and as the oracle's _sql_scrub_text, NULL text
+    stays NULL, and every other column is kept in its place."""
+    import duckdb
+
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans.registry_llm import (
+        _sql_scrub_text,
+    )
+
+    rows = [
+        ("en", 1, "jane@ex.io pays 4111 1111 1111 1111 from 10.0.0.1"),
+        ("en", 2, "token sk_Live_9aB3xQ7mK2pR5tY8wZ4v call +61 2 9385 1234"),
+        ("de", 3, None),
+        ("de", 4, "nothing to redact here"),
+    ]
+    df = spark.createDataFrame(rows, "lang string, doc_id long, text string")
+    out = tx.scrub_text(df)
+    assert out.columns == ["lang", "doc_id", "text"]
+    got = {r.doc_id: (r.lang, r.text) for r in out.collect()}
+    pii = {r.doc_id: r.clean_text for r in tx.scrub_pii(df).collect()}
+    assert {i: t for i, (_, t) in got.items()} == pii
+    assert {i: lang for i, (lang, _) in got.items()} == {
+        1: "en", 2: "en", 3: "de", 4: "de"
+    }
+    assert got[3][1] is None and got[4][1] == "nothing to redact here"
+    con = duckdb.connect()
+    con.execute("CREATE TABLE d(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO d VALUES (?, ?)", [r[1:] for r in rows])
+    want = dict(
+        con.execute(f"SELECT doc_id, {_sql_scrub_text()} FROM d").fetchall()
+    )
+    assert pii == want
+
+
 def test_temperature_mix_flattens_and_nests(spark):
     from comp5339dataengineering_realtimefuelanalysis_spark.operators.selection import (
         temperature_mix,

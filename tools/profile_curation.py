@@ -5,6 +5,9 @@ The stages are NOT reconstructed here: the production builder exposes a
 thunk, materializes the resulting frame (noop write), and clocks it — so
 the numbers are for EXACTLY the plan the registry ships, persists and all.
 A drift between this tool and the pipeline is impossible by construction.
+The stage keys keep the pipeline's numbering, which skips 4: stage
+``6_shingle_sets`` builds each document's shingle set row-local from the
+stage-3 survivors, with no separate shingle-explosion stage before it.
 Between stages 9 and 10 the pipeline publishes its stage-9 survivor table
 (one write per corpus, a cache hit on later reps); no stage clock includes
 it.

@@ -297,7 +297,6 @@ def cc_comparison(spark, sf_dir: str, passes: int) -> dict:
     )
 
     docs = _docs_parallel(spark, sf_dir)
-    sh = tracked_persist(dd.shingles(docs, n=_SHINGLE_N, distinct=False))
     cands = tracked_persist(
         dd.minhash_lsh_pairs(
             docs, n=_SHINGLE_N, num_hashes=_NUM_HASHES, bands=_BANDS,
@@ -306,7 +305,6 @@ def cc_comparison(spark, sf_dir: str, passes: int) -> dict:
     )
     pairs = dd.jaccard_verify_pairs(
         docs, cands, n=_SHINGLE_N, threshold=_JACCARD_THRESHOLD,
-        shingles_df=sh,
     ).select("id_a", "id_b")
     # materialize the edge set once so both CC variants time ONLY the
     # clustering, not pair generation
