@@ -479,14 +479,26 @@ def dsir_sample_cutoff(
     ).select(id_col, "dsir_weight", "score")
 
 
+# The CCNet perplexity filter's pinned LM and keep rule, shared by the
+# batch curation pipeline, the registry's LM queries and the streaming
+# gate: bigram hash buckets, hashing seed, add-k smoothing, the fixlog
+# grid's fractional bits (costs are log2 * 2^PPL_FRAC), and the tercile
+# buckets a doc must land in to be kept (the high-perplexity tail goes).
+PPL_BUCKETS = 4096
+PPL_SEED = "lmppl"
+PPL_SMOOTH = 1
+PPL_FRAC = 20
+PPL_KEEP = ("head", "middle")
+
+
 def lm_ppl_score(
     df: DataFrame,
     target: Column | DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    buckets: int = 4096,
-    smooth: int = 1,
-    seed: str = "lmppl",
+    buckets: int = PPL_BUCKETS,
+    smooth: int = PPL_SMOOTH,
+    seed: str = PPL_SEED,
     target_text_col: str | None = None,
 ) -> DataFrame:
     """CCNet-style language-model quality scoring (Wenzek et al. 2020,
@@ -649,9 +661,9 @@ def lm_ppl_score(
 def lm_ppl_cost_table(
     target: DataFrame,
     text_col: str = "text",
-    buckets: int = 4096,
-    smooth: int = 1,
-    seed: str = "lmppl",
+    buckets: int = PPL_BUCKETS,
+    smooth: int = PPL_SMOOTH,
+    seed: str = PPL_SEED,
 ) -> DataFrame:
     """The hashed-bigram LM as an AT-REST artifact: the FULL-domain
     (bucket 0..B-1, nl) fixed-point cost table trained on ``target``
@@ -704,8 +716,8 @@ def lm_ppl_score_with_costs(
     costs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    buckets: int = 4096,
-    seed: str = "lmppl",
+    buckets: int = PPL_BUCKETS,
+    seed: str = PPL_SEED,
 ) -> DataFrame:
     """Score ``df`` against a pinned full-domain cost table (the
     lm_ppl_cost_table artifact): same output contract as lm_ppl_score
@@ -757,6 +769,57 @@ def lm_ppl_score_with_costs(
     )
 
 
+def tercile_cuts(
+    mnll_col: str = "mnll", exact: bool = True, accuracy: int = 10_000
+) -> tuple[Column, Column]:
+    """The tercile aggregates (t1, t2) of ``mnll_col`` that split the
+    scoreable docs into head/middle/tail. ``exact=True`` is the exact
+    interpolated percentile — engine-parity-proven, but it buffers every
+    value in ONE task's memory, wrong at corpus scale. ``exact=False``
+    is the 100 TB path: approx_percentile's GK sketch (rank error <=
+    n/``accuracy``; docs within that band of a cut may land in the
+    adjacent bucket) — the dsir_sample / dsir_sample_cutoff duality."""
+    qs = (1.0 / 3.0, 2.0 / 3.0)
+    if exact:
+        return tuple(F.percentile(mnll_col, F.lit(q)) for q in qs)
+    return tuple(
+        F.percentile_approx(mnll_col, F.lit(q), F.lit(accuracy))
+        for q in qs
+    )
+
+
+def _with_bucket(
+    scores: DataFrame,
+    cuts: tuple[float, float] | None,
+    mnll_col: str = "mnll",
+    exact: bool = True,
+    accuracy: int = 10_000,
+) -> DataFrame:
+    """``scores`` plus CCNet's ``ppl_bucket``: head (<= t1), middle
+    (<= t2), tail, or 'empty' for a scoreless doc (no bigram) rather
+    than an inherited bucket. The cuts are the pinned ``cuts`` or, when
+    None, the terciles of ``scores`` itself (one 2-value aggregate + a
+    broadcast-scalar cross join)."""
+    m = F.col(mnll_col)
+    if cuts is None:
+        t1, t2 = tercile_cuts(mnll_col, exact, accuracy)
+        pop = scores.filter(m.isNotNull()).agg(
+            t1.alias("_t1"), t2.alias("_t2")
+        )
+        src, t1, t2 = (
+            scores.crossJoin(F.broadcast(pop)), F.col("_t1"), F.col("_t2")
+        )
+    else:
+        src, t1, t2 = scores, F.lit(cuts[0]), F.lit(cuts[1])
+    bucket = (
+        F.when(m.isNull(), F.lit("empty"))
+        .when(m <= t1, F.lit("head"))
+        .when(m <= t2, F.lit("middle"))
+        .otherwise(F.lit("tail"))
+    )
+    return src.select(*scores.columns, bucket.alias("ppl_bucket"))
+
+
 def ppl_buckets(
     scores: DataFrame,
     id_col: str = "doc_id",
@@ -765,40 +828,29 @@ def ppl_buckets(
     accuracy: int = 10_000,
 ) -> DataFrame:
     """CCNet's head/middle/tail split over the perplexity scores:
-    tercile thresholds over the scoreable docs, then a map-only bucket
-    assignment. Scoreless docs (no bigram) land in 'empty' rather than
-    inheriting a bucket.
-
-    ``exact=True`` (default, the oracle-gated path) uses the exact
-    interpolated percentile — engine-parity-proven, but its aggregate
-    buffers every value in ONE task's memory, which is wrong at corpus
-    scale. ``exact=False`` is the 100 TB path: approx_percentile's GK
-    sketch (rank error <= n/``accuracy``) — the same exact-vs-cutoff
-    duality as dsir_sample / dsir_sample_cutoff, with the same bounded
-    verdict posture (docs within the rank-error band of a tercile may
-    land in the adjacent bucket; everything else is identical).
-    Scale shape either way: one 2-value aggregate + a broadcast-scalar
-    cross join + a map-only CASE — scan speed."""
-    m = F.col(mnll_col)
-    if exact:
-        t1 = F.percentile(mnll_col, F.lit(1.0 / 3.0))
-        t2 = F.percentile(mnll_col, F.lit(2.0 / 3.0))
-    else:
-        t1 = F.percentile_approx(
-            mnll_col, F.lit(1.0 / 3.0), F.lit(accuracy)
-        )
-        t2 = F.percentile_approx(
-            mnll_col, F.lit(2.0 / 3.0), F.lit(accuracy)
-        )
-    cuts = scores.filter(m.isNotNull()).agg(
-        t1.alias("_t1"), t2.alias("_t2")
+    tercile thresholds over the scoreable docs (see tercile_cuts for
+    ``exact``/``accuracy``), then a map-only bucket assignment.
+    Scoreless docs (no bigram) land in 'empty' rather than inheriting a
+    bucket. Scale shape either way: one 2-value aggregate + a
+    broadcast-scalar cross join + a map-only CASE — scan speed."""
+    return _with_bucket(scores, None, mnll_col, exact, accuracy).select(
+        id_col, mnll_col, "ppl_bucket"
     )
-    return scores.crossJoin(F.broadcast(cuts)).select(
-        id_col,
-        mnll_col,
-        F.when(m.isNull(), F.lit("empty"))
-        .when(m <= F.col("_t1"), F.lit("head"))
-        .when(m <= F.col("_t2"), F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("ppl_bucket"),
+
+
+def ppl_gate(
+    scores: DataFrame, cuts: tuple[float, float] | None = None
+) -> DataFrame:
+    """The perplexity gate's per-doc verdict over lm_ppl_score-shaped
+    ``scores``, the one definition the batch curation pipeline and the
+    streaming dedup both apply: the score columns plus ``ppl_bucket``,
+    ``keep`` (bucket in PPL_KEEP) and ``reason`` ('ppl_<bucket>'). The
+    cuts differ by design: the batch takes exact terciles over its own
+    population (``cuts=None``); a stream cannot re-rank the past, so it
+    passes the (t1, t2) it pinned at training time."""
+    bucket = F.col("ppl_bucket")
+    return _with_bucket(scores, cuts).select(
+        "*",
+        bucket.isin(*PPL_KEEP).alias("keep"),
+        F.concat(F.lit("ppl_"), bucket).alias("reason"),
     )

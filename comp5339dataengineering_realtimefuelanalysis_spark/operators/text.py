@@ -14,6 +14,9 @@ only derived metrics flow downstream.
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -635,6 +638,37 @@ def repetition_signals(
     )
 
 
+def _reasons(fails: dict[str, Column]) -> Column:
+    """A gate's reject reason: the names of its failing rules, in rule
+    order, comma-joined ('' for a kept doc)."""
+    return F.concat_ws(
+        ",", *[F.when(c, F.lit(name)) for name, c in fails.items()]
+    )
+
+
+def repetition_gate(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """The repetition gate's per-doc verdict, the one definition the
+    batch curation pipeline and the streaming dedup both apply:
+    (id, dup_word_frac, top_bigram_frac, dup_trigram_frac, keep,
+    reason). A doc is kept when no fraction exceeds its ``REP_MAX_*``
+    limit; ``reason`` names the fractions that do. The limits are read
+    when the gate is built, so a caller that re-pins them sees the new
+    values."""
+    limits = {
+        "dup_word": REP_MAX_DUP_WORD,
+        "top_bigram": REP_MAX_TOP_BIGRAM,
+        "dup_trigram": REP_MAX_DUP_TRIGRAM,
+    }
+    fails = {n: F.col(f"{n}_frac") > lim for n, lim in limits.items()}
+    return repetition_signals(df, text_col, id_col).select(
+        "*",
+        (~reduce(operator.or_, fails.values())).alias("keep"),
+        _reasons(fails).alias("reason"),
+    )
+
+
 def _embed_text_arrow_fn(dim: int, seed: str, ngrams: tuple[int, ...]):
     """mapInArrow kernel factory for embed_text: a document's feature
     multiset is row-local, so bucket counting + L2 normalization run
@@ -998,6 +1032,24 @@ def scrub_text(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+# The Gopher battery's thresholds. min_words is pinned to 10 for the short
+# synthetic docs (the paper's 50 would fail most of a corpus whose docs
+# average ~35 words); every other threshold is the published operating
+# point.
+GOPHER_MIN_WORDS = 10
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WLEN = 3.0
+GOPHER_MAX_MEAN_WLEN = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MIN_ALPHA_WORD_FRAC = 0.8
+GOPHER_MAX_BULLET_LINE_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_LINE_FRAC = 0.3
+# The gate (gopher_gate) additionally calibrates the stop-word rule to
+# this corpus: the bounded synthetic vocabulary carries at most ONE of
+# the 8 stop-words per doc ('the'), so the published 2 would zero the
+# corpus (measured: 0/500 pass at sf0.01; 382/500 pass at 1). The
+# gopher_rules report keeps the paper's 2.
+GOPHER_MIN_STOP = 1
 
 
 def _gopher_words_arrow_fn(it):
@@ -1062,29 +1114,23 @@ def gopher_rules(
     df: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_wlen: float = 3.0,
-    max_mean_wlen: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    min_alpha_word_frac: float = 0.8,
+    min_words: int = GOPHER_MIN_WORDS,
     min_stop_hits: int = 2,
-    max_bullet_line_frac: float = 0.9,
-    max_ellipsis_line_frac: float = 0.3,
 ) -> DataFrame:
     """The full Gopher quality-rule battery (Rae et al. 2021, "Scaling
     Language Models: ... Gopher", Appendix A) as per-rule boolean
     columns plus the composite ``keep`` — the published web-text gate,
     beside the repetition gates repetition_signals already provides.
-    Defaults are the paper's operating points; every threshold is a
-    parameter because real corpora re-tune them (the registry pins a
-    lower min_words for the short synthetic docs and says so).
+    Thresholds are the ``GOPHER_*`` module constants; the two that
+    callers vary stay parameters: ``min_words`` (default the pinned
+    GOPHER_MIN_WORDS) and ``min_stop_hits`` (the paper's 2 for the
+    report, GOPHER_MIN_STOP for the gate).
 
-    Rules: word count in [min,max]; mean word length in [3,10];
-    symbol-to-word ratio ('#', '...' and the Unicode ellipsis '…')
-    <= 0.1; >= 80% of words carry an alphabetic character; >= 2
-    stop-word hits (the 8-word list); < 90% of lines bullet-started;
-    <= 30% of lines ellipsis-ended.
+    Rules: word count in [min, GOPHER_MAX_WORDS]; mean word length in
+    [3,10]; symbol-to-word ratio ('#', '...' and the Unicode ellipsis
+    '…') <= 0.1; >= 80% of words carry an alphabetic character;
+    >= min_stop_hits stop-word hits (the 8-word list); < 90% of lines
+    bullet-started; <= 30% of lines ellipsis-ended.
 
     Scale shape: the per-WORD stats come from an Arrow batch kernel
     (guide §4.2 — they are row-local, so the pass is map-only;
@@ -1160,17 +1206,21 @@ def gopher_rules(
     )
     nw = F.col("n_words")
     checks = {
-        "word_count_ok": (nw >= min_words) & (nw <= max_words),
+        "word_count_ok": (nw >= min_words) & (nw <= GOPHER_MAX_WORDS),
         "mean_wlen_ok": (
-            (F.col("mean_word_len") >= min_mean_wlen)
-            & (F.col("mean_word_len") <= max_mean_wlen)
+            (F.col("mean_word_len") >= GOPHER_MIN_MEAN_WLEN)
+            & (F.col("mean_word_len") <= GOPHER_MAX_MEAN_WLEN)
         ),
-        "symbol_ok": F.col("symbol_ratio") <= max_symbol_ratio,
-        "alpha_ok": F.col("alpha_word_frac") >= min_alpha_word_frac,
+        "symbol_ok": F.col("symbol_ratio") <= GOPHER_MAX_SYMBOL_RATIO,
+        "alpha_ok": (
+            F.col("alpha_word_frac") >= GOPHER_MIN_ALPHA_WORD_FRAC
+        ),
         "stopword_ok": F.col("stop_hits") >= min_stop_hits,
-        "bullet_ok": F.col("bullet_line_frac") < max_bullet_line_frac,
+        "bullet_ok": (
+            F.col("bullet_line_frac") < GOPHER_MAX_BULLET_LINE_FRAC
+        ),
         "ellipsis_ok": (
-            F.col("ellipsis_line_frac") <= max_ellipsis_line_frac
+            F.col("ellipsis_line_frac") <= GOPHER_MAX_ELLIPSIS_LINE_FRAC
         ),
     }
     out = j
@@ -1182,3 +1232,22 @@ def gopher_rules(
     for name in checks:
         keep = F.col(name) if keep is None else keep & F.col(name)
     return out.withColumn("keep", keep)
+
+
+def gopher_gate(
+    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """The Gopher gate's per-doc verdict, the one definition the batch
+    curation pipeline and the streaming dedup both apply: the
+    gopher_rules frame at the gate's thresholds (GOPHER_MIN_WORDS,
+    GOPHER_MIN_STOP) plus ``reason``, the failing rules' names
+    ('word_count', 'stopword', ...)."""
+    rules = gopher_rules(
+        df, text_col, id_col, min_stop_hits=GOPHER_MIN_STOP
+    )
+    fails = {
+        c.removesuffix("_ok"): ~F.col(c)
+        for c in rules.columns
+        if c.endswith("_ok")
+    }
+    return rules.withColumn("reason", _reasons(fails))

@@ -1312,19 +1312,6 @@ def _sql_dsir_sample() -> str:
             <= CEIL({frac} * COUNT(*) OVER ())"""
 
 
-# Gopher rule battery: min_words pinned to 10 for the short synthetic
-# docs (the paper's 50 would fail most of a corpus whose docs average
-# ~35 words); every other threshold is the published operating point.
-_GOPHER_MIN_WORDS = 10
-# The PIPELINE's quality-screen gate additionally calibrates the
-# stop-word rule to this corpus: the bounded synthetic vocabulary
-# carries at most ONE of the paper's 8 stop-words per doc ('the'), so
-# the published min_stop_hits=2 would zero the corpus (measured:
-# 0/500 pass at sf0.01; 382/500 pass at 1). doc_gopher_rules keeps
-# the paper default — it REPORTS booleans; the pipeline GATES on them.
-_GOPHER_MIN_STOP = 1
-
-
 def q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full Gopher quality-rule battery (operators/text.py:
     gopher_rules): per-rule booleans + composite keep — word count,
@@ -1334,9 +1321,7 @@ def q_doc_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rest; every fraction an int/int IEEE division, so the oracle
     replays the booleans bit-exactly."""
     docs = _docs_parallel(spark, sf_dir)
-    return tx.gopher_rules(
-        docs.select("doc_id", "text"), min_words=_GOPHER_MIN_WORDS
-    )
+    return tx.gopher_rules(docs.select("doc_id", "text"))
 
 
 def _sql_gopher_ctes(min_stop: int = 2) -> str:
@@ -1344,9 +1329,9 @@ def _sql_gopher_ctes(min_stop: int = 2) -> str:
     shared norm-words CTE) ending in ``gsel``: the full per-doc Gopher
     stats + per-rule booleans + keep. ``min_stop`` parameterizes the
     stop-word rule (the pipeline gate passes the corpus-calibrated
-    _GOPHER_MIN_STOP; the reporting query keeps the paper's 2)."""
+    tx.GOPHER_MIN_STOP; the reporting query keeps the paper's 2)."""
     stop = ", ".join(f"'{w}'" for w in tx.GOPHER_STOPWORDS)
-    mw = _GOPHER_MIN_WORDS
+    mw = tx.GOPHER_MIN_WORDS
     return rf"""gw AS (SELECT doc_id, unnest(words) AS wd FROM w),
         gstats AS (
             SELECT doc_id, COUNT(*) AS n_words,
@@ -1429,13 +1414,6 @@ def _sql_gopher_rules() -> str:
         FROM gsel"""
 
 
-# CCNet-style perplexity filter: LM = hashed-bigram multinomial over
-# the 'en' stratum (the trusted-corpus role); pinned here so query and
-# oracle agree by construction.
-_PPL_BUCKETS = 4096
-_PPL_SEED = "lmppl"
-
-
 def _ppl_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LM score frame (doc_id, n_bigrams, nll_fix, mnll),
     materialized ONCE to parquet per process (caching.materialize):
@@ -1449,11 +1427,9 @@ def _ppl_scores_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         sel.lm_ppl_score(
             docs.select("doc_id", "text", "lang"),
             target=F.col("lang") == "en",
-            buckets=_PPL_BUCKETS,
-            seed=_PPL_SEED,
         ).write.mode("overwrite").parquet(path)
 
-    params = ("fix20", _PPL_BUCKETS, _PPL_SEED)
+    params = ("fix20", sel.PPL_BUCKETS, sel.PPL_SEED)
     src = [(sf_dir, "documents")]
     return spark.read.parquet(materialize("pplscores", params, src, build))
 
@@ -1489,7 +1465,7 @@ def _sql_lm_ppl_ctes() -> str:
     statement), hashed target multinomial, per-bucket fixed-point
     log2 costs (the fixlog kernel — no libm), exact integer per-doc
     sums, the two-division mnll."""
-    b, sd = _PPL_BUCKETS, _PPL_SEED
+    b, sd = sel.PPL_BUCKETS, sel.PPL_SEED
     s, sB = 1, b
     nl_nested = fixlog.duckdb_nested(
         "SELECT bk.bucket, tb.t, ppltot.T_tot"
@@ -1577,12 +1553,7 @@ def q_doc_lm_ppl_external(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = docs.filter(F.col("doc_id") % 10 != 0).select(
         "doc_id", "text"
     )
-    return sel.lm_ppl_score(
-        scored,
-        target=tgt,
-        buckets=_PPL_BUCKETS,
-        seed=_PPL_SEED,
-    )
+    return sel.lm_ppl_score(scored, target=tgt)
 
 
 def _sql_lm_ppl_external() -> str:
@@ -1590,7 +1561,7 @@ def _sql_lm_ppl_external() -> str:
     lang='en') trains the bucket multinomial; only the complement is
     scored. Mirrors _sql_lm_ppl_ctes otherwise (same hashing, same
     fixlog kernel costs, same two-division mnll)."""
-    b, sd = _PPL_BUCKETS, _PPL_SEED
+    b, sd = sel.PPL_BUCKETS, sel.PPL_SEED
     s, sB = 1, b
     nl_nested = fixlog.duckdb_nested(
         "SELECT bk.bucket, tb.t, xtot.T_tot"
@@ -1655,21 +1626,19 @@ def q_doc_quality_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-oracle-gated per-doc frames; both sides are scan-cost
     operators, so the composition adds a single id-keyed join."""
     docs = _docs_parallel(spark, sf_dir)
-    g = tx.gopher_rules(
-        docs.select("doc_id", "text"), min_words=_GOPHER_MIN_WORDS
-    ).select("doc_id", F.col("keep").alias("gopher_keep"))
+    g = tx.gopher_rules(docs.select("doc_id", "text")).select(
+        "doc_id", F.col("keep").alias("gopher_keep")
+    )
     # the parquet-backed score frame is its own plan barrier: the
     # tercile aggregate and the assignment side read the same files
-    scores = _ppl_scores_for(spark, sf_dir)
-    p = sel.ppl_buckets(scores).select("doc_id", "ppl_bucket")
+    p = sel.ppl_gate(_ppl_scores_for(spark, sf_dir)).select(
+        "doc_id", "ppl_bucket", F.col("keep").alias("ppl_keep")
+    )
     return g.join(p, "doc_id").select(
         "doc_id",
         "gopher_keep",
         "ppl_bucket",
-        (
-            F.col("gopher_keep")
-            & F.col("ppl_bucket").isin("head", "middle")
-        ).alias("keep"),
+        (F.col("gopher_keep") & F.col("ppl_keep")).alias("keep"),
     )
 
 
@@ -1911,26 +1880,23 @@ def _curation_stages_1_9(
         ),
     )
     # Published QUALITY SCREEN over the scrubbed survivors (round 13):
-    # the full Gopher rule battery AND the CCNet perplexity split —
-    # the composed doc_quality_screen verdict, sequentially composed
-    # into the pipeline so the flagship query exercises the complete
-    # published recipe. Both components run on the SCRUBBED text (what
+    # the Gopher gate AND the perplexity gate (operators: gopher_gate,
+    # ppl_gate — the definitions the streaming dedup applies too), so
+    # the flagship query exercises the complete published recipe. The
+    # Gopher gate's stop-word rule is corpus-calibrated
+    # (tx.GOPHER_MIN_STOP). Both run on the SCRUBBED text (what
     # would be trained on); the LM trains on the scrub survivors' own
     # 'en' stratum and the terciles are over the scrub survivors'
     # scores (this population, not the raw corpus). Scale shape: one
     # word explode + combined groupBy (gopher), one bigram explode +
     # combined groupBy + B-row broadcast join (LM), a 2-value tercile
     # aggregate + broadcast-scalar cross join; the exact percentile is
-    # the oracle path — ppl_buckets(exact=False) is the documented
+    # the oracle path — tercile_cuts(exact=False) is the documented
     # 100 TB sketch path. Scores persisted: the tercile aggregate and
     # the bucket assignment both consume them.
     def _qscreen() -> DataFrame:
         g = (
-            tx.gopher_rules(
-                scrub.select("doc_id", "text"),
-                min_words=_GOPHER_MIN_WORDS,
-                min_stop_hits=_GOPHER_MIN_STOP,
-            )
+            tx.gopher_gate(scrub.select("doc_id", "text"))
             .filter(F.col("keep"))
             .select("doc_id")
         )
@@ -1938,15 +1904,9 @@ def _curation_stages_1_9(
             sel.lm_ppl_score(
                 scrub.select("doc_id", "text", "lang"),
                 target=F.col("lang") == "en",
-                buckets=_PPL_BUCKETS,
-                seed=_PPL_SEED,
             )
         )
-        p = (
-            sel.ppl_buckets(scores)
-            .filter(F.col("ppl_bucket").isin("head", "middle"))
-            .select("doc_id")
-        )
+        p = sel.ppl_gate(scores).filter(F.col("keep")).select("doc_id")
         # a HARD plan barrier (NOT persist): this stage's logical tree
         # is the pipeline's largest (the semi joins duplicate scrub's
         # subtree and graft on the gopher agg + the whole LM chain),
@@ -1981,13 +1941,7 @@ def _curation_stages_1_9(
     # the exact-dedup stage below, so the gate join rides that
     # materialization (and that stage's profiler clock)
     repgate = qual.join(
-        tx.repetition_signals(qual)
-        .filter(
-            (F.col("dup_word_frac") <= REP_MAX_DUP_WORD)
-            & (F.col("top_bigram_frac") <= REP_MAX_TOP_BIGRAM)
-            & (F.col("dup_trigram_frac") <= REP_MAX_DUP_TRIGRAM)
-        )
-        .select("doc_id"),
+        tx.repetition_gate(qual).filter(F.col("keep")).select("doc_id"),
         "doc_id",
     )
     # n_tokens is computed HERE, once, so every later stage carries the
@@ -2359,8 +2313,8 @@ def _stage9_path(spark: SparkSession, sf_dir: str, stages=None) -> str:
             _QUALITY_KEEP, REP_MAX_DUP_WORD, REP_MAX_TOP_BIGRAM,
             REP_MAX_DUP_TRIGRAM, _SHINGLE_N, _KNEE_NUM_HASHES,
             _KNEE_BANDS, _LSH_MAX_BUCKET, _JACCARD_THRESHOLD,
-            _GOPHER_MIN_WORDS, _GOPHER_MIN_STOP, _PPL_BUCKETS, _PPL_SEED,
-            "fix20",
+            tx.GOPHER_MIN_WORDS, tx.GOPHER_MIN_STOP, sel.PPL_BUCKETS,
+            sel.PPL_SEED, sel.PPL_SMOOTH, sel.PPL_KEEP, "fix20",
         ),
         [(sf_dir, "documents")],
         build,
@@ -2479,7 +2433,7 @@ def _sql_stage9_ctes() -> str:
         .replace("w AS (", "qw_scrub AS (", 1)
     )
     qgopher = (
-        _sql_gopher_ctes(min_stop=_GOPHER_MIN_STOP)
+        _sql_gopher_ctes(min_stop=tx.GOPHER_MIN_STOP)
         .replace("FROM documents", "FROM scrub")
         .replace("FROM w)", "FROM qw_scrub)")
     )

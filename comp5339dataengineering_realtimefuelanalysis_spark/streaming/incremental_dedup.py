@@ -94,10 +94,6 @@ _MAX_BUCKET = 1000
 _SEM_PROBES = 2
 _SEM_DIM = 64
 _SEM_SEED = "emb"
-# ppl gate LM hashing seed and add-k smoothing; the pinned model records
-# both, and _ppl_model refuses a model trained under other values
-_PPL_SEED = "lmppl"
-_PPL_SMOOTH = 1
 
 
 @dataclass
@@ -128,10 +124,11 @@ class StreamingIncrementalDedup:
     sem_index_path: str | None = None
     sem_threshold: float = 0.9
     sem_k: int = 8
-    # Optional CURATION GATES lifted from the batch pipeline
-    # (plans/registry_llm.py corpus_curation_pipeline stages 2-3) so
-    # continuous ingest gets the same text hygiene without dropping to
-    # batch. All are BATCH-LOCAL (map-side regex / map-side-combined
+    # Optional CURATION GATES: the batch pipeline's own gate definitions
+    # (operators: repetition_gate, gopher_gate, ppl_gate — the
+    # corpus_curation_pipeline stages 2-3 verdicts) so continuous ingest
+    # gets the same text hygiene without dropping to batch. All are
+    # BATCH-LOCAL (map-side regex / map-side-combined
     # shuffles of batch rows only) — the per-batch corpus-shuffle-free
     # contract is untouched. Each gate runs exactly when its rejects
     # path is set: gated docs must be observable, never silently
@@ -144,21 +141,19 @@ class StreamingIncrementalDedup:
     #   never stores raw PII and two docs differing only in redacted
     #   values collapse in the exact-dedup stage — the batch pipeline's
     #   ordering, for the same reasons.
-    #   rejects_path: the Gopher repetition thresholds
-    #   (operators/text.py:REP_MAX_*, shared with the batch pipeline)
-    #   over the scrubbed batch; gated docs land here with their
-    #   measured fractions and a reason.
-    #   gopher_rejects_path: the full Gopher rule battery
-    #   (operators/text.py:gopher_rules — word count, mean word
-    #   length, symbol ratio, alpha fraction, stop-words,
-    #   bullet/ellipsis lines); gated docs land here (their OWN store —
-    #   the rule stats schema differs from the repetition fractions,
-    #   and mixed leaf schemas under one parquet root read back fragile)
-    #   with per-rule booleans and a reason.
+    #   rejects_path: the repetition gate (operators/text.py:
+    #   repetition_gate, thresholds REP_MAX_*) over the scrubbed batch;
+    #   gated docs land here with their measured fractions and a reason.
+    #   gopher_rejects_path: the Gopher gate (operators/text.py:
+    #   gopher_gate — word count, mean word length, symbol ratio, alpha
+    #   fraction, stop-words, bullet/ellipsis lines at the GOPHER_*
+    #   constants); gated docs land here (their OWN store — the rule
+    #   stats schema differs from the repetition fractions, and mixed
+    #   leaf schemas under one parquet root read back fragile) with
+    #   per-rule booleans and a reason.
     pii_scrub: bool = False
     rejects_path: str | None = None
     gopher_rejects_path: str | None = None
-    gopher_min_words: int = 10
     #   ppl_rejects_path: the CCNet perplexity filter as a micro-batch
     #   gate. Unlike the batch query (terciles over the whole corpus at
     #   query time), a stream cannot re-rank the past: the LM's
@@ -169,8 +164,8 @@ class StreamingIncrementalDedup:
     #   log2 cost table, stats/ = cuts + the hashing params they were
     #   trained with). Batches are scored against the pinned table (one
     #   explode + map-side-combined groupBy of batch rows + the B-row
-    #   broadcast join — batch-local) and docs whose bucket is not in
-    #   ``ppl_keep`` land here with their scores.
+    #   broadcast join — batch-local) and docs the ppl_gate rejects
+    #   (bucket not in selection.PPL_KEEP) land here with their scores.
     #   Retraining (re-calling train_ppl_model) rewrites the model;
     #   a live instance keeps its memoized table and must be
     #   restarted to pick the new one up, and epoch replays after
@@ -178,8 +173,6 @@ class StreamingIncrementalDedup:
     #   story, verbatim: pin, observe drift, retrain deliberately.
     ppl_model_path: str | None = None
     ppl_rejects_path: str | None = None
-    ppl_buckets: int = 4096
-    ppl_keep: tuple = ("head", "middle")
     # whether the semantic index's coverage of silver has been checked
     # by this instance
     _coverage_checked: bool = field(
@@ -199,11 +192,9 @@ class StreamingIncrementalDedup:
     )
     # memoized pinned LM (B-row cost frame + tercile cuts) — read from
     # disk once per instance
-    _ppl_costs: DataFrame | None = field(
+    _ppl_pinned: tuple[DataFrame, float, float] | None = field(
         default=None, init=False, repr=False
     )
-    _ppl_t1: float | None = field(default=None, init=False, repr=False)
-    _ppl_t2: float | None = field(default=None, init=False, repr=False)
 
     def start(self, available_now: bool = False) -> StreamingQuery:
         stream = (
@@ -1186,10 +1177,8 @@ class StreamingIncrementalDedup:
     def _ppl_stats_path(self) -> str:
         return os.path.join(self.ppl_model_path, "stats")
 
-    # "frac" pins the fixed-point grid (log2, 2^-frac) the cost table
-    # was built on — the fixlog kernel's fractional bits, replacing
-    # the old micro-nat "scale" (a model trained before the fixlog
-    # migration fails the config check and must be retrained)
+    # "frac" pins the cost table's fixlog grid (log2, 2^-frac); a
+    # pre-fixlog micro-nat model has none and fails the config check
     _PPL_STATS_SCHEMA = (
         "t1 double, t2 double, buckets long, seed string, "
         "frac long, smooth long, n_train_bigrams long"
@@ -1213,15 +1202,15 @@ class StreamingIncrementalDedup:
         traffic). Overwrites any previous model — deliberate retrain
         semantics, see the ppl_rejects_path config note.
         ``exact_cuts=False`` uses the GK sketch for the tercile aggregate
-        (the 100 TB path, same bounded-verdict posture as ppl_buckets)."""
+        (the 100 TB path, see selection.tercile_cuts)."""
         if self.ppl_model_path is None:
             raise ValueError("train_ppl_model requires ppl_model_path")
         costs = sel.lm_ppl_cost_table(
             target_df,
             text_col=target_text_col,
-            buckets=self.ppl_buckets,
-            smooth=_PPL_SMOOTH,
-            seed=_PPL_SEED,
+            buckets=sel.PPL_BUCKETS,
+            smooth=sel.PPL_SMOOTH,
+            seed=sel.PPL_SEED,
         )
         costs.write.mode("overwrite").parquet(self._ppl_costs_path())
         # score the cuts frame against the AT-REST table (what batches
@@ -1238,26 +1227,17 @@ class StreamingIncrementalDedup:
             at_rest,
             text_col="__ct",
             id_col="__cid",
-            buckets=self.ppl_buckets,
-            seed=_PPL_SEED,
+            buckets=sel.PPL_BUCKETS,
+            seed=sel.PPL_SEED,
         ).filter(F.col("mnll").isNotNull())
-        if exact_cuts:
-            t1 = F.percentile("mnll", F.lit(1.0 / 3.0))
-            t2 = F.percentile("mnll", F.lit(2.0 / 3.0))
-        else:
-            t1 = F.percentile_approx(
-                "mnll", F.lit(1.0 / 3.0), F.lit(accuracy)
-            )
-            t2 = F.percentile_approx(
-                "mnll", F.lit(2.0 / 3.0), F.lit(accuracy)
-            )
+        t1, t2 = sel.tercile_cuts("mnll", exact_cuts, accuracy)
         stats = scores.agg(
             t1.cast("double").alias("t1"),
             t2.cast("double").alias("t2"),
-            F.lit(self.ppl_buckets).cast("long").alias("buckets"),
-            F.lit(_PPL_SEED).alias("seed"),
-            F.lit(20).cast("long").alias("frac"),
-            F.lit(_PPL_SMOOTH).cast("long").alias("smooth"),
+            F.lit(sel.PPL_BUCKETS).cast("long").alias("buckets"),
+            F.lit(sel.PPL_SEED).alias("seed"),
+            F.lit(sel.PPL_FRAC).cast("long").alias("frac"),
+            F.lit(sel.PPL_SMOOTH).cast("long").alias("smooth"),
             F.sum("n_bigrams").cast("long").alias("n_train_bigrams"),
         )
         stats.write.mode("overwrite").parquet(self._ppl_stats_path())
@@ -1278,8 +1258,8 @@ class StreamingIncrementalDedup:
         """Memoized pinned LM. Raises if train_ppl_model has not run —
         a gate with no model must fail loudly, not invent a flat LM
         that silently admits everything."""
-        if self._ppl_costs is not None:
-            return self._ppl_costs, self._ppl_t1, self._ppl_t2
+        if self._ppl_pinned is not None:
+            return self._ppl_pinned
         row = None
         if self.ppl_model_path is not None:
             try:
@@ -1295,7 +1275,9 @@ class StreamingIncrementalDedup:
             )
         pinned = (row["buckets"], row["seed"], row["frac"],
                   row["smooth"])
-        configured = (self.ppl_buckets, _PPL_SEED, 20, _PPL_SMOOTH)
+        configured = (
+            sel.PPL_BUCKETS, sel.PPL_SEED, sel.PPL_FRAC, sel.PPL_SMOOTH
+        )
         if pinned != configured:
             raise RuntimeError(
                 "ppl gate config mismatch: the at-rest model was "
@@ -1305,12 +1287,11 @@ class StreamingIncrementalDedup:
                 "pre-fixlog micro-nat model, frac=NULL) would be "
                 "silently meaningless — retrain or fix the config"
             )
-        self._ppl_costs = spark.read.schema(
-            "bucket long, nl long"
-        ).parquet(self._ppl_costs_path())
-        self._ppl_t1 = float(row["t1"])
-        self._ppl_t2 = float(row["t2"])
-        return self._ppl_costs, self._ppl_t1, self._ppl_t2
+        costs = spark.read.schema("bucket long, nl long").parquet(
+            self._ppl_costs_path()
+        )
+        self._ppl_pinned = (costs, float(row["t1"]), float(row["t2"]))
+        return self._ppl_pinned
 
     def _curation_gates(
         self, batch: DataFrame, epoch_id: int
@@ -1329,121 +1310,61 @@ class StreamingIncrementalDedup:
         if self.pii_scrub:
             batch = tx.scrub_text(batch, self.text_col).persist()
             handle = batch
+        txt, did = self.text_col, self.id_col
         if self.rejects_path is not None:
-            sig = tx.repetition_signals(
-                batch, self.text_col, self.id_col
-            )
-            bad = sig.filter(
-                (F.col("dup_word_frac") > tx.REP_MAX_DUP_WORD)
-                | (F.col("top_bigram_frac") > tx.REP_MAX_TOP_BIGRAM)
-                | (F.col("dup_trigram_frac") > tx.REP_MAX_DUP_TRIGRAM)
-            )
-            write_epoch(
-                bad.withColumn(
-                    "reason",
-                    F.concat_ws(
-                        ",",
-                        F.when(
-                            F.col("dup_word_frac")
-                            > tx.REP_MAX_DUP_WORD,
-                            F.lit("dup_word"),
-                        ),
-                        F.when(
-                            F.col("top_bigram_frac")
-                            > tx.REP_MAX_TOP_BIGRAM,
-                            F.lit("top_bigram"),
-                        ),
-                        F.when(
-                            F.col("dup_trigram_frac")
-                            > tx.REP_MAX_DUP_TRIGRAM,
-                            F.lit("dup_trigram"),
-                        ),
-                    ),
-                ),
-                self.rejects_path,
-                epoch_id,
-            )
-            batch = batch.join(
-                F.broadcast(bad.select(self.id_col)),
-                self.id_col,
-                "left_anti",
+            bad = tx.repetition_gate(batch, txt, did).filter(~F.col("keep"))
+            batch = self._reject(
+                batch, bad.drop("keep"), self.rejects_path, epoch_id
             )
         if self.gopher_rejects_path is not None:
-            rules = tx.gopher_rules(
-                batch,
-                text_col=self.text_col,
-                id_col=self.id_col,
-                min_words=self.gopher_min_words,
-            )
-            gbad = rules.filter(~F.col("keep"))
-            reason = F.concat_ws(
-                ",",
-                *[
-                    F.when(~F.col(c), F.lit(c.removesuffix("_ok")))
-                    for c in (
-                        "word_count_ok",
-                        "mean_wlen_ok",
-                        "symbol_ok",
-                        "alpha_ok",
-                        "stopword_ok",
-                        "bullet_ok",
-                        "ellipsis_ok",
-                    )
-                ],
-            )
-            write_epoch(
-                gbad.withColumn("reason", reason),
-                self.gopher_rejects_path,
-                epoch_id,
-            )
-            batch = batch.join(
-                F.broadcast(gbad.select(self.id_col)),
-                self.id_col,
-                "left_anti",
+            # the battery's composite keep is one of its stored columns
+            bad = tx.gopher_gate(batch, txt, did).filter(~F.col("keep"))
+            batch = self._reject(
+                batch, bad, self.gopher_rejects_path, epoch_id
             )
         if self.ppl_rejects_path is not None:
             costs, t1, t2 = self._ppl_model(batch.sparkSession)
             scores = sel.lm_ppl_score_with_costs(
                 batch,
                 costs,
-                text_col=self.text_col,
-                id_col=self.id_col,
-                buckets=self.ppl_buckets,
-                seed=_PPL_SEED,
+                text_col=txt,
+                id_col=did,
+                buckets=sel.PPL_BUCKETS,
+                seed=sel.PPL_SEED,
             )
-            m = F.col("mnll")
-            # the ppl_buckets CASE, against the PINNED cuts
-            scored = scores.withColumn(
-                "ppl_bucket",
-                F.when(m.isNull(), F.lit("empty"))
-                .when(m <= F.lit(t1), F.lit("head"))
-                .when(m <= F.lit(t2), F.lit("middle"))
-                .otherwise(F.lit("tail")),
-            )
-            pbad = scored.filter(
-                ~F.col("ppl_bucket").isin(*self.ppl_keep)
-            )
-            write_epoch(
-                pbad.withColumn(
-                    "reason",
-                    F.concat(F.lit("ppl_"), F.col("ppl_bucket")),
-                ),
-                self.ppl_rejects_path,
-                epoch_id,
-            )
-            batch = batch.join(
-                F.broadcast(pbad.select(self.id_col)),
-                self.id_col,
-                "left_anti",
+            bad = sel.ppl_gate(scores, (t1, t2)).filter(~F.col("keep"))
+            batch = self._reject(
+                batch, bad.drop("keep"), self.ppl_rejects_path, epoch_id
             )
         return batch, handle
+
+    def _reject(
+        self, batch: DataFrame, bad: DataFrame, path: str, epoch_id: int
+    ) -> DataFrame:
+        """Write one gate's rejects as this epoch's rows of its store and
+        drop them from the batch."""
+        write_epoch(bad, path, epoch_id)
+        return batch.join(
+            F.broadcast(bad.select(self.id_col)), self.id_col, "left_anti"
+        )
 
     def _sink(self, batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
         txt, did = self.text_col, self.id_col
         self._check_banding_pin(spark)
 
-        # 0. opt-in curation gates (PII scrub, rejects-path gates) —
+        # 0. one row per id — the least by (text, other columns), so a
+        #    replay admits the same one; two rows under one id would fan
+        #    out in every join back on the id (the band keys, the gates)
+        rest = [c for c in batch.columns if c not in (txt, did)]
+        first = Window.partitionBy(did).orderBy(txt, *rest)
+        batch = (
+            batch.withColumn("__rn", F.row_number().over(first))
+            .filter("__rn = 1")
+            .drop("__rn")
+        )
+
+        # 0b. opt-in curation gates (PII scrub, rejects-path gates) —
         #    batch-local by construction, before any hashing
         batch, gate_handle = self._curation_gates(batch, epoch_id)
 

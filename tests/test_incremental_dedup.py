@@ -948,7 +948,6 @@ def test_streaming_gopher_gate(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "chk"),
             schema=SCHEMA,
             gopher_rejects_path=str(tmp_path / "grejects"),
-            gopher_min_words=5,
         )
 
     d = mk()
@@ -976,7 +975,7 @@ def test_streaming_gopher_gate(spark, tmp_path):
     assert len(rej2) == 1 and rej2[0].doc_id == 2
 
 
-def test_streaming_ppl_gate(spark, tmp_path):
+def test_streaming_ppl_gate(spark, tmp_path, monkeypatch):
     """The CCNet perplexity filter as a streaming gate against a
     PINNED at-rest LM: train once on a trusted frame (cuts calibrated
     on a mixed reference), then (a) a fluent doc is admitted and a
@@ -1001,17 +1000,15 @@ def test_streaming_ppl_gate(spark, tmp_path):
         "aaa1 bbb2 ccc3 ddd4 eee5 fff6 ggg7 hhh8 iii9 jjj0 kkk1 lll2",
     ]
 
-    def mk(model="pplmodel", **kw):
-        kw.setdefault("ppl_buckets", 256)
+    def mk():
         return StreamingIncrementalDedup(
             spark=spark,
             landing_dir=str(tmp_path / "landing"),
             silver_path=str(tmp_path / "silver"),
             checkpoint_dir=str(tmp_path / "chk"),
             schema=SCHEMA,
-            ppl_model_path=str(tmp_path / model),
+            ppl_model_path=str(tmp_path / "pplmodel"),
             ppl_rejects_path=str(tmp_path / "prejects"),
-            **kw,
         )
 
     d = mk()
@@ -1045,9 +1042,7 @@ def test_streaming_ppl_gate(spark, tmp_path):
     # at-rest table + pinned cuts, apply the keep rule
     costs, t1, t2 = d._ppl_model(spark)
     epoch = spark.createDataFrame([(1, BASE), (2, GIBBER[0])], SCHEMA)
-    scores = sel.lm_ppl_score_with_costs(
-        epoch, costs, buckets=256
-    ).collect()
+    scores = sel.lm_ppl_score_with_costs(epoch, costs).collect()
     keep = {
         r.doc_id
         for r in scores
@@ -1063,10 +1058,10 @@ def test_streaming_ppl_gate(spark, tmp_path):
     assert len(rej2) == 1 and rej2[0].doc_id == 2
 
     # config mismatch (different bucket count) refuses to score
-    d3 = mk(ppl_buckets=512)
-    d3.ppl_model_path = d.ppl_model_path
-    with pytest.raises(RuntimeError, match="mismatch"):
-        d3._curation_gates(epoch, epoch_id=1)
+    with monkeypatch.context() as m:
+        m.setattr(sel, "PPL_BUCKETS", 512)
+        with pytest.raises(RuntimeError, match="mismatch"):
+            mk()._curation_gates(epoch, epoch_id=1)
 
     # a replay whose gate now rejects NOTHING (the deliberate
     # retrain/reconfigure case the retrain contract contemplates)
@@ -1074,12 +1069,135 @@ def test_streaming_ppl_gate(spark, tmp_path):
     # contradicting the new admission set — static epoch-partition
     # overwrite; dynamic partition overwrite would no-op on an empty
     # frame and keep doc 2's stale row
-    d4 = mk(ppl_keep=("head", "middle", "tail"))
+    monkeypatch.setattr(sel, "PPL_KEEP", ("head", "middle", "tail"))
+    d4 = mk()
     d4._sink(epoch, epoch_id=0)
     assert _silver_ids(spark, d4) == {1, 2}
     rej3 = spark.read.parquet(str(tmp_path / "prejects"))
     assert rej3.filter("ingest_epoch = 0").count() == 0
     assert rej3.count() == 0
+
+
+def test_stream_gates_match_the_batch_pipeline(spark, tmp_path):
+    """Batch/stream gate parity: the curation pipeline's stage-1
+    survivors at SF_SMOKE (the oracle's ``gated`` rows), landed as one
+    epoch with the PII scrub and all three gates on, must leave exactly
+    the batch's repetition-gate survivors (the oracle's ``repgate``),
+    and each gate's rejects must be the docs that gate fails. The LM is
+    pinned from the population the batch uses: trained on the scrubbed
+    'en' docs, cuts over every scrubbed doc. Each gate is a per-doc
+    predicate, so the stream's order (repetition, Gopher, perplexity)
+    and the batch's (Gopher and perplexity, then repetition) commute."""
+    import duckdb
+
+    from comp5339dataengineering_realtimefuelanalysis_spark.operators import (
+        text as tx,
+    )
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
+    )
+    from tests.conftest import SF_SMOKE
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_SMOKE}/documents.parquet')"
+    )
+    ctes = (
+        f"WITH RECURSIVE {rl._sql_stage9_ctes()}, "
+        f"rep_all AS ({rl._sql_doc_repetition('scrub')})"
+    )
+    gated = con.execute(
+        f"{ctes} SELECT doc_id, text, lang FROM gated"
+    ).fetchall()
+    verdicts = con.execute(
+        f"""{ctes}
+        SELECT s.doc_id,
+               r.dup_word_frac <= {tx.REP_MAX_DUP_WORD}
+                   AND r.top_bigram_frac <= {tx.REP_MAX_TOP_BIGRAM}
+                   AND r.dup_trigram_frac <= {tx.REP_MAX_DUP_TRIGRAM},
+               g.keep,
+               pb.ppl_bucket IN ('head', 'middle')
+        FROM scrub s JOIN rep_all r USING (doc_id)
+             JOIN gsel g USING (doc_id) JOIN pplb pb USING (doc_id)"""
+    ).fetchall()
+    want_kept = {
+        r[0] for r in con.execute(f"{ctes} SELECT doc_id FROM repgate")
+        .fetchall()
+    }
+    want_rep = {i for i, rep, _, _ in verdicts if not rep}
+    want_gopher = {i for i, rep, g, _ in verdicts if rep and not g}
+    want_ppl = {i for i, rep, g, p in verdicts if rep and g and not p}
+    assert want_kept == {i for i, rep, g, p in verdicts if rep and g and p}
+    assert want_kept and want_rep and want_gopher and want_ppl
+
+    d = StreamingIncrementalDedup(
+        spark=spark,
+        landing_dir=str(tmp_path / "landing"),
+        silver_path=str(tmp_path / "silver"),
+        checkpoint_dir=str(tmp_path / "chk"),
+        schema=SCHEMA,
+        pii_scrub=True,
+        rejects_path=str(tmp_path / "rejects"),
+        gopher_rejects_path=str(tmp_path / "grejects"),
+        ppl_model_path=str(tmp_path / "pplmodel"),
+        ppl_rejects_path=str(tmp_path / "prejects"),
+    )
+    batch = spark.createDataFrame(
+        gated, "doc_id long, text string, lang string"
+    )
+    scrubbed = tx.scrub_text(batch)
+    d.train_ppl_model(
+        spark, scrubbed.filter(F.col("lang") == "en"), cuts_df=scrubbed
+    )
+    kept, handle = d._curation_gates(batch, epoch_id=0)
+    try:
+        assert {r.doc_id for r in kept.collect()} == want_kept
+    finally:
+        handle.unpersist()
+    for path, want in (
+        ("rejects", want_rep),
+        ("grejects", want_gopher),
+        ("prejects", want_ppl),
+    ):
+        rej = spark.read.parquet(str(tmp_path / path)).collect()
+        assert {r.doc_id for r in rej} == want, path
+        assert all(r.reason for r in rej), path
+
+
+def test_batch_with_one_id_twice_admits_one_row(spark, dedup):
+    """A micro-batch carrying one id with two texts admits ONE row for
+    that id, with the band keys of its own text, and a replay of the
+    epoch admits the same row. Without the one-row-per-id pick, the
+    band-key join back on the id fans the two rows out 2x2 and stores
+    each text twice, twice with the other text's keys."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.operators import dedup as dd
+
+    batch = spark.createDataFrame(
+        [(7, BASE), (7, OTHER), (8, BASE + " extra")], SCHEMA
+    )
+
+    def silver_rows():
+        silver = spark.read.parquet(dedup.silver_path)
+        fresh = dd.minhash_band_keys(
+            silver.select("doc_id", "text"), "text", "doc_id"
+        ).withColumnRenamed("band_keys", "fresh_keys")
+        assert (
+            silver.join(fresh.select("doc_id", "fresh_keys"), "doc_id")
+            .filter(F.col("band_keys") != F.col("fresh_keys"))
+            .count()
+        ) == 0
+        return sorted(
+            (r.doc_id, r.text, tuple(r.band_keys))
+            for r in silver.collect()
+        )
+
+    dedup._sink(batch, epoch_id=0)
+    first = silver_rows()
+    ids = [i for i, _, _ in first]
+    assert len(ids) == len(set(ids)) and 7 in ids
+    dedup._sink(batch, epoch_id=0)
+    assert silver_rows() == first
 
 
 def test_ppl_gate_without_model_path_fails_loudly(spark, tmp_path):

@@ -1145,7 +1145,7 @@ def test_gopher_rules_arrow_kernel_parity(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got, want = _spark_and_oracle(
-        tx.gopher_rules(df, min_words=rl._GOPHER_MIN_WORDS),
+        tx.gopher_rules(df),
         rows,
         rl._sql_gopher_rules(),
     )

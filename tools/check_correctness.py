@@ -8,6 +8,10 @@ scale factor, then compares:
     bit-exact first, with a 1e-9-relative fallback reported separately so
     near-misses are visible instead of silently passing)
 
+A full run also compares the curation pipeline's published stage-9
+survivor ids with the oracle's ``nondup`` CTE and reports that on its own
+line, outside the per-query tally.
+
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
@@ -243,10 +247,43 @@ def main() -> int:
                     break
 
     print(f"\n{n_pass} pass, {n_near} near, {n_fail} fail")
+    stage9_ok = True
     if not only:
+        stage9_ok = check_stage9(spark, con, sf_dir)
         write_attestation_ledger(results, sf_dir)
     spark.stop()
-    return 1 if (n_fail or n_near) else 0
+    return 1 if (n_fail or n_near or not stage9_ok) else 0
+
+
+def check_stage9(spark, con, sf_dir: str) -> bool:
+    """The curation pipeline's stage-9 survivor ids (the shared
+    _stage9_path table) against the oracle's ``nondup`` CTE. No registry
+    query's oracle sees stage 9 alone: the pipeline's sees it only
+    through the later stages."""
+    from comp5339dataengineering_realtimefuelanalysis_spark.plans import (
+        registry_llm as rl,
+    )
+
+    got = {
+        r.doc_id
+        for r in spark.read.parquet(rl._stage9_path(spark, sf_dir))
+        .select("doc_id")
+        .collect()
+    }
+    want = {
+        r[0]
+        for r in con.execute(
+            f"WITH RECURSIVE {rl._sql_stage9_ctes()} "
+            "SELECT doc_id FROM nondup"
+        ).fetchall()
+    }
+    ok = got == want
+    print(
+        f"stage 9 ids: {'PASS' if ok else 'FAIL'} "
+        f"({len(got)} spark, {len(want)} oracle, "
+        f"{len(got ^ want)} differ)"
+    )
+    return ok
 
 
 if __name__ == "__main__":

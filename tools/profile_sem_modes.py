@@ -1,11 +1,15 @@
-"""Measure the 1L/2L semantic-dedup crossover the pipeline's
-sem_mode="auto" branches on.
+"""Measure the 1L/2L semantic-dedup crossover: the curation pipeline
+switches from single-level to two-level blocking above
+_SEM_MODE_CROSSOVER stage-9 survivors.
 
-Round 9 set _SEM_MODE_CROSSOVER = 2_000_000 from a curve fit whose last
+Round 9 set that constant to 2_000_000 from a curve fit whose last
 measured rung was 150k docs — a constant extrapolated 13x past its
-evidence. This tool times BOTH branches end-to-end through the exact
-production builder (plans/registry_llm._semantic_drop_ids — embed ->
-block -> pair-score -> connected components -> drop ids) on a given
+evidence. Round 11's rungs from this tool (150k and 500k docs) put no
+wall-clock crossover in any locally attestable range, so the constant is
+now 10_000_000, set by the pair-volume argument recorded beside it in
+plans/registry_llm.py. This tool times BOTH branches end-to-end through
+the exact production builder (plans/registry_llm._semantic_drop_ids —
+embed -> block -> pair-score -> connected components -> drop ids) on a given
 corpus, so a >=500k-doc rung turns the extrapolation into a
 measurement. The embed materialization is shared between the two modes
 (_text_emb_for keyed by corpus), mirroring the pipeline, so the timed
